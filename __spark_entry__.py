@@ -4,7 +4,7 @@
 ``queries()``      one entry per implemented operator (SURVEY.md §2 + the
                    training-data ops), each (spark, sf_dir) -> DataFrame.
 ``oracle_sql()``   DuckDB-runnable ANSI SQL twins. Non-SQL-expressible ops
-                   (the mapInPandas extraction kernel, multimodal stubs,
+                   (the extraction-kernel UDF, multimodal stubs,
                    streaming) are rows-only checked and say so below.
 
 Column names are aliased identically on both sides — the driver sorts
@@ -73,7 +73,8 @@ def _documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: main-content extraction over sf0.001 — documents mapped to
     the transcripts shape, plus a slice of synthetic multi-payload
-    transcripts, through the full salted mapInPandas extraction plan."""
+    transcripts, through the full salted extraction plan (one pandas UDF over
+    ``text``, per-turn columns derived by builtins)."""
     sf_dir = "/root/testdata/sf0.001"
     params = JobParams(n_buckets=16, num_partitions=8)
     docs = _documents_as_transcripts(spark, sf_dir)
@@ -2228,9 +2229,9 @@ def _q_embed_neardup_lsh(spark, sf_dir):
     return similarity.embedding_near_dup_pairs(e, threshold=0.35)
 
 def _q_extract_flagship(spark, sf_dir):
-    """The mapInPandas extraction kernel itself — not SQL-expressible (the
-    kernel is the 'reference extractor'); correctness is gated by the tier-2
-    per-turn equality suite in tests/ instead."""
+    """The extraction kernel itself (the pandas UDF over ``text``) — not
+    SQL-expressible (the kernel is the 'reference extractor'); correctness
+    is gated by the tier-2 per-turn equality suite in tests/ instead."""
     params = JobParams(n_buckets=16, num_partitions=8)
     transcripts = generate_transcripts(spark, GenConfig(n_convs=60))
     out = extract_turns(spark, transcripts, params)
@@ -2247,7 +2248,7 @@ def _q_extract_units_roundtrip(spark, sf_dir):
     the value hash."""
     params = JobParams(n_buckets=16, num_partitions=8)
     transcripts = generate_transcripts(spark, GenConfig(n_convs=40))
-    extracted = extract_turns(spark, transcripts, params, with_units=True)
+    extracted = extract_turns(spark, transcripts, params)
     out = reassemble_turns(explode_units(extracted))
     return out.select(
         "conv_id",

@@ -3,7 +3,7 @@ gate-summary JSON line (so a tail-truncated capture still holds the
 complete gate record; the summary is marked ``"gate_summary": true``).
 
 Headline metric: the flagship extraction pipeline (read parquet transcripts
--> whitelist -> stable buckets -> salted repartition -> mapInPandas extract
+-> whitelist -> stable buckets -> salted repartition -> pandas_udf extract
 -> write parquet) measured as turns/sec, and the north rule's two-cluster-
 size scaling criterion evidenced by running the SAME job on the SAME input
 at two parallelism levels (N and 4N cores, default local[2] vs local[8])
@@ -155,6 +155,7 @@ def run_stream(spark: SparkSession, in_path: str, out_dir: str,
     t0 = time.time()
     q = (
         stream_extract(spark, in_path, params)
+        .drop("units")  # the per-turn shape; units are the fan-out's input
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)
@@ -236,6 +237,7 @@ def run_stream_sustained(spark: SparkSession, in_path: str, out_dir: str,
     t0 = time.time()
     q = (
         stream_extract(spark, in_path, params, max_files_per_trigger=mfpt)
+        .drop("units")
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", ckpt)

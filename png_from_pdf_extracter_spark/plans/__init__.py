@@ -1,15 +1,15 @@
 """The flagship DataFrame plan (scan -> resume anti-join -> whitelist filter ->
-salted repartition -> mapInPandas extraction -> ordered outputs) plus the
-per-partition lineage/metrics aggregation."""
+salted repartition -> one struct-returning extraction UDF over ``text`` ->
+builtin projection -> ordered outputs) plus the per-partition
+lineage/metrics aggregation."""
 
-from .extract_plan import JobParams, extract_turns, run_job, EXTRACTED_SCHEMA
+from .extract_plan import JobParams, extract_turns, run_job
 from .metrics import partition_metrics, METRICS_SCHEMA
 
 __all__ = [
     "JobParams",
     "extract_turns",
     "run_job",
-    "EXTRACTED_SCHEMA",
     "partition_metrics",
     "METRICS_SCHEMA",
 ]

@@ -8,7 +8,10 @@ declarative DataFrame plan:
       -> role whitelist filter (pushed to the scan by Catalyst)
       -> stable partition buckets (md5(conv_id) % n_buckets)
       -> salted repartition (hot-conversation skew)
-      -> mapInPandas(extract)  [Arrow batches, zero per-row Python UDF calls]
+      -> pandas_udf(text) -> struct<status, error_class, units>
+         [Arrow batches, zero per-row Python UDF calls]
+      -> one builtin projection: extracted_text / spans / n_units from
+         units, text_bytes / text_head from text
       -> write extracted_turns partitioned by bucket (dynamic overwrite =
          idempotent re-run), quarantine detail, per-bucket lineage metrics
 
@@ -16,19 +19,24 @@ Scale notes (100 TB / 1000 executors):
 - The only wide exchanges are the salted repartition (needed for skew) and
   the metrics groupBy over ~n_buckets groups (tiny). Extraction itself is a
   map stage; no join touches the big table except the broadcast anti-join.
-- Column pruning: the UDF input is exactly the 6 transcript columns; the
-  post-write passes (errors, metrics) read back pruned columns from parquet
-  instead of re-running extraction.
+- Column pruning: only ``text`` crosses into Python and only the result
+  struct comes back; the pass-through columns never leave the JVM, and each
+  unit's text crosses Arrow once. The post-write passes (errors, metrics)
+  read back pruned columns from parquet instead of re-running extraction.
 - Dynamic partition overwrite by bucket makes re-runs idempotent without a
   read-modify-write dedup (the Iceberg overwrite-partition commit analog).
+  It is a per-write option, never a session setting: a streaming query's
+  micro-batches run in a copy of the session that a later conf change
+  does not reach.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 from dataclasses import dataclass, field
-from typing import Iterator, Optional
+from typing import Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -36,6 +44,7 @@ from pyspark.sql import types as T
 from .. import EXTRACTOR_VERSION
 from ..datagen.transcripts import ROLE_WHITELIST, SYNTH_EXTRACTOR_CFG
 from ..extractor import ExtractorConfig, extract_batch_lists
+from ..extractor.kernel import STATUS_ERROR, UNIT_SEP
 from ..operators import (
     pending_only,
     completed_partitions,
@@ -56,44 +65,13 @@ UNITS_SCHEMA = T.ArrayType(
     )
 )
 
-EXTRACTED_SCHEMA = T.StructType(
+# The one UDF result per turn; every other output column is a builtin over
+# ``units`` or ``text`` (see ``extract_columns``).
+RESULT_SCHEMA = T.StructType(
     [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
         T.StructField("status", T.StringType()),
         T.StructField("error_class", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
         T.StructField("units", UNITS_SCHEMA),
-        T.StructField("text_bytes", T.LongType()),
-        T.StructField("text_head", T.StringType()),
-    ]
-)
-
-# Default (slim) UDF output: the nested ``units`` array would carry every
-# payload's text a SECOND time (unit_text duplicates extracted_text) across
-# the Arrow boundary and into the shuffle/write path — ~2x the bytes of the
-# hot pipeline for data only the per-unit fan-out table needs. The slim
-# schema ships pre-flattened spans + the unit count instead; callers that
-# need the fan-out (explode_units) opt in with ``with_units=True``.
-EXTRACTED_SLIM_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("error_class", T.StringType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("spans", SPAN_SCHEMA),
-        T.StructField("n_units", T.IntegerType()),
-        T.StructField("text_bytes", T.LongType()),
-        T.StructField("text_head", T.StringType()),
     ]
 )
 
@@ -109,7 +87,6 @@ class JobParams:
     role_whitelist: str = ROLE_WHITELIST
     extractor: ExtractorConfig = field(default_factory=lambda: SYNTH_EXTRACTOR_CFG)
     extractor_version: str = EXTRACTOR_VERSION
-    write_units: bool = False  # also write the per-unit fan-out table
     # "always": unconditional salted shuffle (the north-star default);
     # "auto": sample-measure skew at plan time, shuffle only if a hot
     #         conversation exceeds a task's fair share (skips the single
@@ -150,38 +127,22 @@ class JobParams:
             raise ValueError("cc_tables must be non-empty table names")
 
 
-def _make_extract_udf(cfg: ExtractorConfig, emit_units: bool = False):
-    """Build the mapInPandas function. The config rides the task closure once
-    per task, never per row (ref constant-folding of conversion params,
-    ``pdf_converter.py:74-89``). ``emit_units`` selects the full schema
-    (nested per-unit texts, 2x output bytes) vs the slim default."""
+def extract_columns(df: DataFrame, cfg: ExtractorConfig) -> DataFrame:
+    """Run the extraction UDF on ``text`` and derive the per-turn columns
+    with builtins. The batch plan and the stream both end here. ``units``
+    stays in the output for ``explode_units``; ``_final_turn_columns``
+    drops it. The config rides the task closure once per task, never per
+    row (ref constant-folding of conversion params,
+    ``pdf_converter.py:74-89``)."""
 
-    def extract_fn(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            statuses, errors, texts_out, units = extract_batch_lists(
-                pdf["text"].tolist(), cfg
-            )
-            n = len(pdf)
-            cols = {
-                "conv_id": pdf["conv_id"].values,
-                "turn_idx": pdf["turn_idx"].values,
-                "partition_id": pdf["partition_id"].values,
-                "role": pdf["role"].values,
-                "tool": pdf["tool"].values,
-                "ts": pdf["ts"].values,
+    @F.pandas_udf(RESULT_SCHEMA)
+    def extract(text: pd.Series) -> pd.DataFrame:
+        statuses, errors, _, units = extract_batch_lists(text.tolist(), cfg)
+        return pd.DataFrame(
+            {
                 "status": statuses,
                 "error_class": errors,
-                "extracted_text": texts_out,
-                "text_bytes": pdf["text"].str.len().fillna(0).astype("int64"),
-                "text_head": [
-                    (pdf["text"].iat[i] or "")[:256] if statuses[i] == "error" else ""
-                    for i in range(n)
-                ],
-            }
-            if emit_units:
-                cols["units"] = [
+                "units": [
                     [
                         {
                             "unit_idx": ui,
@@ -194,24 +155,36 @@ def _make_extract_udf(cfg: ExtractorConfig, emit_units: bool = False):
                         for (ui, ut, sp) in row_units
                     ]
                     for row_units in units
-                ]
-                order = EXTRACTED_SCHEMA
-            else:
-                cols["spans"] = [
-                    [
-                        {"start": s, "end": e, "kind": k}
-                        for (_, _, sp) in row_units
-                        for (s, e, k) in sp
-                    ]
-                    for row_units in units
-                ]
-                cols["n_units"] = pd.Series(
-                    [len(ru) for ru in units], dtype="int32"
-                )
-                order = EXTRACTED_SLIM_SCHEMA
-            yield pd.DataFrame(cols)[[f.name for f in order.fields]]
+                ],
+            }
+        )
 
-    return extract_fn
+    df = df.withColumn("_result", extract("text"))
+    status = F.col("_result.status")
+    units = F.col("_result.units")
+    return df.select(
+        "conv_id",
+        "turn_idx",
+        "partition_id",
+        "role",
+        "tool",
+        "ts",
+        status.alias("status"),
+        F.col("_result.error_class").alias("error_class"),
+        F.array_join(
+            F.transform(units, lambda u: u["unit_text"]), UNIT_SEP
+        ).alias("extracted_text"),
+        units.alias("units"),
+        F.flatten(F.transform(units, lambda u: u["spans"])).alias("spans"),
+        F.size(units).alias("n_units"),
+        F.coalesce(F.octet_length("text"), F.lit(0)).cast("long").alias(
+            "text_bytes"
+        ),
+        F.coalesce(
+            F.when(status == STATUS_ERROR, F.substring("text", 1, 256)),
+            F.lit(""),
+        ).alias("text_head"),
+    )
 
 
 def extract_turns(
@@ -219,13 +192,10 @@ def extract_turns(
     transcripts: DataFrame,
     params: JobParams,
     metrics: Optional[DataFrame] = None,
-    with_units: Optional[bool] = None,
 ) -> DataFrame:
     """The lazy extraction DataFrame: whitelist -> bucket -> (resume) ->
-    salt -> mapInPandas. Callers write it or test it. ``with_units``
-    (default: ``params.write_units``) selects the full nested-units output;
-    the slim default halves UDF output bytes (see EXTRACTED_SLIM_SCHEMA)."""
-    emit_units = params.write_units if with_units is None else with_units
+    salt -> extract_columns. Callers write it or test it; the per-unit
+    fan-out is ``explode_units(extract_turns(...))``."""
     df = transcripts.filter(F.col("role").rlike(params.role_whitelist))
     if params.payload_base64:
         # transfer-encoding decode (ref job_processor.py:207), builtin and
@@ -253,23 +223,13 @@ def extract_turns(
         from ..operators import salted_repartition_auto
 
         df = salted_repartition_auto(df, num, params.salt_buckets)
-    schema = EXTRACTED_SCHEMA if emit_units else EXTRACTED_SLIM_SCHEMA
-    return df.mapInPandas(
-        _make_extract_udf(params.extractor, emit_units), schema
-    )
+    return extract_columns(df, params.extractor)
 
 
 def _final_turn_columns(extracted: DataFrame, params: JobParams) -> DataFrame:
-    """Stamp row digest + version; flatten unit spans when the full nested
-    schema was requested (the per-unit fan-out is its own optional table).
-    Everything here is JVM builtins — stays in whole-stage codegen."""
-    if "units" in extracted.columns:
-        spans = F.flatten(
-            F.transform("units", lambda u: u["spans"])
-        ).alias("spans")
-        n_units = F.size("units").alias("n_units")
-    else:
-        spans, n_units = F.col("spans"), F.col("n_units")
+    """The extracted_turns table shape: stamp row digest + version, drop
+    the nested ``units``. Everything here is JVM builtins — stays in
+    whole-stage codegen."""
     return extracted.select(
         "conv_id",
         "turn_idx",
@@ -279,8 +239,8 @@ def _final_turn_columns(extracted: DataFrame, params: JobParams) -> DataFrame:
         "status",
         "error_class",
         "extracted_text",
-        spans,
-        n_units,
+        "spans",
+        "n_units",
         "text_bytes",
         "text_head",
         F.xxhash64("conv_id", "turn_idx", "extracted_text", "status").alias(
@@ -307,7 +267,6 @@ def run_job(
     overwrites it (at-least-once + idempotent, spec NFR-007/008).
     """
     started_at = _dt.datetime.now(_dt.timezone.utc)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     if params.validate_input:
         from ..operators import split_valid
@@ -326,26 +285,15 @@ def run_job(
         else None
     )
 
-    extracted = extract_turns(spark, transcripts, params, metrics)
-    out = _final_turn_columns(extracted, params)
-
-    if params.write_units:
-        from ..operators import explode_units
-
-        out = out.persist()
-        explode_units(
-            extracted.select(
-                "conv_id", "turn_idx", "partition_id", "units"
-            )
-        ).write.mode("append").parquet(catalog.path("extracted_units"))
-
+    out = _final_turn_columns(
+        extract_turns(spark, transcripts, params, metrics), params
+    )
     (
         out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(catalog.path("extracted_turns"))
     )
-    if params.write_units:
-        out.unpersist()
 
     # Post-write passes read back pruned columns (no re-extraction).
     written = catalog.read(spark, "extracted_turns")
@@ -356,6 +304,7 @@ def run_job(
     _, quarantined = split_quarantine(written)
     (
         quarantined.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("partition_id")
         .parquet(catalog.path("extract_errors"))
     )

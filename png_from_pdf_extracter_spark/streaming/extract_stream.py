@@ -14,9 +14,15 @@ after the sink write, so a crash re-processes the last micro-batch
 (at-least-once + idempotent file sink = the same NFR-007/008 contract the
 batch path implements with the lineage table).
 
-The extraction itself is the SAME ``mapInPandas`` kernel as the batch plan —
-one code path, two drivers (batch job / stream), like the reference reuses
-``process_next_email`` from both the CLI and the daemon.
+The extraction itself is the SAME UDF and projection as the batch plan
+(``extract_columns``) — one code path, two drivers (batch job / stream),
+like the reference reuses ``process_next_email`` from both the CLI and the
+daemon.
+
+Every partitioned overwrite here passes ``partitionOverwriteMode=dynamic``
+as a write option. Setting it on the session from inside ``commit_batch``
+would not work: micro-batches run in the query's own copy of the session,
+made when the query starts.
 """
 
 from __future__ import annotations
@@ -26,7 +32,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.extract_plan import JobParams, EXTRACTED_SLIM_SCHEMA, _make_extract_udf
+from ..plans.extract_plan import JobParams, extract_columns
 from ..sources.catalog import Catalog
 from ..sources.transcripts import TRANSCRIPTS_SCHEMA, with_partition_id
 
@@ -38,7 +44,7 @@ def stream_extract(
     max_files_per_trigger: int = 8,
 ) -> DataFrame:
     """Streaming extraction DataFrame: readStream(parquet dir) -> whitelist
-    -> bucket -> mapInPandas(extract). No salted repartition here — in
+    -> bucket -> extract_columns. No salted repartition here — in
     streaming, micro-batch sizing (``max_files_per_trigger``) bounds task
     skew instead; the kernel and output schema are identical to the batch
     plan. The trigger size is the steady-state knob: per-batch work =
@@ -61,7 +67,7 @@ def stream_extract(
     )
     df = stream.filter(F.col("role").rlike(params.role_whitelist))
     df = with_partition_id(df, params.n_buckets)
-    return df.mapInPandas(_make_extract_udf(params.extractor), EXTRACTED_SLIM_SCHEMA)
+    return extract_columns(df, params.extractor)
 
 
 def stream_extract_to_catalog(
@@ -93,9 +99,6 @@ def stream_extract_to_catalog(
     extracted = stream_extract(spark, input_path, params)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         out = _final_turn_columns(batch_df, params).withColumn(
             "batch_id", F.lit(batch_id)
         )
@@ -103,6 +106,7 @@ def stream_extract_to_catalog(
         try:
             (
                 out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("batch_id", "partition_id")
                 .parquet(catalog.path(table))
             )
@@ -425,14 +429,12 @@ def stream_profile_to_catalog(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         state = incremental.partial_profile(
             batch_df, group_col, value_col
         ).withColumn("batch_id", F.lit(batch_id))
         (
             state.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -474,14 +476,12 @@ def stream_drift_monitor(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         report = psi_drift(
             reference, batch_df, value_col, group_col
         ).withColumn("batch_id", F.lit(batch_id))
         (
             report.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -539,14 +539,12 @@ def stream_kmv_monitor(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         sketch = kmv_build(batch_df, item_col, group_cols, k).withColumn(
             "batch_id", F.lit(batch_id)
         )
         (
             sketch.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -610,15 +608,13 @@ def stream_cusum_monitor(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         state = cusum_batch_state(
             batch_df, group_cols, order_cols, value_col,
             target_q, slack_q,
         ).withColumn("batch_id", F.lit(batch_id))
         (
             state.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -705,9 +701,6 @@ def stream_topk_monitor(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         cnt = (
             batch_df.select(
                 F.col(item_col).cast("string").alias("item")
@@ -721,6 +714,7 @@ def stream_topk_monitor(
         )
         (
             summary.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -780,9 +774,6 @@ def stream_srm_monitor(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         counts = (
             batch_df.select(
                 F.col(arm_col).cast("string").alias("arm")
@@ -793,6 +784,7 @@ def stream_srm_monitor(
         )
         (
             counts.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )
@@ -853,9 +845,6 @@ def stream_msprt_monitor(
     scale = 10 ** quantize
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
         v = F.round(
             F.col(value_col).cast("double") * F.lit(scale), 0
         ).cast("long")
@@ -877,6 +866,7 @@ def stream_msprt_monitor(
         )
         (
             moments.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(catalog.path(table))
         )

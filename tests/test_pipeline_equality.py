@@ -39,7 +39,7 @@ def data(spark):
 def extracted_pdf(spark, data):
     transcripts, _ = data
     return (
-        extract_turns(spark, transcripts, PARAMS, with_units=True)
+        extract_turns(spark, transcripts, PARAMS)
         .select("conv_id", "turn_idx", "status", "error_class",
                 "extracted_text", "units")
         .toPandas()
@@ -97,7 +97,7 @@ def test_explode_reassemble_roundtrip(spark, data):
     kernel's joined text byte-for-byte (the reference's pages->single-reply
     reassembly contract)."""
     transcripts, _ = data
-    extracted = extract_turns(spark, transcripts, PARAMS, with_units=True)
+    extracted = extract_turns(spark, transcripts, PARAMS)
     per_turn = extracted.filter(F.size("units") > 0).select(
         "conv_id", "turn_idx", "extracted_text"
     )
@@ -134,7 +134,8 @@ def test_unicode_payloads_roundtrip_exactly(spark):
     """Multi-byte text (CJK, emoji, RTL, combining marks, entities
     decoding TO non-ASCII) through the full Spark plan must equal the
     kernel run directly in-process — catches Arrow UTF-8 transfer bugs
-    and any byte-vs-char span arithmetic drift."""
+    and any byte-vs-char span arithmetic drift. ``text_bytes`` counts
+    UTF-8 bytes, the unit of the kernel's ``max_bytes`` cap."""
     import datetime as dt
 
     from png_from_pdf_extracter_spark.extractor import extract_batch_lists
@@ -158,11 +159,11 @@ def test_unicode_payloads_roundtrip_exactly(spark):
     ]
     t = spark.createDataFrame(rows, schema=TRANSCRIPTS_SCHEMA)
     got = {
-        r["turn_idx"]: (r["status"], r["extracted_text"])
+        r["turn_idx"]: (r["status"], r["extracted_text"], r["text_bytes"])
         for r in extract_turns(spark, t, PARAMS).collect()
     }
-    for i in range(len(payloads)):
-        assert got[i] == (statuses[i], texts[i]), (i, got[i])
+    for i, p in enumerate(payloads):
+        assert got[i] == (statuses[i], texts[i], len(p.encode())), (i, got[i])
 
 
 def test_output_invariant_across_parallelism(spark):

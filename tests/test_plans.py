@@ -3,10 +3,13 @@ are asserted, not just eyeballed — a refactor that silently adds a shuffle,
 drops a broadcast, or un-prunes a scan fails here.
 """
 
+import re
+
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig, gen_pandas
 from png_from_pdf_extracter_spark.plans import JobParams, extract_turns
+from png_from_pdf_extracter_spark.plans.extract_plan import _final_turn_columns
 from png_from_pdf_extracter_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
 SF = "/root/testdata/sf0.001"
@@ -47,6 +50,24 @@ def test_flagship_never_mode_no_shuffle(spark, tmp_path):
         JobParams(n_buckets=16, num_partitions=4, salt_mode="never"),
     )
     assert "Exchange" not in _plan(df)
+
+
+def test_flagship_kernel_runs_once_on_text_only(spark, tmp_path):
+    """The written table's plan evaluates Python exactly once: one eval
+    node holding one call of the extraction UDF, whose only argument is
+    ``text``. Every other column is derived in the JVM from its result,
+    so no projection may re-run the kernel."""
+    params = JobParams(n_buckets=16, num_partitions=4)
+    df = _final_turn_columns(
+        extract_turns(spark, _transcripts(spark, tmp_path), params), params
+    )
+    plan = _plan(df)
+    assert len(re.findall(r"\b\w+EvalPython\b", plan)) == 1, plan
+    assert "MapInPandas" not in plan, plan
+    calls = re.findall(r"ArrowEvalPython \[(.*?)\], ", plan)
+    assert len(calls) == 1 and re.fullmatch(
+        r"extract\(text#\d+\)#\d+", calls[0]
+    ), plan
 
 
 def test_join_topn_broadcasts_both_dims(spark):

@@ -162,6 +162,51 @@ def test_stream_extract_to_catalog_lineage_and_restart(spark, tmp_path):
     assert cat.read(spark, "extracted_turns_stream").count() == n1
 
 
+def test_stream_extract_to_catalog_keeps_every_batch_under_static_mode(
+    spark, tmp_path
+):
+    """Each micro-batch must overwrite only its own partitions even when
+    the session's overwrite mode is STATIC, the default of a fresh
+    ``jobs/run_stream.py`` process. Micro-batches run in the query's own
+    copy of the session, so the mode has to ride on the write itself."""
+    from png_from_pdf_extracter_spark.sources.catalog import Catalog
+    from png_from_pdf_extracter_spark.streaming import stream_extract_to_catalog
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    in_dir = str(tmp_path / "in")
+    # 12 files at the default 8 files per trigger: two micro-batches
+    src = generate_transcripts(spark, GenConfig(seed=3, n_convs=24))
+    src.repartition(12).write.parquet(in_dir)
+    want = {
+        (r["conv_id"], r["turn_idx"])
+        for r in spark.read.parquet(in_dir)
+        .filter(F.col("role").rlike(PARAMS.role_whitelist))
+        .collect()
+    }
+    cat = Catalog(str(tmp_path / "wh"))
+    before = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        q = stream_extract_to_catalog(
+            spark, in_dir, cat, PARAMS, str(tmp_path / "ckpt")
+        )
+        q.awaitTermination(300)
+    finally:
+        spark.conf.set(key, before)
+    out = cat.read(spark, "extracted_turns_stream")
+    assert out.select("batch_id").distinct().count() >= 2
+    assert {(r["conv_id"], r["turn_idx"]) for r in out.collect()} == want
+
+
+def test_stream_extract_schema_matches_batch(spark, tmp_path):
+    """Batch and stream end with the same projection, so they return the
+    same columns with the same types."""
+    in_dir = str(tmp_path / "in")
+    generate_transcripts(spark, GenConfig(n_convs=2)).write.parquet(in_dir)
+    batch = extract_turns(spark, spark.read.parquet(in_dir), PARAMS)
+    assert stream_extract(spark, in_dir, PARAMS).schema == batch.schema
+
+
 def test_stream_profile_incremental_and_idempotent(spark, tmp_path):
     """Per-batch partial states merge to the exact batch-side profile,
     absorb a second batch incrementally, and a checkpointed re-run with
