@@ -18085,7 +18085,10 @@ def oracle_sql() -> dict[str, str]:
                          * CAST(q AS DECIMAL(38,0))) AS qq
               FROM e
             ),
-            nr AS (SELECT count(*)::BIGINT AS n FROM embeddings)
+            nr AS (
+              SELECT count(*)::BIGINT AS n FROM embeddings
+              WHERE embedding IS NOT NULL AND len(embedding) > 0
+            )
             SELECT n, dim,
               CASE WHEN n > 1 THEN
                 floor((p - qq)::DOUBLE
@@ -18240,7 +18243,7 @@ def oracle_sql() -> dict[str, str]:
               SELECT CASE WHEN value > 50 THEN 1 ELSE 0 END::BIGINT
                        AS hi,
                      CAST(user_id % 2 AS INT) AS g
-              FROM events
+              FROM events WHERE value IS NOT NULL
             ),
             gm AS (SELECT min(g) AS ga FROM flags),
             agg AS (

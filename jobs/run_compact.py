@@ -1,7 +1,8 @@
 """Warehouse maintenance job: compact a table's small files.
 
-Incremental extraction (resume-driven re-runs, streaming micro-batches)
-appends task-sized parquet files; this job rewrites a warehouse table at a
+A batch ``run_extract`` already writes one file per bucket; incremental
+appends (streaming micro-batches, CC sinks) add task-sized parquet files
+on every commit, and this job rewrites a warehouse table at a
 target file size so downstream scans pay for bytes, not file opens. The
 Iceberg analog is ``rewrite_data_files``; here it is the Catalog's
 write-to-temp + directory-swap commit.

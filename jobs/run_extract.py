@@ -20,6 +20,7 @@ vars (``config.py:119-166``).
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 
 
@@ -98,6 +99,8 @@ def main(argv=None) -> int:
             spark, transcripts, catalog, params, resume=not args.no_resume
         )
         print(f"extracted rows={stats['rows']} buckets={stats['n_buckets']}")
+        # the run record: row count and the wall seconds of each action
+        print(json.dumps(stats, sort_keys=True))
         return 0
     finally:
         spark.stop()

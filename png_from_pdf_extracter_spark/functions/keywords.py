@@ -36,6 +36,8 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .lm import _tokens
+
 
 def build_automaton(keywords: Sequence[str]):
     """Aho-Corasick automaton: goto[(state, ch)] -> state, fail[state] ->
@@ -479,7 +481,7 @@ def burrows_delta(
 
 
 def gries_dp(
-    docs,
+    docs: DataFrame,
     part_col: str = "source",
     text_col: str = "text",
     top_k: int = 20,
@@ -506,17 +508,9 @@ def gries_dp(
     Returns (term, total_freq, n_parts_hit, dp_q6, dp_norm_q6), top_k
     by total frequency (term asc tie-break).
     """
-    from pyspark.sql import functions as F
-
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     toks = docs.select(
-        F.col(part_col).alias("__p"),
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("__t"),
+        F.col(part_col).alias("__p"), F.explode(_tokens(text_col)).alias("__t")
     )
     psize = toks.groupBy("__p").agg(
         F.count("*").cast("long").alias("__pn")

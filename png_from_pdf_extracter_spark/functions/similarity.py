@@ -1987,8 +1987,8 @@ def embedding_isotropy(
     floats are two terminal divisions. Plan: one posexplode shuffle
     keyed by dim (dim-bounded), one scalar aggregate. Returns one row
     (n, dim, mean_dot_q6, mean_sq_norm_q6, anisotropy_q6) in ORIGINAL
-    value units; anisotropy = mean pairwise dot / mean squared norm,
-    null when n < 2 or Q = 0.
+    value units, n counting the non-null, non-empty vectors; anisotropy
+    = mean pairwise dot / mean squared norm, null when n < 2 or Q = 0.
     """
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     qv = F.round(
@@ -2005,7 +2005,11 @@ def embedding_isotropy(
     qq = e.agg(
         F.sum(dec(F.col("__q")) * dec(F.col("__q"))).alias("__qq")
     )
-    nrow = corpus.agg(F.count("*").cast("long").alias("n"))
+    # n counts the vectors that contribute components: a NULL or empty
+    # embedding would otherwise deflate every mean
+    nrow = corpus.filter(
+        F.col(vec_col).isNotNull() & (F.size(vec_col) > 0)
+    ).agg(F.count("*").cast("long").alias("n"))
     j = nrow.crossJoin(F.broadcast(p)).crossJoin(F.broadcast(qq))
     scale2 = float(10 ** quantize) ** 2
     n = F.col("n").cast("double")

@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig, gen_pandas
 from png_from_pdf_extracter_spark.plans import JobParams, extract_turns
-from png_from_pdf_extracter_spark.plans.extract_plan import _final_turn_columns
+from png_from_pdf_extracter_spark.plans.extract_plan import (
+    _final_turn_columns,
+    job_output,
+)
 from png_from_pdf_extracter_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
 
 SF = "/root/testdata/sf0.001"
@@ -68,6 +71,27 @@ def test_flagship_kernel_runs_once_on_text_only(spark, tmp_path):
     assert len(calls) == 1 and re.fullmatch(
         r"extract\(text#\d+\)#\d+", calls[0]
     ), plan
+
+
+def test_job_output_rebalances_by_bucket_above_the_kernel(spark, tmp_path):
+    """The DataFrame ``run_job`` writes clusters rows by bucket with a
+    rebalance exchange placed above the one Python eval, so the kernel
+    still runs once per row; the salted exchange stays below it."""
+    params = JobParams(n_buckets=16, num_partitions=4)
+    plan = _plan(job_output(spark, _transcripts(spark, tmp_path), params))
+    assert len(re.findall(r"\b\w+EvalPython\b", plan)) == 1, plan
+    calls = re.findall(r"ArrowEvalPython \[(.*?)\], ", plan)
+    assert len(calls) == 1 and re.fullmatch(
+        r"extract\(text#\d+\)#\d+", calls[0]
+    ), plan
+    exchanges = [m.start() for m in re.finditer(r"\bExchange\b", plan)]
+    rebalance = re.search(
+        r"Exchange hashpartitioning\(partition_id#\d+, \d+\), "
+        r"REBALANCE_PARTITIONS_BY_COL",
+        plan,
+    )
+    assert len(exchanges) == 2 and rebalance, plan
+    assert rebalance.start() < plan.index("ArrowEvalPython") < exchanges[1], plan
 
 
 def test_join_topn_broadcasts_both_dims(spark):

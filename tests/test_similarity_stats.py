@@ -394,6 +394,14 @@ def test_embedding_isotropy_collapsed_vs_spread(spark):
     assert abs(r3["mean_dot_q6"] - math.floor(mean_dot * 1e6) / 1e6) < 2e-6
     assert abs(r3["anisotropy_q6"] - math.floor(aniso * 1e6) / 1e6) < 2e-6
 
+    # NULL and empty vectors contribute no components, so they must not
+    # count toward n either: the result equals the clean set's
+    dirty = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vecs)] + [(10, None), (11, [])],
+        "vec_id long, embedding array<double>",
+    )
+    assert embedding_isotropy(dirty, quantize=4).collect()[0] == r3
+
 
 def test_embedding_effective_rank_planted_dims(spark):
     from png_from_pdf_extracter_spark.functions.similarity import (

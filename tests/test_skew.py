@@ -3,11 +3,16 @@ many tasks after the salted repartition (SURVEY.md §7 hard part #2). Without
 salting, hash partitioning on conv_id alone would pin the hot conversation
 to one task — the straggler that kills scaling efficiency at 10^12 turns."""
 
+import glob
+import os
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig, gen_pandas
 from png_from_pdf_extracter_spark.operators import salted_repartition
-from png_from_pdf_extracter_spark.plans import JobParams, extract_turns
+from png_from_pdf_extracter_spark.plans import JobParams, extract_turns, run_job
+from png_from_pdf_extracter_spark.sources.catalog import Catalog
 from png_from_pdf_extracter_spark.sources.transcripts import (
     TRANSCRIPTS_SCHEMA,
     with_partition_id,
@@ -275,3 +280,55 @@ def test_rendezvous_rejects_bad_shard_lists(spark):
         rendezvous_shard(df, "k", [])
     with pytest.raises(ValueError):
         rendezvous_shard(df, "k", [f"s{i}" for i in range(65)])
+
+
+def test_job_writes_one_file_per_bucket_and_splits_a_hot_bucket(
+    spark, tmp_path
+):
+    """``run_job`` clusters its write by bucket: one parquet file per
+    touched bucket. With a small advisory partition size, AQE splits the
+    hot conversation's bucket across files, and the per-turn rows and the
+    lineage rows stay the same."""
+    tdf, _ = gen_pandas(GCFG)
+    src = str(tmp_path / "in")
+    spark.createDataFrame(tdf, schema=TRANSCRIPTS_SCHEMA).write.parquet(src)
+    params = JobParams(n_buckets=16, extractor=GCFG.extractor, num_partitions=16)
+
+    def run(name):
+        cat = Catalog(str(tmp_path / name))
+        run_job(spark, spark.read.parquet(src), cat, params)
+        files = Counter(
+            os.path.basename(os.path.dirname(f))
+            for f in glob.glob(
+                os.path.join(cat.path("extracted_turns"), "*", "*.parquet")
+            )
+        )
+        turns = (
+            cat.read(spark, "extracted_turns")
+            .toPandas()
+            .sort_values(["conv_id", "turn_idx"])
+            .reset_index(drop=True)
+        )
+        lineage = (
+            cat.read(spark, "extract_metrics")
+            .select("partition_id", "rows", "bytes", "n_errors", "digest")
+            .toPandas()
+            .sort_values("partition_id")
+            .reset_index(drop=True)
+        )
+        return files, turns, lineage
+
+    files, turns, lineage = run("default")
+    assert len(files) == len(lineage) and set(files.values()) == {1}, files
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "16k")
+    try:
+        split_files, split_turns, split_lineage = run("split")
+    finally:
+        spark.conf.set(key, old)
+    hot = turns.loc[turns.conv_id == "conv-00000000", "partition_id"].iloc[0]
+    assert split_files[f"partition_id={hot}"] > 1, split_files
+    assert split_turns.equals(turns)
+    assert split_lineage.equals(lineage)

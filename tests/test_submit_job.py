@@ -8,6 +8,7 @@ a second run with the same warehouse re-processes nothing and duplicates
 nothing (the delete-source-on-commit analog, ref job_processor.py:148-153).
 """
 
+import json
 import os
 import shutil
 import subprocess
@@ -65,6 +66,12 @@ def test_spark_submit_pyfiles_job(spark, tmp_path):
     r1 = subprocess.run(cmd, capture_output=True, text=True, timeout=600, env=env)
     assert r1.returncode == 0, r1.stderr[-4000:]
     assert f"extracted rows={n_expected}" in r1.stdout
+    # the run record: one JSON line with the count and per-action walls
+    record = json.loads(r1.stdout.strip().splitlines()[-1])
+    assert record["rows"] == n_expected
+    assert all(
+        record[k] >= 0 for k in ("write_s", "quarantine_s", "cc_s", "lineage_s")
+    )
 
     out = spark.read.parquet(os.path.join(warehouse, "extracted_turns"))
     assert out.count() == n_expected
