@@ -18010,25 +18010,31 @@ def oracle_sql() -> dict[str, str]:
             ),
             wide AS (
               SELECT query_id, rank, rel,
-                count(*) OVER (PARTITION BY query_id)::BIGINT AS d
+                count(*) OVER (PARTITION BY query_id)::BIGINT AS d,
+                coalesce(rank = row_number() OVER (
+                  PARTITION BY query_id ORDER BY rank ASC NULLS FIRST),
+                  false) AS at_pos
               FROM judged
             ),
             agg AS (
               SELECT query_id, max(d)::BIGINT AS n_ranked,
-                sum(rel
+                sum(CASE WHEN at_pos AND d <= 22 THEN rel
                     * CAST(round(pow(4, (rank - 1)::DOUBLE), 0)
                            AS BIGINT)
                     * CAST(round(pow(5, (d - rank)::DOUBLE), 0)
-                           AS BIGINT))::BIGINT AS isum
+                           AS BIGINT) END)::BIGINT AS isum,
+                bool_and(at_pos) AND max(d) <= 22 AS ok
               FROM wide GROUP BY query_id
             )
             SELECT query_id, n_ranked,
-              floor((1.0 * isum::DOUBLE)
-                    / round(pow(5, n_ranked::DOUBLE), 0) * 1e6) / 1e6
-                AS rbp_q6,
-              floor(round(pow(4, n_ranked::DOUBLE), 0)
-                    / round(pow(5, n_ranked::DOUBLE), 0) * 1e6) / 1e6
-                AS rbp_residual_q6
+              CASE WHEN ok THEN
+                floor((1.0 * isum::DOUBLE)
+                      / round(pow(5, n_ranked::DOUBLE), 0) * 1e6) / 1e6
+              END AS rbp_q6,
+              CASE WHEN ok THEN
+                floor(round(pow(4, n_ranked::DOUBLE), 0)
+                      / round(pow(5, n_ranked::DOUBLE), 0) * 1e6) / 1e6
+              END AS rbp_residual_q6
             FROM agg
             ORDER BY query_id
         """,

@@ -104,7 +104,7 @@ def main(argv=None) -> int:
         # same-session re-runs overwrite a path Spark has already listed —
         # drop the cached file index before the read-back count
         spark.catalog.refreshByPath(catalog.path("curated_docs"))
-        n_kept = spark.read.parquet(catalog.path("curated_docs")).count()
+        n_kept = catalog.read(spark, "curated_docs").count()
         print(
             f"curated kept={n_kept} of={n_in} "
             f"near_dups_removed={near_dups_removed} blocked={blocked} "

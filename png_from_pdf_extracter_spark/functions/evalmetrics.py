@@ -2234,12 +2234,18 @@ def rank_biased_precision(
     every per-rank term an exact BIGINT (order-free integer sum — no
     stepped window needed) and leaves ONE terminal float division;
     the residual p^d = num^d/den^d is a ratio of two exact integers.
-    Depth bound: den^d must fit a BIGINT (d <= 27 at den=5 —
-    documented, ranker k is far below). One group-key shuffle.
+    Exact bound: the powers are exact only while den^d < 2^53 (every
+    integer below 2^53 is a double; d <= 22 at den=5). A group deeper
+    than that, or whose ranks are not exactly 1..d (a gap, a repeat or
+    a NULL rank), gets NULL rbp_q6 and rbp_residual_q6 rather than a
+    silently wrong value. One group-key shuffle.
     Returns (group..., n_ranked, rbp_q6, rbp_residual_q6).
     """
     if not 0 < p_num < p_den:
         raise ValueError("need 0 < p_num < p_den")
+    max_d = 0
+    while p_den ** (max_d + 1) < 2 ** 53:
+        max_d += 1
     gcols = list(group_cols)
     r = F.col(rank_col).cast("int")
     rel = F.col(rel_col).cast("long")
@@ -2247,26 +2253,34 @@ def rank_biased_precision(
         *gcols, r.alias("__rank"), rel.alias("__rel")
     )
     wfull = Window.partitionBy(*gcols)
+    # the sorted ranks equal 1..d exactly when each equals its position
+    wpos = wfull.orderBy(F.col("__rank").asc_nulls_first())
     wide = base.select(
         *gcols,
         "__rank",
         "__rel",
         F.count("*").over(wfull).cast("long").alias("__d"),
+        F.coalesce(
+            F.col("__rank") == F.row_number().over(wpos), F.lit(False)
+        ).alias("__at"),
     )
     # exact integer powers: round() kills any 1-ulp pow error before
     # the cast (values < 2^53 are exactly representable)
     ipow = lambda b, e: F.round(  # noqa: E731
         F.pow(F.lit(float(b)), e.cast("double")), 0
     ).cast("long")
-    term = (
+    term = F.when(
+        F.col("__at") & (F.col("__d") <= max_d),
         F.col("__rel")
         * ipow(p_num, F.col("__rank") - 1)
-        * ipow(p_den, F.col("__d") - F.col("__rank"))
+        * ipow(p_den, F.col("__d") - F.col("__rank")),
     )
     agg = wide.groupBy(*gcols).agg(
         F.max("__d").cast("long").alias("n_ranked"),
         F.sum(term).cast("long").alias("__isum"),
+        F.bool_and("__at").alias("__exact"),
     )
+    ok = F.col("__exact") & (F.col("n_ranked") <= max_d)
     den_d = F.round(
         F.pow(F.lit(float(p_den)), F.col("n_ranked").cast("double")), 0
     )
@@ -2277,11 +2291,14 @@ def rank_biased_precision(
     return agg.select(
         *gcols,
         "n_ranked",
-        q6(
-            (F.lit(float(p_den - p_num)) * F.col("__isum").cast("double"))
-            / den_d
+        F.when(
+            ok,
+            q6(
+                (F.lit(float(p_den - p_num)) * F.col("__isum").cast("double"))
+                / den_d
+            ),
         ).alias("rbp_q6"),
-        q6(num_d / den_d).alias("rbp_residual_q6"),
+        F.when(ok, q6(num_d / den_d)).alias("rbp_residual_q6"),
     )
 
 

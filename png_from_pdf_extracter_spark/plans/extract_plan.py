@@ -28,11 +28,9 @@ Scale notes (100 TB / 1000 executors):
   struct comes back; the pass-through columns never leave the JVM, and each
   unit's text crosses Arrow once. The post-write passes (errors, metrics)
   read back pruned columns from parquet instead of re-running extraction.
-- Dynamic partition overwrite by bucket makes re-runs idempotent without a
-  read-modify-write dedup (the Iceberg overwrite-partition commit analog).
-  It is a per-write option, never a session setting: a streaming query's
-  micro-batches run in a copy of the session that a later conf change
-  does not reach.
+- Dynamic partition overwrite by bucket (``Catalog.overwrite_partitions``)
+  makes re-runs idempotent without a read-modify-write dedup (the Iceberg
+  overwrite-partition commit analog).
 """
 
 from __future__ import annotations
@@ -300,9 +298,10 @@ def run_job(
         # run identity on the dead-letter rows: a resumed/re-run job appends
         # the same rejects again (the input is re-scanned), so consumers
         # must be able to distinguish and dedup by run
-        rejects.withColumn(
-            "run_id", F.lit(started_at.isoformat())
-        ).write.mode("append").parquet(catalog.path("input_rejects"))
+        catalog.append(
+            rejects.withColumn("run_id", F.lit(started_at.isoformat())),
+            "input_rejects",
+        )
 
     metrics = (
         catalog.read(spark, "extract_metrics")
@@ -311,12 +310,10 @@ def run_job(
     )
 
     t0 = time.perf_counter()
-    (
-        job_output(spark, transcripts, params, metrics)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(catalog.path("extracted_turns"))
+    catalog.overwrite_partitions(
+        job_output(spark, transcripts, params, metrics),
+        "extracted_turns",
+        "partition_id",
     )
     t1 = time.perf_counter()
 
@@ -327,12 +324,7 @@ def run_job(
         written = pending_only(written, done)
 
     _, quarantined = split_quarantine(written)
-    (
-        quarantined.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("partition_id")
-        .parquet(catalog.path("extract_errors"))
-    )
+    catalog.overwrite_partitions(quarantined, "extract_errors", "partition_id")
     t2 = time.perf_counter()
 
     # CC fan-out (ref smtp_service.py:120-144): same extracted rows to the
@@ -340,9 +332,7 @@ def run_job(
     # sink) BEFORE the lineage commit so a crash mid-fan-out re-runs the
     # whole bucket rather than leaving a cc sink ahead of the commit record
     for cc in params.cc_tables:
-        written.write.mode("append").partitionBy("partition_id").parquet(
-            catalog.path(cc)
-        )
+        catalog.append(written, cc, "partition_id")
     t3 = time.perf_counter()
 
     # lineage commit lands LAST (delete-source-on-commit analog); the row

@@ -2,9 +2,12 @@
 
 The north rule targets Iceberg tables; this sandbox has no Iceberg catalog
 jars, so the catalog wraps parquet directories with the same call shapes
-(``read / append / overwrite / exists``) behind one seam. On a real cluster,
-swap ``_fmt`` for ``"iceberg"`` + table identifiers and everything above this
-module is unchanged. Atomicity note: Iceberg gives snapshot-atomic appends;
+(``read / append / overwrite / overwrite_partitions / exists``). That is
+the one seam: every read and write of a catalog table in the package goes
+through these methods (``snapshots.SnapshotTable`` is the other table
+layer), so on a real cluster an Iceberg catalog replaces their bodies
+(table identifiers instead of paths) and everything above this module is
+unchanged. Atomicity note: Iceberg gives snapshot-atomic appends;
 parquet append is directory-level (new files land last). Our resume protocol
 only trusts a partition after its lineage row exists in ``extract_metrics``
 (the delete-source-on-commit analog, ref ``/root/reference/src/services/
@@ -57,8 +60,30 @@ class Catalog:
         self._recover(table)
         return spark.read.parquet(self.path(table))
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(self.path(table))
+    def append(self, df: DataFrame, table: str, *partition_cols: str) -> None:
+        df.write.mode("append").partitionBy(*partition_cols).parquet(
+            self.path(table)
+        )
+
+    def overwrite_partitions(
+        self, df: DataFrame, table: str, *partition_cols: str
+    ) -> None:
+        """The commit of a re-runnable write (the Iceberg overwrite-partition
+        analog): ``df`` lands partitioned by ``partition_cols`` and replaces
+        only the partitions it holds, so a re-run bucket or a replayed
+        micro-batch overwrites itself and leaves every other partition of
+        ``table`` alone (spec NFR-007/008).
+
+        Dynamic overwrite is a per-write option, never a session setting:
+        a streaming query's micro-batches run in the query's own copy of
+        the session, made when the query starts, which a later conf change
+        does not reach."""
+        (
+            df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(*partition_cols)
+            .parquet(self.path(table))
+        )
 
     def overwrite(self, df: DataFrame, table: str) -> None:
         df.write.mode("overwrite").parquet(self.path(table))

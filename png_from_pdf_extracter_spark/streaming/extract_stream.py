@@ -19,22 +19,75 @@ The extraction itself is the SAME UDF and projection as the batch plan
 like the reference reuses ``process_next_email`` from both the CLI and the
 daemon.
 
-Every partitioned overwrite here passes ``partitionOverwriteMode=dynamic``
-as a write option. Setting it on the session from inside ``commit_batch``
-would not work: micro-batches run in the query's own copy of the session,
-made when the query starts.
+Every foreachBatch sink here starts through ``_start``, and every per-batch
+state monitor commits through ``_batch_state_sink``.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import datetime as _dt
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.extract_plan import JobParams, extract_columns
+from ..plans.extract_plan import JobParams, _final_turn_columns, extract_columns
+from ..plans.metrics import partition_metrics
 from ..sources.catalog import Catalog
 from ..sources.transcripts import TRANSCRIPTS_SCHEMA, with_partition_id
+
+
+def _start(df: DataFrame, commit, checkpoint: str, processing_time: str | None):
+    """Start ``df`` as a foreachBatch query that calls ``commit(batch_df,
+    batch_id)`` per micro-batch. Default trigger is ``availableNow`` (one
+    drained poll cycle, restart-safe via the checkpoint); a
+    ``processing_time`` such as ``'60 seconds'`` is the daemon loop (runs
+    until stopped). Returns the started ``StreamingQuery``."""
+    writer = df.writeStream.foreachBatch(commit).option(
+        "checkpointLocation", checkpoint
+    )
+    if processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    else:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _batch_state_sink(
+    spark: SparkSession,
+    input_path: str,
+    catalog: Catalog,
+    table: str,
+    checkpoint: str,
+    processing_time: str | None,
+    state_of,
+):
+    """Stream the parquet files under ``input_path`` and commit
+    ``state_of(batch_df)`` of every micro-batch under its own ``batch_id``
+    partition of ``table``: a replayed batch overwrites its own state, so
+    the state table is exactly-once without transactions."""
+    schema = spark.read.parquet(input_path).schema
+    src = spark.readStream.schema(schema).parquet(input_path)
+
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        state = state_of(batch_df).withColumn("batch_id", F.lit(batch_id))
+        catalog.overwrite_partitions(state, table, "batch_id")
+
+    return _start(src, commit, checkpoint, processing_time)
+
+
+def _epoch(table, batch_id: int) -> dict | None:
+    """Snapshot summary for committing micro-batch ``batch_id`` to a
+    ``SnapshotTable``, or None when the head manifest's ``max_batch_id``
+    says the batch is already committed (a replay after a crash, which
+    the caller skips). Every commit carries ``max_batch_id`` forward, so
+    the guard survives ``expire_snapshots`` and interleaved compaction."""
+    try:
+        prev_max = int(table.manifest().get("max_batch_id", -1))
+    except FileNotFoundError:
+        prev_max = -1
+    if batch_id <= prev_max:
+        return None
+    return {"batch_id": batch_id, "max_batch_id": batch_id}
 
 
 def stream_extract(
@@ -92,10 +145,6 @@ def stream_extract_to_catalog(
     ``availableNow`` — one drained poll cycle, restart-safe via the
     checkpoint; pass ``processing_time='60 seconds'`` for the literal
     daemon loop (runs until stopped)."""
-    from ..plans.extract_plan import _final_turn_columns
-    from ..plans.metrics import partition_metrics
-    import datetime as _dt
-
     extracted = stream_extract(spark, input_path, params)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -104,12 +153,7 @@ def stream_extract_to_catalog(
         )
         out = out.persist()  # data write + metrics read the same batch
         try:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id", "partition_id")
-                .parquet(catalog.path(table))
-            )
+            catalog.overwrite_partitions(out, table, "batch_id", "partition_id")
             m = partition_metrics(
                 out,
                 params.extractor_version,
@@ -119,14 +163,7 @@ def stream_extract_to_catalog(
         finally:
             out.unpersist()
 
-    writer = extracted.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(extracted, commit_batch, checkpoint, processing_time)
 
 
 def stream_turn_rates(
@@ -319,36 +356,18 @@ def stream_extract_to_snapshots(
     each batch's rows exactly once. This is the Iceberg streaming-sink
     commit design (snapshot per epoch, epoch id in the summary), minus
     the jars. ``table`` is a ``SnapshotTable``."""
-    from ..plans.extract_plan import _final_turn_columns
-
     extracted = stream_extract(spark, input_path, params)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev_max = int(table.manifest().get("max_batch_id", -1))
-        except FileNotFoundError:
-            prev_max = -1
-        if batch_id <= prev_max:
+        extra = _epoch(table, batch_id)
+        if extra is None:
             return  # replay of a committed batch: exactly-once no-op
         out = _final_turn_columns(batch_df, params).withColumn(
             "batch_id", F.lit(batch_id)
         )
-        table.append(
-            out,
-            extra={
-                "batch_id": batch_id,
-                "max_batch_id": max(batch_id, prev_max),
-            },
-        )
+        table.append(out, extra=extra)
 
-    writer = extracted.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(extracted, commit_batch, checkpoint, processing_time)
 
 
 def stream_upsert_to_snapshots(
@@ -375,33 +394,19 @@ def stream_upsert_to_snapshots(
     src = spark.readStream.schema(schema).parquet(input_path)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        try:
-            prev_max = int(table.manifest().get("max_batch_id", -1))
-        except FileNotFoundError:
-            prev_max = -1
-        if batch_id <= prev_max:
+        extra = _epoch(table, batch_id)
+        if extra is None:
             return  # replay of a committed batch: exactly-once no-op
         if "ts" in batch_df.columns:
             from ..functions.dedup import dedup_latest
 
             batch_df = dedup_latest(batch_df, [key_col], "ts")
-        extra = {
-            "batch_id": batch_id,
-            "max_batch_id": max(batch_id, prev_max),
-        }
         if table.current_version() is None:
             table.append(batch_df, extra=extra)
         else:
             table.merge_mor(batch_df, key_col, extra=extra)
 
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(src, commit_batch, checkpoint, processing_time)
 
 
 def stream_profile_to_catalog(
@@ -425,28 +430,12 @@ def stream_profile_to_catalog(
     each new batch at the cost of aggregating THAT batch only."""
     from ..functions import incremental
 
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = incremental.partial_profile(
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time,
+        lambda batch_df: incremental.partial_profile(
             batch_df, group_col, value_col
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
-        )
-
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+        ),
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_drift_monitor(
@@ -472,28 +461,10 @@ def stream_drift_monitor(
     DataFrame if the trigger interval is short."""
     from ..functions.drift import psi_drift
 
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        report = psi_drift(
-            reference, batch_df, value_col, group_col
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            report.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
-        )
-
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time,
+        lambda batch_df: psi_drift(reference, batch_df, value_col, group_col),
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_profile(
@@ -535,28 +506,10 @@ def stream_kmv_monitor(
     registers."""
     from ..functions.sketch import kmv_build
 
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sketch = kmv_build(batch_df, item_col, group_cols, k).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            sketch.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
-        )
-
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time,
+        lambda batch_df: kmv_build(batch_df, item_col, group_cols, k),
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_kmv_distinct(
@@ -604,29 +557,12 @@ def stream_cusum_monitor(
     actually acts on."""
     from ..functions.stats import cusum_batch_state
 
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = cusum_batch_state(
-            batch_df, group_cols, order_cols, value_col,
-            target_q, slack_q,
-        ).withColumn("batch_id", F.lit(batch_id))
-        (
-            state.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
-        )
-
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time,
+        lambda batch_df: cusum_batch_state(
+            batch_df, group_cols, order_cols, value_col, target_q, slack_q
+        ),
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_cusum_alarms(
@@ -697,10 +633,8 @@ def stream_topk_monitor(
     frequency exceeds N/(k+1) survives in the merged state, and each
     surviving estimate undershoots its true count by at most N/(k+1)
     in total."""
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def summary(batch_df: DataFrame) -> DataFrame:
         cnt = (
             batch_df.select(
                 F.col(item_col).cast("string").alias("item")
@@ -709,24 +643,11 @@ def stream_topk_monitor(
             .groupBy("item")
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        summary = _mg_compress(cnt, "item", k).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            summary.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
-        )
+        return _mg_compress(cnt, "item", k)
 
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time, summary
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_topk_estimates(
@@ -770,33 +691,17 @@ def stream_srm_monitor(
     (per-partition rows) and "has the experiment drifted overall"
     (the fold). State is arms x batches rows of BIGINTs.
     """
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        counts = (
-            batch_df.select(
-                F.col(arm_col).cast("string").alias("arm")
-            )
+    def counts(batch_df: DataFrame) -> DataFrame:
+        return (
+            batch_df.select(F.col(arm_col).cast("string").alias("arm"))
             .groupBy("arm")
             .agg(F.count("*").cast("long").alias("__o"))
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            counts.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
         )
 
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time, counts
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_srm(
@@ -840,16 +745,14 @@ def stream_msprt_monitor(
     partials and scores the CUMULATIVE mixture likelihood ratio at
     read time. State is arms x batches rows of BIGINT/DECIMAL.
     """
-    schema = spark.read.parquet(input_path).schema
-    src = spark.readStream.schema(schema).parquet(input_path)
     scale = 10 ** quantize
 
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def moments(batch_df: DataFrame) -> DataFrame:
         v = F.round(
             F.col(value_col).cast("double") * F.lit(scale), 0
         ).cast("long")
         vd = v.cast("decimal(38,0)")
-        moments = (
+        return (
             batch_df.select(
                 F.col(arm_col).cast("string").alias("arm"),
                 v.alias("__v"),
@@ -862,23 +765,11 @@ def stream_msprt_monitor(
                 F.sum("__v").cast("long").alias("__s"),
                 F.sum(F.col("__vd") * F.col("__vd")).alias("__q"),
             )
-            .withColumn("batch_id", F.lit(batch_id))
-        )
-        (
-            moments.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(catalog.path(table))
         )
 
-    writer = src.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint
+    return _batch_state_sink(
+        spark, input_path, catalog, table, checkpoint, processing_time, moments
     )
-    if processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    else:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_msprt(

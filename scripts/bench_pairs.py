@@ -16,7 +16,10 @@ it prints both sides' median and quartiles, the pairs the change won (ties
 count for neither), whether the change's median is worse than the parent's
 by more than the metric's bound, and the gain verdict: the change wins at
 least nine tenths of the pairs and the medians differ by more than the
-distance between the parent's quartiles.
+distance between the parent's quartiles. A metric whose parent runs spread
+wider than its bound (quartile distance over median) is printed
+``UNRESOLVED`` in place of ``within bound``, unless every change run reads
+better than every parent run.
 """
 
 from __future__ import annotations
@@ -85,10 +88,13 @@ def summarize(records: list, end_to_end: list, workloads: list) -> list:
             cq1, cmed, cq3 = quartiles(chg)
             gap = (pmed - cmed) if lower else (cmed - pmed)
             worse = -gap / pmed if pmed else 0.0
+            spread = (pq3 - pq1) / pmed if pmed else 0.0
+            beats_all = max(chg) < min(par) if lower else min(chg) > max(par)
             rows.append({
                 "workload": wl, "metric": name, "unit": m["unit"], "pairs": len(done),
                 "parent": (pq1, pmed, pq3), "change": (cq1, cmed, cq3),
                 "wins": wins, "over_bound": worse > m["bound"],
+                "unresolved": spread > m["bound"] and not beats_all,
                 "gain": wins >= 0.9 * len(done) and gap > pq3 - pq1,
                 "correct": all(p[s]["correct"] and p[s]["failed"] == 0 for p in done for s in SIDES),
             })
@@ -119,10 +125,14 @@ def main(argv=None) -> int:
     rows = summarize(seeded, bench["end_to_end"], args.workload)
     for r in rows:
         fmt = lambda q: f"{q[1]:.4g} [{q[0]:.4g}, {q[2]:.4g}]"  # noqa: E731
+        bound = (
+            "OVER BOUND" if r["over_bound"]
+            else "UNRESOLVED" if r["unresolved"] else "within bound"
+        )
         print(
             f"{r['workload']:<15} {r['metric']:<17} parent {fmt(r['parent'])}  "
             f"change {fmt(r['change'])} {r['unit']}  wins {r['wins']}/{r['pairs']}  "
-            f"{'OVER BOUND' if r['over_bound'] else 'within bound'}  "
+            f"{bound}  "
             f"{'GAIN' if r['gain'] else 'no gain'}"
             f"{'' if r['correct'] else '  INCORRECT RUNS'}"
         )

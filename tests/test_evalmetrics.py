@@ -1226,6 +1226,28 @@ def test_rank_biased_precision_hand_case(spark):
     assert abs(out["q1"]["rbp_residual_q6"]
                - math.floor(res * 1e6) / 1e6) < 2e-6
 
+    # exact only while 5^d < 2^53 (d <= 22) and ranks are exactly 1..d:
+    # a gapped or repeated rank, or a deeper pool, reads NULL
+    rows = [("gap", r, 1) for r in (1, 2, 4)]
+    rows += [("dup", r, 1) for r in (1, 2, 2)]
+    rows += [("d22", r, r % 2) for r in range(1, 23)]
+    rows += [("d23", r, r % 2) for r in range(1, 24)]
+    df = spark.createDataFrame(rows, "query_id string, rank int, rel int")
+    out = {
+        r["query_id"]: r
+        for r in rank_biased_precision(
+            df, "rel", "rank", ("query_id",)
+        ).collect()
+    }
+    for q in ("gap", "dup", "d23"):
+        assert out[q]["rbp_q6"] is None, q
+        assert out[q]["rbp_residual_q6"] is None, q
+    assert out["gap"]["n_ranked"] == 3 and out["d23"]["n_ranked"] == 23
+    exp = 0.2 * sum(0.8 ** (r - 1) for r in range(1, 23, 2))
+    assert abs(out["d22"]["rbp_q6"] - math.floor(exp * 1e6) / 1e6) < 2e-6
+    assert abs(out["d22"]["rbp_residual_q6"]
+               - math.floor(0.8 ** 22 * 1e6) / 1e6) < 2e-6
+
     import pytest
 
     with pytest.raises(ValueError):
