@@ -416,27 +416,13 @@ def level_runs(cores: int, in_path: str, out_base: str, runs: int) -> dict:
             "trusted": trusted}
 
 
-# Per-query bench exclusions: key -> one-line reason. EMPTY by design —
-# every registered query is benched (r4 verdict #2: 53 unbenched queries
-# were a blind spot where a per-query regression could hide). The
-# registry-integrity suite asserts set(queries()) == benched ∪ excluded,
-# so a future exclusion must land here WITH its reason or the tests fail.
-BENCH_EXCLUDED: dict = {}
-
-
-def bench_query_keys(all_keys) -> list:
-    """The per-query sweep list: the ENTIRE registry minus the explicit
-    exclusion table, sorted for a stable artifact order."""
-    return sorted(k for k in all_keys if k not in BENCH_EXCLUDED)
-
-
 def bench_sf_queries(spark: SparkSession, sf_dir: str) -> dict:
     """Time every registered operator query from __spark_entry__ at
-    sf_dir (full-registry sweep; see BENCH_EXCLUDED)."""
+    sf_dir (the whole registry, in name order)."""
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
-    keys = bench_query_keys(qs.keys())
+    keys = sorted(qs)
     from png_from_pdf_extracter_spark.functions import dedup
 
     # ambient-noise guard: this VM has hypervisor-neighbor windows where a

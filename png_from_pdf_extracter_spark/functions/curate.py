@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import text
+from .text import tokens
 
 
 def curate_corpus(
@@ -175,9 +176,7 @@ def gopher_signals(
     Two shuffles, both keyed by doc id (the second collapses ~vocab-size
     rows per doc), map-side combinable throughout. The gate compares the
     ROUNDED ratios so an oracle on another engine agrees at boundaries."""
-    wds = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: F.length(x) > 0
-    )
+    wds = tokens(F.col(text_col))
     wc = (
         docs.select(F.col(id_col).alias("id"), F.explode(wds).alias("word"))
         .groupBy("id", "word")
@@ -237,10 +236,7 @@ def repetition_signals(
     n-gram orders they do reach; missing orders are 0-row -> inner join
     keeps docs that have every order, matching the oracle).
     """
-    wds = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
+    wds = tokens(F.lower(F.col(text_col)))
     base = docs.select(F.col(id_col).alias("id"), wds.alias("toks"))
     out = None
     for n in ngrams:
@@ -493,9 +489,7 @@ def hashed_linear_score(
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     half = (n_buckets - 1) // 2
-    toks = F.filter(
-        F.split(F.lower(F.trim(c)), r"\s+"), lambda t: F.length(t) > 0
-    )
+    toks = tokens(F.lower(c))
 
     # sum the INTEGER weight numerators and divide exactly once: a
     # per-token float divide + float fold accumulates summation-order
@@ -574,12 +568,7 @@ def word_entropy(
     wc = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(
-                F.filter(
-                    F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                    lambda x: F.length(x) > 0,
-                )
-            ).alias("word"),
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("c"))
@@ -620,9 +609,7 @@ def chunk_sliding(
     """
     if stride <= 0 or size <= 0:
         raise ValueError("size and stride must be positive")
-    toks = F.filter(
-        text.words(F.col(text_col)), lambda t: F.length(t) > 0
-    )
+    toks = tokens(F.col(text_col))
     base = df.select(
         F.col(id_col).alias("doc_id"),
         toks.alias("toks"),
@@ -717,12 +704,7 @@ def source_similarity(
     """
     toks = df.select(
         F.col(group_col).alias("g"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("tok"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("tok"),
     )
     tf = toks.groupBy("g", "tok").agg(F.count("*").alias("c"))
     norms = tf.groupBy("g").agg(

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import words
+from .text import tokens, words
 
 # cross-engine-stable 60-bit hash: bigint of the first 15 hex chars of md5
 def _h(col, salt: str = "") -> F.Column:
@@ -864,10 +864,7 @@ def duplicate_spans(
     """
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda x: F.length(x) > 0,
-        ).alias("toks"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     )
     sz = F.size("toks")
     idxs = F.when(sz >= window, F.sequence(F.lit(1), sz - window + 1)).otherwise(
@@ -969,10 +966,7 @@ def remove_duplicate_spans(
     )
     toks = df.select(
         F.col(id_col).alias("doc_id"),
-        F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda x: F.length(x) > 0,
-        ).alias("toks"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     )
     joined = toks.join(
         per_doc, toks.doc_id == per_doc._sid, "left"
@@ -1259,10 +1253,7 @@ def tfidf_cosine_pairs(
     """
     if max_df < 2:
         raise ValueError("max_df must be >= 2")
-    wds = F.filter(
-        F.split(F.trim(F.col(text_col)), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
+    wds = tokens(F.col(text_col))
     terms = docs.select(
         F.col(id_col).alias("id"), F.explode(wds).alias("w")
     )

@@ -36,7 +36,7 @@ from typing import Iterator, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .lm import _tokens
+from .text import tokens
 
 
 def build_automaton(keywords: Sequence[str]):
@@ -196,10 +196,7 @@ def rake_keyphrases(
     """
     from pyspark.sql import Window
 
-    toks = F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
+    toks = tokens(F.lower(F.col(text_col)))
     stops = [s.lower() for s in stopwords]
     pos = docs.select(
         F.col(id_col).alias("__d"), toks.alias("__t")
@@ -329,12 +326,7 @@ def juilland_dispersion(
     parts_k = docs.select(part_col).distinct().count()
     toks = docs.select(
         F.col(part_col).alias("__p"),
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("__t"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("__t"),
     )
     tp = toks.groupBy("__t", "__p").agg(
         F.count("*").cast("long").alias("__c")
@@ -390,12 +382,7 @@ def burrows_delta(
     """
     toks = docs.select(
         F.col(part_col).alias("__p"),
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("__t"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("__t"),
     )
     tp = toks.groupBy("__p", "__t").agg(
         F.count("*").cast("long").alias("__c")
@@ -510,7 +497,8 @@ def gries_dp(
     """
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     toks = docs.select(
-        F.col(part_col).alias("__p"), F.explode(_tokens(text_col)).alias("__t")
+        F.col(part_col).alias("__p"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("__t"),
     )
     psize = toks.groupBy("__p").agg(
         F.count("*").cast("long").alias("__pn")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .text import tokens
+
 
 def unigram_perplexity(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -39,7 +41,7 @@ def unigram_perplexity(
     Returns (id_col, n_tokens, avg_nll, ppl), one row per document that
     has at least one token.
     """
-    toks = _tokens(text_col)
+    toks = tokens(F.lower(F.col(text_col)))
     terms = docs.select(F.col(id_col), F.explode(toks).alias("word"))
     freq = terms.groupBy("word").agg(F.count("*").alias("cnt"))
     total = freq.agg(F.sum("cnt").cast("double").alias("total"))
@@ -53,16 +55,6 @@ def unigram_perplexity(
             F.round(nll, 3).alias("avg_nll"),
             F.round(F.exp(nll), 1).alias("ppl"),
         )
-    )
-
-
-def _tokens(text_col: str):
-    """Lowercase whitespace tokens with empties dropped — the shared
-    tokenization contract (same as ``unigram_perplexity`` and the DuckDB
-    oracles)."""
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda x: F.length(x) > 0,
     )
 
 
@@ -85,7 +77,7 @@ def bpe_merge_stats(
     a TakeOrdered, not a global sort.
     """
     wf = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
     )
@@ -190,7 +182,7 @@ def bpe_train(
     """
     chars = F.filter(F.split(F.col("word"), ""), lambda c: F.length(c) > 0)
     vocab = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .select("cnt", chars.alias("syms"))
@@ -344,7 +336,7 @@ def bpe_encode(
     wf = (
         docs.select(
             F.col(id_col).alias("doc_id"),
-            F.explode(_tokens(text_col)).alias("word"),
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
         )
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("cnt"))
@@ -391,7 +383,7 @@ def bigram_perplexity(
     Returns (id_col, n_bigrams, avg_nll, ppl), one row per document with
     at least two tokens.
     """
-    toks = _tokens(text_col)
+    toks = tokens(F.lower(F.col(text_col)))
     n = F.size(toks)
     bigrams = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -440,7 +432,7 @@ def pmi_bigrams(
     expanded to pure integer-count logs so both engines evaluate the same
     expression tree: log2(n_ab) - log2(N_big) - log2(n_a) - log2(n_b)
     + 2 log2(N_uni). Bigrams form map-side (slice + zip_with over the
-    shared ``_tokens`` contract — arrays sliced to size-1 BEFORE zipping,
+    shared ``text.tokens`` contract — arrays sliced to size-1 BEFORE zipping,
     zip_with pads unequal lengths with null); the only shuffles are the
     two count aggregates (map-combinable) and the broadcast of two scalar
     totals. Top-k is TakeOrdered on the QUANTIZED pmi (floor 1e-4) with
@@ -449,7 +441,7 @@ def pmi_bigrams(
 
     Returns (a, b, n_ab, pmi_q), pmi desc. ``min_count`` drops rare pairs
     (PMI's classic low-count noise)."""
-    toks = _tokens(text_col)
+    toks = tokens(F.lower(F.col(text_col)))
     t = docs.select(toks.alias("w")).filter(F.size("w") >= 2)
     big = t.select(
         F.explode(
@@ -515,7 +507,7 @@ def zipf_fit(
     top-k, one single-row aggregate. Returns one row
     (n_tokens_ranked, slope, r2)."""
     uni = (
-        docs.select(F.explode(_tokens(text_col)).alias("word"))
+        docs.select(F.explode(tokens(F.lower(F.col(text_col)))).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("cnt"))
         .orderBy(F.desc("cnt"), "word")
@@ -553,10 +545,11 @@ def js_divergence(
     jsd floor-quantized 1e-6 (float-sum order differs cross-engine in
     ulps only)."""
     u = docs_a.select(
-        F.explode(_tokens(text_col)).alias("word"), F.lit(1).alias("s")
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
+        F.lit(1).alias("s"),
     ).unionByName(
         docs_b.select(
-            F.explode(_tokens(text_col)).alias("word"),
+            F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
             F.lit(0).alias("s"),
         )
     )
@@ -612,7 +605,7 @@ def chi2_terms(
     """
     terms = docs.select(
         F.col(class_col).alias("cls"),
-        F.explode(_tokens(text_col)).alias("word"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
     )
     wc = terms.groupBy("cls", "word").agg(F.count("*").alias("n11"))
     cls_tot = terms.groupBy("cls").agg(F.count("*").alias("n_cls"))
@@ -690,7 +683,7 @@ def kn_bigram_perplexity(
             f"{discount_num}/{discount_den}"
         )
     d = discount_num / discount_den
-    toks = _tokens(text_col)
+    toks = tokens(F.lower(F.col(text_col)))
     n = F.size(toks)
     bigrams = F.zip_with(
         F.slice(toks, 1, n - 1),
@@ -762,7 +755,7 @@ def keyness_g2(
         F.when(F.col(class_col) == focus_class, F.lit(1))
         .otherwise(F.lit(0))
         .alias("in_a"),
-        F.explode(_tokens(text_col)).alias("word"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
     )
     wc = terms.groupBy("word").agg(
         F.sum("in_a").cast("long").alias("a"),
@@ -836,7 +829,7 @@ def good_turing(
 
     Returns (r, n_r, r_star) ordered by nothing — caller sorts.
     """
-    toks = _tokens(text_col)
+    toks = tokens(F.lower(F.col(text_col)))
     if n == 1:
         words = docs.select(F.explode(toks).alias("word"))
     else:
@@ -912,7 +905,7 @@ def log_odds_prior(
         F.when(F.col(class_col) == focus_class, F.lit(1))
         .otherwise(F.lit(0))
         .alias("in_a"),
-        F.explode(_tokens(text_col)).alias("word"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("word"),
     )
     wc = terms.groupBy("word").agg(
         F.sum("in_a").cast("long").alias("a"),
@@ -983,7 +976,7 @@ def term_burstiness(
     """
     td = docs.select(
         F.col(doc_id_col).alias("__d"),
-        F.explode(_tokens(text_col)).alias("__t"),
+        F.explode(tokens(F.lower(F.col(text_col)))).alias("__t"),
     ).groupBy("__t", "__d").agg(
         F.count("*").cast("long").alias("__c")
     )

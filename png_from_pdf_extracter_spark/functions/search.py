@@ -22,15 +22,10 @@ lowercase-whitespace token contract as ``dedup``/``lm``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _toks(text_col: str) -> Column:
-    return F.filter(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-        lambda x: F.length(x) > 0,
-    )
+from .text import tokens
 
 
 def bm25_topk(
@@ -57,7 +52,8 @@ def bm25_topk(
     """
     terms = [t.lower() for t in query_terms]
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _toks(text_col).alias("toks")
+        F.col(id_col).alias("doc_id"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     ).select("doc_id", "toks", F.size("toks").alias("dl"))
 
     # ONE single-row scalar: corpus size + average doc length.
@@ -170,7 +166,8 @@ def bm25_topk_df(
     literal filter sat. Same contract and score arithmetic otherwise.
     """
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _toks(text_col).alias("toks")
+        F.col(id_col).alias("doc_id"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     ).select("doc_id", "toks", F.size("toks").alias("dl"))
     scalars = base.agg(
         F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -258,7 +255,8 @@ def prf_expand(
     )
     fb_ids = top.select("doc_id")
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _toks(text_col).alias("toks")
+        F.col(id_col).alias("doc_id"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     )
     fb_terms = (
         base.join(F.broadcast(fb_ids), "doc_id")
@@ -421,7 +419,8 @@ def ql_topk(
     """
     spark = docs.sparkSession
     base = docs.select(
-        F.col(id_col).alias("doc_id"), _toks(text_col).alias("toks")
+        F.col(id_col).alias("doc_id"),
+        tokens(F.lower(F.col(text_col))).alias("toks"),
     ).select("doc_id", "toks", F.size("toks").alias("dl"))
     totals = base.agg(F.sum("dl").cast("long").alias("__c"))
     tset = spark.createDataFrame(

@@ -1,9 +1,10 @@
 """Scalar text functions — all built-in Column expression chains (JVM-side,
 whole-stage codegen; UDFs are the slow path and none are needed here).
 
-Each function has an exactly-matching ANSI-SQL twin in ``__spark_entry__.py``
-``oracle_sql()`` so DuckDB can verify it value-for-value. Keep the two in
-lockstep when editing.
+Each function has an exactly-matching ANSI-SQL twin in the ``oracle=`` of
+the driver queries that use it (``registry/text.py`` and its neighbours),
+so DuckDB can verify it value-for-value; the parity test fails when the
+two drift.
 """
 
 from __future__ import annotations
@@ -39,18 +40,24 @@ def _trim_us(x: Column) -> Column:
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def tokens(col) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), 0)
-
-
 def token_count(col) -> Column:
-    return F.size(tokens(col)).cast("long")
+    c = F.col(col) if isinstance(col, str) else col
+    return F.size(F.regexp_extract_all(c, F.lit(TOKEN_PATTERN), 0)).cast(
+        "long"
+    )
+
+
+def tokens(c: Column) -> Column:
+    """Whitespace tokens with empties dropped: the one word-tokenizer
+    contract of the operators and their DuckDB oracles
+    (``list_filter(regexp_split_to_array(trim(x), '\\s+'),
+    t -> length(t) > 0)``). Pass ``F.lower(c)`` for lowercase tokens."""
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: F.length(t) > 0)
 
 
 def words(col) -> Column:
-    """Whitespace word split with empties dropped (both engines drop empties
-    differently on leading space — trim first)."""
+    """Whitespace word split, trimmed first (both engines split a leading
+    space differently); empty words stay — ``tokens`` drops them."""
     c = F.col(col) if isinstance(col, str) else col
     return F.split(F.trim(c), r"\s+")
 
@@ -217,7 +224,7 @@ def flesch_reading_ease(col) -> Column:
     ties, floor never does). NULL for word-free documents — undefined,
     not 0. Map-only, whole-stage codegen: the 100-TB-safe quality gate."""
     c = F.col(col) if isinstance(col, str) else col
-    w = F.size(F.filter(words(c), lambda t: F.length(t) > 0)).cast("double")
+    w = F.size(tokens(c)).cast("double")
     s = sentence_count(c).cast("double")
     y = syllable_count(c).cast("double")
     raw = (
@@ -378,13 +385,7 @@ def lexical_richness(
     """
     gcols = list(group_cols)
     toks = df.select(
-        *gcols,
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda t: F.length(t) > 0,
-            )
-        ).alias("__t"),
+        *gcols, F.explode(tokens(F.lower(F.col(text_col)))).alias("__t")
     )
     tc = toks.groupBy(*gcols, "__t").agg(
         F.count("*").cast("long").alias("__f")

@@ -229,12 +229,10 @@ def turn_churn(
     Returns (key, order head, n_tokens, prev_jaccard) for flagged turns;
     first turns (no predecessor) never flag.
     """
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
-            lambda x: F.length(x) > 0,
-        )
-    )
+    # local import: functions/ stays out of the production import set
+    from ..functions.text import tokens
+
+    toks = F.array_distinct(tokens(F.lower(F.col(text_col))))
     w = Window.partitionBy(key_col).orderBy(
         *[F.col(c).asc() for c in order_cols]
     )

@@ -15,7 +15,10 @@ Env:
     SPARK_GRAFT_ORACLE_JSON  write the full per-query result map to this
         path (r4 verdict #3: the full-matrix sweep becomes a committed
         artifact — CORRECTNESS_full.json — instead of a commit-message
-        claim). The file maps sf label -> query -> {status, rows, sec};
+        claim). The file maps sf label -> query -> {status, rows, sec,
+        spark_hash}; ``spark_hash`` is the Spark side's canonical digest,
+        recorded for rows-only queries too, so two sweeps of the same
+        data show whether a change altered any query's output;
         when the file already exists, the new sf's block is merged in,
         so one artifact carries both scales.
 """
@@ -117,6 +120,7 @@ def main() -> int:
             n_rowsonly += 1
             record[name] = {
                 "status": "rows_only", "rows": s_rows, "sec": sec,
+                "spark_hash": s_hash,
             }
             print(f"rows {name}: {s_rows} rows (no oracle) [{sec}s]")
             continue
@@ -126,14 +130,19 @@ def main() -> int:
         except Exception:
             n_fail += 1
             failures.append(name)
-            record[name] = {"status": "err_oracle", "rows": s_rows}
+            record[name] = {
+                "status": "err_oracle", "rows": s_rows, "spark_hash": s_hash,
+            }
             print(f"ERR  {name}: oracle side\n{traceback.format_exc()}")
             continue
         ok = (s_rows == o_rows) and (s_cols == o_cols) and (s_hash == o_hash)
         sec = round(time.time() - t0, 1)
         if ok:
             n_pass += 1
-            record[name] = {"status": "pass", "rows": s_rows, "sec": sec}
+            record[name] = {
+                "status": "pass", "rows": s_rows, "sec": sec,
+                "spark_hash": s_hash,
+            }
             print(f"PASS {name}: {s_rows} rows [{sec}s]")
         else:
             n_fail += 1
@@ -144,6 +153,7 @@ def main() -> int:
                 "oracle_rows": o_rows,
                 "cols_match": s_cols == o_cols,
                 "hash_match": s_hash == o_hash,
+                "spark_hash": s_hash,
             }
             print(
                 f"FAIL {name}: rows {s_rows}/{o_rows} "

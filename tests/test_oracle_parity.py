@@ -53,13 +53,39 @@ def _rowset(cols, rows):
 
 ORACLE_KEYS = sorted(entry_mod.oracle_sql().keys())
 
+# A fixed sample re-run under production shuffle settings (AQE on, 200
+# shuffle partitions): the global-window queries that pull every row
+# into one partition (builder-level, then inside functions/), then wide
+# joins and aggregations whose partition count AQE coalesces.
+WIDE_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.shuffle.partitions": "200",
+}
+WIDE_SAMPLE = (
+    "q_ntile_deciles", "q_top_words", "q_join_topn", "q_tpch_q3", "q_rbo",
+    "q_cms_freq",
+    "q_kaplan_meier", "q_mann_whitney", "q_bh_fdr", "q_ks_drift",
+    "q_rrf_fusion", "q_lift_table", "q_zipf_fit", "q_spearman",
+    "q_tpch_q1", "q_tpch_q5", "q_tpch_q18", "q_minhash_lsh",
+    "q_dedup_components", "q_window_order",
+)
+PARITY_CASES = [pytest.param(n, {}, id=n) for n in ORACLE_KEYS] + [
+    pytest.param(n, WIDE_CONF, id=f"wide-{n}") for n in WIDE_SAMPLE
+]
 
-@pytest.mark.parametrize("name", ORACLE_KEYS)
-def test_oracle_parity(spark, duck, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
-    spark_cols = sdf.columns
-    spark_rows = [tuple(r) for r in sdf.collect()]
+
+@pytest.mark.parametrize("name, conf", PARITY_CASES)
+def test_oracle_parity(spark, duck, name, conf):
+    saved = {k: spark.conf.get(k) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        sdf = entry_mod.queries()[name](spark, SF_DIR)
+        spark_cols = sdf.columns
+        spark_rows = [tuple(r) for r in sdf.collect()]
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
 
     rel = duck.sql(entry_mod.oracle_sql()[name])
     duck_cols = rel.columns

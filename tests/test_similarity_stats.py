@@ -435,3 +435,27 @@ def test_embedding_effective_rank_planted_dims(spark):
     )
     r2 = embedding_effective_rank(df2).collect()[0]
     assert r2["pr_q6"] < 1.1
+
+
+def test_embed_neardup_lsh_pairs_are_exact_pairs(spark):
+    """q_embed_neardup_lsh's values: every LSH pair is a true near-dup —
+    present in the exact self-join (q_embed_near_dup, the vec_id < 500
+    slice) with the same cos_sim, ordered id1 < id2, at or above the
+    0.35 threshold. Bucketing only trades recall, never precision."""
+    import __spark_entry__ as entry_mod
+
+    sf = "/root/testdata/sf0.001"
+    qs = entry_mod.queries()
+    lsh = {
+        (r["id1"], r["id2"]): r["cos_sim"]
+        for r in qs["q_embed_neardup_lsh"](spark, sf).collect()
+    }
+    exact = {
+        (r["id1"], r["id2"]): r["cos_sim"]
+        for r in qs["q_embed_near_dup"](spark, sf).collect()
+    }
+    in_slice = {k: v for k, v in lsh.items() if k[1] < 500}
+    assert in_slice, "no LSH pair inside the exact slice"
+    assert all(a < b for a, b in lsh)
+    assert all(v >= 0.35 for v in lsh.values())
+    assert all(exact.get(k) == v for k, v in in_slice.items())
