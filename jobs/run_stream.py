@@ -13,9 +13,10 @@ Deployment (same contract as the batch driver)::
     spark-submit --py-files dist/png_from_pdf_extracter_spark.zip \
         jobs/run_stream.py --input IN --warehouse WH --checkpoint CKPT
 
-Writes ``extracted_turns_stream`` (batch_id-partitioned, replay-
-idempotent) and batch-stamped ``extract_metrics_stream`` lineage rows —
-the streaming twin of ``run_extract.py``'s commit protocol.
+Writes ``extracted_turns_stream`` and its ``extract_metrics_stream``
+lineage rows, both partitioned by ``batch_id`` so a replayed micro-batch
+rewrites its own rows (one lineage row per batch and bucket) — the
+streaming twin of ``run_extract.py``'s commit protocol.
 """
 
 from __future__ import annotations

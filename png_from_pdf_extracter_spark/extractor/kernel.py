@@ -18,6 +18,9 @@ validation predicates in ``src/models/*.py``):
   structure unparseable (ref ``pdf_converter.py:111-116``)
 - ``status='error', error_class='timeout'``  per-payload work cap exceeded
   (ref ``pdf_converter.py:92-98,124-127`` subprocess timeout)
+- ``status='error', error_class='internal'``  the kernel itself raised on
+  this payload (a defect, not a property of the input); the row is
+  classified so one poison payload never fails its task
 - ``status='empty'``  valid document, zero extractable units
   (ref ``pdf_converter.py:133-139``)
 - ``status='ok'``  1..N ordered units, 1-indexed ``unit_idx``
@@ -46,6 +49,7 @@ ERR_CORRUPTED = "corrupted"
 ERR_PROTECTED = "protected"
 ERR_TOO_LARGE = "too_large"
 ERR_TIMEOUT = "timeout"
+ERR_INTERNAL = "internal"
 
 # How adjacent units are joined into the per-turn extracted_text. Part of the
 # determinism contract — also used by the Spark-side window reassembly, which
@@ -229,10 +233,14 @@ def extract_batch_lists(texts, cfg: ExtractorConfig):
     lists out ``(status, error_class, extracted_text, units)`` where units is
     a list of ``(unit_idx, text, spans)`` tuples with spans as
     ``(start, end, kind)``. Kept Spark-free so the Spark layer owns only the
-    schema mapping."""
+    schema mapping. A row whose extraction raises becomes
+    ``error/internal`` and the rest of the batch goes on."""
     statuses, errors, texts_out, units_out = [], [], [], []
     for t in texts:
-        r = extract(t, cfg)
+        try:
+            r = extract(t, cfg)
+        except Exception:
+            r = ExtractResult(STATUS_ERROR, ERR_INTERNAL)
         statuses.append(r.status)
         errors.append(r.error_class)
         texts_out.append(r.extracted_text)

@@ -14,7 +14,10 @@ declarative DataFrame plan:
          units, text_bytes / text_head from text
       -> rebalance by bucket (batch job only; AQE sizes the writer tasks)
       -> write extracted_turns partitioned by bucket (dynamic overwrite =
-         idempotent re-run), quarantine detail, per-bucket lineage metrics
+         idempotent re-run), counting its rows on the way (Observation)
+      -> quarantine detail, CC fan-out, then the per-bucket lineage rows,
+         appended straight from their aggregate (no driver round trip);
+         a run that wrote no rows skips all three
 
 Scale notes (100 TB / 1000 executors):
 - The wide exchanges are the salted repartition (needed for skew) below
@@ -28,6 +31,8 @@ Scale notes (100 TB / 1000 executors):
   struct comes back; the pass-through columns never leave the JVM, and each
   unit's text crosses Arrow once. The post-write passes (errors, metrics)
   read back pruned columns from parquet instead of re-running extraction.
+- Nothing but the run's row count reaches the driver: the lineage
+  aggregate (~n_buckets rows) is written by the tasks that compute it.
 - Dynamic partition overwrite by bucket (``Catalog.overwrite_partitions``)
   makes re-runs idempotent without a read-modify-write dedup (the Iceberg
   overwrite-partition commit analog).
@@ -41,7 +46,7 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,7 +62,7 @@ from ..operators import (
 )
 from ..sources.catalog import Catalog
 from ..sources.transcripts import SPAN_SCHEMA, with_partition_id
-from .metrics import METRICS_SCHEMA, partition_metrics
+from .metrics import partition_metrics
 
 UNITS_SCHEMA = T.ArrayType(
     T.StructType(
@@ -287,7 +292,8 @@ def run_job(
     ``job_processor.py:148-153``): data lands first (per-bucket dynamic
     overwrite), the lineage row in ``extract_metrics`` lands last. A crash
     between the two leaves the bucket uncommitted -> next run re-extracts and
-    overwrites it (at-least-once + idempotent, spec NFR-007/008).
+    overwrites it (at-least-once + idempotent, spec NFR-007/008). A run with
+    nothing pending writes no rows and commits nothing.
     """
     started_at = _dt.datetime.now(_dt.timezone.utc)
 
@@ -309,13 +315,34 @@ def run_job(
         else None
     )
 
+    # the run's row count rides on the data write itself: no count() pass,
+    # and no lineage rows collected to the driver to sum
+    written_rows = Observation("extracted_turns")
     t0 = time.perf_counter()
     catalog.overwrite_partitions(
-        job_output(spark, transcripts, params, metrics),
+        job_output(spark, transcripts, params, metrics).observe(
+            written_rows, F.count(F.lit(1)).alias("rows")
+        ),
         "extracted_turns",
         "partition_id",
     )
+    rows = int(written_rows.get["rows"])
     t1 = time.perf_counter()
+    stats = {
+        "rows": rows,
+        "started_at": started_at.isoformat(),
+        "n_buckets": params.n_buckets,
+        # wall seconds of each action; the extraction itself runs inside
+        # the write
+        "write_s": t1 - t0,
+        "quarantine_s": 0.0,
+        "cc_s": 0.0,
+        "lineage_s": 0.0,
+    }
+    if rows == 0:
+        # nothing pending: an empty run commits nothing, so it reads nothing
+        # back either
+        return stats
 
     # Post-write passes read back pruned columns (no re-extraction).
     written = catalog.read(spark, "extracted_turns")
@@ -323,6 +350,9 @@ def run_job(
         done = completed_partitions(metrics, params.extractor_version)
         written = pending_only(written, done)
 
+    # no Observation here: one below the quarantine's status filter would
+    # keep that filter out of the parquet scan, which skips error-free row
+    # groups
     _, quarantined = split_quarantine(written)
     catalog.overwrite_partitions(quarantined, "extract_errors", "partition_id")
     t2 = time.perf_counter()
@@ -335,25 +365,13 @@ def run_job(
         catalog.append(written, cc, "partition_id")
     t3 = time.perf_counter()
 
-    # lineage commit lands LAST (delete-source-on-commit analog); the row
-    # count comes from the collected metrics rows — one scan of the output,
-    # no second count() pass
-    m_rows = partition_metrics(
-        written, params.extractor_version, started_at
-    ).collect()
-    if m_rows:
-        catalog.append(
-            spark.createDataFrame(m_rows, METRICS_SCHEMA), "extract_metrics"
-        )
+    # lineage commit lands LAST (delete-source-on-commit analog): the
+    # per-bucket aggregate is appended as it comes out of the read-back
+    # scan, with no round trip through the driver
+    catalog.append(
+        partition_metrics(written, params.extractor_version, started_at),
+        "extract_metrics",
+    )
     t4 = time.perf_counter()
-    return {
-        "rows": int(sum(r["rows"] for r in m_rows)),
-        "started_at": started_at.isoformat(),
-        "n_buckets": params.n_buckets,
-        # wall seconds of each action; the extraction itself runs inside
-        # the write
-        "write_s": t1 - t0,
-        "quarantine_s": t2 - t1,
-        "cc_s": t3 - t2,
-        "lineage_s": t4 - t3,
-    }
+    stats.update(quarantine_s=t2 - t1, cc_s=t3 - t2, lineage_s=t4 - t3)
+    return stats

@@ -135,16 +135,16 @@ def stream_extract_to_catalog(
 ):
     """Streaming extraction with the batch job's lineage/commit semantics,
     via ``foreachBatch``: each micro-batch writes data partitioned by its
-    ``batch_id`` under DYNAMIC partition overwrite, then appends
-    batch-stamped lineage rows. foreachBatch is at-least-once — a crash
-    after the data write replays the batch — but the replay OVERWRITES its
-    own batch_id partition (idempotent), and lineage consumers dedup on
-    (batch_id, partition_id), the same at-least-once + idempotence
-    contract as the batch path (spec NFR-007/008). Returns the started
-    ``StreamingQuery`` (caller awaits/stops). Default trigger is
-    ``availableNow`` — one drained poll cycle, restart-safe via the
-    checkpoint; pass ``processing_time='60 seconds'`` for the literal
-    daemon loop (runs until stopped)."""
+    ``batch_id`` under DYNAMIC partition overwrite, then its lineage rows
+    under the same ``batch_id`` partition of ``metrics_table``.
+    foreachBatch is at-least-once — a crash after either write replays the
+    batch — but the replay OVERWRITES its own batch_id partition of both
+    tables, so every (batch_id, partition_id) has exactly one lineage row:
+    the same at-least-once + idempotence contract as the batch path (spec
+    NFR-007/008). Returns the started ``StreamingQuery`` (caller
+    awaits/stops). Default trigger is ``availableNow`` — one drained poll
+    cycle, restart-safe via the checkpoint; pass ``processing_time='60
+    seconds'`` for the literal daemon loop (runs until stopped)."""
     extracted = stream_extract(spark, input_path, params)
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -159,7 +159,7 @@ def stream_extract_to_catalog(
                 params.extractor_version,
                 _dt.datetime.now(_dt.timezone.utc),
             ).withColumn("batch_id", F.lit(batch_id))
-            catalog.append(m, metrics_table)
+            catalog.overwrite_partitions(m, metrics_table, "batch_id")
         finally:
             out.unpersist()
 

@@ -11,6 +11,7 @@ tests are what anchors the whole equality gate to human-checked values.
 from png_from_pdf_extracter_spark.extractor import ExtractorConfig, extract
 from png_from_pdf_extracter_spark.extractor.kernel import (
     ERR_CORRUPTED,
+    ERR_INTERNAL,
     ERR_PROTECTED,
     ERR_TIMEOUT,
     ERR_TOO_LARGE,
@@ -221,3 +222,26 @@ def test_extraction_is_deterministic():
         assert a.extracted_text == b.extracted_text
         assert a.spans == b.spans
         assert a.status == b.status
+
+
+# ---------------------------------------------------------------- poison row
+
+def test_batch_classifies_a_raising_row_and_keeps_the_rest(monkeypatch):
+    """A row whose parser raises becomes error/internal; the other rows of
+    the batch come out exactly as they would without it."""
+    from png_from_pdf_extracter_spark.extractor import extract_batch_lists, kernel
+
+    texts = [BOILERPLATE_DOC, "<html><body><p>poison</p></body></html>", PDF_3PAGE]
+    want = extract_batch_lists(texts, CFG)
+    parse = kernel.htmldoc.extract_blocks
+
+    def flaky(blob, **kw):
+        if "poison" in blob:
+            raise RecursionError("parser defect")
+        return parse(blob, **kw)
+
+    monkeypatch.setattr(kernel.htmldoc, "extract_blocks", flaky)
+    got = extract_batch_lists(texts, CFG)
+    assert [col[1] for col in got] == [STATUS_ERROR, ERR_INTERNAL, "", []]
+    for i in (0, 2):
+        assert [col[i] for col in got] == [col[i] for col in want]

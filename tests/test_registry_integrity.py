@@ -188,3 +188,28 @@ def test_table_sinks_commit_through_catalog():
             if "writeStream" in line and i not in allowed
         ]
         assert not stray, f"{p}: writeStream at lines {stray}"
+
+
+def test_commit_paths_have_no_driver_round_trip():
+    """``run_job`` and ``stream_extract_to_catalog`` commit lineage straight
+    from the distributed aggregate; pulling rows to the driver and back
+    (collect, toPandas, createDataFrame) costs a job per commit and bounds
+    the commit by driver memory."""
+    pkg = pathlib.Path("png_from_pdf_extracter_spark")
+    for path, name in (
+        (pkg / "plans" / "extract_plan.py", "run_job"),
+        (pkg / "streaming" / "extract_stream.py", "stream_extract_to_catalog"),
+    ):
+        (fn,) = [
+            n
+            for n in ast.parse(path.read_text()).body
+            if isinstance(n, ast.FunctionDef) and n.name == name
+        ]
+        calls = sorted(
+            n.func.attr
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr in ("collect", "toPandas", "createDataFrame")
+        )
+        assert not calls, f"{path}:{name} calls {calls}"

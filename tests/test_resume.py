@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig, gen_pandas
-from png_from_pdf_extracter_spark.plans import JobParams, run_job
+from png_from_pdf_extracter_spark.plans import METRICS_SCHEMA, JobParams, run_job
 from png_from_pdf_extracter_spark.sources import Catalog
 from png_from_pdf_extracter_spark.sources.transcripts import (
     TRANSCRIPTS_SCHEMA,
@@ -65,16 +65,26 @@ def test_partial_run_then_resume_no_dupes_no_gaps(spark, transcripts, tmp_path):
     ).count()
     assert missing == 0, "gaps after resume"
 
-    # run-2 only processed pending buckets (resume actually skipped work)
+    # run-2 only processed pending buckets (resume actually skipped work),
+    # and its row count is what its lineage rows committed
     assert stats["rows"] < expected_keys.count()
+    touched = m2[~m2.partition_id.isin(m1.partition_id)]
+    assert stats["rows"] == touched.rows.sum()
 
 
 def test_rerun_after_complete_is_a_noop(spark, transcripts, tmp_path):
     catalog = Catalog(str(tmp_path / "warehouse"))
     run_job(spark, transcripts, catalog, PARAMS)
+    # the lineage aggregate lands as one file, typed as METRICS_SCHEMA
+    assert catalog.table_files("extract_metrics") == 1
+    assert [
+        (f.name, f.dataType)
+        for f in catalog.read(spark, "extract_metrics").schema
+    ] == [(f.name, f.dataType) for f in METRICS_SCHEMA]
     before = catalog.read(spark, "extracted_turns").count()
     stats2 = run_job(spark, transcripts, catalog, PARAMS)
     assert stats2["rows"] == 0, "second run re-processed committed buckets"
+    assert catalog.table_files("extract_metrics") == 1  # commits nothing
     after = catalog.read(spark, "extracted_turns").count()
     assert after == before
 

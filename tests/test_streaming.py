@@ -198,6 +198,41 @@ def test_stream_extract_to_catalog_keeps_every_batch_under_static_mode(
     assert {(r["conv_id"], r["turn_idx"]) for r in out.collect()} == want
 
 
+def test_stream_lineage_replay_rewrites_its_own_rows(spark, tmp_path):
+    """A crash after a micro-batch's lineage write but before its
+    checkpoint commit replays that batch on restart. The replay must
+    rewrite the batch's lineage rows, not add a second copy of them."""
+    from png_from_pdf_extracter_spark.sources.catalog import Catalog
+    from png_from_pdf_extracter_spark.streaming import stream_extract_to_catalog
+
+    in_dir = str(tmp_path / "in")
+    # 12 files at the default 8 files per trigger: two micro-batches
+    generate_transcripts(spark, GenConfig(seed=5, n_convs=12)).repartition(
+        12
+    ).write.parquet(in_dir)
+    cat = Catalog(str(tmp_path / "wh"))
+    ckpt = tmp_path / "ckpt"
+    cols = [
+        "batch_id", "partition_id", "rows", "bytes", "n_errors", "digest",
+        "conv_id_min", "conv_id_max",
+    ]
+
+    def lineage():
+        m = cat.read(spark, "extract_metrics_stream").select(*cols)
+        return sorted(map(tuple, m.collect()))
+
+    stream_extract_to_catalog(spark, in_dir, cat, PARAMS, str(ckpt)).awaitTermination(300)
+    want = lineage()
+    assert len({r[:2] for r in want}) == len(want) > 0
+
+    last = max((ckpt / "commits").glob("[0-9]*"), key=lambda f: int(f.name))
+    for f in (last, last.with_name(f".{last.name}.crc")):
+        f.unlink(missing_ok=True)
+    stream_extract_to_catalog(spark, in_dir, cat, PARAMS, str(ckpt)).awaitTermination(300)
+    assert (ckpt / "commits" / last.name).exists(), "the batch was not replayed"
+    assert lineage() == want
+
+
 def test_stream_extract_schema_matches_batch(spark, tmp_path):
     """Batch and stream end with the same projection, so they return the
     same columns with the same types."""
