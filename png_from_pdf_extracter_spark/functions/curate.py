@@ -26,6 +26,17 @@ from . import text
 from .text import tokens
 
 
+def _quant(col, quantize: int):
+    """Deterministic integer quantization: round(v * 10^q) as BIGINT.
+
+    Both engines see the IDENTICAL parquet double and both define
+    round() as half-away-from-zero, so the mapping is bit-reproducible
+    cross-engine (the property every quantized statistic leans on)."""
+    return F.round(col.cast("double") * F.lit(10 ** quantize), 0).cast(
+        "long"
+    )
+
+
 def curate_corpus(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -1281,8 +1292,6 @@ def curriculum_stages(
     count) shuffle, stage mapping joins back as a broadcast of the
     distinct-score table. Returns (id, score_q, stage, sort_key).
     """
-    from .stats import _quant
-
     sq = _quant(F.col(score_col), quantize)
     base = df.select(
         F.col(id_col).alias("id"), sq.alias("score_q")

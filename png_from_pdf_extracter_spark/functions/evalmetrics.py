@@ -507,8 +507,7 @@ def weighted_kappa(
     error than one three bands off, which nominal [[cohens_kappa]]
     cannot see. Quadratic-weighted kappa is the standard agreement
     number for graded annotation tasks (quality tiers, length bands,
-    priority grades) — the ordinal-AGREEMENT companion to
-    [[ordinal_association]]'s correlation card.
+    priority grades).
 
     INTEGER-EXACT assembly: categories cast to BIGINT; with observed
     cells O_ij, margins R_i / C_j and disagreement weights
@@ -1271,8 +1270,7 @@ def off_policy_value(
     size — "what WOULD this routing/ranking policy have earned on the
     traffic we actually logged", without running it. The pipeline
     read: compare a candidate curation/serving policy against logged
-    propensity-scored choices before an A/B ([[cuped_adjust]] is the
-    during-experiment companion).
+    propensity-scored choices before an A/B.
 
     Propensity contract: ``prop_tenths_col`` holds the logged
     propensity as INTEGER TENTHS k in 1..9 (p = k/10) — the discrete
@@ -1346,9 +1344,8 @@ def partition_agreement(
     sum of pair-counts C(x,2) = x(x-1)/2 over the contingency table
     or a margin table — DECIMAL(38,0) sums (exact, order-free), no
     float accumulations. The three entropies reuse the fixed-key-order
-    stepped-sum discipline over the contingency table
-    ([[conditional_entropy]]'s construction). Plan: one (a, b) count
-    shuffle; margins are two further map-combinable aggregates of it;
+    stepped-sum discipline over the contingency table. Plan: one (a, b)
+    count shuffle; margins are two further map-combinable aggregates of it;
     windows bounded by label-cardinality product. Returns one row
     (n, ari_q6, nmi_q6, homogeneity_q6, completeness_q6, v_q6);
     normalized scores null when the relevant entropy (or the ARI
@@ -1555,7 +1552,7 @@ def best_f1_threshold(
     tie at the grid line share the tiebreak deterministically).
     Returns (group..., threshold, tp, fp, fn, f1_q6).
     """
-    from .stats import _quant
+    from .curate import _quant
 
     sq = _quant(F.col(score_col), quantize)
     y = F.col(label_col).cast("int")
@@ -2080,7 +2077,7 @@ def youden_j_threshold(
     highest-threshold ties. Returns (group..., threshold, tp, fp, fn,
     tn, j_q6, tpr_q6, fpr_q6).
     """
-    from .stats import _quant
+    from .curate import _quant
 
     sq = _quant(F.col(score_col), quantize)
     y = F.col(label_col).cast("int")
@@ -2175,7 +2172,7 @@ def spiegelhalter_z(
     denominator is 0 (all probabilities at 0/1 — the null variance is
     degenerate).
     """
-    from .stats import _quant
+    from .curate import _quant
 
     s_grid = 10 ** quantize
     k = _quant(F.col(prob_col), quantize)
@@ -2328,7 +2325,7 @@ def hosmer_lemeshow(
     dof = n_bins_used - 2 (the logistic-fit convention), null chi2
     when fewer than 3 usable bins.
     """
-    from .stats import _quant
+    from .curate import _quant
 
     s_grid = 10 ** quantize
     k = _quant(F.col(prob_col), quantize)

@@ -287,8 +287,7 @@ def kmv_set_ops(
     union/intersection cardinality and Jaccard similarity WITHOUT
     touching the original corpora — the sketch-algebra that lets two
     crawls/dumps/shards compare membership by exchanging k BIGINTs
-    each ([[capture_recapture]] estimates the UNSEEN population; this
-    estimates the overlap of what the two sides HOLD).
+    each (this estimates the overlap of what the two sides HOLD).
 
     Estimator (Beyer et al.): merge to the union's k-minimum set K;
     the fraction rho of K present in BOTH input sketches estimates

@@ -1,6 +1,11 @@
-"""Job-level operators: salted repartition, stable ordering/reassembly,
-quarantine split, anti-join resume. All pure DataFrame->DataFrame functions
-built from pyspark.sql builtins — no custom Catalyst rules (SURVEY.md §4)."""
+"""Job-level operators: salted repartition, quarantine split, anti-join
+resume, row validation. All pure DataFrame->DataFrame functions built from
+pyspark.sql builtins — no custom Catalyst rules (SURVEY.md §4).
+
+This package re-exports only what the extraction job imports; the other
+operator modules (``bloom``, ``merge``, ``ordering``, ``sessions``,
+``temporal``) are imported from their submodule, so a job driver does not
+load them."""
 
 from .salting import (
     salted_repartition,
@@ -8,47 +13,18 @@ from .salting import (
     salted_equi_join,
     max_key_share,
 )
-from .ordering import explode_units, reassemble_turns, conversation_rollup
 from .quarantine import split_quarantine
 from .resume import completed_partitions, pending_only
-from .sessions import event_transitions, sessionize, session_stats
-from .temporal import (
-    asof_join,
-    asof_join_broadcast,
-    asof_join_skewed,
-    range_join,
-    range_join_broadcast,
-)
 from .validate import split_valid, validate_rows
-from .bloom import bloom_anti_join, bloom_semi_join, build_bloom, might_contain
-from .merge import MergeCardinalityError, merge_upsert, scd2_apply
 
 __all__ = [
-    "bloom_anti_join",
-    "bloom_semi_join",
-    "build_bloom",
-    "might_contain",
-    "MergeCardinalityError",
-    "merge_upsert",
-    "scd2_apply",
-    "asof_join",
-    "asof_join_broadcast",
-    "asof_join_skewed",
-    "range_join",
-    "range_join_broadcast",
     "split_valid",
     "validate_rows",
     "salted_repartition",
     "salted_repartition_auto",
     "salted_equi_join",
     "max_key_share",
-    "explode_units",
-    "reassemble_turns",
-    "conversation_rollup",
     "split_quarantine",
     "completed_partitions",
     "pending_only",
-    "event_transitions",
-    "sessionize",
-    "session_stats",
 ]

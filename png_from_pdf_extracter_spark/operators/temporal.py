@@ -702,7 +702,7 @@ def seasonal_profile_dow(
     component of the classical decomposition at weekly period: per
     (group, dow) the mean value, and ``seasonal`` = dow mean minus the
     group's overall mean. Subtracting it from raw values deseasonalizes
-    a metric before [[mann_kendall]]/[[holt_linear]] read the trend —
+    a metric before a trend read such as [[holt_linear]] —
     otherwise a weekly cycle masquerades as seven alternating trends.
 
     EXACT cross-engine: values integer-quantized; per-cell (n, sum)
@@ -755,6 +755,6 @@ def seasonal_profile_dow(
 
 def _quant_temporal(col, quantize: int):
     """round(v * 10^q) as BIGINT — same half-away-from-zero contract as
-    functions/stats.py _quant (duplicated to keep operator modules
+    functions/curate.py _quant (duplicated to keep operator modules
     import-independent)."""
     return F.round(col.cast("double") * F.lit(10**quantize), 0).cast("long")

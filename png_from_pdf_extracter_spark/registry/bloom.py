@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.functions import text
-from png_from_pdf_extracter_spark.operators import bloom_anti_join
+from png_from_pdf_extracter_spark.operators.bloom import bloom_anti_join
 from png_from_pdf_extracter_spark.registry import query
 from png_from_pdf_extracter_spark.registry.common import FP_SQL, read
 

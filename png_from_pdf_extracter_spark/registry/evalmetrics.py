@@ -1946,8 +1946,7 @@ def _q_hosmer(spark, sf_dir):
 def _q_weighted_kappa(spark, sf_dir):
     """Linear + quadratic weighted Cohen's kappa between document
     length band and token band (functions/evalmetrics.py
-    weighted_kappa) — the ordinal-AGREEMENT companion to
-    q_ordinal_assoc's correlation card, on the same graded buckets.
+    weighted_kappa) — ordinal AGREEMENT between two graded bucketings.
     DECIMAL(38,0) weighted sums off the k x k cell table and the
     margin cross join; one terminal division per kappa."""
 

@@ -4,7 +4,7 @@ is not SQL-expressible (SURVEY.md §2.4)."""
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.ordering import (
     explode_units,
     reassemble_turns,
 )

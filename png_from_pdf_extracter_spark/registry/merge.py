@@ -2,7 +2,7 @@
 
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import merge_upsert, scd2_apply
+from png_from_pdf_extracter_spark.operators.merge import merge_upsert, scd2_apply
 from png_from_pdf_extracter_spark.registry import query
 from png_from_pdf_extracter_spark.registry.common import read
 

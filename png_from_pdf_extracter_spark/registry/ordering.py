@@ -4,7 +4,7 @@ reassembly)."""
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.functions.text import tokens
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.ordering import (
     conversation_rollup,
     explode_units,
     reassemble_turns,

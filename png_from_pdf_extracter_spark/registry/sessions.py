@@ -3,14 +3,12 @@ transitions)."""
 
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import (
-    event_transitions,
-    session_stats,
-    sessionize,
-)
 from png_from_pdf_extracter_spark.operators.sessions import (
+    event_transitions,
     label_runs,
     last_touch_attribution,
+    session_stats,
+    sessionize,
     turn_churn,
 )
 from png_from_pdf_extracter_spark.registry import query

@@ -144,9 +144,9 @@ def _q_cms_freq(spark, sf_dir):
 def _q_kmv_setops(spark, sf_dir):
     """KMV sketch set-algebra (functions/sketch.py kmv_set_ops):
     union / intersection / Jaccard estimates between the even- and
-    odd-half user populations from two 64-hash sketches — the
-    sketch-exchange answer to the question q_capture_recapture
-    answers with exact overlap. Deterministic md5 state => the whole
+    odd-half user populations from two 64-hash sketches — overlap
+    estimated from exchanged sketches instead of an exact join of the
+    two populations. Deterministic md5 state => the whole
     estimate chain reproduces in DuckDB."""
 
     ev = read(spark, sf_dir, "events")

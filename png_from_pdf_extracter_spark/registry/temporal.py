@@ -3,17 +3,15 @@ temporal windows)."""
 
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.temporal import (
     asof_join,
     asof_join_broadcast,
     asof_join_skewed,
-    range_join,
-)
-from png_from_pdf_extracter_spark.operators.temporal import (
     detect_gaps,
     ewma,
     holt_linear,
     interval_union,
+    range_join,
     seasonal_profile_dow,
     time_weighted_avg,
 )

@@ -1,8 +1,8 @@
 """Table IO: parquet-backed catalog with an Iceberg-shaped API, plus the
-transcripts reader and stable partition-bucket derivation."""
+transcripts reader and stable partition-bucket derivation. The snapshot
+table (``sources.snapshots``) is imported from its submodule."""
 
 from .catalog import Catalog
-from .snapshots import CommitConflict, IncrementalScanError, SnapshotTable
 from .transcripts import (
     TRANSCRIPTS_SCHEMA,
     generate_transcripts,
@@ -13,9 +13,6 @@ from .transcripts import (
 
 __all__ = [
     "Catalog",
-    "CommitConflict",
-    "IncrementalScanError",
-    "SnapshotTable",
     "TRANSCRIPTS_SCHEMA",
     "generate_transcripts",
     "generate_expected",

@@ -8,17 +8,7 @@ from .extract_stream import (
     stream_conv_progress,
     stream_dedup,
     stream_sessionize,
-    stream_profile_to_catalog,
-    read_profile,
-    stream_drift_monitor,
     stream_upsert_to_snapshots,
-    stream_cusum_monitor,
-    read_cusum_alarms,
-)
-from .stateful import (
-    conversation_progress_stateful,
-    conversation_progress_tws,
-    tws_available,
 )
 
 __all__ = [
@@ -31,13 +21,5 @@ __all__ = [
     "stream_conv_progress",
     "stream_dedup",
     "stream_sessionize",
-    "stream_profile_to_catalog",
-    "read_profile",
-    "stream_drift_monitor",
     "stream_upsert_to_snapshots",
-    "stream_cusum_monitor",
-    "read_cusum_alarms",
-    "conversation_progress_stateful",
-    "conversation_progress_tws",
-    "tws_available",
 ]

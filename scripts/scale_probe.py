@@ -303,13 +303,9 @@ def main() -> int:
             "wall_sec": round(time.time() - t0, 2),
         }
 
-        # ---- round-5 probe targets (r4 verdict #5): the four pair
-        # producers round 4 added or left unprobed.
-        from png_from_pdf_extracter_spark.functions import (
-            graph,
-            linkage,
-            stats,
-        )
+        # ---- round-5 probe targets (r4 verdict #5): pair producers
+        # round 4 added or left unprobed.
+        from png_from_pdf_extracter_spark.functions import graph, linkage
 
         # jw_blocked_linkage over a GROWING name domain (first 4 words
         # of each doc — part names' constant 64-vocab would probe
@@ -415,84 +411,6 @@ def main() -> int:
                 ).count(),
             )
             results[label]["max_hub_degree"] = cap
-
-        # ordinal_association: the k x k contingency self-join is on
-        # CELLS, never rows — banding holds k constant, so the join
-        # work (k^2 cell pairs) must stay FLAT at 10x while only the
-        # row-keyed groupBy grows. The probe records the cell count at
-        # both scales next to the wall exponent.
-        def _banded(d):
-            docs = spark.read.parquet(f"{d}/documents.parquet")
-            return docs.select(
-                F.least(
-                    F.floor(F.col("n_chars") / 100), F.lit(4)
-                ).alias("xb"),
-                F.least(
-                    F.floor(F.size(F.split("text", " ")) / 20), F.lit(4)
-                ).alias("yb"),
-            )
-
-        oa = {}
-        for scale in ("x1", "x10"):
-            t0 = time.time()
-            stats.ordinal_association(
-                _banded(dirs[scale]), "xb", "yb"
-            ).collect()
-            wall = round(time.time() - t0, 2)
-            cells = (
-                _banded(dirs[scale]).distinct().count()
-            )
-            oa[scale] = {"cells": int(cells), "wall_sec": wall}
-        oa["cell_exponent"] = round(
-            math.log10(
-                max(oa["x10"]["cells"], 1) / max(oa["x1"]["cells"], 1)
-            ),
-            3,
-        )
-        oa["wall_exponent"] = round(
-            math.log10(
-                max(oa["x10"]["wall_sec"], 0.01)
-                / max(oa["x1"]["wall_sec"], 0.01)
-            ),
-            3,
-        )
-        print(f"# ordinal_association: {oa}", file=sys.stderr)
-        results["ordinal_association"] = oa
-
-        # hodges_lehmann: Walsh pairs are V x V on DISTINCT QUANTIZED
-        # values — V is bounded by the value range / grid, not by row
-        # count, so the work metric (V*(V+1)/2) must grow FAR slower
-        # than rows (saturating toward the grid size).
-        hl = {}
-        for scale in ("x1", "x10"):
-            docs = spark.read.parquet(
-                f"{dirs[scale]}/documents.parquet"
-            )
-            t0 = time.time()
-            stats.hodges_lehmann(docs, "n_chars", quantize=0).collect()
-            wall = round(time.time() - t0, 2)
-            v = docs.select("n_chars").distinct().count()
-            hl[scale] = {
-                "distinct_values": int(v),
-                "walsh_work": int(v * (v + 1) // 2),
-                "wall_sec": wall,
-            }
-        hl["value_exponent"] = round(
-            math.log10(
-                max(hl["x10"]["distinct_values"], 1)
-                / max(hl["x1"]["distinct_values"], 1)
-            ),
-            3,
-        )
-        hl["work_exponent"] = round(
-            math.log10(
-                max(hl["x10"]["walsh_work"], 1)
-                / max(hl["x1"]["walsh_work"], 1)
-            ),
-            3,
-        )
-        print(f"# hodges_lehmann: {hl}", file=sys.stderr)
-        results["hodges_lehmann"] = hl
 
         block = {
             "scale_probe": {

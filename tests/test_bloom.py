@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.bloom import (
     bloom_anti_join,
     bloom_semi_join,
     build_bloom,
@@ -106,10 +106,8 @@ def test_bloom_resume_equals_broadcast_resume(spark):
     from pyspark.sql import functions as F
 
     from png_from_pdf_extracter_spark.datagen import GenConfig
-    from png_from_pdf_extracter_spark.operators import (
-        bloom_anti_join,
-        pending_only,
-    )
+    from png_from_pdf_extracter_spark.operators import pending_only
+    from png_from_pdf_extracter_spark.operators.bloom import bloom_anti_join
     from png_from_pdf_extracter_spark.sources import generate_transcripts
     from png_from_pdf_extracter_spark.sources.transcripts import (
         with_partition_id,

@@ -77,7 +77,7 @@ def test_compact_cli(spark, tmp_path):
 def test_compact_cli_snapshot_mode(spark, tmp_path):
     from jobs.run_compact import main
 
-    from png_from_pdf_extracter_spark.sources import SnapshotTable
+    from png_from_pdf_extracter_spark.sources.snapshots import SnapshotTable
 
     t = SnapshotTable(str(tmp_path / "wh"), "snap")
     for lo in range(0, 30, 10):

@@ -106,7 +106,7 @@ def test_chi2_terms_closed_form(spark):
 def test_event_transitions_exact_probabilities(spark):
     import datetime as dt
 
-    from png_from_pdf_extracter_spark.operators import event_transitions
+    from png_from_pdf_extracter_spark.operators.sessions import event_transitions
 
     t0 = dt.datetime(2024, 1, 1)
     rows = []

@@ -144,25 +144,6 @@ def test_isotonic_driver_state_is_bin_bounded(spark):
     assert out.count() <= 8
 
 
-def test_binseg_rounds_bounded_by_max_changepoints(spark):
-    """changepoint_binary_seg's only driver actions are the per-round
-    emptiness probes: segments out <= max_changepoints + 1 per group."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        changepoint_binary_seg,
-    )
-    from pyspark.sql import functions as F
-
-    df = spark.range(200).select(
-        F.lit("g").alias("g"),
-        F.col("id").alias("i"),
-        (F.col("id") % 7).cast("double").alias("v"),
-    )
-    out = changepoint_binary_seg(
-        df, ("g",), ("i",), "v", max_changepoints=2
-    ).collect()
-    assert len(out) <= 3
-
-
 def test_agreement_design_guard_is_one_row(spark):
     """fleiss_kappa / krippendorff_alpha_nominal collect exactly ONE
     3-column aggregate row (the completeness guard) — never items."""

@@ -6,12 +6,12 @@ transactional visibility (old version intact, head merged)."""
 import pytest
 from pyspark.sql import Row, functions as F
 
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.merge import (
     MergeCardinalityError,
     merge_upsert,
     scd2_apply,
 )
-from png_from_pdf_extracter_spark.sources import SnapshotTable
+from png_from_pdf_extracter_spark.sources.snapshots import SnapshotTable
 
 
 def _target(spark):

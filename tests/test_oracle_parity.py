@@ -55,8 +55,9 @@ ORACLE_KEYS = sorted(entry_mod.oracle_sql().keys())
 
 # A fixed sample re-run under production shuffle settings (AQE on, 200
 # shuffle partitions): the global-window queries that pull every row
-# into one partition (builder-level, then inside functions/), then wide
-# joins and aggregations whose partition count AQE coalesces.
+# into one partition (builder-level, then inside functions/), the
+# extraction job's own per-turn shapes, then wide joins and aggregations
+# whose partition count AQE coalesces.
 WIDE_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.shuffle.partitions": "200",
@@ -64,8 +65,9 @@ WIDE_CONF = {
 WIDE_SAMPLE = (
     "q_ntile_deciles", "q_top_words", "q_join_topn", "q_tpch_q3", "q_rbo",
     "q_cms_freq",
-    "q_kaplan_meier", "q_mann_whitney", "q_bh_fdr", "q_ks_drift",
-    "q_rrf_fusion", "q_lift_table", "q_zipf_fit", "q_spearman",
+    "q_explode_reassembly", "q_conv_rollup", "q_group_metrics",
+    "q_error_classify", "q_ks_drift", "q_rrf_fusion", "q_lift_table",
+    "q_zipf_fit",
     "q_tpch_q1", "q_tpch_q5", "q_tpch_q18", "q_minhash_lsh",
     "q_dedup_components", "q_window_order",
 )

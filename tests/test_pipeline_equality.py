@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.datagen import GenConfig, gen_pandas
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.ordering import (
     conversation_rollup,
     explode_units,
     reassemble_turns,

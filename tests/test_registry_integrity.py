@@ -3,11 +3,15 @@ at its builder in ``png_from_pdf_extracter_spark/registry/``; a second
 declaration of a name raises at import, so a duplicate can no longer
 silently drop a query. These checks pin the rest: no shadowed helper
 inside a registry module, rows-only queries name the test that checks
-their values, no engine module depends on the registry, and the docs
-and committed sweep artifact match the registry.
+their values, no engine module depends on the registry, the job's import
+set stays free of registry-only modules, and the docs and committed
+sweep artifact match the registry.
 """
 import ast
+import json
 import pathlib
+import subprocess
+import sys
 from collections import Counter
 
 import pytest
@@ -77,6 +81,38 @@ def test_engine_modules_do_not_import_registry():
                 assert not any("registry" in m for m in mods), (
                     f"{p}:{n.lineno} imports the query registry"
                 )
+
+
+def test_job_import_set_loads_no_registry_only_module():
+    """Importing ``plans`` and ``streaming`` (what every job driver does)
+    loads none of the operator and source modules only registry queries
+    and tests call, and nothing under ``functions`` or ``registry``."""
+    pkg = "png_from_pdf_extracter_spark"
+    out = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            f"import json, sys, {pkg}.plans, {pkg}.streaming; "
+            f"print(json.dumps(sorted(m for m in sys.modules "
+            f"if m.startswith('{pkg}'))))",
+        ],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    loaded = set(json.loads(out.stdout))
+    unused = {
+        f"{pkg}.operators.{m}"
+        for m in ("bloom", "merge", "ordering", "sessions", "temporal")
+    } | {f"{pkg}.sources.snapshots", f"{pkg}.streaming.stateful"}
+    assert not loaded & unused, sorted(loaded & unused)
+    heavy = [
+        m
+        for m in loaded
+        if m.startswith((f"{pkg}.functions.", f"{pkg}.registry."))
+        or m in (f"{pkg}.functions", f"{pkg}.registry")
+    ]
+    assert not heavy, sorted(heavy)
 
 
 def test_registry_matches_coverage_totals():

@@ -4,7 +4,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import session_stats, sessionize
+from png_from_pdf_extracter_spark.operators.sessions import session_stats, sessionize
 
 
 def _ts(minute):

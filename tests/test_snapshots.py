@@ -11,7 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.sources import CommitConflict, SnapshotTable
+from png_from_pdf_extracter_spark.sources.snapshots import CommitConflict, SnapshotTable
 
 
 def _df(spark, lo, hi):
@@ -231,7 +231,7 @@ def test_incremental_read_changes(spark, tmp_path):
     """CDC-style incremental scan: exactly the rows appended after a
     snapshot, none of the older data — the per-run consumption primitive
     for a 100 TB streaming/backfill consumer."""
-    from png_from_pdf_extracter_spark.sources import IncrementalScanError
+    from png_from_pdf_extracter_spark.sources.snapshots import IncrementalScanError
 
     t = SnapshotTable(str(tmp_path), "inc")
     v1 = t.append(_df(spark, 0, 10))

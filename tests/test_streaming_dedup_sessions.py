@@ -94,7 +94,7 @@ def test_stream_sessionize_closed_sessions(spark, tmp_path):
 def test_stream_interval_join_matches_batch_range_join(spark, tmp_path):
     """Stream-stream interval join (inner, time-bounded state) must emit
     exactly the pairs the batch range_join produces on the same data."""
-    from png_from_pdf_extracter_spark.operators import range_join_broadcast
+    from png_from_pdf_extracter_spark.operators.temporal import range_join_broadcast
     from png_from_pdf_extracter_spark.streaming import stream_interval_join
 
     clicks = [

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.operators import (
+from png_from_pdf_extracter_spark.operators.temporal import (
     asof_join,
     asof_join_broadcast,
     asof_join_skewed,
