@@ -1224,8 +1224,8 @@ def tfidf_cosine_pairs(
 
     Exactness: weights are integer-quantized up front — ``wq =
     floor(tf * ln((N+1)/(df+1)) * 1e6)`` (one libm call per TERM from
-    exact integers) — so every pair's dot product and every document's
-    squared norm are EXACT
+    exact integers, the [[kaplan_meier]] pattern) — so every pair's
+    dot product and every document's squared norm are EXACT
     DECIMAL(38,0) sums; the only float is the final
     ``dot / sqrt(n1 * n2)`` emit per pair. No cross-row float
     summation anywhere, which is what lets DuckDB value-hash an

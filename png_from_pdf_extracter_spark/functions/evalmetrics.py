@@ -1270,7 +1270,8 @@ def off_policy_value(
     size — "what WOULD this routing/ranking policy have earned on the
     traffic we actually logged", without running it. The pipeline
     read: compare a candidate curation/serving policy against logged
-    propensity-scored choices before an A/B.
+    propensity-scored choices before an A/B ([[cuped_adjust]] is the
+    during-experiment companion).
 
     Propensity contract: ``prop_tenths_col`` holds the logged
     propensity as INTEGER TENTHS k in 1..9 (p = k/10) — the discrete

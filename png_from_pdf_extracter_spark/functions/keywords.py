@@ -313,10 +313,11 @@ def juilland_dispersion(
     term — the read that catches one crawl seed poisoning a lexicon.
 
     Absent (term, part) cells are zero by contract, so per-term
-    moments over ALL k parts come from sums over PRESENT cells only —
-    population CV from integer counts, one fixed float expression per
-    term, no stepped window anywhere. Plan: one (part, term) count
-    shuffle, one term rollup, TakeOrdered top-k. Returns (term, total_freq, n_parts_hit,
+    moments over ALL k parts come from sums over PRESENT cells only
+    (the [[interrater_reliability]] trick) — population CV from
+    integer counts, one fixed float expression per term, no stepped
+    window anywhere. Plan: one (part, term) count shuffle, one term
+    rollup, TakeOrdered top-k. Returns (term, total_freq, n_parts_hit,
     d_q6) for the top_k terms by total frequency (term asc
     tie-break).
     """

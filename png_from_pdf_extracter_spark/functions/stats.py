@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .curate import _quant
+
 
 def weighted_quantile(
     df: DataFrame,
@@ -50,17 +52,6 @@ def weighted_quantile(
         F.max("__total").cast("long").alias("total_w"),
         F.min("__v").alias("wq_value"),
     )
-
-def _quant(col, quantize: int):
-    """Deterministic integer quantization: round(v * 10^q) as BIGINT.
-
-    Both engines see the IDENTICAL parquet double and both define
-    round() as half-away-from-zero, so the mapping is bit-reproducible
-    cross-engine (the property every rank statistic below leans on)."""
-    return F.round(col.cast("double") * F.lit(10 ** quantize), 0).cast(
-        "long"
-    )
-
 
 def mann_whitney_u(
     df: DataFrame,
@@ -1026,168 +1017,6 @@ def theil_sen_slope(
     )
 
 
-def changepoint_binary_seg(
-    df: DataFrame,
-    group_cols: tuple[str, ...],
-    order_cols: tuple[str, ...],
-    value_col: str,
-    max_changepoints: int = 3,
-    quantize: int = 1,
-    min_seg: int = 2,
-    min_bss: float = 0.0,
-) -> DataFrame:
-    """Multiple-changepoint detection per group by BINARY SEGMENTATION
-    — the standard greedy extension of [[changepoint_single]]: find the
-    best split, recurse into the better-scoring side, stop after
-    ``max_changepoints`` splits or when no candidate's between-segment
-    contrast reaches ``min_bss``. The "this metric shifted twice —
-    when?" answer a drift postmortem wants.
-
-    Fully distributed rounds: each iteration scores EVERY group's
-    every current segment in one pass (the same exact-integer prefix
-    construction as ``changepoint_single``, windowed on the composite
-    (group, segment) key), picks each group's single best split with a
-    rank window, and re-derives segment membership by counting
-    accepted splits below each row's index (a per-group array join —
-    the split set is <= max_changepoints per group, never data-sized).
-    Driver state per round: ONE emptiness check; split storage stays
-    in DataFrames. All groups advance in parallel — a round costs the
-    same whether one group or a billion groups still split.
-
-    Returns one row per FINAL segment: (group..., segment, start_idx,
-    end_idx, n, mean_q) with 1-based inclusive row indices in the
-    stable order and floor-6dp segment means.
-    """
-    if max_changepoints < 0:
-        raise ValueError("max_changepoints must be >= 0")
-    if min_seg < 1:
-        raise ValueError("min_seg must be >= 1")
-    q = _quant(F.col(value_col), quantize)
-    ow = [F.col(c).asc() for c in order_cols]
-    base = df.select(
-        *group_cols,
-        F.row_number()
-        .over(Window.partitionBy(*group_cols).orderBy(*ow))
-        .alias("__idx"),
-        q.alias("__v"),
-    ).persist()
-    gcols = list(group_cols)
-    splits = None  # (group..., __split) — accepted split indices
-    try:
-        for _ in range(max_changepoints):
-            if splits is None:
-                segged = base.withColumn("__seg", F.lit(0))
-            else:
-                arr = splits.groupBy(*gcols).agg(
-                    F.collect_list("__split").alias("__sp")
-                )
-                segged = (
-                    base.join(F.broadcast(arr), gcols, "left")
-                    .withColumn(
-                        "__seg",
-                        F.size(
-                            F.filter(
-                                F.coalesce(
-                                    F.col("__sp"),
-                                    F.array().cast("array<long>"),
-                                ),
-                                lambda s: s < F.col("__idx"),
-                            )
-                        ),
-                    )
-                    .drop("__sp")
-                )
-            seg_key = gcols + ["__seg"]
-            pre = Window.partitionBy(*seg_key).orderBy("__idx").rowsBetween(
-                Window.unboundedPreceding, Window.currentRow
-            )
-            full = Window.partitionBy(*seg_key)
-            marked = segged.select(
-                *gcols,
-                "__idx",
-                "__seg",
-                F.row_number()
-                .over(Window.partitionBy(*seg_key).orderBy("__idx"))
-                .alias("__k"),
-                F.sum("__v").over(pre).alias("__sl"),
-                F.sum("__v").over(full).alias("__st"),
-                F.count("*").over(full).alias("__n"),
-            )
-            cand = marked.filter(
-                (F.col("__k") >= min_seg)
-                & (F.col("__k") <= F.col("__n") - min_seg)
-            )
-            n_l = F.col("__k")
-            n_r = F.col("__n") - F.col("__k")
-            contrast = (
-                F.col("__sl") * n_r
-                - (F.col("__st") - F.col("__sl")) * n_l
-            )
-            scored = cand.withColumn(
-                "__bss",
-                (contrast.cast("double") * contrast.cast("double"))
-                / (n_l * n_r).cast("double"),
-            ).filter(F.col("__bss") >= F.lit(float(min_bss)))
-            best = Window.partitionBy(*gcols).orderBy(
-                F.col("__bss").desc(), F.col("__idx").asc()
-            )
-            new_splits = (
-                scored.withColumn("__r", F.row_number().over(best))
-                .filter(F.col("__r") == 1)
-                .select(*gcols, F.col("__idx").cast("long").alias("__split"))
-                .persist()
-            )
-            if not new_splits.take(1):
-                new_splits.unpersist()
-                break
-            splits = (
-                new_splits
-                if splits is None
-                else splits.unionByName(new_splits)
-            ).localCheckpoint(eager=True)
-            new_splits.unpersist()
-        if splits is None:
-            final = base.withColumn("__seg", F.lit(0))
-        else:
-            arr = splits.groupBy(*gcols).agg(
-                F.collect_list("__split").alias("__sp")
-            )
-            final = (
-                base.join(F.broadcast(arr), gcols, "left")
-                .withColumn(
-                    "__seg",
-                    F.size(
-                        F.filter(
-                            F.coalesce(
-                                F.col("__sp"),
-                                F.array().cast("array<long>"),
-                            ),
-                            lambda s: s < F.col("__idx"),
-                        )
-                    ),
-                )
-                .drop("__sp")
-            )
-        scale = float(10 ** quantize)
-        out = final.groupBy(*gcols, "__seg").agg(
-            F.min("__idx").cast("long").alias("start_idx"),
-            F.max("__idx").cast("long").alias("end_idx"),
-            F.count("*").cast("long").alias("n"),
-            (
-                F.floor(
-                    F.sum("__v") / (F.count("*") * F.lit(scale)) * F.lit(1e6)
-                )
-                / F.lit(1e6)
-            ).alias("mean_q"),
-        )
-        out = out.withColumnRenamed("__seg", "segment")
-        # force before releasing the persisted base
-        out = out.localCheckpoint(eager=True)
-        return out
-    finally:
-        base.unpersist()
-
-
 def kruskal_wallis(
     df: DataFrame,
     value_col: str,
@@ -1663,187 +1492,6 @@ def cusum_fold_states(
     return out
 
 
-def _stepped_sq_over_n(per_class, sum_col: str, n_col: str, key_col: str):
-    """Fixed-order float accumulation of sum(S_g^2 / n_g) over the class
-    key — the [[kruskal_wallis]] "stepped" pattern extracted: both
-    engines walk the class table in key order and add identical doubles
-    left-to-right, so the cross-row float sum stays bit-reproducible.
-    Returns a 1-row DataFrame (``__sb``, ``__kk``).
-    """
-    ordw = Window.orderBy(key_col).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    full = Window.orderBy(key_col).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = per_class.select(
-        F.sum(
-            F.col(sum_col).cast("double")
-            * F.col(sum_col).cast("double")
-            / F.col(n_col).cast("double")
-        )
-        .over(ordw)
-        .alias("__sb"),
-        F.row_number().over(Window.orderBy(key_col)).alias("__rn"),
-        F.count("*").over(full).alias("__k"),
-    )
-    return stepped.filter(F.col("__rn") == F.col("__k")).select(
-        "__sb", F.col("__k").cast("long").alias("__kk")
-    )
-
-
-def anova_oneway(
-    df: DataFrame,
-    value_col: str,
-    class_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """One-way ANOVA F test — the parametric counterpart of
-    [[kruskal_wallis]]: "do the class MEANS differ" where KW asks about
-    whole distributions. The 100-TB reading: a single map-combinable
-    pass computes per-class (n_g, S_g, Q_g); everything after runs over
-    the k-row class table.
-
-    EXACT cross-engine: values integer-quantized; per-class sums S_g
-    are BIGINT, squared sums Q_g are DECIMAL(38,0) (v^2 sums overflow
-    64 bits at sf0.1 scale — Spark's non-ANSI long sum would wrap
-    SILENTLY, DuckDB widens to HUGEINT, and the two engines would
-    diverge; decimal pins both). The between-groups term sum(S_g^2/n_g)
-    is accumulated in FIXED class-key order ([[_stepped_sq_over_n]]),
-    then SSB = sb - S^2/N and SSW = Q - sb are single shared-op-order
-    expressions. Returns one row (n, k, ssb_q6, ssw_q6, f_q6); f_q6 is
-    null when k < 2 or SSW == 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(v.alias("__v"), F.col(class_col).alias("__g")).filter(
-        F.col("__v").isNotNull() & F.col("__g").isNotNull()
-    )
-    per_class = base.groupBy("__g").agg(
-        F.count("*").cast("long").alias("__n_g"),
-        F.sum("__v").cast("long").alias("__s_g"),
-        F.sum(
-            F.col("__v").cast("decimal(38,0)")
-            * F.col("__v").cast("decimal(38,0)")
-        ).alias("__q_g"),
-    )
-    sb = _stepped_sq_over_n(per_class, "__s_g", "__n_g", "__g")
-    tot = per_class.agg(
-        F.sum("__n_g").cast("long").alias("n"),
-        F.sum("__s_g").cast("long").alias("__s"),
-        F.sum("__q_g").cast("decimal(38,0)").alias("__q"),
-    )
-    nn = F.col("n").cast("double")
-    ssb = F.col("__sb") - (
-        F.col("__s").cast("double") * F.col("__s").cast("double") / nn
-    )
-    ssw = F.col("__q").cast("double") - F.col("__sb")
-    kk = F.col("__kk").cast("double")
-    f_stat = (ssb / (kk - F.lit(1.0))) / (ssw / (nn - kk))
-    # SSB/SSW magnitudes reach ~1e19 in quantized-cents^2 units: floor at
-    # x*1e6 would overflow Spark's LONG-returning floor (DuckDB's floor
-    # stays DOUBLE and the engines diverge) — emit in 1e6-unit bins
-    # instead, which also keeps floor's argument under 2^53.
-    return tot.crossJoin(sb).select(
-        "n",
-        F.col("__kk").alias("k"),
-        F.floor(ssb / F.lit(1e6)).cast("long").alias("ssb_m6"),
-        F.floor(ssw / F.lit(1e6)).cast("long").alias("ssw_m6"),
-        F.when(
-            (F.col("__kk") > 1) & (ssw > 0),
-            F.floor(f_stat * F.lit(1e6)) / F.lit(1e6),
-        ).alias("f_q6"),
-    )
-
-
-def levene_bf(
-    df: DataFrame,
-    value_col: str,
-    class_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Brown-Forsythe (median-centered Levene) test of equal variances
-    across classes — the gate you run BEFORE trusting [[anova_oneway]]
-    (whose F assumes homoscedasticity), and a drift check in its own
-    right: "did one shard's variance blow up".
-
-    Construction keeps everything integral until the final assembly:
-    the per-class DOUBLED median med2_g = v_lo + v_hi comes from the
-    per-(class, value) count table via the exact integer rank-reach
-    test (lower + upper order statistics — no float midpoint), so the
-    centered deviations z2 = |2v - med2_g| are exact BIGINTs. Then W =
-    ((N-k)/(k-1)) * [sum_g Z_g^2/n_g - Z^2/N] / [Q - sum_g Z_g^2/n_g]
-    with Z_g = sum(z2) BIGINT, Q = sum(z2^2) DECIMAL(38,0), and the
-    cross-class float term accumulated in fixed key order
-    ([[_stepped_sq_over_n]]); the doubling cancels between numerator
-    and denominator. Plan: one (class, value) count shuffle (bounded by
-    distinct values, map-combinable), the median join-back is against
-    the k-row class table (broadcast). Returns (n, k, w_q6); w_q6 null
-    when k < 2 or the within term is 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(v.alias("__v"), F.col(class_col).alias("__g")).filter(
-        F.col("__v").isNotNull() & F.col("__g").isNotNull()
-    )
-    vg = base.groupBy("__g", "__v").agg(F.count("*").cast("long").alias("__c"))
-    wg = Window.partitionBy("__g").orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = vg.select(
-        "__g",
-        "__v",
-        "__c",
-        F.coalesce(F.sum("__c").over(wg), F.lit(0)).alias("__cb"),
-        F.sum("__c").over(Window.partitionBy("__g")).alias("__n_g"),
-    )
-    lo = F.floor((F.col("__n_g") + 1) / 2)
-    hi = F.floor(F.col("__n_g") / 2) + 1
-    hits = (
-        F.when((F.col("__cb") < lo) & (F.col("__cb") + F.col("__c") >= lo), 1)
-        .otherwise(0)
-        + F.when(
-            (F.col("__cb") < hi) & (F.col("__cb") + F.col("__c") >= hi), 1
-        ).otherwise(0)
-    )
-    med = ranked.groupBy("__g").agg(
-        F.sum(F.col("__v") * hits).cast("long").alias("__med2")
-    )
-    z = vg.join(F.broadcast(med), "__g").select(
-        "__g",
-        "__c",
-        F.abs(2 * F.col("__v") - F.col("__med2")).alias("__z2"),
-    )
-    per_class = z.groupBy("__g").agg(
-        F.sum("__c").cast("long").alias("__n_g"),
-        F.sum(F.col("__c") * F.col("__z2")).cast("long").alias("__zs"),
-        F.sum(
-            F.col("__c").cast("decimal(38,0)")
-            * F.col("__z2").cast("decimal(38,0)")
-            * F.col("__z2").cast("decimal(38,0)")
-        ).alias("__q_g"),
-    )
-    sb = _stepped_sq_over_n(per_class, "__zs", "__n_g", "__g")
-    tot = per_class.agg(
-        F.sum("__n_g").cast("long").alias("n"),
-        F.sum("__zs").cast("long").alias("__z"),
-        F.sum("__q_g").cast("decimal(38,0)").alias("__q"),
-    )
-    nn = F.col("n").cast("double")
-    kk = F.col("__kk").cast("double")
-    num = F.col("__sb") - (
-        F.col("__z").cast("double") * F.col("__z").cast("double") / nn
-    )
-    den = F.col("__q").cast("double") - F.col("__sb")
-    w_stat = ((nn - kk) / (kk - F.lit(1.0))) * num / den
-    return tot.crossJoin(sb).select(
-        "n",
-        F.col("__kk").alias("k"),
-        F.when(
-            (F.col("__kk") > 1) & (den > 0),
-            F.floor(w_stat * F.lit(1e6)) / F.lit(1e6),
-        ).alias("w_q6"),
-    )
-
-
 def cramers_v(
     df: DataFrame,
     col_a: str,
@@ -1854,8 +1502,8 @@ def cramers_v(
     MEANINGFUL" needs V = sqrt(chi2 / (N * (min(r,c) - 1))). Where
     chi2_independence emits per-cell rows (order-free floats), V needs
     the cross-cell total, so the cell contributions are accumulated in
-    FIXED (a, b) key order — the [[_stepped_sq_over_n]] discipline
-    applied to the contingency table. Plan identical to
+    FIXED (a, b) key order — the stepped-sum discipline applied to
+    the contingency table. Plan identical to
     chi2_independence: ONE corpus shuffle to the cell table, margins
     re-aggregated over cells, broadcast joins. Returns one row
     (n, r, c, chi2_q6, v_q6); v_q6 null for a degenerate 1xC / Rx1
@@ -2228,86 +1876,6 @@ def cochran_q(
     )
 
 
-def friedman_test(
-    df: DataFrame,
-    subject_col: str,
-    treatment_col: str,
-    value_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Friedman test — the rank-based repeated-measures ANOVA: given a
-    complete block design (every subject measured under every
-    treatment), ranks each subject's k values, then tests whether the
-    per-treatment rank sums differ. The tie-corrected statistic is
-    Q = (k-1) * sum_j (R_j - n(k+1)/2)^2 / (A - C), A = sum of squared
-    ranks, C = n*k*(k+1)^2/4; chi2_{k-1} under the null. The
-    k-treatment analog of the sign/Wilcoxon pairing — use it to compare
-    k scorers over the same documents when [[cochran_q]]'s binary
-    success is too coarse.
-
-    EXACT cross-engine: within-subject average ranks use the repo's
-    DOUBLED-rank identity (2*avg_rank = 2*rank() + ties - 1, an
-    integer), so S4 = sum_j (2R_j - n(k+1))^2, A4 = sum (2r)^2 and
-    C4 = n*k*(k+1)^2 are exact BIGINTs with the 1/4 cancelling:
-    Q = (k-1)*S4/(A4-C4). Plan: one rank window PARTITIONED BY SUBJECT
-    (partition size = k, never corpus-wide), one groupBy per treatment,
-    two scalar aggregates. Returns one row (n_subjects, k, q_q6);
-    q_q6 null when A4 = C4 (every subject all-tied).
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        F.col(subject_col).alias("__subj"),
-        F.col(treatment_col).alias("__trt"),
-        v.alias("__v"),
-    ).filter(F.col("__v").isNotNull())
-    w = Window.partitionBy("__subj").orderBy("__v")
-    wt = Window.partitionBy("__subj", "__v")
-    ranked = base.select(
-        "__subj",
-        "__trt",
-        (2 * F.rank().over(w) + F.count("*").over(wt) - 1)
-        .cast("long")
-        .alias("__r2"),
-    )
-    per_trt = ranked.groupBy("__trt").agg(
-        F.sum("__r2").cast("long").alias("r2_sum"),
-        F.count("*").cast("long").alias("n"),
-    )
-    scal = ranked.agg(
-        F.sum(F.col("__r2") * F.col("__r2")).cast("long").alias("a4"),
-        F.countDistinct("__subj").cast("long").alias("n_subj"),
-        F.countDistinct("__trt").cast("long").alias("k"),
-    )
-    j = per_trt.crossJoin(F.broadcast(scal))
-    dev = F.col("r2_sum") - F.col("n_subj") * (F.col("k") + 1)
-    s4 = j.agg(
-        F.sum(dev * dev).cast("long").alias("s4"),
-        F.max("a4").alias("a4"),
-        F.max("n_subj").alias("n_subjects"),
-        F.max("k").alias("k"),
-    )
-    c4 = (
-        F.col("n_subjects")
-        * F.col("k")
-        * (F.col("k") + 1)
-        * (F.col("k") + 1)
-    )
-    return s4.select(
-        "n_subjects",
-        "k",
-        F.when(
-            F.col("a4") > c4,
-            F.floor(
-                (F.col("k") - 1).cast("double")
-                * F.col("s4").cast("double")
-                / (F.col("a4") - c4).cast("double")
-                * F.lit(1e6)
-            )
-            / F.lit(1e6),
-        ).alias("q_q6"),
-    )
-
-
 def hodges_lehmann(
     df: DataFrame,
     value_col: str,
@@ -2328,7 +1896,7 @@ def hodges_lehmann(
     so the self-join is V x V on DISTINCT QUANTIZED VALUES (bounded by
     value cardinality, 10^q-grained), never row x row. The median of
     that weighted multiset comes from the integer rank-reach test
-    ([[levene_bf]]'s lower+upper order statistics); med4 = W_lo + W_hi
+    (lower+upper order statistics); med4 = W_lo + W_hi
     (odd N: 2*W_mid) stays BIGINT in doubled-Walsh units, HL =
     med4 / (4 * 10^q). Returns (group..., n, n_walsh, med4, hl_q6).
     """
@@ -2396,98 +1964,6 @@ def hodges_lehmann(
     )
 
 
-def jonckheere_terpstra(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Jonckheere-Terpstra test for an ORDERED alternative — where
-    [[kruskal_wallis]] asks "do the k groups differ at all", JT asks
-    "do they increase along the group ordering" (dose-response,
-    quality-tier monotonicity): J = sum over group pairs g1 < g2 of the
-    Mann-Whitney U(g1, g2), large when later groups stochastically
-    dominate earlier ones. Groups are ordered by the natural ordering
-    of ``group_col``.
-
-    EXACT cross-engine, never O(rows^2): on the DENSE (group x
-    distinct-quantized-value) grid (zero-filled so window frames line
-    up), two ordered windows build (a) each group's below-value
-    cumulative and (b) the PREFIX OVER GROUPS of those cumulatives at
-    each value; the doubled statistic J2 = sum c_g2,v * (2*A + B)
-    (half-credit ties) is then one BIGINT aggregate. Grid size is
-    k * V — bounded by value cardinality, not corpus size. The z score
-    uses the standard no-tie null moments kept integral: mean4 =
-    n^2 - sum n_i^2 (4x mean), var72 = n^2(2n+3) - sum n_i^2(2n_i+3)
-    (72x variance) — with heavy ties prefer the permutation reading;
-    the statistic J2 itself is tie-exact. Returns one row
-    (n, k, j2, mean4, var72, z_q6); z null when var72 = 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        F.col(group_col).alias("__g"), v.alias("__v")
-    ).filter(F.col("__g").isNotNull() & F.col("__v").isNotNull())
-    cnt = base.groupBy("__g", "__v").agg(
-        F.count("*").cast("long").alias("__c")
-    )
-    vals = cnt.select("__v").distinct()
-    grps = cnt.select("__g").distinct()
-    grid = vals.crossJoin(grps).join(cnt, ["__g", "__v"], "left").select(
-        "__g", "__v", F.coalesce(F.col("__c"), F.lit(0)).alias("__c")
-    )
-    wb = Window.partitionBy("__g").orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = grid.select(
-        "__g",
-        "__v",
-        "__c",
-        F.coalesce(F.sum("__c").over(wb), F.lit(0)).alias("__cumb"),
-    )
-    wg = Window.partitionBy("__v").orderBy("__g").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    pref = cum.select(
-        "__g",
-        "__v",
-        "__c",
-        F.coalesce(F.sum("__cumb").over(wg), F.lit(0)).alias("__a"),
-        F.coalesce(F.sum("__c").over(wg), F.lit(0)).alias("__b"),
-    )
-    j2_tab = pref.agg(
-        F.sum(F.col("__c") * (2 * F.col("__a") + F.col("__b")))
-        .cast("long")
-        .alias("j2")
-    )
-    sizes = cnt.groupBy("__g").agg(F.sum("__c").cast("long").alias("__n"))
-    mom = sizes.agg(
-        F.sum("__n").cast("long").alias("n"),
-        F.count("*").cast("long").alias("k"),
-        F.sum(F.col("__n") * F.col("__n")).cast("long").alias("__sn2"),
-        F.sum(
-            F.col("__n") * F.col("__n") * (2 * F.col("__n") + 3)
-        ).cast("long").alias("__sn23"),
-    )
-    out = j2_tab.crossJoin(F.broadcast(mom))
-    mean4 = F.col("n") * F.col("n") - F.col("__sn2")
-    var72 = (
-        F.col("n") * F.col("n") * (2 * F.col("n") + 3) - F.col("__sn23")
-    )
-    z = (2 * F.col("j2") - mean4).cast("double") / (
-        F.lit(4.0) * F.sqrt(var72.cast("double") / F.lit(72.0))
-    )
-    return out.select(
-        "n",
-        "k",
-        "j2",
-        mean4.cast("long").alias("mean4"),
-        var72.cast("long").alias("var72"),
-        F.when(
-            var72 > 0, F.floor(z * F.lit(1e6)) / F.lit(1e6)
-        ).alias("z_q6"),
-    )
-
-
 def page_trend_test(
     df: DataFrame,
     subject_col: str,
@@ -2495,7 +1971,7 @@ def page_trend_test(
     value_col: str,
     quantize: int = 2,
 ) -> DataFrame:
-    """Page's L test — [[friedman_test]] sharpened to an ORDERED
+    """Page's L test — Friedman's test sharpened to an ORDERED
     alternative: with treatments ordered (dose levels, model
     generations, context lengths), L = sum_j j * R_j is large when
     values rise along the ordering — the within-subject twin of
@@ -2504,7 +1980,7 @@ def page_trend_test(
     distinct-treatment table (broadcast back).
 
     EXACT cross-engine: the within-subject DOUBLED average ranks of
-    friedman_test keep L2 = sum ord_j * r2 a BIGINT; the no-tie null
+    Friedman's test keep L2 = sum ord_j * r2 a BIGINT; the no-tie null
     moments stay integral as e4 = n*k*(k+1)^2 (4x mean) and v144 =
     n*k^2*(k+1)*(k^2-1) (144x variance), giving z = 3*(2*L2 - e4) /
     sqrt(v144) as ONE float expression. Returns one row
@@ -2589,7 +2065,7 @@ def runs_test(
     monotone trend, not streakiness).
 
     EXACT cross-engine: the group median is the DOUBLED med2 = v_lo +
-    v_hi from the integer rank-reach test ([[levene_bf]]'s), so the
+    v_hi from the integer rank-reach test, so the
     above/below split (2v > med2 / 2v < med2) never touches a float;
     exact-median values are EXCLUDED (the standard treatment). Runs
     are counted as 1 + sum(side != lag(side)) in ONE ordered window
@@ -2759,7 +2235,7 @@ def mood_median_test(
     table; exact-median values are EXCLUDED (the standard treatment,
     same as [[runs_test]]); per-group above/below counts are BIGINTs;
     the chi-square statistic accumulates per-group terms in FIXED
-    group-key order via an ordered window ([[_stepped_sq_over_n]]'s
+    group-key order via an ordered window (the stepped-sum
     discipline) so both engines add identical doubles. Returns one row
     (n, k, above_total, chi2_q6); null when a margin is empty (all
     values on one side — the test is vacuous).
@@ -3054,8 +2530,8 @@ def welch_t_test(
     quantize: int = 2,
 ) -> DataFrame:
     """Welch's unequal-variance two-sample t test — the default
-    two-group mean comparison (the k-group equal-variance case is
-    [[anova_oneway]]; the distribution-free twin is [[mann_whitney_u]]).
+    two-group mean comparison (the distribution-free twin is
+    [[mann_whitney_u]]).
     Reports the t statistic AND the Welch-Satterthwaite degrees of
     freedom, plus Cohen's d on the pooled sd so the effect SIZE travels
     with the significance number.
@@ -3066,7 +2542,7 @@ def welch_t_test(
 
     EXACT cross-engine: values integer-quantized ([[_quant]]); per-arm
     S is BIGINT and Q is DECIMAL(38,0) (v^2 sums wrap a silent
-    non-ANSI long at sf0.1 — the [[anova_oneway]] lesson). Means,
+    non-ANSI long at sf0.1). Means,
     variances, t, and df are then ONE fixed-op-order float expression
     each over the six exact scalars, floor-quantized at emit. t/d are
     null when either arm has n < 2 or both variances are zero; df is
@@ -3294,95 +2770,6 @@ def cramer_von_mises_2s(
     )
 
 
-def tukey_hsd(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Tukey-Kramer HSD pairwise comparisons — the follow-up to a
-    significant [[anova_oneway]]: WHICH group means differ, with the
-    studentized-range q statistic per pair q_ij = |m_i - m_j| /
-    sqrt((MSW/2) * (1/n_i + 1/n_j)) so the k(k-1)/2 comparisons share
-    one error term instead of k^2 Welch tests.
-
-    EXACT cross-engine: per-group (n_g BIGINT, S_g BIGINT, Q_g
-    DECIMAL(38,0)) off one map-combinable aggregate; MSW = (Q - sb) /
-    (N - k) with sb accumulated in fixed class-key order
-    ([[_stepped_sq_over_n]] — the [[anova_oneway]] lesson); per-pair
-    means and q are fixed-op-order float expressions over exact
-    scalars. Plan: one groupBy shuffle to the k-row class table, a
-    broadcast self-join on g_a < g_b (k^2 rows, k = class cardinality,
-    bounded), one broadcast 1-row MSW. Means emitted in ORIGINAL value
-    units (descaled by 10^quantize); q is scale-free. q_q6 null when
-    MSW <= 0 or N <= k. Returns one row per unordered pair
-    (g_a, g_b, n_a, n_b, mean_a_q6, mean_b_q6, diff_q6, q_q6).
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        v.alias("__v"), F.col(group_col).cast("string").alias("__g")
-    ).filter(F.col("__v").isNotNull() & F.col("__g").isNotNull())
-    per = base.groupBy("__g").agg(
-        F.count("*").cast("long").alias("__n_g"),
-        F.sum("__v").cast("long").alias("__s_g"),
-        F.sum(
-            F.col("__v").cast("decimal(38,0)")
-            * F.col("__v").cast("decimal(38,0)")
-        ).alias("__q_g"),
-    )
-    sb = _stepped_sq_over_n(per, "__s_g", "__n_g", "__g")
-    tot = per.agg(
-        F.sum("__n_g").cast("long").alias("__n"),
-        F.sum("__q_g").cast("decimal(38,0)").alias("__q"),
-    )
-    msw_row = (
-        tot.crossJoin(sb)
-        .select(
-            "__n",
-            "__kk",
-            F.try_divide(
-                F.col("__q").cast("double") - F.col("__sb"),
-                (F.col("__n") - F.col("__kk")).cast("double"),
-            ).alias("__msw"),
-        )
-    )
-    a = per.select(
-        F.col("__g").alias("g_a"),
-        F.col("__n_g").alias("n_a"),
-        F.col("__s_g").alias("__s_a"),
-    )
-    b = per.select(
-        F.col("__g").alias("g_b"),
-        F.col("__n_g").alias("n_b"),
-        F.col("__s_g").alias("__s_b"),
-    )
-    pairs = a.join(F.broadcast(b), F.col("g_a") < F.col("g_b"), "inner")
-    scale = float(10 ** quantize)
-    ma = F.col("__s_a").cast("double") / F.col("n_a").cast("double")
-    mb = F.col("__s_b").cast("double") / F.col("n_b").cast("double")
-    se = F.sqrt(
-        F.col("__msw")
-        / F.lit(2.0)
-        * (
-            F.lit(1.0) / F.col("n_a").cast("double")
-            + F.lit(1.0) / F.col("n_b").cast("double")
-        )
-    )
-    q = F.try_divide(F.abs(ma - mb), se)
-    ok = (F.col("__msw") > 0) & (F.col("__n") > F.col("__kk"))
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return pairs.crossJoin(F.broadcast(msw_row)).select(
-        "g_a",
-        "g_b",
-        "n_a",
-        "n_b",
-        q6(ma / F.lit(scale)).alias("mean_a_q6"),
-        q6(mb / F.lit(scale)).alias("mean_b_q6"),
-        q6((ma - mb) / F.lit(scale)).alias("diff_q6"),
-        F.when(ok, q6(q)).alias("q_q6"),
-    )
-
-
 def energy_distance_2s(
     df: DataFrame,
     value_col: str,
@@ -3498,7 +2885,7 @@ def hill_tail_index(
     REVERSE running count (integer rank-reach, no sort of raw rows);
     ties at the boundary are truncated by rank so exactly k values
     enter. The ln sum runs in FIXED value order (descending) over at
-    most k rows — the [[_stepped_sq_over_n]] discipline — and the
+    most k rows — the stepped-sum discipline — and the
     final assembly is one fixed-op-order float expression. Plan: one
     map-combinable (value -> count) shuffle; every window is over the
     distinct-value table, bounded by cardinality not corpus size.
@@ -3659,58 +3046,6 @@ def cuped_adjust(
     )
 
 
-def wilson_interval(
-    df: DataFrame,
-    success_col: str,
-    group_cols: tuple = (),
-    z: float = 1.96,
-) -> DataFrame:
-    """Wilson score interval per group for a 0/1 outcome — the
-    proportion CI that behaves at the edges where the Wald interval
-    collapses (p_hat = 0 or 1 still gets a sane nonzero-width
-    interval; the reason every monitoring dashboard should use Wilson
-    for per-shard error rates). [[q_ab_test]]'s z compares two arms;
-    this puts honest error bars on EACH group's rate.
-
-    EXACT cross-engine: (n, s) are the only statistics — one
-    map-combinable aggregate — and center/half-width are single
-    fixed-op-order float expressions over them, floor-quantized at
-    emit. Returns (group..., n, successes, p_q6, lo_q6, hi_q6); null
-    bounds when n = 0 (vacuously absent: groups come from rows).
-    """
-    s = F.col(success_col).cast("int")
-    agg = df.groupBy(*group_cols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum(s).cast("long").alias("successes"),
-    )
-    zz = float(z)
-    nn = F.col("n").cast("double")
-    p = F.col("successes").cast("double") / nn
-    z2 = F.lit(zz * zz)
-    denom = F.lit(1.0) + z2 / nn
-    center = (p + z2 / (F.lit(2.0) * nn)) / denom
-    half = (
-        F.lit(zz)
-        / denom
-        * F.sqrt(
-            p * (F.lit(1.0) - p) / nn
-            + z2 / (F.lit(4.0) * nn * nn)
-        )
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    # clamp to [0,1] BEFORE quantizing: at p_hat = 0 the exact
-    # center - half is 0 but floats leave +-1 ulp, and floor would turn
-    # -ulp into -1e-6
-    return agg.select(
-        *group_cols,
-        "n",
-        "successes",
-        q6(p).alias("p_q6"),
-        q6(F.greatest(center - half, F.lit(0.0))).alias("lo_q6"),
-        q6(F.least(center + half, F.lit(1.0))).alias("hi_q6"),
-    )
-
-
 def jackknife_group_se(
     df: DataFrame,
     value_col: str,
@@ -3729,7 +3064,7 @@ def jackknife_group_se(
     sums; SE^2 = (G-1)/G * [sum theta^2 - (sum theta)^2 / G]. The two
     cross-group float sums are accumulated in FIXED group-key order
     over the G-row table (one ordered window computing both — the
-    [[_stepped_sq_over_n]] discipline), so the result is
+    stepped-sum discipline), so the result is
     bit-reproducible. Plan: one map-combinable (group -> n, S)
     aggregate, windows over G rows. Returns (n, g, mean_q6, se_q6);
     se null when G < 2 or any group owns the whole corpus.
@@ -3785,142 +3120,6 @@ def jackknife_group_se(
         F.col("__gg").cast("long").alias("g"),
         q6(mean / F.lit(scale)).alias("mean_q6"),
         F.when(ok, q6(F.sqrt(var) / F.lit(scale))).alias("se_q6"),
-    )
-
-
-def capture_recapture(
-    df1: DataFrame,
-    df2: DataFrame,
-    id_col: str = "id",
-) -> DataFrame:
-    """Chapman capture-recapture estimate of a hidden population size
-    from two overlapping samples: N_hat = (n1+1)(n2+1)/(m+1) - 1 with
-    SE^2 = (n1+1)(n2+1)(n1-m)(n2-m) / ((m+1)^2 (m+2)) — the corpus
-    read: two independent crawls/dumps of the same space estimate how
-    much of it NEITHER saw (coverage auditing before claiming "we have
-    the web"). The [[kmv_build]] sketches count what you HAVE; this
-    estimates what EXISTS.
-
-    EXACT cross-engine: n1, n2, m are three distinct-counts; both
-    estimators are single fixed-op-order float expressions over the
-    three integers, floor-quantized. Plan: two distinct aggregates +
-    one distinct-intersection (semi-join then distinct — key-hashed,
-    combinable). Returns (n1, n2, m, est_q6, se_q6); null when m = 0
-    (disjoint samples => the estimator is undefined at scale).
-    """
-    a = df1.select(F.col(id_col).alias("__id")).filter(
-        F.col("__id").isNotNull()
-    ).distinct()
-    b = df2.select(F.col(id_col).alias("__id")).filter(
-        F.col("__id").isNotNull()
-    ).distinct()
-    both = a.join(b, "__id", "left_semi")
-    agg = (
-        a.agg(F.count("*").cast("long").alias("n1"))
-        .crossJoin(b.agg(F.count("*").cast("long").alias("n2")))
-        .crossJoin(both.agg(F.count("*").cast("long").alias("m")))
-    )
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    m = F.col("m").cast("double")
-    est = (n1 + F.lit(1.0)) * (n2 + F.lit(1.0)) / (m + F.lit(1.0)) - F.lit(
-        1.0
-    )
-    se2 = (
-        (n1 + F.lit(1.0))
-        * (n2 + F.lit(1.0))
-        * (n1 - m)
-        * (n2 - m)
-        / ((m + F.lit(1.0)) * (m + F.lit(1.0)) * (m + F.lit(2.0)))
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "n1",
-        "n2",
-        "m",
-        F.when(F.col("m") > 0, q6(est)).alias("est_q6"),
-        F.when(F.col("m") > 0, q6(F.sqrt(se2))).alias("se_q6"),
-    )
-
-
-def conditional_entropy(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Conditional entropy H(Y|X) and Theil's uncertainty coefficient
-    U(Y|X) = (H(Y) - H(Y|X)) / H(Y) for two categorical columns — the
-    ASYMMETRIC association number [[cramers_v]] can't give: "knowing
-    the source/event type removes WHAT FRACTION of the label's
-    uncertainty". U = 0 independent, U = 1 fully determined.
-
-    H(Y|X) = sum_xy (c_xy / N) * ln(c_x / c_xy) over the (x, y)
-    contingency counts — integers until the ln. Both cross-cell float
-    sums (H(Y|X) over (x, y) order, H(Y) over y order) accumulate in
-    FIXED key order via ordered windows over the contingency table
-    (bounded by cardinality product, not corpus size — the
-    [[_stepped_sq_over_n]] discipline). One (x, y) count shuffle.
-    Returns (n, h_y_q6, h_cond_q6, theil_u_q6); U null when H(Y) = 0.
-    """
-    base = df.select(
-        F.col(x_col).alias("__x"), F.col(y_col).alias("__y")
-    ).filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-    xy = base.groupBy("__x", "__y").agg(
-        F.count("*").cast("long").alias("__c")
-    )
-    wx = Window.partitionBy("__x")
-    tot = F.broadcast(xy.agg(F.sum("__c").cast("long").alias("__n")))
-    cells = xy.withColumn("__cx", F.sum("__c").over(wx)).crossJoin(tot)
-    nn = F.col("__n").cast("double")
-    term_cond = (
-        F.col("__c").cast("double")
-        / nn
-        * F.log(
-            F.col("__cx").cast("double") / F.col("__c").cast("double")
-        )
-    )
-    ordw = Window.orderBy("__x", "__y").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    full = Window.orderBy("__x", "__y").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = cells.select(
-        "__n",
-        F.sum(term_cond).over(ordw).alias("__hc"),
-        F.row_number().over(Window.orderBy("__x", "__y")).alias("__rn"),
-        F.count("*").over(full).alias("__k"),
-    )
-    hcond = stepped.filter(F.col("__rn") == F.col("__k")).select(
-        "__n", "__hc"
-    )
-    ycnt = base.groupBy("__y").agg(
-        F.count("*").cast("long").alias("__cy")
-    )
-    wyo = Window.orderBy("__y").rowsBetween(Window.unboundedPreceding, 0)
-    wyf = Window.orderBy("__y").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    term_y = (
-        F.col("__cy").cast("double")
-        / nn
-        * F.log(nn / F.col("__cy").cast("double"))
-    )
-    ystep = ycnt.crossJoin(tot).select(
-        F.sum(term_y).over(wyo).alias("__hy"),
-        F.row_number().over(Window.orderBy("__y")).alias("__rn"),
-        F.count("*").over(wyf).alias("__k"),
-    )
-    hy = F.broadcast(
-        ystep.filter(F.col("__rn") == F.col("__k")).select("__hy")
-    )
-    u = (F.col("__hy") - F.col("__hc")) / F.col("__hy")
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return hcond.crossJoin(hy).select(
-        F.col("__n").alias("n"),
-        q6(F.col("__hy")).alias("h_y_q6"),
-        q6(F.col("__hc")).alias("h_cond_q6"),
-        F.when(F.col("__hy") > 0, q6(u)).alias("theil_u_q6"),
     )
 
 
@@ -4033,92 +3232,6 @@ def holm_bonferroni(
         F.col("r_min").cast("long").alias("r_min"),
         F.col("m").cast("long").alias("m"),
         (F.min(cond).over(upto) == 1).alias("reject"),
-    )
-
-
-def mantel_haenszel(
-    df: DataFrame,
-    stratum_col: str,
-    arm_col: str,
-    outcome_col: str,
-) -> DataFrame:
-    """Mantel-Haenszel pooled odds ratio + Cochran-MH chi² across
-    strata — the STRATIFIED A/B readout: [[q_ab_test]]'s single 2x2
-    collapses strata and invites Simpson's paradox; MH pools the
-    per-stratum odds ratios with inverse-variance-like weights and
-    tests the common effect with continuity-free CMH. The pipeline
-    read: treatment effect by source/segment/cohort without letting
-    segment mix confound the answer.
-
-    Contract: ``arm_col`` and ``outcome_col`` are 0/1 ints. Per
-    stratum the 2x2 cells (a, b, c, d) are exact BIGINTs off ONE
-    map-combinable conditional aggregate; the cross-stratum float
-    terms (ad/n, bc/n, a - E[a], Var[a]) accumulate in FIXED stratum
-    order via one ordered window ([[_stepped_sq_over_n]] discipline).
-    Strata with n < 2 contribute no variance and are excluded whole
-    (the standard convention). Returns (k_strata, or_mh_q6, chi2_q6);
-    OR null when either pooled cross-product sum is 0, chi2 null when
-    the variance sum is 0.
-    """
-    a_ = F.col(arm_col).cast("int")
-    y_ = F.col(outcome_col).cast("int")
-    base = df.select(
-        F.col(stratum_col).alias("__s"), a_.alias("__a"), y_.alias("__y")
-    ).filter(
-        F.col("__s").isNotNull()
-        & F.col("__a").isNotNull()
-        & F.col("__y").isNotNull()
-    )
-    per = base.groupBy("__s").agg(
-        F.sum(F.col("__a") * F.col("__y")).cast("long").alias("__ta"),
-        F.sum(F.col("__a") * (1 - F.col("__y"))).cast("long").alias("__tb"),
-        F.sum((1 - F.col("__a")) * F.col("__y")).cast("long").alias("__tc"),
-        F.sum((1 - F.col("__a")) * (1 - F.col("__y")))
-        .cast("long")
-        .alias("__td"),
-    ).filter(
-        (F.col("__ta") + F.col("__tb") + F.col("__tc") + F.col("__td"))
-        >= 2
-    )
-    n = (
-        F.col("__ta") + F.col("__tb") + F.col("__tc") + F.col("__td")
-    ).cast("double")
-    ta, tb = F.col("__ta").cast("double"), F.col("__tb").cast("double")
-    tc, td = F.col("__tc").cast("double"), F.col("__td").cast("double")
-    r_term = ta * td / n
-    s_term = tb * tc / n
-    e_term = (ta + tb) * (ta + tc) / n
-    v_term = (
-        (ta + tb)
-        * (tc + td)
-        * (ta + tc)
-        * (tb + td)
-        / (n * n * (n - F.lit(1.0)))
-    )
-    ordw = Window.orderBy("__s").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    full = Window.orderBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = per.select(
-        F.sum(r_term).over(ordw).alias("__r"),
-        F.sum(s_term).over(ordw).alias("__ss"),
-        F.sum(ta - e_term).over(ordw).alias("__dev"),
-        F.sum(v_term).over(ordw).alias("__v"),
-        F.row_number().over(Window.orderBy("__s")).alias("__rn"),
-        F.count("*").over(full).alias("__k"),
-    )
-    last = stepped.filter(F.col("__rn") == F.col("__k"))
-    chi2 = F.col("__dev") * F.col("__dev") / F.col("__v")
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return last.select(
-        F.col("__k").cast("long").alias("k_strata"),
-        F.when(
-            (F.col("__r") > 0) & (F.col("__ss") > 0),
-            q6(F.col("__r") / F.col("__ss")),
-        ).alias("or_mh_q6"),
-        F.when(F.col("__v") > 0, q6(chi2)).alias("chi2_q6"),
     )
 
 
@@ -4276,111 +3389,6 @@ def yuen_trimmed_t(
     )
 
 
-def huber_location(
-    df: DataFrame,
-    value_col: str,
-    group_cols: tuple = (),
-    k_num: int = 3,
-    k_den: int = 2,
-    quantize: int = 2,
-) -> DataFrame:
-    """One-step Huber M-estimate of location per group — the robust
-    mean that uses EVERY row (where a trimmed mean discards its
-    tails): start at the median, clip each deviation at +-c*MAD
-    (c = ``k_num/k_den``, default 1.5), add back the clipped average.
-    Outliers contribute a bounded amount instead of being dropped or
-    dominating — the per-source robust headline number next to
-    [[group_influence]]'s sensitivity read.
-
-    EXACT cross-engine: DOUBLED medians via the integer rank-reach
-    test (the [[levene_bf]] construction) give med2 and mad2 without
-    any float midpoint; deviations d = 2v - med2 are BIGINTs, the
-    clip bound comparison d*k_den vs +-k_num*mad2 is integer, and the
-    clipped sum accumulates in BIGINT — so T = med2/2 + clipsum /
-    (2*n*k_den), descaled, is ONE fixed-op-order float expression.
-    Plan: one (group, value) count shuffle; two rank-reach medians
-    over distinct-value tables; broadcast per-group join-backs.
-    Returns (group..., n_g, median_q6, huber_q6).
-    """
-    gcols = list(group_cols)
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        *gcols, v.alias("__v")
-    ).filter(F.col("__v").isNotNull())
-    vg = base.groupBy(*gcols, "__v").agg(
-        F.count("*").cast("long").alias("__c")
-    )
-
-    def _med2(counts, val_col):
-        wg = Window.partitionBy(*gcols).orderBy(val_col).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        ranked = counts.select(
-            *gcols,
-            F.col(val_col),
-            "__c",
-            F.coalesce(F.sum("__c").over(wg), F.lit(0)).alias("__cb"),
-            F.sum("__c").over(Window.partitionBy(*gcols)).alias("__ng"),
-        )
-        lo = F.floor((F.col("__ng") + 1) / 2)
-        hi = F.floor(F.col("__ng") / 2) + 1
-        hits = (
-            F.when(
-                (F.col("__cb") < lo)
-                & (F.col("__cb") + F.col("__c") >= lo),
-                1,
-            ).otherwise(0)
-            + F.when(
-                (F.col("__cb") < hi)
-                & (F.col("__cb") + F.col("__c") >= hi),
-                1,
-            ).otherwise(0)
-        )
-        return ranked.groupBy(*gcols).agg(
-            F.sum(F.col(val_col) * hits).cast("long").alias("__m2"),
-            F.max("__ng").cast("long").alias("__ng"),
-        )
-
-    med = _med2(vg, "__v").select(
-        *gcols, F.col("__m2").alias("__med2"), "__ng"
-    )
-    dev = vg.join(F.broadcast(med.select(*gcols, "__med2")), gcols).select(
-        *gcols,
-        "__c",
-        F.abs(2 * F.col("__v") - F.col("__med2")).alias("__a2"),
-        (2 * F.col("__v") - F.col("__med2")).alias("__d2"),
-    )
-    devc = dev.groupBy(*gcols, "__a2").agg(
-        F.sum("__c").cast("long").alias("__c")
-    )
-    mad = _med2(devc, "__a2").select(
-        *gcols, F.col("__m2").alias("__mad4")
-    )
-    # clip d2*k_den at +-k_num*mad4/2 -> compare 2*d2*k_den vs
-    # +-k_num*mad4 to stay integral
-    joined = dev.join(F.broadcast(mad), gcols)
-    bound = F.col("__mad4") * F.lit(int(k_num))
-    scaled = 2 * F.col("__d2") * F.lit(int(k_den))
-    clipped = F.greatest(-bound, F.least(bound, scaled))
-    agg = joined.groupBy(*gcols).agg(
-        F.sum(F.col("__c") * clipped).cast("long").alias("__cs")
-    )
-    out = med.join(agg, gcols) if gcols else med.crossJoin(agg)
-    scale = float(10 ** quantize)
-    nn = F.col("__ng").cast("double")
-    median = F.col("__med2").cast("double") / F.lit(2.0)
-    huber = median + F.col("__cs").cast("double") / (
-        F.lit(4.0) * nn * F.lit(float(k_den))
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return out.select(
-        *gcols,
-        F.col("__ng").alias("n_g"),
-        q6(median / F.lit(scale)).alias("median_q6"),
-        q6(huber / F.lit(scale)).alias("huber_q6"),
-    )
-
-
 def rmst(
     df: DataFrame,
     duration_col: str,
@@ -4443,144 +3451,6 @@ def rmst(
         F.lit(t).cast("long").alias("tau"),
         F.col("__t1").alias("t_first"),
         q6(F.col("__area")).alias("rmst_q6"),
-    )
-
-
-def slope_break(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    quantize: int = 2,
-    min_seg: int = 3,
-) -> DataFrame:
-    """Single slope-change breakpoint per group: fit TWO least-squares
-    lines around every candidate split and keep the split minimizing
-    total SSE — the TREND-break detector where [[changepoint_binseg]]
-    finds MEAN shifts (a metric that keeps rising but suddenly rises
-    slower has no mean shift at the break; it has a slope break).
-
-    Exact machinery: x is the in-group rank (integer), y is quantized
-    ([[_quant]]); one ordered window produces integer prefix sums
-    (Sx, Sy, Sxx, Syy, Sxy — DECIMAL(38,0) for the products), the
-    right-segment stats are total-minus-prefix, and each candidate's
-    two-segment SSE is ONE fixed-op-order float expression over ten
-    exact scalars. The argmin is a struct-min with the earliest-index
-    tie-break — deterministic under any partitioning. Plan: one group
-    exchange, two windows, one argmin aggregate; candidates live on
-    the group's own rows (no join, no explode). Returns (group..., n,
-    break_idx, slope_l_q6, slope_r_q6, sse_break_q2, sse_single_q2,
-    gain_q6 = 1 - sse_break/sse_single); null row fields when n <
-    2*min_seg or the single-line SSE is 0.
-    """
-    gcols = list(group_cols)
-    v = _quant(F.col(value_col), quantize)
-    dec = "decimal(38,0)"
-    base = (
-        df.select(*gcols, *order_cols, v.alias("__y"))
-        .filter(F.col("__y").isNotNull())
-        .withColumn(
-            "__x",
-            F.row_number().over(
-                Window.partitionBy(*gcols).orderBy(
-                    *[F.col(c) for c in order_cols]
-                )
-            ),
-        )
-        .drop(*order_cols)
-    )
-    run = Window.partitionBy(*gcols).orderBy("__x").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    full = Window.partitionBy(*gcols).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    xd = F.col("__x").cast(dec)
-    yd = F.col("__y").cast(dec)
-    pre = base.select(
-        *gcols,
-        "__x",
-        F.sum("__x").over(run).cast("long").alias("__sx"),
-        F.sum("__y").over(run).cast("long").alias("__sy"),
-        F.sum(xd * xd).over(run).alias("__sxx"),
-        F.sum(yd * yd).over(run).alias("__syy"),
-        F.sum(xd * yd).over(run).alias("__sxy"),
-        F.count("*").over(full).alias("__n"),
-        F.sum("__x").over(full).cast("long").alias("__tx"),
-        F.sum("__y").over(full).cast("long").alias("__ty"),
-        F.sum(xd * xd).over(full).alias("__txx"),
-        F.sum(yd * yd).over(full).alias("__tyy"),
-        F.sum(xd * yd).over(full).alias("__txy"),
-    )
-
-    def sse(n, sx, sy, sxx, syy, sxy):
-        nn = n.cast("double")
-        sxd, syd = sx.cast("double"), sy.cast("double")
-        sxxd = sxx.cast("double")
-        syyd = syy.cast("double")
-        sxyd = sxy.cast("double")
-        cxx = sxxd - sxd * sxd / nn
-        cxy = sxyd - sxd * syd / nn
-        cyy = syyd - syd * syd / nn
-        return (
-            F.when(cxx > 0, cyy - cxy * cxy / cxx).otherwise(cyy),
-            F.try_divide(cxy, cxx),
-        )
-
-    k = F.col("__x")
-    n_all = F.col("__n")
-    sse_l, slope_l = sse(
-        k, F.col("__sx"), F.col("__sy"), F.col("__sxx"),
-        F.col("__syy"), F.col("__sxy"),
-    )
-    sse_r, slope_r = sse(
-        n_all - k,
-        F.col("__tx") - F.col("__sx"),
-        F.col("__ty") - F.col("__sy"),
-        F.col("__txx") - F.col("__sxx"),
-        F.col("__tyy") - F.col("__syy"),
-        F.col("__txy") - F.col("__sxy"),
-    )
-    sse_1, _ = sse(
-        n_all, F.col("__tx"), F.col("__ty"), F.col("__txx"),
-        F.col("__tyy"), F.col("__txy"),
-    )
-    cand = pre.filter(
-        (k >= min_seg) & (k <= n_all - min_seg)
-    ).select(
-        *gcols,
-        F.col("__n"),
-        F.struct(
-            (sse_l + sse_r).alias("sse"),
-            k.alias("b"),
-            slope_l.alias("sl"),
-            slope_r.alias("sr"),
-        ).alias("__c"),
-        sse_1.alias("__sse1"),
-    )
-    best = cand.groupBy(*gcols).agg(
-        F.min("__c").alias("__b"),
-        F.max("__n").cast("long").alias("n"),
-        F.max("__sse1").alias("__s1"),
-    )
-    scale2 = float((10 ** quantize) ** 2)
-    scale = float(10 ** quantize)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    q2s = lambda c: F.floor(c / F.lit(scale2) * F.lit(100.0)) / F.lit(  # noqa: E731
-        100.0
-    )
-    return best.select(
-        *gcols,
-        "n",
-        F.col("__b.b").cast("long").alias("break_idx"),
-        q6(F.col("__b.sl") / F.lit(scale)).alias("slope_l_q6"),
-        q6(F.col("__b.sr") / F.lit(scale)).alias("slope_r_q6"),
-        q2s(F.col("__b.sse")).alias("sse_break_q2"),
-        q2s(F.col("__s1")).alias("sse_single_q2"),
-        F.when(
-            F.col("__s1") > 0,
-            q6(F.lit(1.0) - F.col("__b.sse") / F.col("__s1")),
-        ).alias("gain_q6"),
     )
 
 
@@ -4748,247 +3618,6 @@ def concordance_agreement(
     )
 
 
-def ljung_box(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    max_lag: int = 5,
-    quantize: int = 2,
-) -> DataFrame:
-    """Ljung-Box portmanteau test per group: are the first ``max_lag``
-    autocorrelations of the ordered series jointly zero? The
-    whiteness check behind every "is this metric drifting or just
-    noisy" question — [[autocorr]] reads one lag, this accumulates
-    Q = n(n+2) * sum_k r_k^2/(n-k) so a stack of small correlations
-    still registers.
-
-    Exactness: x is integer-quantized; for each lag the numerator
-    needs only BIGINT sums (sum x_t*x_{t-k}, head/tail sums, n_k), so
-    r_k is one fixed float expression and the cumulative Q is an
-    ordered sum over the tiny (group, lag) table — never over raw
-    rows. Plan: ONE ordered window producing all k lag columns, one
-    combinable aggregate per group, then a k-row window. Returns long
-    form (group..., lag, r_q6, q_stat_q6) with Q cumulative in lag.
-    """
-    gcols = list(group_cols)
-    x = _quant(F.col(value_col), quantize)
-    w = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    lagged = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        *[
-            F.lag(x, k).over(w).alias(f"__l{k}")
-            for k in range(1, max_lag + 1)
-        ],
-    )
-    aggs = [
-        F.count("*").cast("long").alias("n"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("__sxx"),
-    ]
-    for k in range(1, max_lag + 1):
-        lk = F.col(f"__l{k}")
-        aggs += [
-            F.sum(F.when(lk.isNotNull(), F.col("__x") * lk))
-            .cast("long")
-            .alias(f"__c{k}"),
-            F.sum(F.when(lk.isNotNull(), F.col("__x")))
-            .cast("long")
-            .alias(f"__h{k}"),
-            F.sum(lk).cast("long").alias(f"__t{k}"),
-        ]
-    g = lagged.groupBy(*gcols).agg(*aggs)
-    n = F.col("n").cast("double")
-    xbar = F.col("__sx").cast("double") / n
-    den = F.col("__sxx").cast("double") - n * xbar * xbar
-    pairs = []
-    for k in range(1, max_lag + 1):
-        num = (
-            F.col(f"__c{k}").cast("double")
-            - xbar
-            * (
-                F.col(f"__h{k}").cast("double")
-                + F.col(f"__t{k}").cast("double")
-            )
-            + (n - F.lit(float(k))) * xbar * xbar
-        )
-        pairs.append(
-            F.struct(
-                F.lit(k).alias("lag"), (num / den).alias("r")
-            )
-        )
-    long = g.select(
-        *gcols, "n", F.explode(F.array(*pairs)).alias("__kr")
-    ).select(
-        *gcols,
-        "n",
-        F.col("__kr.lag").alias("lag"),
-        F.col("__kr.r").alias("__r"),
-    )
-    wq = Window.partitionBy(*gcols).orderBy("lag").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    nn = F.col("n").cast("double")
-    term = (
-        F.col("__r")
-        * F.col("__r")
-        / (nn - F.col("lag").cast("double"))
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return long.select(
-        *gcols,
-        "n",
-        "lag",
-        q6(F.col("__r")).alias("r_q6"),
-        q6(nn * (nn + F.lit(2.0)) * F.sum(term).over(wq)).alias(
-            "q_stat_q6"
-        ),
-    )
-
-
-def kpss_level(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """KPSS level-stationarity statistic per group (short-run variance
-    form, lags=0): eta = sum_t S_t^2 / (n^2 * sigma^2) over the
-    partial sums S_t of the demeaned ordered series — the
-    null-reversed complement to a unit-root read: LARGE eta means the
-    series wanders (a random walk's partial sums grow), small eta
-    means level-stationary.
-
-    The float-order trap — summing S_t^2 over rows — is eliminated
-    algebraically: with cx_t the BIGINT prefix sum and t the row
-    index, sum S_t^2 = sum cx^2 - 2*(sx/n)*sum(cx*t) +
-    (sx/n)^2 * sum t^2, i.e. three more BIGINT aggregates and ONE
-    fixed float expression. Plan: one ordered window (prefix sum +
-    row index), one combinable aggregate. Returns
-    (group..., n, kpss_q6).
-    """
-    gcols = list(group_cols)
-    x = _quant(F.col(value_col), quantize)
-    w = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pre = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        F.sum(x).over(w).alias("__cx"),
-        F.row_number()
-        .over(
-            Window.partitionBy(*gcols).orderBy(
-                *[F.col(c) for c in order_cols]
-            )
-        )
-        .cast("long")
-        .alias("__t"),
-    )
-    # prefix-sum products overflow int64 once n * (n*x)^2 passes ~9e18
-    # (a few million rows per group at cent quantization), so the three
-    # window-product aggregates accumulate in DECIMAL(38,0) — exact
-    # integer arithmetic to 38 digits, matching DuckDB's HUGEINT sums
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    g = pre.groupBy(*gcols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("__sxx"),
-        F.sum(dec(F.col("__cx")) * dec(F.col("__cx"))).alias("__scx2"),
-        F.sum(dec(F.col("__cx")) * dec(F.col("__t"))).alias("__scxt"),
-        F.sum(dec(F.col("__t")) * dec(F.col("__t"))).alias("__st2"),
-    )
-    n = F.col("n").cast("double")
-    sx = F.col("__sx").cast("double")
-    xbar = sx / n
-    sum_s2 = (
-        F.col("__scx2").cast("double")
-        - F.lit(2.0) * xbar * F.col("__scxt").cast("double")
-        + xbar * xbar * F.col("__st2").cast("double")
-    )
-    sigma2 = (F.col("__sxx").cast("double") - sx * xbar) / n
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return g.select(
-        *gcols,
-        "n",
-        F.when(
-            sigma2 > 0, q6(sum_s2 / (n * n * sigma2))
-        ).alias("kpss_q6"),
-    )
-
-
-def variance_ratio(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    q: int = 5,
-    quantize: int = 2,
-) -> DataFrame:
-    """Lo-MacKinlay variance ratio per group: the variance of
-    overlapping q-step sums of the ordered series over q times the
-    one-step variance — VR ~ 1 for white noise, > 1 for trending /
-    positively autocorrelated series, < 1 for mean-reverting ones.
-    The random-walk diagnostic that reads the SAME wandering
-    [[kpss_level]] flags, but as a ratio with a direction.
-
-    Overlapping q-sums come off the BIGINT prefix sum (y_t = cx_t -
-    cx_{t-q}), so both variances are integer-moment expressions;
-    population variances, one fixed float emit. Plan: one ordered
-    window, one combinable aggregate. Returns
-    (group..., n, n_windows, vr_q6).
-    """
-    gcols = list(group_cols)
-    x = _quant(F.col(value_col), quantize)
-    ow = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    w = ow.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    pre = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        (F.sum(x).over(w) - F.coalesce(
-            F.lag(F.sum(x).over(w), q).over(ow), F.lit(0)
-        )).alias("__y"),
-        F.row_number().over(ow).cast("long").alias("__t"),
-    )
-    g = pre.groupBy(*gcols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum(F.col("__x") * F.col("__x")).cast("long").alias("__sxx"),
-        F.sum(F.when(F.col("__t") >= q, F.col("__y")))
-        .cast("long")
-        .alias("__sy"),
-        F.sum(
-            F.when(F.col("__t") >= q, F.col("__y") * F.col("__y"))
-        )
-        .cast("long")
-        .alias("__syy"),
-        F.sum(F.when(F.col("__t") >= q, 1).otherwise(0))
-        .cast("long")
-        .alias("n_windows"),
-    )
-    n = F.col("n").cast("double")
-    m = F.col("n_windows").cast("double")
-    sx = F.col("__sx").cast("double")
-    var1 = F.col("__sxx").cast("double") / n - (sx / n) * (sx / n)
-    sy = F.col("__sy").cast("double")
-    varq = F.col("__syy").cast("double") / m - (sy / m) * (sy / m)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return g.select(
-        *gcols,
-        "n",
-        "n_windows",
-        F.when(
-            var1 > 0, q6(varq / (F.lit(float(q)) * var1))
-        ).alias("vr_q6"),
-    )
-
-
 def inequality_indices(
     df: DataFrame,
     value_col: str,
@@ -5004,7 +3633,7 @@ def inequality_indices(
     quantization needs no descale.
 
     ln terms accumulate in FIXED value order via the stepped-window
-    discipline ([[conditional_entropy]]): per-group cumulative sums
+    discipline: per-group cumulative sums
     over the DISTINCT-value count table (bounded by the quantization
     grid, not row count), last row taken. Zero/negative values are
     excluded by definition on both engines. One (group, value) count
@@ -5058,206 +3687,6 @@ def inequality_indices(
         F.col("__n").alias("n"),
         q6(F.col("__th")).alias("theil_q6"),
         q6(atk).alias("atkinson_q6"),
-    )
-
-
-def srm_check(
-    df: DataFrame,
-    arm_col: str,
-    expected: dict,
-) -> DataFrame:
-    """Sample-ratio-mismatch check for an experiment assignment: chi2
-    goodness-of-fit of observed arm counts against the designed
-    allocation ``expected`` (arm -> integer weight, e.g. {"a": 1,
-    "b": 1} for 50/50). SRM is the first gate any A/B readout must
-    pass — a biased assignment invalidates [[cuped_adjust]] and
-    [[welch_t_test]] downstream no matter how clean the metric is.
-
-    Arms observed outside ``expected`` are counted in
-    ``n_unexpected`` (they're a bug, not a chi2 term). Expected
-    counts e_i = N * w_i / W are exact rationals; the chi2 sum runs
-    in fixed arm order over the k-row arm table (stepped window).
-    One arm-count aggregate. Returns one row
-    (n, k_arms, n_unexpected, chi2_q6).
-    """
-    obs = df.select(F.col(arm_col).cast("string").alias("arm")).groupBy(
-        "arm"
-    ).agg(F.count("*").cast("long").alias("__o"))
-    return srm_check_counts(obs, expected)
-
-
-def srm_check_counts(obs: DataFrame, expected: dict) -> DataFrame:
-    """[[srm_check]] on a PRE-COUNTED (arm, __o) table — the entry
-    point the streaming monitor's merged per-batch state uses (counts
-    are mergeable; the chi2 is not). Same contract and emit."""
-    spark = obs.sparkSession
-    exp_rows = sorted((str(a), int(w)) for a, w in expected.items())
-    wtot = sum(w for _, w in exp_rows)
-    edf = spark.createDataFrame(exp_rows, "arm string, w long")
-    joined = obs.join(F.broadcast(edf), "arm", "full_outer").select(
-        "arm",
-        F.coalesce(F.col("__o"), F.lit(0)).alias("__o"),
-        "w",
-    )
-    tot = joined.agg(
-        F.sum(F.when(F.col("w").isNotNull(), F.col("__o")))
-        .cast("long")
-        .alias("__nm"),
-        F.sum(F.when(F.col("w").isNull(), F.col("__o")))
-        .cast("long")
-        .alias("__nu"),
-    )
-    cells = joined.filter(F.col("w").isNotNull()).crossJoin(
-        F.broadcast(tot)
-    )
-    e = (
-        F.col("__nm").cast("double")
-        * F.col("w").cast("double")
-        / F.lit(float(wtot))
-    )
-    od = F.col("__o").cast("double")
-    term = (od - e) * (od - e) / e
-    ordw = Window.orderBy("arm").rowsBetween(Window.unboundedPreceding, 0)
-    wfull = Window.orderBy("arm").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = cells.select(
-        "__nm",
-        F.coalesce(F.col("__nu"), F.lit(0)).alias("__nu"),
-        F.sum(term).over(ordw).alias("__chi2"),
-        F.row_number().over(Window.orderBy("arm")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k"),
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return stepped.filter(F.col("__rn") == F.col("__k")).select(
-        F.col("__nm").alias("n"),
-        F.col("__k").cast("long").alias("k_arms"),
-        F.col("__nu").alias("n_unexpected"),
-        q6(F.col("__chi2")).alias("chi2_q6"),
-    )
-
-
-def forecast_accuracy(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    season: int = 7,
-    quantize: int = 0,
-) -> DataFrame:
-    """Forecast-accuracy battery per group against the SEASONAL-NAIVE
-    forecast f_t = x_{t-season}: MAE, RMSE, sMAPE, MAPE, MASE and the
-    tau=0.9 pinball loss — the standard scorecard for "is the fancy
-    forecast actually better than repeating last week", with MASE the
-    scale-free headline (MAE over the in-sample naive-1 MAE, Hyndman
-    & Koehler).
-
-    Exactness: x integer-quantized, so MAE/RMSE/MASE numerators and
-    the pinball sum (10*loss_t = 9d if d >= 0 else -d, an integer) are
-    BIGINT aggregates. Only sMAPE/MAPE have per-row float ratios —
-    those accumulate through the stepped ordered window, never a bare
-    float SUM. Plan: one ordered window (two lags + the stepped sums),
-    one aggregate per group. Returns (group..., n, n_eval, mae_q6,
-    rmse_q6, smape_q6, mape_q6, mase_q6, pinball90_q6); MASE null when
-    the series is constant in-sample.
-    """
-    gcols = list(group_cols)
-    x = _quant(F.col(value_col), quantize)
-    ow = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    pre = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        F.lag(x, season).over(ow).alias("__f"),
-        F.lag(x, 1).over(ow).alias("__p"),
-        *[F.col(c) for c in order_cols],
-    )
-    d = F.col("__x") - F.col("__f")
-    has_f = F.col("__f").isNotNull()
-    smape_term = F.when(
-        has_f & ((F.abs(F.col("__x")) + F.abs(F.col("__f"))) > 0),
-        F.lit(2.0)
-        * F.abs(d).cast("double")
-        / (F.abs(F.col("__x")) + F.abs(F.col("__f"))).cast("double"),
-    ).otherwise(F.lit(0.0))
-    mape_term = F.when(
-        has_f & (F.col("__x") != 0),
-        F.abs(d).cast("double") / F.abs(F.col("__x")).cast("double"),
-    ).otherwise(F.lit(0.0))
-    sw = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    ).rowsBetween(Window.unboundedPreceding, 0)
-    stepped = pre.select(
-        *gcols,
-        "__x",
-        "__f",
-        "__p",
-        F.sum(smape_term).over(sw).alias("__ss"),
-        F.sum(mape_term).over(sw).alias("__sm"),
-        F.row_number().over(ow).alias("__rn"),
-        F.count("*").over(Window.partitionBy(*gcols)).alias("__k"),
-    )
-    pin = F.when(
-        d >= 0, F.lit(9) * d
-    ).otherwise(-d)
-    agg = stepped.groupBy(*gcols).agg(
-        F.max("__k").cast("long").alias("n"),
-        F.sum(has_f.cast("long")).cast("long").alias("n_eval"),
-        F.sum(F.when(has_f, F.abs(d))).cast("long").alias("__sae"),
-        F.sum(F.when(has_f, d * d)).cast("long").alias("__sse"),
-        F.sum(F.when(has_f, pin)).cast("long").alias("__spin"),
-        F.sum(
-            F.when(F.col("__x") != 0, F.lit(1)).otherwise(0)
-            * has_f.cast("int")
-        )
-        .cast("long")
-        .alias("__n_mape"),
-        F.sum(
-            F.when(
-                F.col("__p").isNotNull(),
-                F.abs(F.col("__x") - F.col("__p")),
-            )
-        )
-        .cast("long")
-        .alias("__snv"),
-        F.sum(F.col("__p").isNotNull().cast("long"))
-        .cast("long")
-        .alias("__n_nv"),
-        F.max(F.when(F.col("__rn") == F.col("__k"), F.col("__ss"))).alias(
-            "__smape_sum"
-        ),
-        F.max(F.when(F.col("__rn") == F.col("__k"), F.col("__sm"))).alias(
-            "__mape_sum"
-        ),
-    )
-    m = F.col("n_eval").cast("double")
-    scale = float(10 ** quantize)
-    mae = F.col("__sae").cast("double") / m
-    nv_mae = F.col("__snv").cast("double") / F.col("__n_nv").cast(
-        "double"
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.filter(F.col("n_eval") > 0).select(
-        *gcols,
-        "n",
-        "n_eval",
-        q6(mae / F.lit(scale)).alias("mae_q6"),
-        q6(
-            F.sqrt(F.col("__sse").cast("double") / m) / F.lit(scale)
-        ).alias("rmse_q6"),
-        q6(F.col("__smape_sum") / m).alias("smape_q6"),
-        F.when(
-            F.col("__n_mape") > 0,
-            q6(F.col("__mape_sum") / F.col("__n_mape").cast("double")),
-        ).alias("mape_q6"),
-        F.when(
-            F.col("__snv") > 0, q6(mae / nv_mae)
-        ).alias("mase_q6"),
-        q6(
-            F.col("__spin").cast("double") / (F.lit(10.0) * m)
-            / F.lit(scale)
-        ).alias("pinball90_q6"),
     )
 
 
@@ -5364,1043 +3793,6 @@ def brunner_munzel(
     )
 
 
-def hurst_rs(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    block_sizes: tuple = (8, 16, 32, 64),
-    quantize: int = 2,
-) -> DataFrame:
-    """Hurst exponent via classic rescaled-range (R/S) analysis per
-    group: split the ordered series into complete blocks of each size
-    m, compute R/S (range of demeaned partial sums over the block
-    sd), and fit ln(mean R/S) ~ H ln(m) — H ~ 0.5 memoryless, > 0.5
-    long-range persistent (the "does today's burst predict next
-    week's" read that [[autocorr]]'s fixed lag can't see), < 0.5
-    anti-persistent.
-
-    Exactness: within a block the partial sums are BIGINT prefix
-    sums; S_j = cx_j - j*sx/m is ONE per-row float expression and
-    R = max S - min S is order-independent. Block means, the ln
-    points and the K-point OLS slope all accumulate through stepped
-    ordered windows (blocks by index, sizes by m) — no bare float
-    SUMs. Plan: one ordered window for rn, one per-(size, block)
-    window, two tiny stepped layers. Long output
-    (group..., block_m, n_blocks, rs_mean_q6, hurst_q6) with the
-    fitted H replicated per size row.
-    """
-    gcols = list(group_cols)
-    x = _quant(F.col(value_col), quantize)
-    ow = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    pre = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        (F.row_number().over(ow) - 1).cast("long").alias("__t"),
-    )
-    sizes = F.explode(
-        F.array(*[F.lit(int(m)) for m in block_sizes])
-    ).alias("__m")
-    pm = pre.select(*gcols, "__x", "__t", sizes)
-    pm = pm.select(
-        *gcols,
-        "__x",
-        "__m",
-        F.floor(F.col("__t") / F.col("__m")).cast("long").alias("__b"),
-        (F.col("__t") % F.col("__m") + 1).cast("long").alias("__j"),
-    )
-    bw = Window.partitionBy(*gcols, "__m", "__b")
-    cw = bw.orderBy("__j").rowsBetween(Window.unboundedPreceding, 0)
-    rows = pm.select(
-        *gcols,
-        "__m",
-        "__b",
-        "__j",
-        F.sum("__x").over(cw).alias("__cx"),
-        F.sum("__x").over(bw).cast("long").alias("__sx"),
-        F.sum(F.col("__x") * F.col("__x"))
-        .over(bw)
-        .cast("long")
-        .alias("__sxx"),
-        F.count("*").over(bw).alias("__cnt"),
-    ).filter(F.col("__cnt") == F.col("__m"))
-    md = F.col("__m").cast("double")
-    s_j = (
-        F.col("__cx").cast("double")
-        - F.col("__j").cast("double")
-        * F.col("__sx").cast("double")
-        / md
-    )
-    blocks = rows.groupBy(*gcols, "__m", "__b").agg(
-        F.max(s_j).alias("__smax"),
-        F.min(s_j).alias("__smin"),
-        F.max("__sx").alias("__bsx"),
-        F.max("__sxx").alias("__bsxx"),
-    )
-    md2 = F.col("__m").cast("double")
-    var = F.col("__bsxx").cast("double") / md2 - (
-        F.col("__bsx").cast("double") / md2
-    ) * (F.col("__bsx").cast("double") / md2)
-    rs = blocks.select(
-        *gcols,
-        "__m",
-        "__b",
-        F.when(
-            var > 0,
-            (F.col("__smax") - F.col("__smin")) / F.sqrt(var),
-        ).alias("__rs"),
-    ).filter(F.col("__rs").isNotNull())
-    sbw = Window.partitionBy(*gcols, "__m").orderBy("__b").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    sfull = Window.partitionBy(*gcols, "__m")
-    stepped = rs.select(
-        *gcols,
-        "__m",
-        F.sum("__rs").over(sbw).alias("__srs"),
-        F.row_number()
-        .over(Window.partitionBy(*gcols, "__m").orderBy("__b"))
-        .alias("__rn"),
-        F.count("*").over(sfull).alias("__nb"),
-    )
-    per_m = stepped.filter(F.col("__rn") == F.col("__nb")).select(
-        *gcols,
-        "__m",
-        F.col("__nb").cast("long").alias("n_blocks"),
-        (F.col("__srs") / F.col("__nb").cast("double")).alias(
-            "__rs_mean"
-        ),
-    )
-    lx = F.log(F.col("__m").cast("double"))
-    ly = F.log("__rs_mean")
-    mw = Window.partitionBy(*gcols).orderBy("__m").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    mfull = Window.partitionBy(*gcols)
-    fitted = per_m.select(
-        *gcols,
-        "__m",
-        "n_blocks",
-        "__rs_mean",
-        F.sum(lx).over(mw).alias("__sx2"),
-        F.sum(ly).over(mw).alias("__sy"),
-        F.sum(lx * ly).over(mw).alias("__sxy"),
-        F.sum(lx * lx).over(mw).alias("__sxx2"),
-        F.row_number()
-        .over(Window.partitionBy(*gcols).orderBy("__m"))
-        .alias("__rn"),
-        F.count("*").over(mfull).alias("__k"),
-    )
-    last = fitted.filter(F.col("__rn") == F.col("__k")).select(
-        *gcols,
-        F.col("__k").cast("double").alias("__kk"),
-        "__sx2",
-        "__sy",
-        "__sxy",
-        "__sxx2",
-    )
-    slope = (
-        F.col("__kk") * F.col("__sxy") - F.col("__sx2") * F.col("__sy")
-    ) / (
-        F.col("__kk") * F.col("__sxx2")
-        - F.col("__sx2") * F.col("__sx2")
-    )
-    hurst = last.select(
-        *gcols,
-        F.when(F.col("__kk") >= 2, slope).alias("__h"),
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    out = per_m.join(F.broadcast(hurst), gcols).select(
-        *gcols,
-        F.col("__m").alias("block_m"),
-        "n_blocks",
-        q6(F.col("__rs_mean")).alias("rs_mean_q6"),
-        q6(F.col("__h")).alias("hurst_q6"),
-    )
-    return out
-
-
-def kendalls_w(
-    df: DataFrame,
-    subject_col: str,
-    treatment_col: str,
-    value_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Kendall's coefficient of concordance W — the EFFECT SIZE for
-    [[friedman_test]]'s k-ranker agreement question: W = Q/(n(k-1))
-    with the tie-corrected Friedman Q, 0 = no agreement among the n
-    subjects' rankings of the k treatments, 1 = perfect unanimity.
-    Report W next to Q: a huge corpus makes any disagreement
-    "significant" while W says whether the rankers actually agree.
-
-    Derived from the emitted (already floor-quantized) Q in the SAME
-    two-step on both engines, so the division is cross-engine exact by
-    construction. Plan: [[friedman_test]] unchanged (subject-local
-    rank windows, two scalar aggregates). Returns one row
-    (n_subjects, k, q_q6, w_q6).
-    """
-    f = friedman_test(
-        df, subject_col, treatment_col, value_col, quantize
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return f.select(
-        "n_subjects",
-        "k",
-        "q_q6",
-        F.when(
-            F.col("q_q6").isNotNull() & (F.col("k") > 1),
-            q6(
-                F.col("q_q6")
-                / (
-                    F.col("n_subjects").cast("double")
-                    * (F.col("k") - 1).cast("double")
-                )
-            ),
-        ).alias("w_q6"),
-    )
-
-
-def grubbs_test(
-    df: DataFrame,
-    value_col: str,
-    group_cols: tuple = (),
-    quantize: int = 2,
-) -> DataFrame:
-    """Grubbs' maximum-studentized-deviate test per group: G =
-    max|x - mean| / sd, plus WHICH value produced it — the single-
-    outlier screen to run before trusting a group mean, sharper than
-    [[robust_outliers]]'s bulk MAD fence when you suspect exactly one
-    contaminated reading per shard.
-
-    Integer moments give mean/sd in one fixed expression;
-    |x - mean| is one per-row float and MAX over it is order-
-    independent, so no stepped window is needed. The deviate's VALUE
-    comes from the same max via a (deviation, value) struct with the
-    value as a deterministic tie-break. One combinable aggregate +
-    one max — two passes over the group. Returns
-    (group..., n, outlier_value_q, g_q6); null G when sd = 0.
-    """
-    gcols = list(group_cols)
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(*gcols, v.alias("__v")).filter(
-        F.col("__v").isNotNull()
-    )
-    mom = base.groupBy(*gcols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("__v").cast("long").alias("__s"),
-        F.sum(F.col("__v") * F.col("__v")).cast("long").alias("__ss"),
-    )
-    j = base.join(F.broadcast(mom), gcols) if gcols else base.crossJoin(
-        F.broadcast(mom)
-    )
-    n = F.col("n").cast("double")
-    mean = F.col("__s").cast("double") / n
-    var = (
-        F.col("__ss").cast("double")
-        - F.col("__s").cast("double") * mean
-    ) / (n - F.lit(1.0))
-    dev = F.abs(F.col("__v").cast("double") - mean)
-    picked = j.groupBy(*gcols).agg(
-        F.max(
-            F.struct(
-                dev.alias("d"), F.col("__v").alias("v")
-            )
-        ).alias("__best"),
-        F.max("n").alias("n"),
-        F.max(var).alias("__var"),
-    )
-    scale = float(10 ** quantize)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return picked.select(
-        *gcols,
-        "n",
-        (
-            F.col("__best.v").cast("double") / F.lit(scale)
-        ).alias("outlier_value_q"),
-        F.when(
-            F.col("__var") > 0,
-            q6(F.col("__best.d") / F.sqrt(F.col("__var"))),
-        ).alias("g_q6"),
-    )
-
-
-def effect_sizes(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Standardized two-group effect sizes: Cohen's d (pooled sd),
-    Hedges' g (small-sample bias correction) and Glass's delta
-    (control-group sd — use when B is the untreated baseline whose
-    spread you trust). The magnitude companion to [[welch_t_test]]'s
-    significance: at corpus scale everything is significant, d says
-    whether anyone should care.
-
-    Integer moments per group (one combinable aggregate); each
-    estimate is one fixed float expression. Scale-invariant, so no
-    descale. Returns one row (n_a, n_b, mean_diff_q, d_q6, g_q6,
-    glass_q6); nulls when the relevant sd is 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    g = F.col(group_col)
-    base = df.filter(g.isin([group_a, group_b])).select(
-        v.alias("__v"),
-        F.when(g == group_a, 1).otherwise(0).alias("__s"),
-    ).filter(F.col("__v").isNotNull())
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = base.agg(
-        F.sum("__s").cast("long").alias("n_a"),
-        F.sum(1 - F.col("__s")).cast("long").alias("n_b"),
-        F.sum(F.col("__s") * F.col("__v")).cast("long").alias("__sa"),
-        F.sum((1 - F.col("__s")) * F.col("__v"))
-        .cast("long")
-        .alias("__sb"),
-        F.sum(dec(F.col("__s") * F.col("__v")) * dec(F.col("__v"))).alias(
-            "__ssa"
-        ),
-        F.sum(
-            dec((1 - F.col("__s")) * F.col("__v")) * dec(F.col("__v"))
-        ).alias("__ssb"),
-    )
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    ma = F.col("__sa").cast("double") / na
-    mb = F.col("__sb").cast("double") / nb
-    va = (
-        F.col("__ssa").cast("double")
-        - F.col("__sa").cast("double") * ma
-    ) / (na - F.lit(1.0))
-    vb = (
-        F.col("__ssb").cast("double")
-        - F.col("__sb").cast("double") * mb
-    ) / (nb - F.lit(1.0))
-    sp2 = ((na - F.lit(1.0)) * va + (nb - F.lit(1.0)) * vb) / (
-        na + nb - F.lit(2.0)
-    )
-    d = (ma - mb) / F.sqrt(sp2)
-    corr = F.lit(1.0) - F.lit(3.0) / (
-        F.lit(4.0) * (na + nb) - F.lit(9.0)
-    )
-    scale = float(10 ** quantize)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "n_a",
-        "n_b",
-        q6((ma - mb) / F.lit(scale)).alias("mean_diff_q"),
-        F.when(sp2 > 0, q6(d)).alias("d_q6"),
-        F.when(sp2 > 0, q6(d * corr)).alias("g_q6"),
-        F.when(
-            vb > 0, q6((ma - mb) / F.sqrt(vb))
-        ).alias("glass_q6"),
-    )
-
-
-def partial_corr(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-    z_col: str,
-    group_cols: tuple = (),
-    quantize: int = 2,
-) -> DataFrame:
-    """First-order partial correlation r_xy.z — the x-y association
-    with the confounder z regressed out of both sides:
-    (r_xy - r_xz r_yz) / sqrt((1 - r_xz^2)(1 - r_yz^2)). The
-    "does the relationship survive controlling for the obvious
-    driver" answer a raw [[spearman_corr]]/Pearson can't give.
-
-    One combinable aggregate per group carries all nine integer
-    moments (sums, squares, three cross-products in DECIMAL(38,0));
-    the three Pearson r's and the partial are fixed float
-    expressions. Returns (group..., n, r_xy_q6, r_xz_q6, r_yz_q6,
-    partial_q6); null when any marginal r is degenerate (zero
-    variance or |r| = 1 in a control).
-    """
-    gcols = list(group_cols)
-    qx = _quant(F.col(x_col), quantize)
-    qy = _quant(F.col(y_col), quantize)
-    qz = _quant(F.col(z_col), quantize)
-    base = df.select(
-        *gcols, qx.alias("__x"), qy.alias("__y"), qz.alias("__z")
-    ).filter(
-        F.col("__x").isNotNull()
-        & F.col("__y").isNotNull()
-        & F.col("__z").isNotNull()
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    agg = base.groupBy(*gcols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("__x").cast("long").alias("__sx"),
-        F.sum("__y").cast("long").alias("__sy"),
-        F.sum("__z").cast("long").alias("__sz"),
-        F.sum(dec(F.col("__x")) * dec(F.col("__x"))).alias("__sxx"),
-        F.sum(dec(F.col("__y")) * dec(F.col("__y"))).alias("__syy"),
-        F.sum(dec(F.col("__z")) * dec(F.col("__z"))).alias("__szz"),
-        F.sum(dec(F.col("__x")) * dec(F.col("__y"))).alias("__sxy"),
-        F.sum(dec(F.col("__x")) * dec(F.col("__z"))).alias("__sxz"),
-        F.sum(dec(F.col("__y")) * dec(F.col("__z"))).alias("__syz"),
-    )
-    n = F.col("n").cast("double")
-
-    def cmom(spq, sp, sq):
-        return F.col(spq).cast("double") - F.col(sp).cast(
-            "double"
-        ) * F.col(sq).cast("double") / n
-
-    cxx = cmom("__sxx", "__sx", "__sx")
-    cyy = cmom("__syy", "__sy", "__sy")
-    czz = cmom("__szz", "__sz", "__sz")
-    cxy = cmom("__sxy", "__sx", "__sy")
-    cxz = cmom("__sxz", "__sx", "__sz")
-    cyz = cmom("__syz", "__sy", "__sz")
-    rxy = cxy / F.sqrt(cxx * cyy)
-    rxz = cxz / F.sqrt(cxx * czz)
-    ryz = cyz / F.sqrt(cyy * czz)
-    den = F.sqrt(
-        (F.lit(1.0) - rxz * rxz) * (F.lit(1.0) - ryz * ryz)
-    )
-    part = (rxy - rxz * ryz) / den
-    ok = (cxx > 0) & (cyy > 0) & (czz > 0)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        *gcols,
-        "n",
-        F.when(ok, q6(rxy)).alias("r_xy_q6"),
-        F.when(ok, q6(rxz)).alias("r_xz_q6"),
-        F.when(ok, q6(ryz)).alias("r_yz_q6"),
-        F.when(ok & (den > 0), q6(part)).alias("partial_q6"),
-    )
-
-
-def gini_gain(
-    df: DataFrame,
-    feature_col: str,
-    label_col: str,
-) -> DataFrame:
-    """Decision-stump split score: Gini impurity of the label, the
-    feature-weighted impurity after splitting on ``feature_col``, and
-    the gain — the CART answer to "which metadata column best
-    predicts the label", the no-logarithm companion to
-    [[conditional_entropy]]'s information gain (every quantity here
-    is an exact RATIONAL from contingency counts — no transcendental,
-    no stepped window needed).
-
-    G_parent = 1 - sum_y (n_y/N)^2; G_split = sum_f (n_f/N) G_f.
-    Multiplying through: the weighted-child term is
-    sum_f (sum_y c_fy^2) / n_f scaled by 1/N — per-feature integer
-    ratios folded in fixed feature order (values are rationals, but
-    the fold is over the tiny feature table). One (feature, label)
-    count shuffle. Returns one row (n, k_features, k_labels,
-    gini_parent_q6, gini_split_q6, gain_q6).
-    """
-    base = df.select(
-        F.col(feature_col).alias("__f"), F.col(label_col).alias("__y")
-    ).filter(F.col("__f").isNotNull() & F.col("__y").isNotNull())
-    fy = base.groupBy("__f", "__y").agg(
-        F.count("*").cast("long").alias("__c")
-    )
-    per_f = fy.groupBy("__f").agg(
-        F.sum("__c").cast("long").alias("__nf"),
-        F.sum(F.col("__c") * F.col("__c")).cast("long").alias("__cf2"),
-    )
-    per_y = fy.groupBy("__y").agg(
-        F.sum("__c").cast("long").alias("__ny")
-    )
-    tot = fy.agg(F.sum("__c").cast("long").alias("__n"))
-    ys = per_y.crossJoin(F.broadcast(tot)).agg(
-        F.count("*").cast("long").alias("k_labels"),
-        F.sum(F.col("__ny") * F.col("__ny")).cast("long").alias("__sy2"),
-        F.max("__n").alias("__n"),
-    )
-    # per-feature child term: cf2/nf, folded in fixed feature order
-    ordw = Window.orderBy("__f").rowsBetween(Window.unboundedPreceding, 0)
-    stepped = per_f.select(
-        "__f",
-        F.sum(
-            F.col("__cf2").cast("double") / F.col("__nf").cast("double")
-        )
-        .over(ordw)
-        .alias("__sc"),
-        F.row_number().over(Window.orderBy("__f")).alias("__rn"),
-        F.count("*")
-        .over(
-            Window.orderBy("__f").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("__k"),
-    )
-    fsum = stepped.filter(F.col("__rn") == F.col("__k")).select(
-        F.col("__k").cast("long").alias("k_features"),
-        F.col("__sc").alias("__sc"),
-    )
-    j = ys.crossJoin(F.broadcast(fsum))
-    n = F.col("__n").cast("double")
-    g_parent = F.lit(1.0) - F.col("__sy2").cast("double") / (n * n)
-    g_split = F.lit(1.0) - F.col("__sc") / n
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return j.select(
-        F.col("__n").alias("n"),
-        "k_features",
-        "k_labels",
-        q6(g_parent).alias("gini_parent_q6"),
-        q6(g_split).alias("gini_split_q6"),
-        q6(g_parent - g_split).alias("gain_q6"),
-    )
-
-
-def risk_ratios(
-    df: DataFrame,
-    exposure_col: str,
-    outcome_col: str,
-) -> DataFrame:
-    """2x2 relative risk + odds ratio with 95% log-scale CIs (Katz /
-    Woolf) — the per-stratum read [[mantel_haenszel]] pools: "how
-    much more likely is the outcome under exposure", with the error
-    bars that make a 1.2x on thin cells honestly different from a
-    1.2x on millions. Cells a/b/c/d are one combinable aggregate;
-    estimates and CI bounds are fixed float expressions over the four
-    BIGINTs. Any empty cell -> null estimates (no continuity fudge —
-    callers who want Haldane add 0.5 upstream, identically on both
-    engines). Returns one row
-    (a, b, c, d, rr_q6, rr_lo_q6, rr_hi_q6, or_q6, or_lo_q6,
-    or_hi_q6).
-    """
-    e = F.col(exposure_col).cast("boolean")
-    o = F.col(outcome_col).cast("boolean")
-    agg = df.filter(e.isNotNull() & o.isNotNull()).agg(
-        F.sum((e & o).cast("long")).cast("long").alias("a"),
-        F.sum((e & ~o).cast("long")).cast("long").alias("b"),
-        F.sum((~e & o).cast("long")).cast("long").alias("c"),
-        F.sum((~e & ~o).cast("long")).cast("long").alias("d"),
-    )
-    a = F.col("a").cast("double")
-    b = F.col("b").cast("double")
-    c = F.col("c").cast("double")
-    d = F.col("d").cast("double")
-    rr = (a / (a + b)) / (c / (c + d))
-    se_rr = F.sqrt(
-        F.lit(1.0) / a
-        - F.lit(1.0) / (a + b)
-        + F.lit(1.0) / c
-        - F.lit(1.0) / (c + d)
-    )
-    orr = a * d / (b * c)
-    se_or = F.sqrt(
-        F.lit(1.0) / a
-        + F.lit(1.0) / b
-        + F.lit(1.0) / c
-        + F.lit(1.0) / d
-    )
-    ok = (
-        (F.col("a") > 0)
-        & (F.col("b") > 0)
-        & (F.col("c") > 0)
-        & (F.col("d") > 0)
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "a",
-        "b",
-        "c",
-        "d",
-        F.when(ok, q6(rr)).alias("rr_q6"),
-        F.when(
-            ok, q6(F.exp(F.log(rr) - F.lit(1.96) * se_rr))
-        ).alias("rr_lo_q6"),
-        F.when(
-            ok, q6(F.exp(F.log(rr) + F.lit(1.96) * se_rr))
-        ).alias("rr_hi_q6"),
-        F.when(ok, q6(orr)).alias("or_q6"),
-        F.when(
-            ok, q6(F.exp(F.log(orr) - F.lit(1.96) * se_or))
-        ).alias("or_lo_q6"),
-        F.when(
-            ok, q6(F.exp(F.log(orr) + F.lit(1.96) * se_or))
-        ).alias("or_hi_q6"),
-    )
-
-
-def quade_test(
-    df: DataFrame,
-    subject_col: str,
-    treatment_col: str,
-    value_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Quade test — [[friedman_test]]'s range-weighted sibling: blocks
-    with a BIGGER spread get more say (block weight = rank of the
-    block's range), which buys real power at small k where Friedman
-    flattens every block to equal votes. Same complete-block design.
-
-    EXACT via double doubling: within-block doubled midranks r2 and
-    doubled block-range midranks Q2 make S4 = Q2*(r2 - (k+1)) an
-    integer (= 4S); A16 = sum S4^2 and the treatment sums T are
-    BIGINTs, and the 16s cancel in
-    F = (b-1) * (sum T^2 / b) / (A16 - sum T^2 / b). Plan: block-local
-    rank windows, one window over the b-row block table, two scalar
-    aggregates. Returns one row (n_blocks, k, f_q6); null when the
-    denominator degenerates (all blocks internally tied).
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        F.col(subject_col).alias("__subj"),
-        F.col(treatment_col).alias("__trt"),
-        v.alias("__v"),
-    ).filter(F.col("__v").isNotNull())
-    w = Window.partitionBy("__subj").orderBy("__v")
-    wt = Window.partitionBy("__subj", "__v")
-    ranked = base.select(
-        "__subj",
-        "__trt",
-        (2 * F.rank().over(w) + F.count("*").over(wt) - 1)
-        .cast("long")
-        .alias("__r2"),
-    )
-    rng = base.groupBy("__subj").agg(
-        (F.max("__v") - F.min("__v")).cast("long").alias("__range")
-    )
-    wr = Window.orderBy("__range")
-    wrt = Window.partitionBy("__range")
-    q2 = rng.select(
-        "__subj",
-        (2 * F.rank().over(wr) + F.count("*").over(wrt) - 1)
-        .cast("long")
-        .alias("__q2"),
-    )
-    scal = ranked.agg(
-        F.countDistinct("__subj").cast("long").alias("n_blocks"),
-        F.countDistinct("__trt").cast("long").alias("k"),
-    )
-    s4 = (
-        ranked.join(q2, "__subj")
-        .crossJoin(F.broadcast(scal))
-        .select(
-            "__trt",
-            "n_blocks",
-            "k",
-            (
-                F.col("__q2")
-                * (F.col("__r2") - (F.col("k") + 1))
-            ).alias("__s4"),
-        )
-    )
-    per_trt = s4.groupBy("__trt").agg(
-        F.sum("__s4").cast("long").alias("__t"),
-        F.sum(F.col("__s4") * F.col("__s4")).cast("long").alias("__a"),
-        F.max("n_blocks").alias("n_blocks"),
-        F.max("k").alias("k"),
-    )
-    fin = per_trt.agg(
-        F.sum(F.col("__t") * F.col("__t")).cast("long").alias("__st2"),
-        F.sum("__a").cast("long").alias("__a16"),
-        F.max("n_blocks").alias("n_blocks"),
-        F.max("k").alias("k"),
-    )
-    b = F.col("n_blocks").cast("double")
-    bterm = F.col("__st2").cast("double") / b
-    fstat = (
-        (b - F.lit(1.0))
-        * bterm
-        / (F.col("__a16").cast("double") - bterm)
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return fin.select(
-        "n_blocks",
-        "k",
-        F.when(
-            F.col("__a16").cast("double") > bterm, q6(fstat)
-        ).alias("f_q6"),
-    )
-
-
-def seasonal_decompose(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    period: int = 7,
-    quantize: int = 0,
-) -> DataFrame:
-    """Classical additive seasonal decomposition per group (the
-    moving-average method, the deterministic core of STL without the
-    loess): trend = centered period-MA, seasonal = centered per-phase
-    mean of the detrended series, remainder = the rest — plus the
-    Hyndman trend/seasonal STRENGTH statistics
-    (F = max(0, 1 - Var(R)/Var(component + R))), the two numbers
-    that say whether [[forecast_accuracy]]'s seasonal-naive is even
-    the right baseline.
-
-    Period must be ODD (centered window without the half-weights).
-    Phase is POSITIONAL ((t-1) mod period) so both engines agree
-    without calendar semantics. Exactness: the trend is an integer
-    window sum over period rows divided once; every cross-row float
-    reduction (phase means, the three variances) folds through
-    stepped ordered windows. Plan: one ordered window for t, one
-    centered window, two stepped layers, small join-backs. Returns
-    (group..., phase, n_days, seasonal_q6, f_trend_q6,
-    f_seasonal_q6) — strengths replicated per phase row.
-    """
-    if period % 2 == 0:
-        raise ValueError("period must be odd for the centered MA")
-    gcols = list(group_cols)
-    half = period // 2
-    x = _quant(F.col(value_col), quantize)
-    ow = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    pre = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        x.alias("__x"),
-        F.row_number().over(ow).cast("long").alias("__t"),
-    )
-    cw = Window.partitionBy(*gcols).orderBy("__t").rowsBetween(
-        -half, half
-    )
-    rows = pre.select(
-        *gcols,
-        "__x",
-        "__t",
-        ((F.col("__t") - 1) % period).cast("int").alias("__ph"),
-        F.when(
-            F.count("*").over(cw) == period,
-            F.sum("__x").over(cw).cast("double") / F.lit(float(period)),
-        ).alias("__trend"),
-    ).withColumn(
-        "__d", F.col("__x").cast("double") - F.col("__trend")
-    )
-    comp = rows.filter(F.col("__d").isNotNull())
-    pw = Window.partitionBy(*gcols, "__ph").orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    pfull = Window.partitionBy(*gcols, "__ph")
-    ph_step = comp.select(
-        *gcols,
-        "__ph",
-        F.sum("__d").over(pw).alias("__sd"),
-        F.row_number()
-        .over(Window.partitionBy(*gcols, "__ph").orderBy("__t"))
-        .alias("__rn"),
-        F.count("*").over(pfull).alias("__np"),
-    )
-    s_raw = ph_step.filter(F.col("__rn") == F.col("__np")).select(
-        *gcols,
-        "__ph",
-        (F.col("__sd") / F.col("__np").cast("double")).alias("__sraw"),
-    )
-    sw = Window.partitionBy(*gcols).orderBy("__ph").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    sfull = Window.partitionBy(*gcols)
-    s_step = s_raw.select(
-        *gcols,
-        "__ph",
-        "__sraw",
-        F.sum("__sraw").over(sw).alias("__cs"),
-        F.row_number()
-        .over(Window.partitionBy(*gcols).orderBy("__ph"))
-        .alias("__rn"),
-        F.count("*").over(sfull).alias("__k"),
-    )
-    s_mean = s_step.filter(F.col("__rn") == F.col("__k")).select(
-        *gcols,
-        (F.col("__cs") / F.col("__k").cast("double")).alias("__smean"),
-    )
-    seasonal = s_raw.join(F.broadcast(s_mean), gcols).select(
-        *gcols,
-        "__ph",
-        (F.col("__sraw") - F.col("__smean")).alias("__s"),
-    )
-    joined = comp.join(seasonal, gcols + ["__ph"]).select(
-        *gcols,
-        "__t",
-        "__ph",
-        "__d",
-        (F.col("__d") - F.col("__s")).alias("__r"),
-        (F.col("__x").cast("double") - F.col("__s")).alias("__xs"),
-    )
-    tw = Window.partitionBy(*gcols).orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    tfull = Window.partitionBy(*gcols)
-    var_step = joined.select(
-        *gcols,
-        F.sum("__d").over(tw).alias("__s_d"),
-        F.sum(F.col("__d") * F.col("__d")).over(tw).alias("__s_d2"),
-        F.sum("__r").over(tw).alias("__s_r"),
-        F.sum(F.col("__r") * F.col("__r")).over(tw).alias("__s_r2"),
-        F.sum("__xs").over(tw).alias("__s_xs"),
-        F.sum(F.col("__xs") * F.col("__xs")).over(tw).alias("__s_xs2"),
-        F.row_number()
-        .over(Window.partitionBy(*gcols).orderBy("__t"))
-        .alias("__rn"),
-        F.count("*").over(tfull).alias("__n"),
-    )
-    last = var_step.filter(F.col("__rn") == F.col("__n"))
-    n = F.col("__n").cast("double")
-
-    def _var(s2, s1):
-        return F.col(s2) / n - (F.col(s1) / n) * (F.col(s1) / n)
-
-    var_d = _var("__s_d2", "__s_d")
-    var_r = _var("__s_r2", "__s_r")
-    var_xs = _var("__s_xs2", "__s_xs")
-    f_seas = F.greatest(
-        F.lit(0.0), F.lit(1.0) - var_r / var_d
-    )
-    f_trend = F.greatest(
-        F.lit(0.0), F.lit(1.0) - var_r / var_xs
-    )
-    strengths = last.select(
-        *gcols,
-        F.col("__n").cast("long").alias("n_days"),
-        F.when(var_d > 0, f_seas).alias("__fs"),
-        F.when(var_xs > 0, f_trend).alias("__ft"),
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return seasonal.join(F.broadcast(strengths), gcols).select(
-        *gcols,
-        F.col("__ph").alias("phase"),
-        "n_days",
-        q6(F.col("__s")).alias("seasonal_q6"),
-        F.when(
-            F.col("__ft").isNotNull(), q6(F.col("__ft"))
-        ).alias("f_trend_q6"),
-        F.when(
-            F.col("__fs").isNotNull(), q6(F.col("__fs"))
-        ).alias("f_seasonal_q6"),
-    )
-
-
-def ansari_bradley(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Ansari-Bradley two-sample SCALE test: are the two groups
-    equally spread around a common center? Scores walk in from both
-    ends (1, 2, ..., peak, ..., 2, 1), so a group hugging the middle
-    scores high — the rank-based dispersion companion to
-    [[levene_bf]] that needs no variance estimates at all.
-
-    Tie handling matches R's ``ansari.test``: tied observations share
-    the AVERAGE of their positions' scores. Everything reduces to the
-    distinct-value count table: a tie block occupies positions
-    (lo, lo+c], and the block's SCORE SUM has a closed integer form
-    (split the range at floor((N+1)/2); both halves are arithmetic
-    series), so AB, its tie-corrected null mean E = n_a*S1/N and
-    variance Var = n_a*n_b*(N*S2 - S1^2)/(N^2 (N-1)) (S2 = sum of
-    block_sum^2/c) fold over the distinct-value table in fixed value
-    order. Block score sums are exact DECIMAL(38,0) integers at any
-    N (the /2 lands on the even factor before the product; positions
-    scale with ROW count, so long-float division would break past
-    ~6.7e8 pooled rows). Plan: [[mann_whitney_u]]'s shape — one value-count
-    shuffle, one distinct-value window, one scalar aggregate.
-    Returns one row (n_a, n_b, ab_q6, z_q6); z null when Var = 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    g = F.col(group_col)
-    pooled = df.filter(g.isin([group_a, group_b])).select(
-        v.alias("v"),
-        F.when(g == group_a, F.lit(1)).otherwise(F.lit(0)).alias("s"),
-    )
-    cnt = pooled.groupBy("v").agg(
-        F.sum("s").cast("long").alias("ca"),
-        F.sum(1 - F.col("s")).cast("long").alias("cb"),
-    )
-    below = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    full = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cnt.select(
-        "ca",
-        "cb",
-        F.coalesce(
-            F.sum(F.col("ca") + F.col("cb")).over(below), F.lit(0)
-        ).alias("lo"),
-        F.sum(F.col("ca") + F.col("cb")).over(full).alias("nn"),
-        F.col("v"),
-    )
-    c = F.col("ca") + F.col("cb")
-    a = F.col("lo") + 1
-    b = F.col("lo") + c
-    m = F.col("nn") + 1
-    h = F.floor(m / 2).cast("long")
-
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    zero_d = F.lit(0).cast("decimal(38,0)")
-
-    def _ser(x, y):
-        # sum of integers in [x, y], 0 when empty. Exact at corpus
-        # scale (ADVICE r4): the count (y-x+1) and the end-sum (x+y)
-        # have opposite parity, so the /2 lands on whichever factor
-        # is even as LONG integer division (both factors are < 2^53,
-        # only their product overflows), then the product folds in
-        # DECIMAL(38,0) — no float division anywhere.
-        n_t = y - x + 1
-        s = x + y
-        half = F.when(
-            n_t % 2 == 0,
-            dec(F.floor(n_t / F.lit(2)).cast("long")) * dec(s),
-        ).otherwise(
-            dec(n_t) * dec(F.floor(s / F.lit(2)).cast("long"))
-        )
-        return F.when(y >= x, half).otherwise(zero_d)
-
-    up_hi = F.least(b, h)
-    dn_lo = F.greatest(a, h + 1)
-    # positions <= h contribute p; positions > h contribute m - p
-    block_sum = (
-        _ser(a, up_hi)
-        + F.when(
-            b >= dn_lo,
-            dec(b - dn_lo + 1) * dec(m) - _ser(dn_lo, b),
-        ).otherwise(zero_d)
-    ).cast("decimal(38,0)")
-    cells = cum.select(
-        "ca",
-        "cb",
-        "v",
-        c.alias("c"),
-        F.col("nn").alias("nn"),
-        block_sum.alias("bs"),
-    )
-    ordw = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wfullv = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ab_term = (
-        F.col("ca").cast("double")
-        * F.col("bs").cast("double")
-        / F.col("c").cast("double")
-    )
-    s2_term = (
-        F.col("bs").cast("double")
-        * F.col("bs").cast("double")
-        / F.col("c").cast("double")
-    )
-    stepped = cells.select(
-        "nn",
-        F.sum("ca").over(wfullv).cast("long").alias("n_a"),
-        F.sum("cb").over(wfullv).cast("long").alias("n_b"),
-        F.sum("bs").over(wfullv).cast("decimal(38,0)").alias("s1"),
-        F.sum(ab_term).over(ordw).alias("ab"),
-        F.sum(s2_term).over(ordw).alias("s2"),
-        F.row_number().over(Window.orderBy("v")).alias("rn"),
-        F.count("*").over(wfullv).alias("k"),
-    )
-    last = stepped.filter(F.col("rn") == F.col("k"))
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    nd = F.col("nn").cast("double")
-    s1 = F.col("s1").cast("double")
-    e = na * s1 / nd
-    var = (
-        na
-        * nb
-        * (nd * F.col("s2") - s1 * s1)
-        / (nd * nd * (nd - F.lit(1.0)))
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return last.select(
-        "n_a",
-        "n_b",
-        q6(F.col("ab")).alias("ab_q6"),
-        F.when(
-            var > 0, q6((F.col("ab") - e) / F.sqrt(var))
-        ).alias("z_q6"),
-    )
-
-
-def gwet_ac1(
-    df: DataFrame,
-    r1_col: str,
-    r2_col: str,
-) -> DataFrame:
-    """Gwet's AC1 chance-corrected agreement between two categorical
-    raters — the [[cohen_kappa]] alternative that does NOT collapse
-    when one label dominates (the kappa prevalence paradox): chance
-    agreement is modeled from the MEAN marginals, pe = sum_q
-    pi_q(1 - pi_q)/(Q-1), so a 95%-'en' corpus can still score high
-    agreement. Report AC1 next to kappa; a big gap between them IS
-    the prevalence warning.
-
-    po and the marginals are exact rationals from label counts; pe
-    folds over the (tiny) label table in fixed label order; AC1 is
-    one final expression. Plan: one pair-count shuffle + two label
-    rollups. Returns one row (n, q_labels, po_q6, pe_q6, ac1_q6);
-    AC1 null when pe = 1 (degenerate single label).
-    """
-    pairs = df.select(
-        F.col(r1_col).cast("string").alias("__a"),
-        F.col(r2_col).cast("string").alias("__b"),
-    ).filter(F.col("__a").isNotNull() & F.col("__b").isNotNull())
-    tot = pairs.agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum((F.col("__a") == F.col("__b")).cast("long"))
-        .cast("long")
-        .alias("__agree"),
-    )
-    m1 = pairs.groupBy(F.col("__a").alias("__q")).agg(
-        F.count("*").cast("long").alias("__c1")
-    )
-    m2 = pairs.groupBy(F.col("__b").alias("__q")).agg(
-        F.count("*").cast("long").alias("__c2")
-    )
-    marg = (
-        m1.join(m2, "__q", "full_outer")
-        .select(
-            "__q",
-            (
-                F.coalesce(F.col("__c1"), F.lit(0))
-                + F.coalesce(F.col("__c2"), F.lit(0))
-            )
-            .cast("long")
-            .alias("__m"),
-        )
-        .crossJoin(F.broadcast(tot))
-    )
-    n = F.col("__n").cast("double")
-    pi = F.col("__m").cast("double") / (F.lit(2.0) * n)
-    term = pi * (F.lit(1.0) - pi)
-    ordw = Window.orderBy("__q").rowsBetween(Window.unboundedPreceding, 0)
-    wfull = Window.orderBy("__q").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = marg.select(
-        "__n",
-        "__agree",
-        F.sum(term).over(ordw).alias("__pt"),
-        F.row_number().over(Window.orderBy("__q")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k"),
-    )
-    last = stepped.filter(F.col("__rn") == F.col("__k"))
-    po = F.col("__agree").cast("double") / n
-    pe = F.col("__pt") / (F.col("__k").cast("double") - F.lit(1.0))
-    ac1 = (po - pe) / (F.lit(1.0) - pe)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return last.select(
-        F.col("__n").alias("n"),
-        F.col("__k").cast("long").alias("q_labels"),
-        q6(po).alias("po_q6"),
-        F.when(F.col("__k") > 1, q6(pe)).alias("pe_q6"),
-        F.when(
-            (F.col("__k") > 1) & (pe < 1.0), q6(ac1)
-        ).alias("ac1_q6"),
-    )
-
-
 def cucconi_test(
     df: DataFrame,
     value_col: str,
@@ -6415,7 +3807,7 @@ def cucconi_test(
     squared CONTRA-ranks, and C = (U^2 + V^2 - 2 rho U V)/(2(1 -
     rho^2)) rejects when either the center or the spread moved — the
     single-number screen before deciding between [[mann_whitney_u]]
-    (location) and [[ansari_bradley]] (scale).
+    (location) and a scale test.
 
     Doubled midranks off the distinct-value count table make
     sum S^2 = sum D^2/4 and sum (N+1-S)^2 = sum (2(N+1)-D)^2/4
@@ -6491,248 +3883,6 @@ def cucconi_test(
         q6(u).alias("u_q6"),
         q6(vv).alias("v_q6"),
         q6(cstat).alias("c_q6"),
-    )
-
-
-def bowker_symmetry(
-    df: DataFrame,
-    r1_col: str,
-    r2_col: str,
-) -> DataFrame:
-    """Bowker's test of symmetry — [[mcnemar_test]] generalized to a
-    k x k rater/version confusion: are disagreements DIRECTIONAL
-    (label i flips to j more than j flips to i)? The drift read for a
-    re-annotation or model-version swap that [[gwet_ac1]]'s symmetric
-    agreement number can't see. chi2 = sum_{i<j}
-    (n_ij - n_ji)^2 / (n_ij + n_ji) over pairs with any off-diagonal
-    mass; df = count of such pairs.
-
-    Cells are BIGINT counts; each pair term is one rational and the
-    sum folds over the (tiny) unordered-pair table in fixed pair
-    order. One (label, label) count shuffle. Returns one row
-    (n, n_offdiag_pairs, chi2_q6).
-    """
-    pairs = df.select(
-        F.col(r1_col).cast("string").alias("__a"),
-        F.col(r2_col).cast("string").alias("__b"),
-    ).filter(F.col("__a").isNotNull() & F.col("__b").isNotNull())
-    tot = pairs.agg(F.count("*").cast("long").alias("__n"))
-    cells = pairs.filter(F.col("__a") != F.col("__b")).groupBy(
-        "__a", "__b"
-    ).agg(F.count("*").cast("long").alias("__c"))
-    canon = cells.groupBy(
-        F.least("__a", "__b").alias("__i"),
-        F.greatest("__a", "__b").alias("__j"),
-    ).agg(
-        F.sum(
-            F.when(F.col("__a") < F.col("__b"), F.col("__c")).otherwise(
-                0
-            )
-        )
-        .cast("long")
-        .alias("__nij"),
-        F.sum(
-            F.when(F.col("__a") > F.col("__b"), F.col("__c")).otherwise(
-                0
-            )
-        )
-        .cast("long")
-        .alias("__nji"),
-    )
-    d = (F.col("__nij") - F.col("__nji")).cast("double")
-    s = (F.col("__nij") + F.col("__nji")).cast("double")
-    term = d * d / s
-    ordw = Window.orderBy("__i", "__j").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wfull = Window.orderBy("__i", "__j").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = canon.crossJoin(F.broadcast(tot)).select(
-        "__n",
-        F.sum(term).over(ordw).alias("__chi2"),
-        F.row_number().over(Window.orderBy("__i", "__j")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k"),
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    out = stepped.filter(F.col("__rn") == F.col("__k")).select(
-        F.col("__n").alias("n"),
-        F.col("__k").cast("long").alias("n_offdiag_pairs"),
-        q6(F.col("__chi2")).alias("chi2_q6"),
-    )
-    return out
-
-
-def hellinger_distance(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Hellinger distance between two groups' value distributions over
-    the distinct quantized values: H = sqrt(1 - BC), BC = sum
-    sqrt(p_v q_v) — the bounded [0, 1] distribution distance that,
-    unlike [[ks_statistic]]'s max-gap, rewards overlap EVERYWHERE and,
-    unlike KL, never blows up on disjoint support. The third member
-    of the distance family next to [[wasserstein_1d]] (magnitude) and
-    JSD (information).
-
-    p/q are exact rationals per distinct value; the BC sum folds in
-    fixed value order over the distinct-value table
-    ([[mann_whitney_u]]'s plan shape). Returns one row
-    (n_a, n_b, bc_q6, hellinger_q6).
-    """
-    v = _quant(F.col(value_col), quantize)
-    g = F.col(group_col)
-    pooled = (
-        df.filter(
-            g.isin([group_a, group_b])
-            & F.col(value_col).isNotNull()
-        )
-        .select(
-            v.alias("v"),
-            F.when(g == group_a, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("s"),
-        )
-    )
-    cnt = pooled.groupBy("v").agg(
-        F.sum("s").cast("long").alias("ca"),
-        F.sum(1 - F.col("s")).cast("long").alias("cb"),
-    )
-    wfull = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ordw = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    cum = cnt.select(
-        "ca",
-        "cb",
-        F.sum("ca").over(wfull).cast("long").alias("n_a"),
-        F.sum("cb").over(wfull).cast("long").alias("n_b"),
-        F.col("v"),
-    )
-    p = F.col("ca").cast("double") / F.col("n_a").cast("double")
-    q = F.col("cb").cast("double") / F.col("n_b").cast("double")
-    term = F.sqrt(p * q)
-    stepped = cum.select(
-        "n_a",
-        "n_b",
-        F.sum(term).over(ordw).alias("__bc"),
-        F.row_number().over(Window.orderBy("v")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k"),
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return stepped.filter(F.col("__rn") == F.col("__k")).select(
-        "n_a",
-        "n_b",
-        q6(F.col("__bc")).alias("bc_q6"),
-        q6(
-            F.sqrt(
-                F.greatest(F.lit(0.0), F.lit(1.0) - F.col("__bc"))
-            )
-        ).alias("hellinger_q6"),
-    )
-
-
-def woolf_homogeneity(
-    df: DataFrame,
-    stratum_col: str,
-    arm_col: str,
-    outcome_col: str,
-) -> DataFrame:
-    """Woolf's test of odds-ratio HOMOGENEITY across strata — the
-    check [[mantel_haenszel]] quietly assumes: is there ONE odds
-    ratio, or does the effect differ by stratum (in which case the
-    pooled number is a fiction)? chi2 = sum_k w_k (lnOR_k -
-    lnOR_pooled)^2 with inverse-variance weights, df = k - 1.
-
-    Haldane-Anscombe +0.5 is applied to EVERY cell unconditionally
-    (identically on both engines), so zero cells never produce
-    infinities and the estimator is continuous. Per-stratum cells are
-    one conditional aggregate; the two cross-stratum reductions
-    (pooled lnOR, then the chi2 around it) fold in fixed stratum
-    order with the pooled value broadcast between them. Returns one
-    row (k_strata, n, pooled_or_q6, chi2_q6).
-    """
-    s = F.col(stratum_col)
-    arm = F.col(arm_col).cast("int")
-    out = F.col(outcome_col).cast("int")
-    base = df.filter(
-        s.isNotNull() & arm.isNotNull() & out.isNotNull()
-    ).select(s.alias("__s"), arm.alias("__arm"), out.alias("__out"))
-    cells = base.groupBy("__s").agg(
-        F.count("*").cast("long").alias("__n"),
-        F.sum(((F.col("__arm") == 1) & (F.col("__out") == 1)).cast("long"))
-        .cast("long")
-        .alias("__a"),
-        F.sum(((F.col("__arm") == 1) & (F.col("__out") == 0)).cast("long"))
-        .cast("long")
-        .alias("__b"),
-        F.sum(((F.col("__arm") == 0) & (F.col("__out") == 1)).cast("long"))
-        .cast("long")
-        .alias("__c"),
-        F.sum(((F.col("__arm") == 0) & (F.col("__out") == 0)).cast("long"))
-        .cast("long")
-        .alias("__d"),
-    )
-    h = lambda c: c.cast("double") + F.lit(0.5)  # noqa: E731
-    a, b, c_, d = (
-        h(F.col("__a")),
-        h(F.col("__b")),
-        h(F.col("__c")),
-        h(F.col("__d")),
-    )
-    lnor = F.log(a * d / (b * c_))
-    w = F.lit(1.0) / (
-        F.lit(1.0) / a
-        + F.lit(1.0) / b
-        + F.lit(1.0) / c_
-        + F.lit(1.0) / d
-    )
-    ordw = Window.orderBy("__s").rowsBetween(Window.unboundedPreceding, 0)
-    wfull = Window.orderBy("__s").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    step1 = cells.select(
-        "__s",
-        F.col("__n"),
-        lnor.alias("__lnor"),
-        w.alias("__w"),
-        F.sum(w).over(ordw).alias("__sw"),
-        F.sum(w * lnor).over(ordw).alias("__swl"),
-        F.sum("__n").over(wfull).cast("long").alias("__ntot"),
-        F.row_number().over(Window.orderBy("__s")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k"),
-    )
-    pooled = F.broadcast(
-        step1.filter(F.col("__rn") == F.col("__k")).select(
-            (F.col("__swl") / F.col("__sw")).alias("__pool"),
-            F.col("__ntot"),
-            F.col("__k").cast("long").alias("k_strata"),
-        )
-    )
-    dev = step1.select("__s", "__lnor", "__w").crossJoin(pooled)
-    term = (
-        F.col("__w")
-        * (F.col("__lnor") - F.col("__pool"))
-        * (F.col("__lnor") - F.col("__pool"))
-    )
-    step2 = dev.select(
-        "k_strata",
-        "__ntot",
-        "__pool",
-        F.sum(term).over(ordw).alias("__chi2"),
-        F.row_number().over(Window.orderBy("__s")).alias("__rn"),
-        F.count("*").over(wfull).alias("__k2"),
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return step2.filter(F.col("__rn") == F.col("__k2")).select(
-        "k_strata",
-        F.col("__ntot").alias("n"),
-        q6(F.exp(F.col("__pool"))).alias("pooled_or_q6"),
-        q6(F.col("__chi2")).alias("chi2_q6"),
     )
 
 
@@ -6829,101 +3979,6 @@ def competing_risks_cif(
     )
 
 
-def pettitt_test(
-    df: DataFrame,
-    group_cols: tuple,
-    order_cols: tuple,
-    value_col: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Pettitt change-point test per group — the RANK-based single
-    break detector: where does the series split into two halves with
-    maximally different rank mass? Outlier-immune where
-    [[changepoint]]'s mean-shift CUSUM is not, and distribution-free
-    where [[slope_break]] assumes a line. K = max_t |U_t| with the
-    classical identity U_t = 2 sum_{i<=t} r_i - t(n+1) (midranks for
-    ties), plus the standard approximate significance
-    2 exp(-6K^2/(n^3 + n^2)).
-
-    FULLY INTEGER: with doubled midranks D (off the distinct-value
-    count table, joined back by value), U2_t = cumsum(D) - t*(n+1)*...
-    stays a BIGINT prefix-sum expression — no float until the final
-    p. Plan: one value-count shuffle, a broadcast value->rank map,
-    one time-ordered window, one argmax aggregate. Returns
-    (group..., n, t_star, k_stat, p_approx_q6) with K an exact
-    BIGINT (cumsum(D) - t(n+1) = -U_t identically).
-    """
-    gcols = list(group_cols)
-    v = _quant(F.col(value_col), quantize)
-    base = df.filter(F.col(value_col).isNotNull()).select(
-        *gcols,
-        v.alias("__v"),
-        *[F.col(c) for c in order_cols],
-    )
-    cnt = base.groupBy(*gcols, "__v").agg(
-        F.count("*").cast("long").alias("__c")
-    )
-    below = Window.partitionBy(*gcols).orderBy("__v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    dmap = cnt.select(
-        *gcols,
-        "__v",
-        (
-            2 * F.coalesce(F.sum("__c").over(below), F.lit(0))
-            + F.col("__c")
-            + 1
-        ).alias("__d"),
-    )
-    ow = Window.partitionBy(*gcols).orderBy(
-        *[F.col(c) for c in order_cols]
-    )
-    joined = base.join(dmap, gcols + ["__v"]).select(
-        *gcols,
-        F.col("__d"),
-        F.row_number().over(ow).cast("long").alias("__t"),
-        F.count("*")
-        .over(Window.partitionBy(*gcols))
-        .cast("long")
-        .alias("__n"),
-    )
-    cw = Window.partitionBy(*gcols).orderBy("__t").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    # U_t in doubled units: U2_t = cumsum(D) - t*(n+1)
-    u2 = F.sum("__d").over(cw) - F.col("__t") * (F.col("__n") + 1)
-    per_t = joined.select(
-        *gcols,
-        "__n",
-        "__t",
-        u2.alias("__u2"),
-    ).filter(F.col("__t") < F.col("__n"))
-    best = per_t.groupBy(*gcols).agg(
-        F.max("__n").alias("n"),
-        F.max(
-            F.struct(
-                F.abs(F.col("__u2")).alias("a"),
-                (-F.col("__t")).alias("negt"),
-            )
-        ).alias("__b"),
-    )
-    n = F.col("n").cast("double")
-    # cumsum(D) - t(n+1) = 2*sum(r) - t(n+1) = -U_t exactly, so the
-    # struct max already holds |U| as a BIGINT
-    k = F.col("__b.a").cast("double")
-    p = F.lit(2.0) * F.exp(
-        -F.lit(6.0) * k * k / (n * n * n + n * n)
-    )
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return best.select(
-        *gcols,
-        "n",
-        (-F.col("__b.negt")).cast("long").alias("t_star"),
-        F.col("__b.a").cast("long").alias("k_stat"),
-        q6(F.least(F.lit(1.0), p)).alias("p_approx_q6"),
-    )
-
-
 def wilcoxon_signed_rank(
     df: DataFrame,
     value_col: str,
@@ -6995,668 +4050,4 @@ def wilcoxon_signed_rank(
         F.when(
             var0 > 0, q6((w - mean0) / F.sqrt(var0))
         ).alias("z_q6"),
-    )
-
-
-def ordinal_association(
-    df: DataFrame,
-    x_col: str,
-    y_col: str,
-) -> DataFrame:
-    """Ordinal-by-ordinal association card from the contingency
-    table: Goodman-Kruskal gamma (ties ignored), Somers' D in both
-    directions (the asymmetric "does knowing X order Y" readings) and
-    Kendall tau-b (tie-symmetric) — the ORDERED-category complement
-    to [[cramers_v]] (nominal) and the numeric [[kendall_tau]]: use
-    it when both axes are graded buckets (quality tier, length band,
-    priority).
-
-    Concordant/discordant/tied pair masses come from ONE self-join of
-    the k x k cell table (k^4 products of counts — cells, never
-    rows), so every ingredient is an exact BIGINT and each statistic
-    is one rational (tau-b's sqrt the only irrational). Returns one
-    row (n, c_pairs, d_pairs, gamma_q6, somers_yx_q6, somers_xy_q6,
-    tau_b_q6).
-    """
-    cells = (
-        df.select(
-            F.col(x_col).cast("long").alias("__x"),
-            F.col(y_col).cast("long").alias("__y"),
-        )
-        .filter(F.col("__x").isNotNull() & F.col("__y").isNotNull())
-        .groupBy("__x", "__y")
-        .agg(F.count("*").cast("long").alias("__c"))
-    )
-    a = cells.select(
-        F.col("__x").alias("ax"),
-        F.col("__y").alias("ay"),
-        F.col("__c").alias("ac"),
-    )
-    b = cells.select(
-        F.col("__x").alias("bx"),
-        F.col("__y").alias("by"),
-        F.col("__c").alias("bc"),
-    )
-    pairs = a.join(F.broadcast(b), how="cross")
-    prod = (F.col("ac") * F.col("bc")).cast("long")
-    agg = pairs.agg(
-        F.sum(
-            F.when(
-                (F.col("bx") > F.col("ax"))
-                & (F.col("by") > F.col("ay")),
-                prod,
-            )
-        )
-        .cast("long")
-        .alias("c_pairs"),
-        F.sum(
-            F.when(
-                (F.col("bx") > F.col("ax"))
-                & (F.col("by") < F.col("ay")),
-                prod,
-            )
-        )
-        .cast("long")
-        .alias("d_pairs"),
-        F.sum(
-            F.when(
-                (F.col("bx") == F.col("ax"))
-                & (F.col("by") > F.col("ay")),
-                prod,
-            )
-        )
-        .cast("long")
-        .alias("__tx"),
-        F.sum(
-            F.when(
-                (F.col("by") == F.col("ay"))
-                & (F.col("bx") > F.col("ax")),
-                prod,
-            )
-        )
-        .cast("long")
-        .alias("__ty"),
-    )
-    n_tot = cells.agg(F.sum("__c").cast("long").alias("n"))
-    j = agg.crossJoin(F.broadcast(n_tot))
-    c = F.coalesce(F.col("c_pairs"), F.lit(0)).cast("double")
-    d = F.coalesce(F.col("d_pairs"), F.lit(0)).cast("double")
-    tx = F.coalesce(F.col("__tx"), F.lit(0)).cast("double")
-    ty = F.coalesce(F.col("__ty"), F.lit(0)).cast("double")
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return j.select(
-        "n",
-        F.coalesce(F.col("c_pairs"), F.lit(0)).alias("c_pairs"),
-        F.coalesce(F.col("d_pairs"), F.lit(0)).alias("d_pairs"),
-        F.when(c + d > 0, q6((c - d) / (c + d))).alias("gamma_q6"),
-        F.when(
-            c + d + ty > 0, q6((c - d) / (c + d + ty))
-        ).alias("somers_yx_q6"),
-        F.when(
-            c + d + tx > 0, q6((c - d) / (c + d + tx))
-        ).alias("somers_xy_q6"),
-        F.when(
-            ((c + d + tx) > 0) & ((c + d + ty) > 0),
-            q6(
-                (c - d)
-                / F.sqrt((c + d + tx) * (c + d + ty))
-            ),
-        ).alias("tau_b_q6"),
-    )
-
-
-def msprt_gate(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    tau: float = 1.0,
-    alpha: float = 0.05,
-    quantize: int = 2,
-) -> DataFrame:
-    """Anytime-valid two-sample mean test — the mixture SPRT (mSPRT,
-    Johari et al.'s "always-valid inference"): the experimentation gate
-    you may PEEK at on every micro-batch without inflating the false-
-    positive rate, unlike the fixed-horizon [[welch_t_test]] whose
-    alpha explodes under continuous monitoring (the daemon-loop
-    experiment readout [[srm_check]]'s streaming monitor wants).
-
-    With a N(0, tau^2) mixture prior over the mean difference and the
-    plug-in Welch variance V = s_a^2/n_a + s_b^2/n_b, the mixture
-    likelihood ratio has the closed form
-    log L = 0.5 ln(V/(V+tau^2)) + theta^2 tau^2 / (2 V (V+tau^2)),
-    and p_always = min(1, exp(-log L)) is a valid p-value at EVERY
-    sample size simultaneously. ``tau`` is in ORIGINAL value units —
-    the prior scale of effects worth detecting.
-
-    Two-group contract and exactness inherited from [[welch_t_test]]:
-    arms binarized against the broadcast 1-row min, integer-quantized
-    moments (S BIGINT, Q DECIMAL(38,0)), then ONE fixed-op-order float
-    expression — one 1-row exchange total. Returns one row
-    (n_a, n_b, diff_q6, log_lambda_q6, p_always_q6, reject) with the
-    statistics null (reject 0) when either arm has n < 2 or V = 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    base = df.select(
-        v.alias("__v"), F.col(group_col).alias("__g")
-    ).filter(F.col("__v").isNotNull() & F.col("__g").isNotNull())
-    gmin = F.broadcast(base.agg(F.min("__g").alias("__ga")))
-    a = (F.col("__g") == F.col("__ga")).cast("int")
-    dec = "decimal(38,0)"
-    vd = F.col("__v").cast(dec)
-    agg = base.crossJoin(gmin).agg(
-        F.sum(a).cast("long").alias("n_a"),
-        F.sum(1 - a).cast("long").alias("n_b"),
-        F.sum(F.col("__v") * a).cast("long").alias("__s_a"),
-        F.sum(F.col("__v") * (1 - a)).cast("long").alias("__s_b"),
-        F.sum(vd * vd * a.cast(dec)).alias("__q_a"),
-        F.sum(vd * vd * (1 - a).cast(dec)).alias("__q_b"),
-    )
-    scale = float(10 ** quantize)
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    ma = F.try_divide(F.col("__s_a").cast("double"), na)
-    mb = F.try_divide(F.col("__s_b").cast("double"), nb)
-    va = F.try_divide(
-        F.col("__q_a").cast("double") - ma * F.col("__s_a").cast("double"),
-        na - F.lit(1.0),
-    )
-    vb = F.try_divide(
-        F.col("__q_b").cast("double") - mb * F.col("__s_b").cast("double"),
-        nb - F.lit(1.0),
-    )
-    # back to ORIGINAL units before mixing with tau
-    theta = (mb - ma) / F.lit(scale)
-    vv = (
-        F.try_divide(va, na) + F.try_divide(vb, nb)
-    ) / F.lit(scale * scale)
-    t2 = F.lit(float(tau) * float(tau))
-    log_l = F.lit(0.5) * F.log(vv / (vv + t2)) + (
-        theta * theta * t2
-    ) / (F.lit(2.0) * vv * (vv + t2))
-    p_always = F.least(F.lit(1.0), F.exp(-log_l))
-    ok = (F.col("n_a") > 1) & (F.col("n_b") > 1) & (vv > 0)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "n_a",
-        "n_b",
-        F.when(ok, q6(theta)).alias("diff_q6"),
-        F.when(ok, q6(log_l)).alias("log_lambda_q6"),
-        F.when(ok, q6(p_always)).alias("p_always_q6"),
-        F.when(ok & (p_always < F.lit(float(alpha))), F.lit(1))
-        .otherwise(F.lit(0))
-        .cast("int")
-        .alias("reject"),
-    )
-
-
-def anderson_darling_2s(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Two-sample Anderson-Darling test (Scholz-Stephens A2akN, the
-    midrank tie-adjusted version, k=2) — the omnibus distribution-
-    equality test that WEIGHTS THE TAILS, where [[ks_drift]] is at its
-    weakest and scraped-corpus distributions actually differ; the
-    rank-based sibling of [[cvm_test]] with 1/(B(N-B)) tail
-    amplification.
-
-    Everything reduces to the distinct-value count table: with
-    midrank cumulative counts held in DOUBLED integer units
-    (M2 = 2*cum_i + f_i, B2 = 2*cum + l — so the half-steps stay
-    BIGINT), each distinct value contributes
-    t_j = (l_j/N) * [ (N*M2a - n_a*B2)^2 / (n_a*D) +
-                      (N*M2b - n_b*B2)^2 / (n_b*D) ],
-    D = B2*(2N - B2) - N*l_j, and A2 = (N-1)/N * sum_j t_j / (2N)...
-    — concretely the quartered numerator/denominator cancel, giving
-    the integer-ratio form with NO float until the per-row division.
-    Numerators fold in DECIMAL(38,0) (up to 4N^4); the cross-value
-    float sum folds in fixed value order (stepped window). Plan:
-    [[mann_whitney_u]]'s shape — one value-count shuffle, one
-    distinct-value window, one scalar aggregate. Returns one row
-    (n_a, n_b, a2_q6); null when the pooled sample is constant.
-    """
-    v = _quant(F.col(value_col), quantize)
-    g = F.col(group_col)
-    pooled = df.filter(g.isin([group_a, group_b])).select(
-        v.alias("v"),
-        F.when(g == group_a, F.lit(1)).otherwise(F.lit(0)).alias("s"),
-    )
-    cnt = pooled.groupBy("v").agg(
-        F.sum("s").cast("long").alias("ca"),
-        F.sum(1 - F.col("s")).cast("long").alias("cb"),
-    )
-    below = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    full = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cnt.select(
-        "v",
-        "ca",
-        "cb",
-        F.coalesce(F.sum("ca").over(below), F.lit(0)).alias("cua"),
-        F.coalesce(F.sum("cb").over(below), F.lit(0)).alias("cub"),
-        F.sum("ca").over(full).cast("long").alias("n_a"),
-        F.sum("cb").over(full).cast("long").alias("n_b"),
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    l = F.col("ca") + F.col("cb")  # noqa: E741
-    nn = F.col("n_a") + F.col("n_b")
-    m2a = 2 * F.col("cua") + F.col("ca")
-    m2b = 2 * F.col("cub") + F.col("cb")
-    b2 = 2 * (F.col("cua") + F.col("cub")) + l
-    ra = dec(nn) * dec(m2a) - dec(F.col("n_a")) * dec(b2)
-    rb = dec(nn) * dec(m2b) - dec(F.col("n_b")) * dec(b2)
-    den = dec(b2) * dec(2 * nn - b2) - dec(nn) * dec(l)
-    term = (
-        l.cast("double") / nn.cast("double")
-    ) * (
-        F.try_divide(
-            (ra * ra).cast("double"),
-            F.col("n_a").cast("double") * den.cast("double"),
-        )
-        + F.try_divide(
-            (rb * rb).cast("double"),
-            F.col("n_b").cast("double") * den.cast("double"),
-        )
-    )
-    ordw = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wfullv = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    stepped = cum.select(
-        "n_a",
-        "n_b",
-        F.sum(term).over(ordw).alias("t"),
-        F.row_number().over(Window.orderBy("v")).alias("rn"),
-        F.count("*").over(wfullv).alias("k"),
-    )
-    last = stepped.filter(F.col("rn") == F.col("k"))
-    nd = (F.col("n_a") + F.col("n_b")).cast("double")
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return last.select(
-        "n_a",
-        "n_b",
-        F.when(
-            (F.col("k") > 1)
-            & (F.col("n_a") > 0)
-            & (F.col("n_b") > 0),
-            q6((nd - F.lit(1.0)) / nd * F.col("t")),
-        ).alias("a2_q6"),
-    )
-
-
-def siegel_tukey(
-    df: DataFrame,
-    value_col: str,
-    group_col: str,
-    group_a: str,
-    group_b: str,
-    quantize: int = 2,
-) -> DataFrame:
-    """Siegel-Tukey two-sample SCALE test: Wilcoxon rank-sum on the
-    ZIGZAG scores (1 to the minimum, 2-3 to the two maxima, 4-5 to the
-    next two minima, ...) — the dispersion test whose null distribution
-    is EXACTLY Mann-Whitney's, so it needs no new tables; the companion
-    to [[ansari_bradley]] (both-ends-in scores) with the classic
-    one-end-first assignment.
-
-    Tie handling: tied observations share the AVERAGE of their
-    positions' scores (the [[ansari_bradley]] convention). A tie block
-    occupying positions (lo, lo+c] splits into a bottom-half segment
-    (p <= floor(N/2): score 2p - [p odd]), an optional middle element
-    (odd N: score N) and a top segment (q = N-p+1 <= floor(N/2):
-    score 2q - [q even]); each part is an arithmetic series +- a
-    parity count, all BIGINT (DECIMAL(38,0) products — positions
-    scale with ROW count, the [[ansari_bradley]] overflow lesson).
-    ST, its null mean E = n_a*S1/N (S1 = N(N+1)/2 — the scores are a
-    permutation of 1..N) and tie-corrected variance
-    Var = n_a*n_b*(N*S2 - S1^2)/(N^2 (N-1)) fold over the
-    distinct-value table in fixed value order. Plan: one value-count
-    shuffle, one distinct-value window, one scalar aggregate.
-    Returns one row (n_a, n_b, st_q6, z_q6); z null when Var = 0.
-    """
-    v = _quant(F.col(value_col), quantize)
-    g = F.col(group_col)
-    pooled = df.filter(g.isin([group_a, group_b])).select(
-        v.alias("v"),
-        F.when(g == group_a, F.lit(1)).otherwise(F.lit(0)).alias("s"),
-    )
-    cnt = pooled.groupBy("v").agg(
-        F.sum("s").cast("long").alias("ca"),
-        F.sum(1 - F.col("s")).cast("long").alias("cb"),
-    )
-    below = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    full = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = cnt.select(
-        "ca",
-        "cb",
-        F.coalesce(
-            F.sum(F.col("ca") + F.col("cb")).over(below), F.lit(0)
-        ).alias("lo"),
-        F.sum(F.col("ca") + F.col("cb")).over(full).alias("nn"),
-        F.col("v"),
-    )
-    c = F.col("ca") + F.col("cb")
-    a = F.col("lo") + 1
-    b = F.col("lo") + c
-    nn = F.col("nn")
-    h = F.floor(nn / 2).cast("long")  # bottom-half cutoff
-    dec = lambda cc: cc.cast("decimal(38,0)")  # noqa: E731
-    zero_d = F.lit(0).cast("decimal(38,0)")
-
-    def _tri(x, y):
-        # sum of integers in [x, y] (exact: /2 on the even factor)
-        n_t = y - x + 1
-        s = x + y
-        half = F.when(
-            n_t % 2 == 0,
-            dec(F.floor(n_t / F.lit(2)).cast("long")) * dec(s),
-        ).otherwise(
-            dec(n_t) * dec(F.floor(s / F.lit(2)).cast("long"))
-        )
-        return F.when(y >= x, half).otherwise(zero_d)
-
-    def _odds(x, y):
-        # count of ODD integers in [x, y]
-        cnt_o = (
-            F.floor((y + 1) / F.lit(2)) - F.floor(x / F.lit(2))
-        ).cast("long")
-        return F.when(y >= x, dec(cnt_o)).otherwise(zero_d)
-
-    def _evens(x, y):
-        cnt_e = (
-            F.floor(y / F.lit(2)) - F.floor((x - 1) / F.lit(2))
-        ).cast("long")
-        return F.when(y >= x, dec(cnt_e)).otherwise(zero_d)
-
-    # bottom segment of the block: positions p in [a, min(b, h)]
-    yb = F.least(b, h)
-    bot = F.lit(2).cast("decimal(38,0)") * _tri(a, yb) - _odds(a, yb)
-    # middle element (odd N): p = h + 1 scores N
-    mid = F.when(
-        (nn % 2 == 1) & (a <= h + 1) & (b >= h + 1), dec(nn)
-    ).otherwise(zero_d)
-    # top segment: positions p in [max(a, N - h + 1), b] -> q = N-p+1
-    # in [N - b + 1, min(N - a + 1, h)] scores 2q - [q even]
-    qlo = nn - b + 1
-    qhi = F.least(nn - a + 1, h)
-    top = F.lit(2).cast("decimal(38,0)") * _tri(qlo, qhi) - _evens(
-        qlo, qhi
-    )
-    block_sum = (bot + mid + top).cast("decimal(38,0)")
-    cells = cum.select(
-        "ca",
-        "cb",
-        "v",
-        c.alias("c"),
-        nn.alias("nn"),
-        block_sum.alias("bs"),
-    )
-    ordw = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, 0)
-    wfullv = Window.orderBy("v").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    st_term = (
-        F.col("ca").cast("double")
-        * F.col("bs").cast("double")
-        / F.col("c").cast("double")
-    )
-    s2_term = (
-        F.col("bs").cast("double")
-        * F.col("bs").cast("double")
-        / F.col("c").cast("double")
-    )
-    stepped = cells.select(
-        "nn",
-        F.sum("ca").over(wfullv).cast("long").alias("n_a"),
-        F.sum("cb").over(wfullv).cast("long").alias("n_b"),
-        F.sum("bs").over(wfullv).cast("decimal(38,0)").alias("s1"),
-        F.sum(st_term).over(ordw).alias("st"),
-        F.sum(s2_term).over(ordw).alias("s2"),
-        F.row_number().over(Window.orderBy("v")).alias("rn"),
-        F.count("*").over(wfullv).alias("k"),
-    )
-    last = stepped.filter(F.col("rn") == F.col("k"))
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    nd = F.col("nn").cast("double")
-    s1 = F.col("s1").cast("double")
-    e = na * s1 / nd
-    var = (
-        na
-        * nb
-        * (nd * F.col("s2") - s1 * s1)
-        / (nd * nd * (nd - F.lit(1.0)))
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return last.select(
-        "n_a",
-        "n_b",
-        q6(F.col("st")).alias("st_q6"),
-        F.when(
-            var > 0, q6((F.col("st") - e) / F.sqrt(var))
-        ).alias("z_q6"),
-    )
-
-
-def overdispersion_index(
-    df: DataFrame,
-    count_col: str,
-    group_cols: tuple = (),
-) -> DataFrame:
-    """Poisson overdispersion check per group over a COUNT column —
-    variance-to-mean ratio (VMR: 1 under Poisson, >1 clumped, <1
-    regular) plus the chi-square dispersion z statistic
-    z = ((n-1)·VMR - (n-1)) / sqrt(2(n-1)) (the normal approximation
-    of (n-1)s²/x̄ ~ χ²_{n-1}). The modeling gate before any per-user /
-    per-shard event-rate assumption: crawl and usage counts are almost
-    always overdispersed, and a Poisson CI on clumped counts is a lie.
-
-    Counts are integers, so the moments are exact with NO quantization
-    step: S is BIGINT, Q is DECIMAL(38,0) (the [[welch_t_test]]
-    overflow rule); VMR and z are fixed-op-order float expressions
-    over the three exact scalars. One map-combinable aggregate per
-    group. Returns (group..., n, mean_q6, vmr_q6, z_q6); null stats
-    when n < 2 or the mean is 0.
-    """
-    gcols = list(group_cols)
-    dec = "decimal(38,0)"
-    c = F.col(count_col).cast("long")
-    base = df.select(*gcols, c.alias("__c")).filter(
-        F.col("__c").isNotNull()
-    )
-    cd = F.col("__c").cast(dec)
-    agg = base.groupBy(*gcols).agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("__c").cast("long").alias("__s"),
-        F.sum(cd * cd).alias("__q"),
-    )
-    n = F.col("n").cast("double")
-    mean = F.try_divide(F.col("__s").cast("double"), n)
-    var = F.try_divide(
-        F.col("__q").cast("double") - mean * F.col("__s").cast("double"),
-        n - F.lit(1.0),
-    )
-    vmr = F.try_divide(var, mean)
-    z = F.try_divide(
-        (n - F.lit(1.0)) * vmr - (n - F.lit(1.0)),
-        F.sqrt(F.lit(2.0) * (n - F.lit(1.0))),
-    )
-    ok = (F.col("n") > 1) & (F.col("__s") > 0)
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        *gcols,
-        "n",
-        F.when(F.col("n") > 0, q6(mean)).alias("mean_q6"),
-        F.when(ok, q6(vmr)).alias("vmr_q6"),
-        F.when(ok, q6(z)).alias("z_q6"),
-    )
-
-
-def poisson_rate_ratio(
-    df: DataFrame,
-    events_col: str,
-    exposure_col: str,
-    group_col: str,
-    quantize: int = 0,
-) -> DataFrame:
-    """Two-group Poisson rate-ratio test over (events, exposure) rows —
-    "does arm B fire events at a different RATE per unit of exposure
-    than arm A", the correct comparison when users are observed for
-    different lengths of time (comparing raw means ignores exposure
-    and [[welch_t_test]] on per-user counts ignores it too). Run
-    [[overdispersion_index]] first: under clumping the Poisson z is
-    anti-conservative and this test's verdict needs shrinking.
-
-    RR = (X_a/T_a)/(X_b/T_b); the log-scale z = ln(RR)/sqrt(1/X_a +
-    1/X_b) (the classic asymptotic whose variance depends only on the
-    COUNTS). Two-group contract from [[welch_t_test]]: arms binarized
-    against the broadcast 1-row min. EXACT: event and quantized
-    exposure totals are BIGINT off one conditional aggregate; RR and
-    z are fixed-op-order float expressions over four exact scalars.
-    Returns one row (x_a, x_b, rate_a_q6, rate_b_q6, rr_q6, z_q6);
-    null stats when either arm has 0 events or 0 exposure.
-    """
-    ev = F.col(events_col).cast("long")
-    ex = _quant(F.col(exposure_col), quantize)
-    base = df.select(
-        ev.alias("__x"), ex.alias("__t"), F.col(group_col).alias("__g")
-    ).filter(
-        F.col("__x").isNotNull()
-        & F.col("__t").isNotNull()
-        & F.col("__g").isNotNull()
-    )
-    gmin = F.broadcast(base.agg(F.min("__g").alias("__ga")))
-    a = (F.col("__g") == F.col("__ga")).cast("int")
-    agg = base.crossJoin(gmin).agg(
-        F.sum(F.col("__x") * a).cast("long").alias("x_a"),
-        F.sum(F.col("__x") * (1 - a)).cast("long").alias("x_b"),
-        F.sum(F.col("__t") * a).cast("long").alias("__t_a"),
-        F.sum(F.col("__t") * (1 - a)).cast("long").alias("__t_b"),
-    )
-    scale = float(10 ** quantize)
-    ra = F.try_divide(
-        F.col("x_a").cast("double"),
-        F.col("__t_a").cast("double") / F.lit(scale),
-    )
-    rb = F.try_divide(
-        F.col("x_b").cast("double"),
-        F.col("__t_b").cast("double") / F.lit(scale),
-    )
-    rr = F.try_divide(ra, rb)
-    z = F.try_divide(
-        F.log(rr),
-        F.sqrt(
-            F.lit(1.0) / F.col("x_a").cast("double")
-            + F.lit(1.0) / F.col("x_b").cast("double")
-        ),
-    )
-    ok = (
-        (F.col("x_a") > 0)
-        & (F.col("x_b") > 0)
-        & (F.col("__t_a") > 0)
-        & (F.col("__t_b") > 0)
-    )
-    q6 = lambda x: F.floor(x * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "x_a",
-        "x_b",
-        F.when(F.col("__t_a") > 0, q6(ra)).alias("rate_a_q6"),
-        F.when(F.col("__t_b") > 0, q6(rb)).alias("rate_b_q6"),
-        F.when(ok, q6(rr)).alias("rr_q6"),
-        F.when(ok, q6(z)).alias("z_q6"),
-    )
-
-
-def two_proportion_diff(
-    df: DataFrame,
-    success_col: str,
-    group_col: str,
-    z_crit: float = 1.959964,
-) -> DataFrame:
-    """Two-proportion comparison card: difference p_a - p_b with the
-    pooled-variance z test AND the Newcombe hybrid-score interval —
-    the CI built by combining each arm's [[wilson_interval]] bounds,
-    which keeps honest coverage at extreme rates (0%, 100%) where the
-    naive Wald interval collapses to zero width. The binary-outcome
-    companion to [[welch_t_test]]/[[msprt_gate]] (fixed-horizon
-    version): conversion, violation-rate, and filter-pass-rate
-    comparisons are all this shape.
-
-    Two-group contract from [[welch_t_test]] (arms binarized against
-    the broadcast 1-row min). EXACT: per-arm (n, x) are BIGINT off
-    one conditional aggregate; z and the Newcombe bounds are
-    fixed-op-order float expressions over four exact scalars —
-    Wilson per arm: center (x + z²/2)/(n + z²), half-width
-    z*sqrt(p(1-p)/n + z²/4n²)/(1 + z²/n); Newcombe:
-    [d - sqrt((pa-la)² + (ub-pb)²), d + sqrt((ua-pa)² + (pb-lb)²)].
-    Returns one row (n_a, n_b, x_a, x_b, p_a_q6, p_b_q6, diff_q6,
-    z_q6, ci_lo_q6, ci_hi_q6); z null when the pooled variance is 0.
-    """
-    y = F.col(success_col).cast("long")
-    base = df.select(
-        y.alias("__y"), F.col(group_col).alias("__g")
-    ).filter(F.col("__y").isNotNull() & F.col("__g").isNotNull())
-    gmin = F.broadcast(base.agg(F.min("__g").alias("__ga")))
-    a = (F.col("__g") == F.col("__ga")).cast("int")
-    agg = base.crossJoin(gmin).agg(
-        F.sum(a).cast("long").alias("n_a"),
-        F.sum(1 - a).cast("long").alias("n_b"),
-        F.sum(F.col("__y") * a).cast("long").alias("x_a"),
-        F.sum(F.col("__y") * (1 - a)).cast("long").alias("x_b"),
-    )
-    zc = F.lit(float(z_crit))
-    z2 = zc * zc
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    xa = F.col("x_a").cast("double")
-    xb = F.col("x_b").cast("double")
-    pa = F.try_divide(xa, na)
-    pb = F.try_divide(xb, nb)
-
-    def _wilson(p, n):
-        center = (p * n + z2 / F.lit(2.0)) / (n + z2)
-        half = (
-            zc
-            * F.sqrt(
-                p * (F.lit(1.0) - p) / n
-                + z2 / (F.lit(4.0) * n * n)
-            )
-            / (F.lit(1.0) + z2 / n)
-        )
-        return center - half, center + half
-
-    la, ua = _wilson(pa, na)
-    lb, ub = _wilson(pb, nb)
-    d = pa - pb
-    lo = d - F.sqrt((pa - la) * (pa - la) + (ub - pb) * (ub - pb))
-    hi = d + F.sqrt((ua - pa) * (ua - pa) + (pb - lb) * (pb - lb))
-    pp = F.try_divide(xa + xb, na + nb)
-    se = F.sqrt(
-        pp * (F.lit(1.0) - pp) * (F.lit(1.0) / na + F.lit(1.0) / nb)
-    )
-    zstat = F.try_divide(d, se)
-    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
-    q6 = lambda c: F.floor(c * F.lit(1e6)) / F.lit(1e6)  # noqa: E731
-    return agg.select(
-        "n_a",
-        "n_b",
-        "x_a",
-        "x_b",
-        F.when(ok, q6(pa)).alias("p_a_q6"),
-        F.when(ok, q6(pb)).alias("p_b_q6"),
-        F.when(ok, q6(d)).alias("diff_q6"),
-        F.when(ok & (se > 0), q6(zstat)).alias("z_q6"),
-        F.when(ok, q6(lo)).alias("ci_lo_q6"),
-        F.when(ok, q6(hi)).alias("ci_hi_q6"),
     )

@@ -3,21 +3,14 @@ estimators)."""
 
 import math as _math
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from png_from_pdf_extracter_spark.functions import text
 from png_from_pdf_extracter_spark.functions.stats import (
-    anderson_darling_2s,
-    anova_oneway,
-    ansari_bradley,
     autocorr_lag1,
     benford_digits,
     bh_fdr,
-    bowker_symmetry,
     brunner_munzel,
-    capture_recapture,
-    changepoint_binary_seg,
     changepoint_single,
     chi2_independence,
     cliffs_delta,
@@ -25,7 +18,6 @@ from png_from_pdf_extracter_spark.functions.stats import (
     cochran_q,
     competing_risks_cif,
     concordance_agreement,
-    conditional_entropy,
     correlogram,
     cramer_von_mises_2s,
     cramers_v,
@@ -34,73 +26,40 @@ from png_from_pdf_extracter_spark.functions.stats import (
     cusum_drift,
     did_estimate,
     durbin_watson,
-    effect_sizes,
     energy_distance_2s,
-    forecast_accuracy,
-    friedman_test,
     gini_concentration,
-    gini_gain,
     group_influence,
-    grubbs_test,
-    gwet_ac1,
-    hellinger_distance,
     hill_tail_index,
     hodges_lehmann,
     holm_bonferroni,
-    huber_location,
-    hurst_rs,
     inequality_indices,
     interrater_reliability,
     jackknife_group_se,
-    jonckheere_terpstra,
     kaplan_meier,
     kendall_tau_b,
-    kendalls_w,
-    kpss_level,
     kruskal_wallis,
-    levene_bf,
-    ljung_box,
     log_rank_test,
     mann_kendall,
     mann_whitney_u,
-    mantel_haenszel,
     mood_median_test,
-    msprt_gate,
     nelson_aalen,
-    ordinal_association,
-    overdispersion_index,
     page_trend_test,
-    partial_corr,
-    pettitt_test,
     poisson_bootstrap_ci,
-    poisson_rate_ratio,
-    quade_test,
-    risk_ratios,
     rmst,
     rolling_median,
     running_distinct,
     runs_test,
-    seasonal_decompose,
-    siegel_tukey,
-    slope_break,
     spearman_corr,
-    srm_check,
     theil_sen_slope,
-    tukey_hsd,
-    two_proportion_diff,
-    variance_ratio,
     weighted_quantile,
     welch_t_test,
     wilcoxon_signed_rank,
-    wilson_interval,
     winsorize,
-    woolf_homogeneity,
     yuen_trimmed_t,
 )
-from png_from_pdf_extracter_spark.functions.text import lang_id, tokens
+from png_from_pdf_extracter_spark.functions.text import tokens
 from png_from_pdf_extracter_spark.registry import query
 from png_from_pdf_extracter_spark.registry.common import (
-    LANG_CASE,
     NTOK_SQL,
     read,
 )
@@ -734,91 +693,6 @@ def _q_median_survival(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT o_orderpriority AS g,
-                     date_trunc('month', o_orderdate) AS month,
-                     sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS v
-              FROM orders GROUP BY 1, 2
-            ),
-            idxed AS (
-              SELECT g, v,
-                     row_number() OVER (
-                       PARTITION BY g ORDER BY month
-                     ) AS idx
-              FROM base
-            ),
-            marked AS (
-              SELECT g, idx, v,
-                     sum(v) OVER (
-                       PARTITION BY g ORDER BY idx
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS sl,
-                     sum(v) OVER (PARTITION BY g) AS st,
-                     count(*) OVER (PARTITION BY g) AS n
-              FROM idxed
-            ),
-            scored AS (
-              SELECT g, idx,
-                     (sl * (n - idx) - (st - sl) * idx)::DOUBLE
-                     * (sl * (n - idx) - (st - sl) * idx)::DOUBLE
-                     / (idx * (n - idx))::DOUBLE AS bss
-              FROM marked WHERE idx >= 2 AND idx <= n - 2
-            ),
-            best AS (
-              SELECT g, idx AS split FROM (
-                SELECT g, idx,
-                       row_number() OVER (
-                         PARTITION BY g ORDER BY bss DESC, idx ASC
-                       ) AS r
-                FROM scored WHERE bss >= 0.0
-              ) WHERE r = 1
-            ),
-            segged AS (
-              SELECT i.g, i.idx, i.v,
-                     CASE WHEN b.split IS NOT NULL
-                               AND i.idx > b.split
-                          THEN 1 ELSE 0 END AS segment
-              FROM idxed i LEFT JOIN best b ON i.g = b.g
-            )
-            SELECT g AS o_orderpriority, segment,
-                   min(idx)::BIGINT AS start_idx,
-                   max(idx)::BIGINT AS end_idx,
-                   count(*)::BIGINT AS n,
-                   floor(sum(v)::DOUBLE / count(*) * 1e6) / 1e6 AS mean_q
-            FROM segged GROUP BY g, segment
-        """)
-def _q_binseg(spark, sf_dir):
-    """Binary-segmentation changepoints (functions/stats.py
-    changepoint_binary_seg) on the monthly revenue series per order
-    priority — exact-integer contrast scoring, all groups advancing in
-    parallel per round. ORACLED since r4 (r3 verdict #6) at the K=1
-    case: one greedy round IS the single-split argmax, which DuckDB
-    expresses with the same windowed prefix-sum construction as
-    q_changepoint plus the two-segment rollup. The multi-split (K=3)
-    greedy recursion stays pinned against the brute-force reference in
-    tests/test_stats.py — iteration count changes nothing about the
-    per-round plan the driver artifact needs to witness."""
-
-    o = read(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        "o_orderpriority",
-        F.date_trunc("month", "o_orderdate").cast("date").alias("month"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("long")).alias(
-            "rev_cents"
-        )
-    )
-    return changepoint_binary_seg(
-        monthly,
-        ("o_orderpriority",),
-        ("month",),
-        "rev_cents",
-        max_changepoints=1,
-        quantize=0,
-    )
-
-
-@query(oracle="""
             WITH v AS (
               SELECT user_id,
                      CAST(floor(epoch_us(ts) / 60000000.0) AS BIGINT)
@@ -1408,7 +1282,7 @@ def _q_log_rank(spark, sf_dir):
 def _q_welch(spark, sf_dir):
     """Welch's unequal-variance t test (functions/stats.py
     welch_t_test): do even- and odd-user event values differ in MEAN?
-    The two-sample parametric gate q_anova generalizes to k groups;
+    The two-sample parametric mean gate:
     per-arm exact BIGINT/DECIMAL sums off one conditional aggregate,
     t / Welch-Satterthwaite df / Cohen's d as fixed-order float
     expressions over the six exact scalars."""
@@ -1474,117 +1348,6 @@ def _q_cochran_armitage(spark, sf_dir):
     return cochran_armitage(d, "dose", "is_en")
 
 
-@query(oracle="""
-            WITH base AS (
-              SELECT event_type AS g,
-                     CAST(round(value * 100, 0) AS BIGINT) AS y,
-                     ts, event_id
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-            ),
-            idx AS (
-              SELECT g, y,
-                     row_number() OVER (PARTITION BY g
-                       ORDER BY ts, event_id) AS x
-              FROM base
-            ),
-            pre AS (
-              SELECT g, x,
-                sum(x) OVER wr AS sx, sum(y) OVER wr AS sy,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(x AS DECIMAL(38,0))) OVER wr AS sxx,
-                sum(CAST(y AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0))) OVER wr AS syy,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0))) OVER wr AS sxy,
-                count(*) OVER (PARTITION BY g) AS n,
-                sum(x) OVER (PARTITION BY g) AS tx,
-                sum(y) OVER (PARTITION BY g) AS ty,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(x AS DECIMAL(38,0)))
-                  OVER (PARTITION BY g) AS txx,
-                sum(CAST(y AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0)))
-                  OVER (PARTITION BY g) AS tyy,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0)))
-                  OVER (PARTITION BY g) AS txy
-              FROM idx
-              WINDOW wr AS (PARTITION BY g ORDER BY x
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-            ),
-            c1 AS (
-              SELECT g, n, x,
-                sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE / x::DOUBLE
-                  AS cxxl,
-                sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE / x::DOUBLE
-                  AS cxyl,
-                syy::DOUBLE - sy::DOUBLE * sy::DOUBLE / x::DOUBLE
-                  AS cyyl,
-                (txx - sxx)::DOUBLE
-                  - (tx - sx)::DOUBLE * (tx - sx)::DOUBLE
-                    / (n - x)::DOUBLE AS cxxr,
-                (txy - sxy)::DOUBLE
-                  - (tx - sx)::DOUBLE * (ty - sy)::DOUBLE
-                    / (n - x)::DOUBLE AS cxyr,
-                (tyy - syy)::DOUBLE
-                  - (ty - sy)::DOUBLE * (ty - sy)::DOUBLE
-                    / (n - x)::DOUBLE AS cyyr,
-                txx::DOUBLE - tx::DOUBLE * tx::DOUBLE / n::DOUBLE
-                  AS cxx1,
-                txy::DOUBLE - tx::DOUBLE * ty::DOUBLE / n::DOUBLE
-                  AS cxy1,
-                tyy::DOUBLE - ty::DOUBLE * ty::DOUBLE / n::DOUBLE
-                  AS cyy1
-              FROM pre
-            ),
-            c2 AS (
-              SELECT g, n, x AS b,
-                (CASE WHEN cxxl > 0
-                      THEN cyyl - cxyl * cxyl / cxxl ELSE cyyl END)
-                + (CASE WHEN cxxr > 0
-                        THEN cyyr - cxyr * cxyr / cxxr ELSE cyyr END)
-                  AS sse,
-                CASE WHEN cxxl <> 0 THEN cxyl / cxxl END AS sl,
-                CASE WHEN cxxr <> 0 THEN cxyr / cxxr END AS sr,
-                CASE WHEN cxx1 > 0
-                     THEN cyy1 - cxy1 * cxy1 / cxx1 ELSE cyy1 END
-                  AS sse1
-              FROM c1 WHERE x >= 3 AND x <= n - 3
-            ),
-            best AS (
-              SELECT g, n, b, sl, sr, sse, sse1,
-                row_number() OVER (PARTITION BY g
-                  ORDER BY sse ASC, b ASC) AS rn
-              FROM c2
-            )
-            SELECT g AS event_type, n::BIGINT AS n, b::BIGINT
-                     AS break_idx,
-              CASE WHEN sl IS NOT NULL THEN
-                floor(sl / 100.0 * 1e6) / 1e6 END AS slope_l_q6,
-              CASE WHEN sr IS NOT NULL THEN
-                floor(sr / 100.0 * 1e6) / 1e6 END AS slope_r_q6,
-              floor(sse / 10000.0 * 100.0) / 100.0 AS sse_break_q2,
-              floor(sse1 / 10000.0 * 100.0) / 100.0 AS sse_single_q2,
-              CASE WHEN sse1 > 0 THEN
-                floor((1.0 - sse / sse1) * 1e6) / 1e6 END AS gain_q6
-            FROM best WHERE rn = 1
-        """)
-def _q_slope_break(spark, sf_dir):
-    """Per-event-type slope-change breakpoint (functions/stats.py
-    slope_break): where does the value trend CHANGE SLOPE, the break
-    q_changepoint's mean-shift statistic cannot see. Integer prefix
-    sums off one ordered window; every candidate's two-segment SSE is
-    a fixed float expression; struct-min argmin."""
-
-    ev = read(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    return slope_break(
-        ev, ("event_type",), ("ts", "event_id"), "value", quantize=2
-    )
-
-
 @query(oracle="WITH km AS (" + _KM_SQL + """),
             seg AS (
               SELECT duration AS start, survival_q AS sq,
@@ -1626,86 +1389,6 @@ def _q_rmst(spark, sf_dir):
 
     obs = _surv_obs(spark, sf_dir)
     return rmst(obs, "dur_min", "event", tau=5000)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT event_type AS g,
-                     CAST(round(value * 100, 0) AS BIGINT) AS v
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-            ),
-            vg AS (
-              SELECT g, v, count(*)::BIGINT AS c FROM base GROUP BY g, v
-            ),
-            r1 AS (
-              SELECT g, v, c,
-                coalesce(sum(c) OVER (PARTITION BY g ORDER BY v
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS cb,
-                sum(c) OVER (PARTITION BY g) AS ng
-              FROM vg
-            ),
-            m1 AS (
-              SELECT g,
-                sum(v * (CASE WHEN cb < floor((ng + 1) / 2)
-                              AND cb + c >= floor((ng + 1) / 2)
-                         THEN 1 ELSE 0 END
-                         + CASE WHEN cb < floor(ng / 2) + 1
-                                AND cb + c >= floor(ng / 2) + 1
-                           THEN 1 ELSE 0 END))::BIGINT AS med2,
-                max(ng)::BIGINT AS ng
-              FROM r1 GROUP BY g
-            ),
-            dev AS (
-              SELECT vg.g, vg.c,
-                     abs(2 * vg.v - m1.med2) AS a2,
-                     2 * vg.v - m1.med2 AS d2
-              FROM vg JOIN m1 ON vg.g = m1.g
-            ),
-            devc AS (
-              SELECT g, a2, sum(c)::BIGINT AS c FROM dev GROUP BY g, a2
-            ),
-            r2 AS (
-              SELECT g, a2, c,
-                coalesce(sum(c) OVER (PARTITION BY g ORDER BY a2
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-                  AS cb,
-                sum(c) OVER (PARTITION BY g) AS ng
-              FROM devc
-            ),
-            m2 AS (
-              SELECT g,
-                sum(a2 * (CASE WHEN cb < floor((ng + 1) / 2)
-                               AND cb + c >= floor((ng + 1) / 2)
-                          THEN 1 ELSE 0 END
-                          + CASE WHEN cb < floor(ng / 2) + 1
-                                 AND cb + c >= floor(ng / 2) + 1
-                            THEN 1 ELSE 0 END))::BIGINT AS mad4
-              FROM r2 GROUP BY g
-            ),
-            ag AS (
-              SELECT dev.g,
-                sum(dev.c * greatest(-(m2.mad4 * 3),
-                    least(m2.mad4 * 3, 2 * dev.d2 * 2)))::BIGINT AS cs
-              FROM dev JOIN m2 ON dev.g = m2.g GROUP BY dev.g
-            )
-            SELECT m1.g AS event_type, m1.ng AS n_g,
-              floor(m1.med2::DOUBLE / 2.0 / 100.0 * 1e6) / 1e6
-                AS median_q6,
-              floor((m1.med2::DOUBLE / 2.0
-                     + cs::DOUBLE / (4.0 * m1.ng::DOUBLE * 2.0))
-                    / 100.0 * 1e6) / 1e6 AS huber_q6
-            FROM m1 JOIN ag ON m1.g = ag.g
-        """)
-def _q_huber(spark, sf_dir):
-    """Per-event-type one-step Huber location (functions/stats.py
-    huber_location): the robust mean that clips — not drops — tail
-    deviations at 1.5 MAD; doubled-median rank-reach keeps every
-    statistic integral until one final float expression."""
-
-    ev = read(spark, sf_dir, "events").select("event_type", "value")
-    return huber_location(ev, "value", ("event_type",))
 
 
 @query(oracle="""
@@ -1808,72 +1491,6 @@ def _q_yuen(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT event_type AS s,
-                     CAST(user_id % 2 AS INT) AS a,
-                     CASE WHEN value > 150 THEN 1 ELSE 0 END AS y
-              FROM events
-              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            per AS (
-              SELECT s,
-                sum(a * y)::BIGINT AS ta,
-                sum(a * (1 - y))::BIGINT AS tb,
-                sum((1 - a) * y)::BIGINT AS tc,
-                sum((1 - a) * (1 - y))::BIGINT AS td
-              FROM base GROUP BY s
-              HAVING (sum(a * y) + sum(a * (1 - y))
-                      + sum((1 - a) * y)
-                      + sum((1 - a) * (1 - y))) >= 2
-            ),
-            t AS (
-              SELECT s, ta, tb, tc, td,
-                (ta + tb + tc + td)::DOUBLE AS n
-              FROM per
-            ),
-            stepped AS (
-              SELECT
-                sum(ta::DOUBLE * td::DOUBLE / n) OVER w AS r,
-                sum(tb::DOUBLE * tc::DOUBLE / n) OVER w AS ss,
-                sum(ta::DOUBLE
-                    - (ta::DOUBLE + tb::DOUBLE)
-                      * (ta::DOUBLE + tc::DOUBLE) / n) OVER w AS dev,
-                sum((ta::DOUBLE + tb::DOUBLE)
-                    * (tc::DOUBLE + td::DOUBLE)
-                    * (ta::DOUBLE + tc::DOUBLE)
-                    * (tb::DOUBLE + td::DOUBLE)
-                    / (n * n * (n - 1.0))) OVER w AS v,
-                row_number() OVER (ORDER BY s) AS rn,
-                count(*) OVER () AS k
-              FROM t
-              WINDOW w AS (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW)
-            ),
-            last AS (SELECT * FROM stepped WHERE rn = k)
-            SELECT k::BIGINT AS k_strata,
-              CASE WHEN r > 0 AND ss > 0 THEN
-                floor(r / ss * 1e6) / 1e6 END AS or_mh_q6,
-              CASE WHEN v > 0 THEN
-                floor(dev * dev / v * 1e6) / 1e6 END AS chi2_q6
-            FROM last
-        """)
-def _q_mantel_haenszel(spark, sf_dir):
-    """Stratified A/B readout (functions/stats.py mantel_haenszel):
-    pooled odds ratio + CMH chi² of 'high-value event' (value > 150)
-    between user-parity arms, stratified by event type — the
-    Simpson-safe version of q_ab_test's single 2x2. One conditional
-    aggregate to the k-strata cell table, fixed-order stepped pooling."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "event_type",
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-        (F.col("value") > 150).cast("int").alias("hi"),
-    )
-    return mantel_haenszel(ev, "event_type", "arm", "hi")
-
-
-@query(oracle="""
             WITH p AS (
               SELECT event_type AS g,
                      CAST(concat('0x', substr(
@@ -1973,119 +1590,6 @@ def _q_group_influence(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH a AS (
-              SELECT DISTINCT user_id AS id FROM events
-              WHERE event_id % 2 = 0 AND user_id IS NOT NULL
-            ),
-            b AS (
-              SELECT DISTINCT user_id AS id FROM events
-              WHERE event_id % 2 = 1 AND user_id IS NOT NULL
-            ),
-            agg AS (
-              SELECT (SELECT count(*) FROM a)::BIGINT AS n1,
-                     (SELECT count(*) FROM b)::BIGINT AS n2,
-                     (SELECT count(*) FROM a JOIN b USING (id))::BIGINT
-                       AS m
-            )
-            SELECT n1, n2, m,
-              CASE WHEN m > 0 THEN
-                floor(((n1::DOUBLE + 1.0) * (n2::DOUBLE + 1.0)
-                       / (m::DOUBLE + 1.0) - 1.0) * 1e6) / 1e6
-              END AS est_q6,
-              CASE WHEN m > 0 THEN
-                floor(sqrt((n1::DOUBLE + 1.0) * (n2::DOUBLE + 1.0)
-                           * (n1::DOUBLE - m::DOUBLE)
-                           * (n2::DOUBLE - m::DOUBLE)
-                           / ((m::DOUBLE + 1.0) * (m::DOUBLE + 1.0)
-                              * (m::DOUBLE + 2.0))) * 1e6) / 1e6
-              END AS se_q6
-            FROM agg
-        """)
-def _q_capture_recapture(spark, sf_dir):
-    """Chapman capture-recapture population estimate
-    (functions/stats.py capture_recapture): the even-event-id and
-    odd-event-id halves of the log are two 'crawls' of the user space;
-    their overlap estimates the total distinct-user population — the
-    coverage-audit number. Three distinct aggregates + one semi-join,
-    two fixed float expressions."""
-
-    ev = read(spark, sf_dir, "events")
-    a = ev.filter(F.col("event_id") % 2 == 0).select(
-        F.col("user_id").alias("id")
-    )
-    b = ev.filter(F.col("event_id") % 2 == 1).select(
-        F.col("user_id").alias("id")
-    )
-    return capture_recapture(a, b)
-
-
-@query(oracle="""
-            WITH seq AS (
-              SELECT lag(event_type) OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                     ) AS x,
-                     event_type AS y
-              FROM events
-            ),
-            base AS (
-              SELECT x, y FROM seq
-              WHERE x IS NOT NULL AND y IS NOT NULL
-            ),
-            xy AS (
-              SELECT x, y, count(*)::BIGINT AS c FROM base GROUP BY x, y
-            ),
-            tot AS (SELECT sum(c)::BIGINT AS n FROM xy),
-            cells AS (
-              SELECT x, y, c, sum(c) OVER (PARTITION BY x) AS cx FROM xy
-            ),
-            stepped AS (
-              SELECT n,
-                     sum(c::DOUBLE / n::DOUBLE
-                         * ln(cx::DOUBLE / c::DOUBLE)) OVER (
-                       ORDER BY x, y ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS hc,
-                     row_number() OVER (ORDER BY x, y) AS rn,
-                     count(*) OVER () AS k
-              FROM cells, tot
-            ),
-            hcond AS (SELECT n, hc FROM stepped WHERE rn = k),
-            yc AS (SELECT y, count(*)::BIGINT AS cy FROM base GROUP BY y),
-            ystep AS (
-              SELECT sum(cy::DOUBLE / n::DOUBLE
-                         * ln(n::DOUBLE / cy::DOUBLE)) OVER (
-                       ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING AND
-                       CURRENT ROW) AS hy,
-                     row_number() OVER (ORDER BY y) AS rn,
-                     count(*) OVER () AS k
-              FROM yc, tot
-            ),
-            hyt AS (SELECT hy FROM ystep WHERE rn = k)
-            SELECT n,
-              floor(hy * 1e6) / 1e6 AS h_y_q6,
-              floor(hc * 1e6) / 1e6 AS h_cond_q6,
-              CASE WHEN hy > 0 THEN
-                floor((hy - hc) / hy * 1e6) / 1e6
-              END AS theil_u_q6
-            FROM hcond, hyt
-        """)
-def _q_cond_entropy(spark, sf_dir):
-    """Conditional entropy + Theil's U of event transitions
-    (functions/stats.py conditional_entropy): how much does knowing
-    the PREVIOUS event type tell you about the next one — the
-    asymmetric association q_cramers_v can't express. Same per-user
-    (ts, event_id) lag contract as q_event_transitions; fixed-order
-    stepped ln sums over the k x k contingency table."""
-
-    ev = read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = ev.select(
-        F.lag("event_type").over(w).alias("x"),
-        F.col("event_type").alias("y"),
-    ).filter(F.col("x").isNotNull())
-    return conditional_entropy(seq, "x", "y")
-
-
-@query(oracle="""
             WITH base AS (
               SELECT CAST(round(CAST(n_chars AS DOUBLE) * 1, 0)
                           AS BIGINT) AS v,
@@ -2139,48 +1643,6 @@ def _q_jackknife(spark, sf_dir):
 
     d = read(spark, sf_dir, "documents").select("source", "n_chars")
     return jackknife_group_se(d, "n_chars", "source", quantize=0)
-
-
-@query(oracle="""
-            WITH agg AS (
-              SELECT source, count(*)::BIGINT AS n,
-                     sum(CASE WHEN n_chars < 500 THEN 1 ELSE 0
-                         END)::BIGINT AS successes
-              FROM documents GROUP BY source
-            ),
-            t AS (
-              SELECT source, n, successes,
-                successes::DOUBLE / n::DOUBLE AS p,
-                1.0 + 3.8415999999999997 / n::DOUBLE AS denom
-              FROM agg
-            ),
-            f AS (
-              SELECT source, n, successes, p,
-                (p + 3.8415999999999997 / (2.0 * n::DOUBLE)) / denom
-                  AS center,
-                1.96 / denom * sqrt(p * (1.0 - p) / n::DOUBLE
-                  + 3.8415999999999997
-                    / (4.0 * n::DOUBLE * n::DOUBLE)) AS half
-              FROM t
-            )
-            SELECT source, n, successes,
-              floor(p * 1e6) / 1e6 AS p_q6,
-              floor(greatest(center - half, 0.0) * 1e6) / 1e6 AS lo_q6,
-              floor(least(center + half, 1.0) * 1e6) / 1e6 AS hi_q6
-            FROM f
-        """)
-def _q_wilson(spark, sf_dir):
-    """Per-source Wilson score intervals (functions/stats.py
-    wilson_interval) on the short-document rate (n_chars < 500) —
-    honest error bars on every shard's rate, stable at the 0/1 edges
-    where Wald collapses. One combinable (n, successes) aggregate per
-    group; the interval is a fixed float expression over two
-    integers."""
-
-    d = read(spark, sf_dir, "documents").select(
-        "source", (F.col("n_chars") < 500).cast("int").alias("short")
-    )
-    return wilson_interval(d, "short", group_cols=("source",))
 
 
 @query(oracle="""
@@ -2452,72 +1914,6 @@ def _q_cvm(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CAST(event_type AS VARCHAR) AS g
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-            ),
-            pc AS (
-              SELECT g, count(*)::BIGINT AS n_g, sum(v)::BIGINT AS s_g,
-                     sum(CAST(v AS DECIMAL(38,0))
-                         * CAST(v AS DECIMAL(38,0))) AS q_g
-              FROM base GROUP BY g
-            ),
-            stepped AS (
-              SELECT sum(s_g::DOUBLE * s_g::DOUBLE / n_g::DOUBLE) OVER (
-                       ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS sb,
-                     row_number() OVER (ORDER BY g) AS rn,
-                     count(*) OVER () AS kk
-              FROM pc
-            ),
-            sf AS (
-              SELECT sb, kk::BIGINT AS kk FROM stepped WHERE rn = kk
-            ),
-            tt AS (
-              SELECT sum(n_g)::BIGINT AS n,
-                     CAST(sum(q_g) AS DECIMAL(38,0)) AS q
-              FROM pc
-            ),
-            msw AS (
-              SELECT n, kk,
-                     (q::DOUBLE - sb) / (n::DOUBLE - kk::DOUBLE) AS msw
-              FROM tt, sf
-            )
-            SELECT a.g AS g_a, b.g AS g_b,
-              a.n_g AS n_a, b.n_g AS n_b,
-              floor(a.s_g::DOUBLE / a.n_g::DOUBLE / 100.0 * 1e6) / 1e6
-                AS mean_a_q6,
-              floor(b.s_g::DOUBLE / b.n_g::DOUBLE / 100.0 * 1e6) / 1e6
-                AS mean_b_q6,
-              floor((a.s_g::DOUBLE / a.n_g::DOUBLE
-                     - b.s_g::DOUBLE / b.n_g::DOUBLE) / 100.0 * 1e6) / 1e6
-                AS diff_q6,
-              CASE WHEN msw > 0 AND n > kk THEN
-                floor(abs(a.s_g::DOUBLE / a.n_g::DOUBLE
-                          - b.s_g::DOUBLE / b.n_g::DOUBLE)
-                      / sqrt(msw / 2.0
-                             * (1.0 / a.n_g::DOUBLE
-                                + 1.0 / b.n_g::DOUBLE))
-                      * 1e6) / 1e6
-              END AS q_q6
-            FROM pc a, pc b, msw
-            WHERE a.g < b.g
-        """)
-def _q_tukey(spark, sf_dir):
-    """Tukey-Kramer HSD pairwise mean comparisons (functions/stats.py
-    tukey_hsd): WHICH event types differ in mean value, sharing one
-    MSW error term — the follow-up q_anova's single F cannot answer.
-    One groupBy to the k-row class table, broadcast self-join on
-    g_a < g_b, fixed-order stepped MSW accumulation."""
-
-    ev = read(spark, sf_dir, "events")
-    return tukey_hsd(ev, "value", "event_type", quantize=2)
-
-
-@query(oracle="""
             WITH q AS (
               SELECT user_id, ts, event_id,
                      CAST(round(value * 100) AS BIGINT) AS x
@@ -2569,137 +1965,6 @@ def _q_correlogram(spark, sf_dir):
     return correlogram(
         ev, ("user_id",), ("ts", "event_id"), "value", max_lag=4
     )
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v,
-                     o_orderpriority AS g
-              FROM orders
-              WHERE o_totalprice IS NOT NULL
-                AND o_orderpriority IS NOT NULL
-            ),
-            pc AS (
-              SELECT g, count(*)::BIGINT AS n_g,
-                     sum(v)::BIGINT AS s_g,
-                     sum(CAST(v AS DECIMAL(38,0))
-                         * CAST(v AS DECIMAL(38,0))) AS q_g
-              FROM base GROUP BY g
-            ),
-            stepped AS (
-              SELECT sum(s_g::DOUBLE * s_g::DOUBLE / n_g::DOUBLE) OVER (
-                       ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS sb,
-                     row_number() OVER (ORDER BY g) AS rn,
-                     count(*) OVER () AS kk
-              FROM pc
-            ),
-            sf AS (SELECT sb, kk::BIGINT AS k FROM stepped WHERE rn = kk),
-            tt AS (
-              SELECT sum(n_g)::BIGINT AS n, sum(s_g)::BIGINT AS s,
-                     CAST(sum(q_g) AS DECIMAL(38,0)) AS q
-              FROM pc
-            )
-            SELECT n, k,
-                   CAST(floor((sb - s::DOUBLE * s::DOUBLE / n::DOUBLE)
-                        / 1e6) AS BIGINT) AS ssb_m6,
-                   CAST(floor((q::DOUBLE - sb) / 1e6) AS BIGINT)
-                     AS ssw_m6,
-                   CASE WHEN k > 1 AND (q::DOUBLE - sb) > 0 THEN
-                     floor(((sb - s::DOUBLE * s::DOUBLE / n::DOUBLE)
-                            / (k::DOUBLE - 1.0))
-                           / ((q::DOUBLE - sb) / (n::DOUBLE - k::DOUBLE))
-                           * 1e6) / 1e6
-                   END AS f_q6
-            FROM tt, sf
-        """)
-def _q_anova(spark, sf_dir):
-    """One-way ANOVA F across the five order priorities on totalprice
-    (functions/stats.py anova_oneway) — the parametric mean-shift
-    companion to q_kruskal_wallis on the same contrast. Per-class sums
-    exact (S_g BIGINT, Q_g DECIMAL so neither engine's overflow rules
-    leak in); the between term accumulates in fixed class order."""
-
-    o = read(spark, sf_dir, "orders")
-    return anova_oneway(o, "o_totalprice", "o_orderpriority", quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     event_type AS g
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-            ),
-            vg AS (
-              SELECT g, v, count(*)::BIGINT AS c FROM base GROUP BY g, v
-            ),
-            ranked AS (
-              SELECT g, v, c,
-                     coalesce(sum(c) OVER (
-                       PARTITION BY g ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0)::BIGINT AS cb,
-                     sum(c) OVER (PARTITION BY g)::BIGINT AS n_g
-              FROM vg
-            ),
-            med AS (
-              SELECT g,
-                     sum(v * (
-                       (CASE WHEN cb < (n_g + 1) // 2
-                               AND cb + c >= (n_g + 1) // 2
-                             THEN 1 ELSE 0 END)
-                       + (CASE WHEN cb < n_g // 2 + 1
-                                 AND cb + c >= n_g // 2 + 1
-                               THEN 1 ELSE 0 END)
-                     ))::BIGINT AS med2
-              FROM ranked GROUP BY g
-            ),
-            z AS (
-              SELECT vg.g, vg.c, abs(2 * vg.v - med.med2)::BIGINT AS z2
-              FROM vg JOIN med ON vg.g = med.g
-            ),
-            pc AS (
-              SELECT g, sum(c)::BIGINT AS n_g,
-                     sum(c * z2)::BIGINT AS zs,
-                     sum(CAST(c AS DECIMAL(38,0))
-                         * CAST(z2 AS DECIMAL(38,0))
-                         * CAST(z2 AS DECIMAL(38,0))) AS q_g
-              FROM z GROUP BY g
-            ),
-            stepped AS (
-              SELECT sum(zs::DOUBLE * zs::DOUBLE / n_g::DOUBLE) OVER (
-                       ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS sb,
-                     row_number() OVER (ORDER BY g) AS rn,
-                     count(*) OVER () AS kk
-              FROM pc
-            ),
-            sf AS (SELECT sb, kk::BIGINT AS k FROM stepped WHERE rn = kk),
-            tt AS (
-              SELECT sum(n_g)::BIGINT AS n, sum(zs)::BIGINT AS z,
-                     CAST(sum(q_g) AS DECIMAL(38,0)) AS q
-              FROM pc
-            )
-            SELECT n, k,
-                   CASE WHEN k > 1 AND (q::DOUBLE - sb) > 0 THEN
-                     floor(((n::DOUBLE - k::DOUBLE) / (k::DOUBLE - 1.0))
-                           * (sb - z::DOUBLE * z::DOUBLE / n::DOUBLE)
-                           / (q::DOUBLE - sb) * 1e6) / 1e6
-                   END AS w_q6
-            FROM tt, sf
-        """)
-def _q_levene(spark, sf_dir):
-    """Brown-Forsythe equal-variance test across event types on the
-    event value (functions/stats.py levene_bf) — the homoscedasticity
-    gate before q_anova's F is trusted. Per-class DOUBLED medians via
-    the exact integer rank-reach test; deviations stay BIGINT; the
-    doubling cancels in W."""
-
-    ev = read(spark, sf_dir, "events")
-    return levene_bf(ev, "value", "event_type", quantize=2)
 
 
 @query(oracle="""
@@ -3015,65 +2280,6 @@ def _q_cochran_q(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH cells AS (
-              SELECT o_custkey % 50 AS subj, o_orderpriority AS trt,
-                     sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS v
-              FROM orders GROUP BY 1, 2
-            ),
-            ranked AS (
-              SELECT subj, trt,
-                     (2 * rank() OVER (PARTITION BY subj ORDER BY v)
-                      + count(*) OVER (PARTITION BY subj, v)
-                      - 1)::BIGINT AS r2
-              FROM cells
-            ),
-            scal AS (
-              SELECT sum(r2 * r2)::BIGINT AS a4,
-                     count(DISTINCT subj)::BIGINT AS n_subj,
-                     count(DISTINCT trt)::BIGINT AS k
-              FROM ranked
-            ),
-            per_trt AS (
-              SELECT trt, sum(r2)::BIGINT AS r2_sum
-              FROM ranked GROUP BY trt
-            ),
-            s AS (
-              SELECT sum((r2_sum - n_subj * (k + 1))
-                         * (r2_sum - n_subj * (k + 1)))::BIGINT AS s4,
-                     max(a4) AS a4,
-                     max(n_subj) AS n_subjects,
-                     max(k) AS k
-              FROM per_trt, scal
-            )
-            SELECT n_subjects, k,
-                   CASE WHEN a4 > n_subjects * k * (k + 1) * (k + 1) THEN
-                     floor((k - 1)::DOUBLE * s4::DOUBLE
-                           / (a4 - n_subjects * k * (k + 1) * (k + 1))::DOUBLE
-                           * 1e6) / 1e6
-                   END AS q_q6
-            FROM s
-        """)
-def _q_friedman(spark, sf_dir):
-    """Friedman rank test over per-(customer-bucket, order-priority)
-    total spend blocks (functions/stats.py friedman_test) — the
-    repeated-measures companion to q_kruskal_wallis: ranks live WITHIN
-    each subject (window partition size = k, never corpus-wide), the
-    doubled-rank identity keeps S4/A4/C4 exact BIGINTs."""
-
-    o = read(spark, sf_dir, "orders")
-    blocks = o.groupBy(
-        (F.col("o_custkey") % 50).alias("subj"),
-        F.col("o_orderpriority").alias("trt"),
-    ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        ).alias("spend")
-    )
-    return friedman_test(blocks, "subj", "trt", "spend", quantize=0)
-
-
-@query(oracle="""
             WITH base AS (
               SELECT c_nationkey AS g,
                      CAST(round(c_acctbal * 100) AS BIGINT) AS v
@@ -3130,76 +2336,6 @@ def _q_hodges_lehmann(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT o_orderpriority AS g,
-                     CAST(round(o_totalprice * 100) AS BIGINT) AS v
-              FROM orders
-              WHERE o_orderpriority IS NOT NULL
-                AND o_totalprice IS NOT NULL
-            ),
-            cnt AS (
-              SELECT g, v, count(*)::BIGINT AS c FROM base GROUP BY g, v
-            ),
-            grid AS (
-              SELECT gg.g, vv.v, coalesce(cnt.c, 0)::BIGINT AS c
-              FROM (SELECT DISTINCT g FROM cnt) gg
-              CROSS JOIN (SELECT DISTINCT v FROM cnt) vv
-              LEFT JOIN cnt ON cnt.g = gg.g AND cnt.v = vv.v
-            ),
-            cum AS (
-              SELECT g, v, c,
-                     coalesce(sum(c) OVER (
-                       PARTITION BY g ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cumb
-              FROM grid
-            ),
-            pref AS (
-              SELECT g, v, c,
-                     coalesce(sum(cumb) OVER (
-                       PARTITION BY v ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS a,
-                     coalesce(sum(c) OVER (
-                       PARTITION BY v ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS b
-              FROM cum
-            ),
-            j2t AS (SELECT sum(c * (2 * a + b))::BIGINT AS j2 FROM pref),
-            sizes AS (SELECT g, sum(c)::BIGINT AS ng FROM cnt GROUP BY g),
-            mom AS (
-              SELECT sum(ng)::BIGINT AS n,
-                     count(*)::BIGINT AS k,
-                     sum(ng * ng)::BIGINT AS sn2,
-                     sum(ng * ng * (2 * ng + 3))::BIGINT AS sn23
-              FROM sizes
-            )
-            SELECT n, k, j2,
-                   (n * n - sn2)::BIGINT AS mean4,
-                   (n * n * (2 * n + 3) - sn23)::BIGINT AS var72,
-                   CASE WHEN n * n * (2 * n + 3) - sn23 > 0 THEN
-                     floor((2 * j2 - (n * n - sn2))::DOUBLE
-                           / (4.0 * sqrt((n * n * (2 * n + 3)
-                                          - sn23)::DOUBLE / 72.0))
-                           * 1e6) / 1e6
-                   END AS z_q6
-            FROM j2t, mom
-        """)
-def _q_jonckheere(spark, sf_dir):
-    """Jonckheere-Terpstra ordered-trend test of totalprice along the
-    five order priorities (functions/stats.py jonckheere_terpstra) —
-    '1-URGENT'..'5-LOW' string order IS the dose order. Doubled J2
-    from two windows over the dense (group x distinct-value) grid,
-    null moments kept integral (mean4, var72)."""
-
-    o = read(spark, sf_dir, "orders")
-    return jonckheere_terpstra(
-        o, "o_totalprice", "o_orderpriority", quantize=2
-    )
-
-
-@query(oracle="""
             WITH cells AS (
               SELECT o_custkey % 50 AS subj, o_orderpriority AS trt,
                      sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
@@ -3237,10 +2373,10 @@ def _q_jonckheere(spark, sf_dir):
             FROM agg
         """)
 def _q_page_trend(spark, sf_dir):
-    """Page's L ordered-trend test over the q_friedman blocks
-    (functions/stats.py page_trend_test): within-subject doubled ranks
-    weighted by the treatment ordinal; L2 BIGINT, z one float
-    expression off integral moments e4/v144."""
+    """Page's L ordered-trend test over (customer % 50) x order-priority
+    spend blocks (functions/stats.py page_trend_test): within-subject
+    doubled ranks weighted by the treatment ordinal; L2 BIGINT, z one
+    float expression off integral moments e4/v144."""
 
     o = read(spark, sf_dir, "orders")
     blocks = o.groupBy(
@@ -3601,223 +2737,6 @@ def _q_agreement(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH s AS (
-              SELECT event_type AS g,
-                     CAST(round(value * 100, 0) AS BIGINT) AS x,
-                     ts, event_id
-              FROM events WHERE value IS NOT NULL
-            ),
-            l AS (
-              SELECT g, x,
-                lag(x, 1) OVER w AS l1, lag(x, 2) OVER w AS l2,
-                lag(x, 3) OVER w AS l3, lag(x, 4) OVER w AS l4,
-                lag(x, 5) OVER w AS l5
-              FROM s WINDOW w AS (PARTITION BY g ORDER BY ts, event_id)
-            ),
-            a AS (
-              SELECT g, count(*)::BIGINT AS n,
-                sum(x)::BIGINT AS sx, sum(x * x)::BIGINT AS sxx,
-                sum(CASE WHEN l1 IS NOT NULL THEN x * l1 END)::BIGINT AS c1,
-                sum(CASE WHEN l1 IS NOT NULL THEN x END)::BIGINT AS h1,
-                sum(l1)::BIGINT AS t1,
-                sum(CASE WHEN l2 IS NOT NULL THEN x * l2 END)::BIGINT AS c2,
-                sum(CASE WHEN l2 IS NOT NULL THEN x END)::BIGINT AS h2,
-                sum(l2)::BIGINT AS t2,
-                sum(CASE WHEN l3 IS NOT NULL THEN x * l3 END)::BIGINT AS c3,
-                sum(CASE WHEN l3 IS NOT NULL THEN x END)::BIGINT AS h3,
-                sum(l3)::BIGINT AS t3,
-                sum(CASE WHEN l4 IS NOT NULL THEN x * l4 END)::BIGINT AS c4,
-                sum(CASE WHEN l4 IS NOT NULL THEN x END)::BIGINT AS h4,
-                sum(l4)::BIGINT AS t4,
-                sum(CASE WHEN l5 IS NOT NULL THEN x * l5 END)::BIGINT AS c5,
-                sum(CASE WHEN l5 IS NOT NULL THEN x END)::BIGINT AS h5,
-                sum(l5)::BIGINT AS t5
-              FROM l GROUP BY g
-            ),
-            r AS (
-              SELECT g, n, n::DOUBLE AS nd,
-                sx::DOUBLE / n::DOUBLE AS xb,
-                sxx::DOUBLE - n::DOUBLE * (sx::DOUBLE / n::DOUBLE)
-                  * (sx::DOUBLE / n::DOUBLE) AS den,
-                c1::DOUBLE AS c1d, h1::DOUBLE AS h1d, t1::DOUBLE AS t1d,
-                c2::DOUBLE AS c2d, h2::DOUBLE AS h2d, t2::DOUBLE AS t2d,
-                c3::DOUBLE AS c3d, h3::DOUBLE AS h3d, t3::DOUBLE AS t3d,
-                c4::DOUBLE AS c4d, h4::DOUBLE AS h4d, t4::DOUBLE AS t4d,
-                c5::DOUBLE AS c5d, h5::DOUBLE AS h5d, t5::DOUBLE AS t5d
-              FROM a
-            ),
-            rr AS (
-              SELECT g, n, nd,
-                (c1d - xb * (h1d + t1d) + (nd - 1.0) * xb * xb) / den AS r1,
-                (c2d - xb * (h2d + t2d) + (nd - 2.0) * xb * xb) / den AS r2,
-                (c3d - xb * (h3d + t3d) + (nd - 3.0) * xb * xb) / den AS r3,
-                (c4d - xb * (h4d + t4d) + (nd - 4.0) * xb * xb) / den AS r4,
-                (c5d - xb * (h5d + t5d) + (nd - 5.0) * xb * xb) / den AS r5
-              FROM r
-            ),
-            e AS (
-              SELECT g, n, nd, r1, r2, r3, r4, r5,
-                r1 * r1 / (nd - 1.0) AS e1,
-                r2 * r2 / (nd - 2.0) AS e2,
-                r3 * r3 / (nd - 3.0) AS e3,
-                r4 * r4 / (nd - 4.0) AS e4,
-                r5 * r5 / (nd - 5.0) AS e5
-              FROM rr
-            )
-            SELECT g AS event_type, n, 1 AS lag,
-              floor(r1 * 1e6) / 1e6 AS r_q6,
-              floor(nd * (nd + 2.0) * (e1) * 1e6) / 1e6 AS q_stat_q6
-            FROM e
-            UNION ALL
-            SELECT g, n, 2,
-              floor(r2 * 1e6) / 1e6,
-              floor(nd * (nd + 2.0) * (e1 + e2) * 1e6) / 1e6
-            FROM e
-            UNION ALL
-            SELECT g, n, 3,
-              floor(r3 * 1e6) / 1e6,
-              floor(nd * (nd + 2.0) * (e1 + e2 + e3) * 1e6) / 1e6
-            FROM e
-            UNION ALL
-            SELECT g, n, 4,
-              floor(r4 * 1e6) / 1e6,
-              floor(nd * (nd + 2.0) * (e1 + e2 + e3 + e4) * 1e6) / 1e6
-            FROM e
-            UNION ALL
-            SELECT g, n, 5,
-              floor(r5 * 1e6) / 1e6,
-              floor(nd * (nd + 2.0) * (e1 + e2 + e3 + e4 + e5) * 1e6)
-                / 1e6
-            FROM e
-        """)
-def _q_ljung_box(spark, sf_dir):
-    """Ljung-Box whiteness test on the per-type value series
-    (functions/stats.py ljung_box), lags 1-5 ordered by (ts,
-    event_id): joint autocorrelation read beyond q_autocorr's single
-    lag. Integer lag-product sums per lag; Q accumulates over the
-    5-row lag table in fixed order."""
-
-    ev = read(spark, sf_dir, "events")
-    return ljung_box(
-        ev, ("event_type",), ("ts", "event_id"), "value",
-        max_lag=5, quantize=2,
-    )
-
-
-@query(oracle="""
-            WITH s AS (
-              SELECT event_type AS g,
-                     CAST(round(value * 100, 0) AS BIGINT) AS x,
-                     ts, event_id
-              FROM events WHERE value IS NOT NULL
-            ),
-            p AS (
-              SELECT g, x,
-                sum(x) OVER (PARTITION BY g ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS cx,
-                row_number() OVER (PARTITION BY g
-                                   ORDER BY ts, event_id) AS t
-              FROM s
-            ),
-            a AS (
-              SELECT g, count(*)::BIGINT AS n,
-                sum(x)::BIGINT AS sx, sum(x * x)::BIGINT AS sxx,
-                sum(cx * cx) AS scx2, sum(cx * t) AS scxt,
-                sum(t * t) AS st2
-              FROM p GROUP BY g
-            ),
-            f AS (
-              SELECT g, n, n::DOUBLE AS nd, sx::DOUBLE AS sxd,
-                sxx::DOUBLE AS sxxd, scx2::DOUBLE AS scx2d,
-                scxt::DOUBLE AS scxtd, st2::DOUBLE AS st2d
-              FROM a
-            )
-            SELECT g AS event_type, n,
-              CASE WHEN (sxxd - sxd * (sxd / nd)) / nd > 0 THEN
-                floor((scx2d - 2.0 * (sxd / nd) * scxtd
-                       + (sxd / nd) * (sxd / nd) * st2d)
-                      / (nd * nd * ((sxxd - sxd * (sxd / nd)) / nd))
-                      * 1e6) / 1e6
-              END AS kpss_q6
-            FROM f
-        """)
-def _q_kpss(spark, sf_dir):
-    """KPSS level-stationarity statistic per event type
-    (functions/stats.py kpss_level): partial-sum wander of the
-    demeaned value series, the trend-drift complement to
-    q_ljung_box's whiteness read. The sum of squared partial sums is
-    expanded algebraically into three DECIMAL(38,0) prefix-sum
-    aggregates — no float accumulates over rows."""
-
-    ev = read(spark, sf_dir, "events")
-    return kpss_level(
-        ev, ("event_type",), ("ts", "event_id"), "value", quantize=2
-    )
-
-
-@query(oracle="""
-            WITH s AS (
-              SELECT event_type AS g,
-                     CAST(round(value * 100, 0) AS BIGINT) AS x,
-                     ts, event_id
-              FROM events WHERE value IS NOT NULL
-            ),
-            p AS (
-              SELECT g, x,
-                sum(x) OVER (PARTITION BY g ORDER BY ts, event_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS cx,
-                row_number() OVER (PARTITION BY g
-                                   ORDER BY ts, event_id) AS t
-              FROM s
-            ),
-            p2 AS (
-              SELECT g, x, t,
-                cx - coalesce(lag(cx, 5) OVER (PARTITION BY g
-                                               ORDER BY t), 0) AS y
-              FROM p
-            ),
-            a AS (
-              SELECT g, count(*)::BIGINT AS n,
-                sum(x)::BIGINT AS sx, sum(x * x)::BIGINT AS sxx,
-                sum(CASE WHEN t >= 5 THEN y END)::BIGINT AS sy,
-                sum(CASE WHEN t >= 5 THEN y * y END)::BIGINT AS syy,
-                sum(CASE WHEN t >= 5 THEN 1 ELSE 0 END)::BIGINT
-                  AS n_windows
-              FROM p2 GROUP BY g
-            ),
-            f AS (
-              SELECT g, n, n_windows,
-                sxx::DOUBLE / n::DOUBLE
-                  - (sx::DOUBLE / n::DOUBLE)
-                    * (sx::DOUBLE / n::DOUBLE) AS var1,
-                syy::DOUBLE / n_windows::DOUBLE
-                  - (sy::DOUBLE / n_windows::DOUBLE)
-                    * (sy::DOUBLE / n_windows::DOUBLE) AS varq
-              FROM a
-            )
-            SELECT g AS event_type, n, n_windows,
-              CASE WHEN var1 > 0 THEN
-                floor(varq / (5.0 * var1) * 1e6) / 1e6
-              END AS vr_q6
-            FROM f
-        """)
-def _q_variance_ratio(spark, sf_dir):
-    """Lo-MacKinlay variance ratio VR(5) per event type
-    (functions/stats.py variance_ratio): overlapping 5-step-sum
-    variance over 5x the one-step variance — direction-signed
-    random-walk diagnostic next to q_kpss. Overlapping sums off the
-    BIGINT prefix sum; both variances integer-moment exact."""
-
-    ev = read(spark, sf_dir, "events")
-    return variance_ratio(
-        ev, ("event_type",), ("ts", "event_id"), "value",
-        q=5, quantize=2,
-    )
-
-
-@query(oracle="""
             WITH vg AS (
               SELECT source,
                 CAST(round(n_chars::DOUBLE * 1, 0) AS BIGINT) AS v,
@@ -3864,155 +2783,6 @@ def _q_inequality(spark, sf_dir):
 
     d = read(spark, sf_dir, "documents")
     return inequality_indices(d, "n_chars", ("source",), quantize=0)
-
-
-@query(oracle="""
-            WITH arms AS (
-              SELECT CASE WHEN user_id % 10 < 4 THEN 'a'
-                          WHEN user_id % 10 < 7 THEN 'b'
-                          ELSE 'c' END AS arm
-              FROM events
-            ),
-            obs AS (
-              SELECT arm, count(*)::BIGINT AS o FROM arms GROUP BY arm
-            ),
-            expd AS (
-              SELECT * FROM (VALUES ('a', 4), ('b', 3), ('c', 3))
-                t(arm, w)
-            ),
-            j AS (
-              SELECT coalesce(obs.arm, expd.arm) AS arm,
-                     coalesce(o, 0) AS o, w
-              FROM obs FULL OUTER JOIN expd ON obs.arm = expd.arm
-            ),
-            tot AS (
-              SELECT sum(CASE WHEN w IS NOT NULL THEN o END)::BIGINT
-                       AS nm,
-                     coalesce(sum(CASE WHEN w IS NULL THEN o END),
-                              0)::BIGINT AS nu
-              FROM j
-            ),
-            cells AS (
-              SELECT arm, o, w, nm, nu FROM j, tot WHERE w IS NOT NULL
-            ),
-            stepped AS (
-              SELECT nm, nu,
-                sum((o::DOUBLE - nm::DOUBLE * w::DOUBLE / 10.0)
-                    * (o::DOUBLE - nm::DOUBLE * w::DOUBLE / 10.0)
-                    / (nm::DOUBLE * w::DOUBLE / 10.0))
-                  OVER (ORDER BY arm ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS chi2,
-                row_number() OVER (ORDER BY arm) AS rn,
-                count(*) OVER () AS k
-              FROM cells
-            )
-            SELECT nm AS n, k::BIGINT AS k_arms, nu AS n_unexpected,
-              floor(chi2 * 1e6) / 1e6 AS chi2_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_srm(spark, sf_dir):
-    """Sample-ratio-mismatch chi2 for the 40/30/30 assignment derived
-    from user_id % 10 (functions/stats.py srm_check) — the gate every
-    A/B readout (q_cuped, q_welch, q_ab_test) must pass first.
-    Expected counts are exact rationals off the designed weights; the
-    chi2 sum runs in fixed arm order."""
-
-    ev = read(spark, sf_dir, "events").select(
-        F.when(F.col("user_id") % 10 < 4, F.lit("a"))
-        .when(F.col("user_id") % 10 < 7, F.lit("b"))
-        .otherwise(F.lit("c"))
-        .alias("arm")
-    )
-    return srm_check(ev, "arm", {"a": 4, "b": 3, "c": 3})
-
-
-@query(oracle="""
-            WITH daily AS (
-              SELECT event_type AS g, date_trunc('day', ts) AS day,
-                     count(*)::BIGINT AS x
-              FROM events GROUP BY event_type, date_trunc('day', ts)
-            ),
-            l AS (
-              SELECT g, day, x,
-                lag(x, 7) OVER w AS f,
-                lag(x, 1) OVER w AS p,
-                row_number() OVER w AS rn,
-                count(*) OVER (PARTITION BY g) AS k
-              FROM daily WINDOW w AS (PARTITION BY g ORDER BY day)
-            ),
-            s AS (
-              SELECT g, x, f, p, rn, k,
-                sum(CASE WHEN f IS NOT NULL AND (abs(x) + abs(f)) > 0
-                    THEN 2.0 * abs(x - f)::DOUBLE
-                         / (abs(x) + abs(f))::DOUBLE
-                    ELSE 0.0 END)
-                  OVER (PARTITION BY g ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS ss,
-                sum(CASE WHEN f IS NOT NULL AND x <> 0
-                    THEN abs(x - f)::DOUBLE / abs(x)::DOUBLE
-                    ELSE 0.0 END)
-                  OVER (PARTITION BY g ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS sm
-              FROM l
-            ),
-            a AS (
-              SELECT g,
-                max(k)::BIGINT AS n,
-                sum(CASE WHEN f IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-                  AS n_eval,
-                sum(CASE WHEN f IS NOT NULL THEN abs(x - f)
-                    END)::BIGINT AS sae,
-                sum(CASE WHEN f IS NOT NULL
-                    THEN (x - f) * (x - f) END)::BIGINT AS sse,
-                sum(CASE WHEN f IS NOT NULL THEN
-                      CASE WHEN x - f >= 0 THEN 9 * (x - f)
-                           ELSE -(x - f) END
-                    END)::BIGINT AS spin,
-                sum(CASE WHEN x <> 0 AND f IS NOT NULL THEN 1 ELSE 0
-                    END)::BIGINT AS n_mape,
-                sum(CASE WHEN p IS NOT NULL THEN abs(x - p)
-                    END)::BIGINT AS snv,
-                sum(CASE WHEN p IS NOT NULL THEN 1 ELSE 0 END)::BIGINT
-                  AS n_nv,
-                max(CASE WHEN rn = k THEN ss END) AS smape_sum,
-                max(CASE WHEN rn = k THEN sm END) AS mape_sum
-              FROM s GROUP BY g
-            )
-            SELECT g AS event_type, n, n_eval,
-              floor(sae::DOUBLE / n_eval::DOUBLE / 1.0 * 1e6) / 1e6
-                AS mae_q6,
-              floor(sqrt(sse::DOUBLE / n_eval::DOUBLE) / 1.0 * 1e6)
-                / 1e6 AS rmse_q6,
-              floor(smape_sum / n_eval::DOUBLE * 1e6) / 1e6
-                AS smape_q6,
-              CASE WHEN n_mape > 0 THEN
-                floor(mape_sum / n_mape::DOUBLE * 1e6) / 1e6
-              END AS mape_q6,
-              CASE WHEN snv > 0 THEN
-                floor((sae::DOUBLE / n_eval::DOUBLE)
-                      / (snv::DOUBLE / n_nv::DOUBLE) * 1e6) / 1e6
-              END AS mase_q6,
-              floor(spin::DOUBLE / (10.0 * n_eval::DOUBLE) / 1.0 * 1e6)
-                / 1e6 AS pinball90_q6
-            FROM a WHERE n_eval > 0
-        """)
-def _q_forecast_accuracy(spark, sf_dir):
-    """Seasonal-naive forecast scorecard per event type
-    (functions/stats.py forecast_accuracy): MAE/RMSE/sMAPE/MAPE/MASE/
-    pinball(0.9) of 'repeat last week' on the daily event-count
-    series — the baseline every forecasting claim must beat. Integer
-    daily counts make all but the percentage metrics BIGINT-exact;
-    sMAPE/MAPE fold through the stepped day-ordered window."""
-
-    ev = read(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    return forecast_accuracy(
-        daily, ("event_type",), ("day",), "cnt", season=7, quantize=0
-    )
 
 
 @query(oracle="""
@@ -4103,1345 +2873,6 @@ def _q_brunner_munzel(spark, sf_dir):
     c = read(spark, sf_dir, "customer")
     return brunner_munzel(
         c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH pre AS (
-              SELECT event_type AS g,
-                CAST(round(value * 100, 0) AS BIGINT) AS x,
-                row_number() OVER (PARTITION BY event_type
-                                   ORDER BY ts, event_id) - 1 AS t
-              FROM events WHERE value IS NOT NULL
-            ),
-            pm AS (
-              SELECT g, x, m, t // m AS b, t % m + 1 AS j
-              FROM pre, (SELECT unnest([8, 16, 32, 64]) AS m)
-            ),
-            r_ AS (
-              SELECT g, m, b, j,
-                sum(x) OVER (PARTITION BY g, m, b ORDER BY j
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS cx,
-                sum(x) OVER (PARTITION BY g, m, b) AS sx,
-                sum(x * x) OVER (PARTITION BY g, m, b) AS sxx,
-                count(*) OVER (PARTITION BY g, m, b) AS cnt
-              FROM pm
-            ),
-            complete AS (SELECT * FROM r_ WHERE cnt = m),
-            blocks AS (
-              SELECT g, m, b,
-                max(cx::DOUBLE - j::DOUBLE * sx::DOUBLE / m::DOUBLE)
-                  AS smax,
-                min(cx::DOUBLE - j::DOUBLE * sx::DOUBLE / m::DOUBLE)
-                  AS smin,
-                max(sx)::BIGINT AS bsx, max(sxx)::BIGINT AS bsxx
-              FROM complete GROUP BY g, m, b
-            ),
-            rs AS (
-              SELECT g, m, b,
-                (smax - smin)
-                  / sqrt(bsxx::DOUBLE / m::DOUBLE
-                         - (bsx::DOUBLE / m::DOUBLE)
-                           * (bsx::DOUBLE / m::DOUBLE)) AS rsv
-              FROM blocks
-              WHERE bsxx::DOUBLE / m::DOUBLE
-                    - (bsx::DOUBLE / m::DOUBLE)
-                      * (bsx::DOUBLE / m::DOUBLE) > 0
-            ),
-            stepped AS (
-              SELECT g, m,
-                sum(rsv) OVER (PARTITION BY g, m ORDER BY b
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS srs,
-                row_number() OVER (PARTITION BY g, m ORDER BY b) AS rn,
-                count(*) OVER (PARTITION BY g, m) AS nb
-              FROM rs
-            ),
-            per_m AS (
-              SELECT g, m, nb::BIGINT AS n_blocks,
-                     srs / nb::DOUBLE AS rs_mean
-              FROM stepped WHERE rn = nb
-            ),
-            fitted AS (
-              SELECT g, m, n_blocks, rs_mean,
-                sum(ln(m::DOUBLE)) OVER w AS sx2,
-                sum(ln(rs_mean)) OVER w AS sy,
-                sum(ln(m::DOUBLE) * ln(rs_mean)) OVER w AS sxy,
-                sum(ln(m::DOUBLE) * ln(m::DOUBLE)) OVER w AS sxx2,
-                row_number() OVER (PARTITION BY g ORDER BY m) AS rn,
-                count(*) OVER (PARTITION BY g) AS k
-              FROM per_m
-              WINDOW w AS (PARTITION BY g ORDER BY m
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND CURRENT ROW)
-            ),
-            h AS (
-              SELECT g,
-                CASE WHEN k >= 2 THEN
-                  (k::DOUBLE * sxy - sx2 * sy)
-                    / (k::DOUBLE * sxx2 - sx2 * sx2)
-                END AS hh
-              FROM fitted WHERE rn = k
-            )
-            SELECT per_m.g AS event_type, m AS block_m, n_blocks,
-              floor(rs_mean * 1e6) / 1e6 AS rs_mean_q6,
-              floor(hh * 1e6) / 1e6 AS hurst_q6
-            FROM per_m JOIN h ON per_m.g = h.g
-        """)
-def _q_hurst(spark, sf_dir):
-    """Hurst exponent by rescaled-range analysis of the per-type value
-    series (functions/stats.py hurst_rs), block sizes 8-64 — the
-    long-range-dependence probe beyond q_autocorr's fixed lag.
-    Block partial sums are BIGINT; R, the block means and the K-point
-    log-log OLS all fold through stepped ordered windows."""
-
-    ev = read(spark, sf_dir, "events")
-    return hurst_rs(
-        ev, ("event_type",), ("ts", "event_id"), "value",
-        block_sizes=(8, 16, 32, 64), quantize=2,
-    )
-
-
-@query(oracle="""
-            WITH cells AS (
-              SELECT o_custkey % 50 AS subj, o_orderpriority AS trt,
-                     sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS v
-              FROM orders GROUP BY 1, 2
-            ),
-            ranked AS (
-              SELECT subj, trt,
-                     (2 * rank() OVER (PARTITION BY subj ORDER BY v)
-                      + count(*) OVER (PARTITION BY subj, v)
-                      - 1)::BIGINT AS r2
-              FROM cells
-            ),
-            scal AS (
-              SELECT sum(r2 * r2)::BIGINT AS a4,
-                     count(DISTINCT subj)::BIGINT AS n_subj,
-                     count(DISTINCT trt)::BIGINT AS k
-              FROM ranked
-            ),
-            per_trt AS (
-              SELECT trt, sum(r2)::BIGINT AS r2_sum
-              FROM ranked GROUP BY trt
-            ),
-            s AS (
-              SELECT sum((r2_sum - n_subj * (k + 1))
-                         * (r2_sum - n_subj * (k + 1)))::BIGINT AS s4,
-                     max(a4) AS a4,
-                     max(n_subj) AS n_subjects,
-                     max(k) AS k
-              FROM per_trt, scal
-            ),
-            q AS (
-              SELECT n_subjects, k,
-                CASE WHEN a4 > n_subjects * k * (k + 1) * (k + 1) THEN
-                  floor((k - 1)::DOUBLE * s4::DOUBLE
-                        / (a4 - n_subjects * k * (k + 1)
-                           * (k + 1))::DOUBLE * 1e6) / 1e6
-                END AS q_q6
-              FROM s
-            )
-            SELECT n_subjects, k, q_q6,
-              CASE WHEN q_q6 IS NOT NULL AND k > 1 THEN
-                floor(q_q6 / (n_subjects::DOUBLE * (k - 1)::DOUBLE)
-                      * 1e6) / 1e6
-              END AS w_q6
-            FROM q
-        """)
-def _q_kendalls_w(spark, sf_dir):
-    """Kendall's W concordance over q_friedman's spend blocks
-    (functions/stats.py kendalls_w): the agreement EFFECT SIZE next
-    to Friedman's significance — W derived from the emitted Q in the
-    same two-step on both engines, so the division is exact by
-    construction."""
-
-    o = read(spark, sf_dir, "orders")
-    blocks = o.groupBy(
-        (F.col("o_custkey") % 50).alias("subj"),
-        F.col("o_orderpriority").alias("trt"),
-    ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        ).alias("spend")
-    )
-    return kendalls_w(blocks, "subj", "trt", "spend", quantize=0)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT c_mktsegment AS g,
-                CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v
-              FROM customer WHERE c_acctbal IS NOT NULL
-            ),
-            mom AS (
-              SELECT g, count(*)::BIGINT AS n, sum(v)::BIGINT AS s,
-                sum(v * v)::BIGINT AS ss
-              FROM base GROUP BY g
-            ),
-            dev AS (
-              SELECT base.g, n, v,
-                abs(v::DOUBLE - s::DOUBLE / n::DOUBLE) AS d,
-                (ss::DOUBLE - s::DOUBLE * (s::DOUBLE / n::DOUBLE))
-                  / (n::DOUBLE - 1.0) AS var
-              FROM base JOIN mom ON base.g = mom.g
-            ),
-            pick AS (
-              SELECT g, n, v, d, var,
-                row_number() OVER (PARTITION BY g
-                                   ORDER BY d DESC, v DESC) AS rn
-              FROM dev
-            )
-            SELECT g AS c_mktsegment, n,
-              v::DOUBLE / 100.0 AS outlier_value_q,
-              CASE WHEN var > 0 THEN
-                floor(d / sqrt(var) * 1e6) / 1e6
-              END AS g_q6
-            FROM pick WHERE rn = 1
-        """)
-def _q_grubbs(spark, sf_dir):
-    """Grubbs' max-studentized-deviate outlier screen on account
-    balance per market segment (functions/stats.py grubbs_test):
-    integer moments, order-independent max over one per-row float,
-    (deviation, value) struct-max argmax with value tie-break."""
-
-    c = read(spark, sf_dir, "customer")
-    return grubbs_test(c, "c_acctbal", ("c_mktsegment",), quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1
-                          ELSE 0 END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-                AND c_acctbal IS NOT NULL
-            ),
-            agg AS (
-              SELECT sum(s)::BIGINT AS n_a,
-                sum(1 - s)::BIGINT AS n_b,
-                sum(s * v)::BIGINT AS sa,
-                sum((1 - s) * v)::BIGINT AS sb,
-                sum(CAST(s * v AS DECIMAL(38,0))
-                    * CAST(v AS DECIMAL(38,0))) AS ssa,
-                sum(CAST((1 - s) * v AS DECIMAL(38,0))
-                    * CAST(v AS DECIMAL(38,0))) AS ssb
-              FROM base
-            ),
-            m AS (
-              SELECT n_a, n_b,
-                n_a::DOUBLE AS na, n_b::DOUBLE AS nb,
-                sa::DOUBLE / n_a::DOUBLE AS ma,
-                sb::DOUBLE / n_b::DOUBLE AS mb,
-                (ssa::DOUBLE - sa::DOUBLE
-                   * (sa::DOUBLE / n_a::DOUBLE))
-                  / (n_a::DOUBLE - 1.0) AS va,
-                (ssb::DOUBLE - sb::DOUBLE
-                   * (sb::DOUBLE / n_b::DOUBLE))
-                  / (n_b::DOUBLE - 1.0) AS vb
-              FROM agg
-            ),
-            m2 AS (
-              SELECT n_a, n_b, na, nb, ma, mb, vb,
-                ((na - 1.0) * va + (nb - 1.0) * vb)
-                  / (na + nb - 2.0) AS sp2
-              FROM m
-            )
-            SELECT n_a, n_b,
-              floor((ma - mb) / 100.0 * 1e6) / 1e6 AS mean_diff_q,
-              CASE WHEN sp2 > 0 THEN
-                floor((ma - mb) / sqrt(sp2) * 1e6) / 1e6
-              END AS d_q6,
-              CASE WHEN sp2 > 0 THEN
-                floor((ma - mb) / sqrt(sp2)
-                      * (1.0 - 3.0 / (4.0 * (na + nb) - 9.0)) * 1e6)
-                  / 1e6
-              END AS g_q6,
-              CASE WHEN vb > 0 THEN
-                floor((ma - mb) / sqrt(vb) * 1e6) / 1e6
-              END AS glass_q6
-            FROM m2
-        """)
-def _q_effect_sizes(spark, sf_dir):
-    """Cohen's d / Hedges' g / Glass's delta for BUILDING vs
-    MACHINERY account balances (functions/stats.py effect_sizes) —
-    the magnitude companion to q_welch's significance. Integer
-    moments in one combinable aggregate; scale-invariant."""
-
-    c = read(spark, sf_dir, "customer")
-    return effect_sizes(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT
-                CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS x,
-                CAST(round(l_quantity * 100, 0) AS BIGINT) AS y,
-                CAST(round(l_discount * 100, 0) AS BIGINT) AS z
-              FROM lineitem
-              WHERE l_extendedprice IS NOT NULL
-                AND l_quantity IS NOT NULL AND l_discount IS NOT NULL
-            ),
-            agg AS (
-              SELECT count(*)::BIGINT AS n,
-                sum(x)::BIGINT AS sx, sum(y)::BIGINT AS sy,
-                sum(z)::BIGINT AS sz,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(x AS DECIMAL(38,0))) AS sxx,
-                sum(CAST(y AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0))) AS syy,
-                sum(CAST(z AS DECIMAL(38,0))
-                    * CAST(z AS DECIMAL(38,0))) AS szz,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(y AS DECIMAL(38,0))) AS sxy,
-                sum(CAST(x AS DECIMAL(38,0))
-                    * CAST(z AS DECIMAL(38,0))) AS sxz,
-                sum(CAST(y AS DECIMAL(38,0))
-                    * CAST(z AS DECIMAL(38,0))) AS syz
-              FROM base
-            ),
-            c AS (
-              SELECT n,
-                sxx::DOUBLE - sx::DOUBLE * sx::DOUBLE / n::DOUBLE
-                  AS cxx,
-                syy::DOUBLE - sy::DOUBLE * sy::DOUBLE / n::DOUBLE
-                  AS cyy,
-                szz::DOUBLE - sz::DOUBLE * sz::DOUBLE / n::DOUBLE
-                  AS czz,
-                sxy::DOUBLE - sx::DOUBLE * sy::DOUBLE / n::DOUBLE
-                  AS cxy,
-                sxz::DOUBLE - sx::DOUBLE * sz::DOUBLE / n::DOUBLE
-                  AS cxz,
-                syz::DOUBLE - sy::DOUBLE * sz::DOUBLE / n::DOUBLE
-                  AS cyz
-              FROM agg
-            ),
-            r AS (
-              SELECT n, cxx, cyy, czz,
-                cxy / sqrt(cxx * cyy) AS rxy,
-                cxz / sqrt(cxx * czz) AS rxz,
-                cyz / sqrt(cyy * czz) AS ryz
-              FROM c
-            ),
-            p AS (
-              SELECT n, cxx, cyy, czz, rxy, rxz, ryz,
-                sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)) AS den
-              FROM r
-            )
-            SELECT n,
-              CASE WHEN cxx > 0 AND cyy > 0 AND czz > 0 THEN
-                floor(rxy * 1e6) / 1e6 END AS r_xy_q6,
-              CASE WHEN cxx > 0 AND cyy > 0 AND czz > 0 THEN
-                floor(rxz * 1e6) / 1e6 END AS r_xz_q6,
-              CASE WHEN cxx > 0 AND cyy > 0 AND czz > 0 THEN
-                floor(ryz * 1e6) / 1e6 END AS r_yz_q6,
-              CASE WHEN cxx > 0 AND cyy > 0 AND czz > 0 AND den > 0
-              THEN
-                floor((rxy - rxz * ryz) / den * 1e6) / 1e6
-              END AS partial_q6
-            FROM p
-        """)
-def _q_partial_corr(spark, sf_dir):
-    """Partial correlation of extended price and quantity controlling
-    for discount (functions/stats.py partial_corr) — does the
-    price-quantity association survive removing the discount channel?
-    Nine DECIMAL(38,0) moments in one aggregate; the three Pearson
-    r's and the partial are fixed float expressions."""
-
-    li = read(spark, sf_dir, "lineitem")
-    return partial_corr(
-        li, "l_extendedprice", "l_quantity", "l_discount", quantize=2
-    )
-
-
-@query(oracle="""
-            WITH fy AS (
-              SELECT source AS f, lang AS y, count(*)::BIGINT AS c
-              FROM documents
-              WHERE source IS NOT NULL AND lang IS NOT NULL
-              GROUP BY source, lang
-            ),
-            per_f AS (
-              SELECT f, sum(c)::BIGINT AS nf,
-                     sum(c * c)::BIGINT AS cf2
-              FROM fy GROUP BY f
-            ),
-            per_y AS (SELECT y, sum(c)::BIGINT AS ny FROM fy GROUP BY y),
-            tot AS (SELECT sum(c)::BIGINT AS n FROM fy),
-            ys AS (
-              SELECT count(*)::BIGINT AS k_labels,
-                     sum(ny * ny)::BIGINT AS sy2,
-                     max(n) AS n
-              FROM per_y, tot
-            ),
-            stepped AS (
-              SELECT
-                sum(cf2::DOUBLE / nf::DOUBLE)
-                  OVER (ORDER BY f ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS sc,
-                row_number() OVER (ORDER BY f) AS rn,
-                count(*) OVER () AS k
-              FROM per_f
-            ),
-            fsum AS (
-              SELECT k::BIGINT AS k_features, sc
-              FROM stepped WHERE rn = k
-            )
-            SELECT n, k_features, k_labels,
-              floor((1.0 - sy2::DOUBLE / (n::DOUBLE * n::DOUBLE))
-                    * 1e6) / 1e6 AS gini_parent_q6,
-              floor((1.0 - sc / n::DOUBLE) * 1e6) / 1e6
-                AS gini_split_q6,
-              floor(((1.0 - sy2::DOUBLE / (n::DOUBLE * n::DOUBLE))
-                     - (1.0 - sc / n::DOUBLE)) * 1e6) / 1e6
-                AS gain_q6
-            FROM ys, fsum
-        """)
-def _q_gini_gain(spark, sf_dir):
-    """CART split score of source -> lang on documents
-    (functions/stats.py gini_gain): Gini impurity drop from splitting
-    the label by the feature — the no-logarithm sibling of
-    q_cond_entropy's information gain; contingency counts only."""
-
-    d = read(spark, sf_dir, "documents")
-    return gini_gain(d, "source", "lang")
-
-
-@query(oracle="""
-            WITH agg AS (
-              SELECT
-                sum(CASE WHEN user_id % 2 = 0
-                         AND event_type = 'purchase'
-                    THEN 1 ELSE 0 END)::BIGINT AS a,
-                sum(CASE WHEN user_id % 2 = 0
-                         AND NOT (event_type = 'purchase')
-                    THEN 1 ELSE 0 END)::BIGINT AS b,
-                sum(CASE WHEN NOT (user_id % 2 = 0)
-                         AND event_type = 'purchase'
-                    THEN 1 ELSE 0 END)::BIGINT AS c,
-                sum(CASE WHEN NOT (user_id % 2 = 0)
-                         AND NOT (event_type = 'purchase')
-                    THEN 1 ELSE 0 END)::BIGINT AS d
-              FROM events
-              WHERE user_id IS NOT NULL AND event_type IS NOT NULL
-            ),
-            f AS (
-              SELECT a, b, c, d, a::DOUBLE AS ad, b::DOUBLE AS bd,
-                     c::DOUBLE AS cd, d::DOUBLE AS dd
-              FROM agg
-            ),
-            m AS (
-              SELECT a, b, c, d,
-                (ad / (ad + bd)) / (cd / (cd + dd)) AS rr,
-                sqrt(1.0 / ad - 1.0 / (ad + bd) + 1.0 / cd
-                     - 1.0 / (cd + dd)) AS serr,
-                ad * dd / (bd * cd) AS orr,
-                sqrt(1.0 / ad + 1.0 / bd + 1.0 / cd + 1.0 / dd)
-                  AS seor
-              FROM f
-            )
-            SELECT a, b, c, d,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(rr * 1e6) / 1e6 END AS rr_q6,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(exp(ln(rr) - 1.96 * serr) * 1e6) / 1e6
-              END AS rr_lo_q6,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(exp(ln(rr) + 1.96 * serr) * 1e6) / 1e6
-              END AS rr_hi_q6,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(orr * 1e6) / 1e6 END AS or_q6,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(exp(ln(orr) - 1.96 * seor) * 1e6) / 1e6
-              END AS or_lo_q6,
-              CASE WHEN a > 0 AND b > 0 AND c > 0 AND d > 0 THEN
-                floor(exp(ln(orr) + 1.96 * seor) * 1e6) / 1e6
-              END AS or_hi_q6
-            FROM m
-        """)
-def _q_risk_ratios(spark, sf_dir):
-    """2x2 relative-risk / odds-ratio card with 95% log CIs
-    (functions/stats.py risk_ratios): does even-user traffic purchase
-    more — the per-stratum read q_mantel_haenszel pools. Four BIGINT
-    cells from one aggregate; Katz/Woolf intervals as fixed float
-    expressions."""
-
-    ev = read(spark, sf_dir, "events").select(
-        (F.col("user_id") % 2 == 0).alias("exposed"),
-        (F.col("event_type") == "purchase").alias("converted"),
-    )
-    return risk_ratios(ev, "exposed", "converted")
-
-
-@query(oracle="""
-            WITH cells AS (
-              SELECT o_custkey % 50 AS subj, o_orderpriority AS trt,
-                     sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS v
-              FROM orders GROUP BY 1, 2
-            ),
-            ranked AS (
-              SELECT subj, trt,
-                     (2 * rank() OVER (PARTITION BY subj ORDER BY v)
-                      + count(*) OVER (PARTITION BY subj, v)
-                      - 1)::BIGINT AS r2
-              FROM cells
-            ),
-            rng AS (
-              SELECT subj, (max(v) - min(v))::BIGINT AS vrange
-              FROM cells GROUP BY subj
-            ),
-            q2 AS (
-              SELECT subj,
-                     (2 * rank() OVER (ORDER BY vrange)
-                      + count(*) OVER (PARTITION BY vrange)
-                      - 1)::BIGINT AS q2
-              FROM rng
-            ),
-            scal AS (
-              SELECT count(DISTINCT subj)::BIGINT AS n_blocks,
-                     count(DISTINCT trt)::BIGINT AS k
-              FROM ranked
-            ),
-            s4 AS (
-              SELECT trt, n_blocks, k,
-                     q2 * (r2 - (k + 1)) AS s4
-              FROM ranked JOIN q2 USING (subj), scal
-            ),
-            per_trt AS (
-              SELECT trt, sum(s4)::BIGINT AS t,
-                     sum(s4 * s4)::BIGINT AS aa,
-                     max(n_blocks) AS n_blocks, max(k) AS k
-              FROM s4 GROUP BY trt
-            ),
-            fin AS (
-              SELECT sum(t * t)::BIGINT AS st2,
-                     sum(aa)::BIGINT AS a16,
-                     max(n_blocks) AS n_blocks, max(k) AS k
-              FROM per_trt
-            )
-            SELECT n_blocks, k,
-              CASE WHEN a16::DOUBLE
-                        > st2::DOUBLE / n_blocks::DOUBLE THEN
-                floor((n_blocks::DOUBLE - 1.0)
-                      * (st2::DOUBLE / n_blocks::DOUBLE)
-                      / (a16::DOUBLE
-                         - st2::DOUBLE / n_blocks::DOUBLE) * 1e6)
-                  / 1e6
-              END AS f_q6
-            FROM fin
-        """)
-def _q_quade(spark, sf_dir):
-    """Quade range-weighted blocked rank test over q_friedman's spend
-    blocks (functions/stats.py quade_test): blocks with bigger spread
-    vote harder. Double-doubled integer construction (S4 = Q2 *
-    (r2 - (k+1))); the 16s cancel in F."""
-
-    o = read(spark, sf_dir, "orders")
-    blocks = o.groupBy(
-        (F.col("o_custkey") % 50).alias("subj"),
-        F.col("o_orderpriority").alias("trt"),
-    ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        ).alias("spend")
-    )
-    return quade_test(blocks, "subj", "trt", "spend", quantize=0)
-
-
-@query(oracle="""
-            WITH daily AS (
-              SELECT event_type AS g, date_trunc('day', ts) AS day,
-                     count(*)::BIGINT AS x
-              FROM events GROUP BY event_type, date_trunc('day', ts)
-            ),
-            pre AS (
-              SELECT g, x,
-                row_number() OVER (PARTITION BY g ORDER BY day) AS t
-              FROM daily
-            ),
-            r_ AS (
-              SELECT g, x, t, ((t - 1) % 7)::INTEGER AS ph,
-                CASE WHEN count(*) OVER w7 = 7 THEN
-                  (sum(x) OVER w7)::DOUBLE / 7.0 END AS trend
-              FROM pre
-              WINDOW w7 AS (PARTITION BY g ORDER BY t
-                            ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-            ),
-            comp AS (
-              SELECT g, x, t, ph, x::DOUBLE - trend AS d
-              FROM r_ WHERE trend IS NOT NULL
-            ),
-            ph_step AS (
-              SELECT g, ph,
-                sum(d) OVER (PARTITION BY g, ph ORDER BY t
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS sd,
-                row_number() OVER (PARTITION BY g, ph ORDER BY t)
-                  AS rn,
-                count(*) OVER (PARTITION BY g, ph) AS np
-              FROM comp
-            ),
-            s_raw AS (
-              SELECT g, ph, sd / np::DOUBLE AS sraw
-              FROM ph_step WHERE rn = np
-            ),
-            s_step AS (
-              SELECT g, ph, sraw,
-                sum(sraw) OVER (PARTITION BY g ORDER BY ph
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  AS cs,
-                row_number() OVER (PARTITION BY g ORDER BY ph) AS rn,
-                count(*) OVER (PARTITION BY g) AS k
-              FROM s_raw
-            ),
-            s_mean AS (
-              SELECT g, cs / k::DOUBLE AS smean
-              FROM s_step WHERE rn = k
-            ),
-            seasonal AS (
-              SELECT s_raw.g AS g, ph, sraw - smean AS s
-              FROM s_raw JOIN s_mean ON s_raw.g = s_mean.g
-            ),
-            joined AS (
-              SELECT comp.g AS g, t, comp.ph AS ph, d,
-                     d - s AS r, x::DOUBLE - s AS xs
-              FROM comp JOIN seasonal
-                ON comp.g = seasonal.g AND comp.ph = seasonal.ph
-            ),
-            var_step AS (
-              SELECT g,
-                sum(d) OVER wt AS s_d, sum(d * d) OVER wt AS s_d2,
-                sum(r) OVER wt AS s_r, sum(r * r) OVER wt AS s_r2,
-                sum(xs) OVER wt AS s_xs,
-                sum(xs * xs) OVER wt AS s_xs2,
-                row_number() OVER (PARTITION BY g ORDER BY t) AS rn,
-                count(*) OVER (PARTITION BY g) AS n
-              FROM joined
-              WINDOW wt AS (PARTITION BY g ORDER BY t
-                            ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND CURRENT ROW)
-            ),
-            lastr AS (SELECT * FROM var_step WHERE rn = n),
-            st AS (
-              SELECT g, n::BIGINT AS n_days,
-                s_d2 / n::DOUBLE
-                  - (s_d / n::DOUBLE) * (s_d / n::DOUBLE) AS var_d,
-                s_r2 / n::DOUBLE
-                  - (s_r / n::DOUBLE) * (s_r / n::DOUBLE) AS var_r,
-                s_xs2 / n::DOUBLE
-                  - (s_xs / n::DOUBLE) * (s_xs / n::DOUBLE) AS var_xs
-              FROM lastr
-            ),
-            st2 AS (
-              SELECT g, n_days,
-                CASE WHEN var_d > 0 THEN
-                  greatest(0.0, 1.0 - var_r / var_d) END AS fs,
-                CASE WHEN var_xs > 0 THEN
-                  greatest(0.0, 1.0 - var_r / var_xs) END AS ft
-              FROM st
-            )
-            SELECT seasonal.g AS event_type, ph AS phase, n_days,
-              floor(s * 1e6) / 1e6 AS seasonal_q6,
-              CASE WHEN ft IS NOT NULL THEN floor(ft * 1e6) / 1e6
-                END AS f_trend_q6,
-              CASE WHEN fs IS NOT NULL THEN floor(fs * 1e6) / 1e6
-                END AS f_seasonal_q6
-            FROM seasonal JOIN st2 ON seasonal.g = st2.g
-        """)
-def _q_seasonal_decompose(spark, sf_dir):
-    """Classical additive decomposition of the daily event-count
-    series per type (functions/stats.py seasonal_decompose): centered
-    7-MA trend, positional-phase seasonal indices, and the Hyndman
-    trend/seasonal strengths that say whether q_forecast_accuracy's
-    seasonal-naive baseline is even apt. All cross-row float
-    reductions fold through stepped ordered windows."""
-
-    ev = read(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    return seasonal_decompose(
-        daily, ("event_type",), ("day",), "cnt", period=7, quantize=0
-    )
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1
-                          ELSE 0 END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT v, ca, cb,
-                coalesce(sum(ca + cb) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lo,
-                sum(ca + cb) OVER () AS nn
-              FROM cnt
-            ),
-            cells AS (
-              SELECT v, ca, cb, ca + cb AS c, nn,
-                lo + 1 AS a, lo + ca + cb AS b, nn + 1 AS m,
-                (nn + 1) // 2 AS h
-              FROM cum
-            ),
-            bs AS (
-              SELECT v, ca, cb, c, nn,
-                (CASE WHEN least(b, h) >= a THEN
-                   (least(b, h) - a + 1) * (a + least(b, h)) // 2
-                 ELSE 0 END)
-                + (CASE WHEN b >= greatest(a, h + 1) THEN
-                     (b - greatest(a, h + 1) + 1) * m
-                     - (b - greatest(a, h + 1) + 1)
-                       * (greatest(a, h + 1) + b) // 2
-                   ELSE 0 END) AS bsum
-              FROM cells
-            ),
-            stepped AS (
-              SELECT nn,
-                sum(ca) OVER ()::BIGINT AS n_a,
-                sum(cb) OVER ()::BIGINT AS n_b,
-                sum(bsum) OVER ()::BIGINT AS s1,
-                sum(ca::DOUBLE * bsum::DOUBLE / c::DOUBLE)
-                  OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS ab,
-                sum(bsum::DOUBLE * bsum::DOUBLE / c::DOUBLE)
-                  OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS s2,
-                row_number() OVER (ORDER BY v) AS rn,
-                count(*) OVER () AS k
-              FROM bs
-            ),
-            lastr AS (SELECT * FROM stepped WHERE rn = k)
-            SELECT n_a, n_b,
-              floor(ab * 1e6) / 1e6 AS ab_q6,
-              CASE WHEN n_a::DOUBLE * n_b::DOUBLE
-                        * (nn::DOUBLE * s2 - s1::DOUBLE * s1::DOUBLE)
-                        / (nn::DOUBLE * nn::DOUBLE
-                           * (nn::DOUBLE - 1.0)) > 0 THEN
-                floor((ab - n_a::DOUBLE * s1::DOUBLE / nn::DOUBLE)
-                      / sqrt(n_a::DOUBLE * n_b::DOUBLE
-                             * (nn::DOUBLE * s2
-                                - s1::DOUBLE * s1::DOUBLE)
-                             / (nn::DOUBLE * nn::DOUBLE
-                                * (nn::DOUBLE - 1.0))) * 1e6) / 1e6
-              END AS z_q6
-            FROM lastr
-        """)
-def _q_ansari(spark, sf_dir):
-    """Ansari-Bradley scale test on account balance, BUILDING vs
-    MACHINERY (functions/stats.py ansari_bradley): rank-based
-    dispersion with R-style tie-averaged scores; block score sums
-    have a closed integer form off the distinct-value table, AB and
-    its tie-corrected moments fold in fixed value order."""
-
-    c = read(spark, sf_dir, "customer")
-    return ansari_bradley(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(n_chars::DOUBLE * 1, 0) AS BIGINT) AS v,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS s
-              FROM documents WHERE lang IN ('en', 'de')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT v, ca, cb,
-                coalesce(sum(ca) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS cua,
-                coalesce(sum(cb) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS cub,
-                sum(ca) OVER ()::BIGINT AS n_a,
-                sum(cb) OVER ()::BIGINT AS n_b
-              FROM cnt
-            ),
-            cells AS (
-              SELECT v, n_a, n_b,
-                ca + cb AS l, n_a + n_b AS nn,
-                (n_a + n_b) * (2 * cua + ca)
-                  - n_a * (2 * (cua + cub) + ca + cb) AS ra,
-                (n_a + n_b) * (2 * cub + cb)
-                  - n_b * (2 * (cua + cub) + ca + cb) AS rb,
-                (2 * (cua + cub) + ca + cb)
-                  * (2 * (n_a + n_b) - (2 * (cua + cub) + ca + cb))
-                  - (n_a + n_b) * (ca + cb) AS den
-              FROM cum
-            ),
-            terms AS (
-              SELECT v, n_a, n_b, nn,
-                l::DOUBLE / nn::DOUBLE
-                * (CASE WHEN den <> 0 THEN
-                     ra::DOUBLE * ra::DOUBLE
-                     / (n_a::DOUBLE * den::DOUBLE)
-                   END
-                   + CASE WHEN den <> 0 THEN
-                       rb::DOUBLE * rb::DOUBLE
-                       / (n_b::DOUBLE * den::DOUBLE)
-                     END) AS t
-              FROM cells
-            ),
-            stepped AS (
-              SELECT n_a, n_b, nn,
-                sum(t) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND CURRENT ROW) AS t,
-                row_number() OVER (ORDER BY v) AS rn,
-                count(*) OVER () AS k
-              FROM terms
-            )
-            SELECT n_a, n_b,
-              CASE WHEN k > 1 AND n_a > 0 AND n_b > 0 THEN
-                floor((nn::DOUBLE - 1.0) / nn::DOUBLE * t * 1e6) / 1e6
-              END AS a2_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_anderson_darling(spark, sf_dir):
-    """Two-sample Anderson-Darling (functions/stats.py
-    anderson_darling_2s, the Scholz-Stephens midrank A2akN): do EN and
-    DE document lengths share a distribution, with the tails weighted
-    where q_ks_drift is weakest? Doubled-integer midrank counts off
-    the distinct-value table; per-value integer-ratio terms fold in
-    fixed value order."""
-
-    d = read(spark, sf_dir, "documents")
-    return anderson_darling_2s(
-        d, "n_chars", "lang", "en", "de", quantize=0
-    )
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1
-                          ELSE 0 END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT v, ca, cb,
-                coalesce(sum(ca + cb) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lo,
-                sum(ca + cb) OVER () AS nn
-              FROM cnt
-            ),
-            cells AS (
-              SELECT v, ca, cb, ca + cb AS c, nn,
-                lo + 1 AS a, lo + ca + cb AS b,
-                nn // 2 AS h
-              FROM cum
-            ),
-            segs AS (
-              SELECT v, ca, cb, c, nn, a, b, h,
-                least(b, h) AS yb,
-                nn - b + 1 AS qlo,
-                least(nn - a + 1, h) AS qhi
-              FROM cells
-            ),
-            bs AS (
-              SELECT v, ca, cb, c, nn,
-                -- bottom: 2*tri(a, yb) - odds(a, yb)
-                (CASE WHEN yb >= a THEN
-                   2 * (CASE WHEN (yb - a + 1) % 2 = 0 THEN
-                          ((yb - a + 1) // 2) * (a + yb)
-                        ELSE (yb - a + 1) * ((a + yb) // 2) END)
-                   - ((yb + 1) // 2 - a // 2)
-                 ELSE 0 END)
-                -- middle: odd N, position h+1 scores N
-                + (CASE WHEN nn % 2 = 1 AND a <= h + 1 AND b >= h + 1
-                   THEN nn ELSE 0 END)
-                -- top: 2*tri(qlo, qhi) - evens(qlo, qhi)
-                + (CASE WHEN qhi >= qlo THEN
-                     2 * (CASE WHEN (qhi - qlo + 1) % 2 = 0 THEN
-                            ((qhi - qlo + 1) // 2) * (qlo + qhi)
-                          ELSE (qhi - qlo + 1) * ((qlo + qhi) // 2)
-                          END)
-                     - (qhi // 2 - (qlo - 1) // 2)
-                   ELSE 0 END) AS bsum
-              FROM segs
-            ),
-            stepped AS (
-              SELECT nn,
-                sum(ca) OVER ()::BIGINT AS n_a,
-                sum(cb) OVER ()::BIGINT AS n_b,
-                sum(bsum) OVER ()::BIGINT AS s1,
-                sum(ca::DOUBLE * bsum::DOUBLE / c::DOUBLE)
-                  OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS st,
-                sum(bsum::DOUBLE * bsum::DOUBLE / c::DOUBLE)
-                  OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS s2,
-                row_number() OVER (ORDER BY v) AS rn,
-                count(*) OVER () AS k
-              FROM bs
-            ),
-            lastr AS (SELECT * FROM stepped WHERE rn = k)
-            SELECT n_a, n_b,
-              floor(st * 1e6) / 1e6 AS st_q6,
-              CASE WHEN n_a::DOUBLE * n_b::DOUBLE
-                        * (nn::DOUBLE * s2 - s1::DOUBLE * s1::DOUBLE)
-                        / (nn::DOUBLE * nn::DOUBLE
-                           * (nn::DOUBLE - 1.0)) > 0 THEN
-                floor((st - n_a::DOUBLE * s1::DOUBLE / nn::DOUBLE)
-                      / sqrt(n_a::DOUBLE * n_b::DOUBLE
-                             * (nn::DOUBLE * s2
-                                - s1::DOUBLE * s1::DOUBLE)
-                             / (nn::DOUBLE * nn::DOUBLE
-                                * (nn::DOUBLE - 1.0))) * 1e6) / 1e6
-              END AS z_q6
-            FROM lastr
-        """)
-def _q_siegel_tukey(spark, sf_dir):
-    """Siegel-Tukey scale test on account balance, BUILDING vs
-    MACHINERY (functions/stats.py siegel_tukey) — the zigzag-score
-    dispersion companion to q_ansari on the SAME arms, so the two
-    scale tests corroborate each other in one artifact. Closed-form
-    block score sums (series +- parity counts) off the distinct-value
-    table; Wilcoxon moments with tie correction."""
-
-    c = read(spark, sf_dir, "customer")
-    return siegel_tukey(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH per_user AS (
-              SELECT event_type, user_id, count(*)::BIGINT AS c
-              FROM events GROUP BY event_type, user_id
-            ),
-            agg AS (
-              SELECT event_type, count(*)::BIGINT AS n,
-                sum(c)::BIGINT AS s,
-                sum(CAST(c AS DECIMAL(38,0))
-                    * CAST(c AS DECIMAL(38,0))) AS q
-              FROM per_user GROUP BY event_type
-            ),
-            terms AS (
-              SELECT event_type, n, s,
-                s::DOUBLE / n::DOUBLE AS mean,
-                (q::DOUBLE - (s::DOUBLE / n::DOUBLE) * s::DOUBLE)
-                  / (n::DOUBLE - 1.0) AS var
-              FROM agg
-            )
-            SELECT event_type, n,
-              CASE WHEN n > 0 THEN floor(mean * 1e6) / 1e6
-              END AS mean_q6,
-              CASE WHEN n > 1 AND s > 0 THEN
-                floor(var / mean * 1e6) / 1e6 END AS vmr_q6,
-              CASE WHEN n > 1 AND s > 0 THEN
-                floor(((n::DOUBLE - 1.0) * (var / mean)
-                       - (n::DOUBLE - 1.0))
-                      / sqrt(2.0 * (n::DOUBLE - 1.0)) * 1e6) / 1e6
-              END AS z_q6
-            FROM terms
-            ORDER BY event_type
-        """)
-def _q_overdispersion(spark, sf_dir):
-    """Poisson overdispersion of per-user event counts per event type
-    (functions/stats.py overdispersion_index): VMR + dispersion z off
-    exact integer moments — the modeling gate before any per-user
-    rate assumption."""
-
-    ev = read(spark, sf_dir, "events")
-    per_user = ev.groupBy("event_type", "user_id").agg(
-        F.count("*").cast("long").alias("n_events")
-    )
-    return overdispersion_index(
-        per_user, "n_events", group_cols=("event_type",)
-    ).orderBy("event_type")
-
-
-@query(oracle="""
-            WITH per_user AS (
-              SELECT user_id, count(*)::BIGINT AS x,
-                (date_diff('day', min(CAST(ts AS DATE)),
-                           max(CAST(ts AS DATE))) + 1)::BIGINT AS t
-              FROM events GROUP BY user_id
-            ),
-            arms AS (
-              SELECT x, t, CAST(user_id % 2 AS INT) AS g
-              FROM per_user
-            ),
-            gm AS (SELECT min(g) AS ga FROM arms),
-            agg AS (
-              SELECT
-                sum(CASE WHEN g = ga THEN x ELSE 0 END)::BIGINT AS x_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE x END)::BIGINT AS x_b,
-                sum(CASE WHEN g = ga THEN t ELSE 0 END)::BIGINT AS t_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE t END)::BIGINT AS t_b
-              FROM arms, gm
-            ),
-            rates AS (
-              SELECT x_a, x_b, t_a, t_b,
-                x_a::DOUBLE / (t_a::DOUBLE / 1.0) AS ra,
-                x_b::DOUBLE / (t_b::DOUBLE / 1.0) AS rb
-              FROM agg
-            )
-            SELECT x_a, x_b,
-              CASE WHEN t_a > 0 THEN floor(ra * 1e6) / 1e6
-              END AS rate_a_q6,
-              CASE WHEN t_b > 0 THEN floor(rb * 1e6) / 1e6
-              END AS rate_b_q6,
-              CASE WHEN x_a > 0 AND x_b > 0 AND t_a > 0 AND t_b > 0
-              THEN floor(ra / rb * 1e6) / 1e6 END AS rr_q6,
-              CASE WHEN x_a > 0 AND x_b > 0 AND t_a > 0 AND t_b > 0
-              THEN floor(ln(ra / rb)
-                         / sqrt(1.0 / x_a::DOUBLE
-                                + 1.0 / x_b::DOUBLE) * 1e6) / 1e6
-              END AS z_q6
-            FROM rates
-        """)
-def _q_rate_ratio(spark, sf_dir):
-    """Poisson rate ratio of events per observed day, even- vs
-    odd-user arms (functions/stats.py poisson_rate_ratio): per-user
-    (events, exposure-days) rows aggregated to exact arm totals, the
-    exposure-aware rate comparison q_welch (means) and
-    q_overdispersion (clumping) bracket."""
-
-    ev = read(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.count("*").cast("long").alias("n_events"),
-        (
-            F.datediff(
-                F.max(F.to_date("ts")), F.min(F.to_date("ts"))
-            )
-            + 1
-        )
-        .cast("long")
-        .alias("days"),
-    )
-    arms = per_user.select(
-        "n_events",
-        "days",
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-    )
-    return poisson_rate_ratio(
-        arms, "n_events", "days", "arm", quantize=0
-    )
-
-
-@query(oracle="""
-            WITH flags AS (
-              SELECT CASE WHEN value > 50 THEN 1 ELSE 0 END::BIGINT
-                       AS hi,
-                     CAST(user_id % 2 AS INT) AS g
-              FROM events WHERE value IS NOT NULL
-            ),
-            gm AS (SELECT min(g) AS ga FROM flags),
-            agg AS (
-              SELECT
-                sum(CASE WHEN g = ga THEN 1 ELSE 0 END)::BIGINT AS n_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE 1 END)::BIGINT AS n_b,
-                sum(CASE WHEN g = ga THEN hi ELSE 0 END)::BIGINT
-                  AS x_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE hi END)::BIGINT
-                  AS x_b
-              FROM flags, gm
-            ),
-            t AS (
-              SELECT n_a, n_b, x_a, x_b,
-                x_a::DOUBLE / n_a::DOUBLE AS pa,
-                x_b::DOUBLE / n_b::DOUBLE AS pb,
-                1.959964 * 1.959964 AS z2,
-                1.959964 AS zc
-              FROM agg
-            ),
-            w AS (
-              SELECT *,
-                (pa * n_a::DOUBLE + z2 / 2.0) / (n_a::DOUBLE + z2)
-                  AS ca,
-                zc * sqrt(pa * (1.0 - pa) / n_a::DOUBLE
-                          + z2 / (4.0 * n_a::DOUBLE * n_a::DOUBLE))
-                  / (1.0 + z2 / n_a::DOUBLE) AS ha,
-                (pb * n_b::DOUBLE + z2 / 2.0) / (n_b::DOUBLE + z2)
-                  AS cb,
-                zc * sqrt(pb * (1.0 - pb) / n_b::DOUBLE
-                          + z2 / (4.0 * n_b::DOUBLE * n_b::DOUBLE))
-                  / (1.0 + z2 / n_b::DOUBLE) AS hb,
-                (x_a + x_b)::DOUBLE / (n_a + n_b)::DOUBLE AS pp
-              FROM t
-            ),
-            fin AS (
-              SELECT n_a, n_b, x_a, x_b, pa, pb,
-                pa - pb AS d,
-                ca - ha AS la, ca + ha AS ua,
-                cb - hb AS lb, cb + hb AS ub,
-                sqrt(pp * (1.0 - pp)
-                     * (1.0 / n_a::DOUBLE + 1.0 / n_b::DOUBLE)) AS se
-              FROM w
-            )
-            SELECT n_a, n_b, x_a, x_b,
-              floor(pa * 1e6) / 1e6 AS p_a_q6,
-              floor(pb * 1e6) / 1e6 AS p_b_q6,
-              floor(d * 1e6) / 1e6 AS diff_q6,
-              CASE WHEN se > 0 THEN floor(d / se * 1e6) / 1e6
-              END AS z_q6,
-              floor((d - sqrt((pa - la) * (pa - la)
-                              + (ub - pb) * (ub - pb))) * 1e6) / 1e6
-                AS ci_lo_q6,
-              floor((d + sqrt((ua - pa) * (ua - pa)
-                              + (pb - lb) * (pb - lb))) * 1e6) / 1e6
-                AS ci_hi_q6
-            FROM fin
-        """)
-def _q_two_proportion(spark, sf_dir):
-    """Two-proportion card on high-value event rates, even- vs
-    odd-user arms (functions/stats.py two_proportion_diff): pooled z
-    plus the Newcombe hybrid-score CI built from each arm's Wilson
-    bounds — the binary-outcome companion to q_welch/q_msprt on the
-    same arm split."""
-
-    ev = read(spark, sf_dir, "events")
-    flags = ev.select(
-        (F.col("value") > 50).cast("long").alias("hi"),
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-    )
-    return two_proportion_diff(flags, "hi", "arm")
-
-
-@query(oracle="""
-            WITH g AS (
-              SELECT
-                CASE WHEN n_chars < 200 THEN 1
-                     WHEN n_chars < 500 THEN 2
-                     WHEN n_chars < 1000 THEN 3 ELSE 4 END AS xb,
-                CASE WHEN len(list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'),
-                       t -> length(t) > 0)) < 30 THEN 1
-                     WHEN len(list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'),
-                       t -> length(t) > 0)) < 80 THEN 2
-                     WHEN len(list_filter(
-                       regexp_split_to_array(trim(text), '\\s+'),
-                       t -> length(t) > 0)) < 160 THEN 3
-                     ELSE 4 END AS yb
-              FROM documents
-            ),
-            cells AS (
-              SELECT xb AS x, yb AS y, count(*)::BIGINT AS c
-              FROM g GROUP BY xb, yb
-            ),
-            agg AS (
-              SELECT
-                coalesce(sum(CASE WHEN b.x > a.x AND b.y > a.y
-                    THEN a.c * b.c END), 0)::BIGINT AS c_pairs,
-                coalesce(sum(CASE WHEN b.x > a.x AND b.y < a.y
-                    THEN a.c * b.c END), 0)::BIGINT AS d_pairs,
-                coalesce(sum(CASE WHEN b.x = a.x AND b.y > a.y
-                    THEN a.c * b.c END), 0)::BIGINT AS tx,
-                coalesce(sum(CASE WHEN b.y = a.y AND b.x > a.x
-                    THEN a.c * b.c END), 0)::BIGINT AS ty
-              FROM cells a CROSS JOIN cells b
-            ),
-            tot AS (SELECT sum(c)::BIGINT AS n FROM cells)
-            SELECT n, c_pairs, d_pairs,
-              CASE WHEN c_pairs::DOUBLE + d_pairs::DOUBLE > 0 THEN
-                floor((c_pairs::DOUBLE - d_pairs::DOUBLE)
-                      / (c_pairs::DOUBLE + d_pairs::DOUBLE) * 1e6)
-                  / 1e6
-              END AS gamma_q6,
-              CASE WHEN c_pairs::DOUBLE + d_pairs::DOUBLE
-                        + ty::DOUBLE > 0 THEN
-                floor((c_pairs::DOUBLE - d_pairs::DOUBLE)
-                      / (c_pairs::DOUBLE + d_pairs::DOUBLE
-                         + ty::DOUBLE) * 1e6) / 1e6
-              END AS somers_yx_q6,
-              CASE WHEN c_pairs::DOUBLE + d_pairs::DOUBLE
-                        + tx::DOUBLE > 0 THEN
-                floor((c_pairs::DOUBLE - d_pairs::DOUBLE)
-                      / (c_pairs::DOUBLE + d_pairs::DOUBLE
-                         + tx::DOUBLE) * 1e6) / 1e6
-              END AS somers_xy_q6,
-              CASE WHEN (c_pairs::DOUBLE + d_pairs::DOUBLE
-                         + tx::DOUBLE) > 0
-                    AND (c_pairs::DOUBLE + d_pairs::DOUBLE
-                         + ty::DOUBLE) > 0 THEN
-                floor((c_pairs::DOUBLE - d_pairs::DOUBLE)
-                      / sqrt((c_pairs::DOUBLE + d_pairs::DOUBLE
-                              + tx::DOUBLE)
-                             * (c_pairs::DOUBLE + d_pairs::DOUBLE
-                                + ty::DOUBLE)) * 1e6) / 1e6
-              END AS tau_b_q6
-            FROM agg, tot
-        """)
-def _q_ordinal_assoc(spark, sf_dir):
-    """Gamma / Somers' D / tau-b between document length band and
-    token band (functions/stats.py ordinal_association) — the
-    graded-bucket association card next to q_cramers_v (nominal) and
-    q_kendall_tau (numeric). One k x k cell self-join; everything
-    BIGINT until the terminal ratios."""
-
-    d = read(spark, sf_dir, "documents")
-    toks = F.size(
-        tokens(F.col("text"))
-    )
-    band = (
-        lambda c, b1, b2, b3: F.when(c < b1, 1)
-        .when(c < b2, 2)
-        .when(c < b3, 3)
-        .otherwise(4)
-    )
-    g = d.select(
-        band(F.col("n_chars"), 200, 500, 1000).alias("xb"),
-        band(toks, 30, 80, 160).alias("yb"),
-    )
-    return ordinal_association(g, "xb", "yb")
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CAST(user_id % 2 AS INT) AS g
-              FROM events WHERE value IS NOT NULL
-            ),
-            gm AS (SELECT min(g) AS ga FROM base),
-            agg AS (
-              SELECT
-                sum(CASE WHEN g = ga THEN 1 ELSE 0 END)::BIGINT AS n_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE 1 END)::BIGINT AS n_b,
-                sum(CASE WHEN g = ga THEN v ELSE 0 END)::BIGINT AS s_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE v END)::BIGINT AS s_b,
-                sum(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))
-                    * CASE WHEN g = ga THEN 1 ELSE 0 END) AS q_a,
-                sum(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))
-                    * CASE WHEN g = ga THEN 0 ELSE 1 END) AS q_b
-              FROM base, gm
-            ),
-            terms AS (
-              SELECT n_a, n_b,
-                s_a::DOUBLE / n_a::DOUBLE AS ma,
-                s_b::DOUBLE / n_b::DOUBLE AS mb,
-                (q_a::DOUBLE - (s_a::DOUBLE / n_a::DOUBLE) * s_a::DOUBLE)
-                  / (n_a::DOUBLE - 1.0) AS va,
-                (q_b::DOUBLE - (s_b::DOUBLE / n_b::DOUBLE) * s_b::DOUBLE)
-                  / (n_b::DOUBLE - 1.0) AS vb
-              FROM agg
-            ),
-            fin AS (
-              SELECT n_a, n_b,
-                (mb - ma) / 100.0 AS theta,
-                (va / n_a::DOUBLE + vb / n_b::DOUBLE) / 10000.0 AS vv
-              FROM terms
-            ),
-            ll AS (
-              SELECT n_a, n_b, theta, vv,
-                0.5 * ln(vv / (vv + 25.0))
-                  + (theta * theta * 25.0)
-                    / ((2.0 * vv) * (vv + 25.0)) AS log_l
-              FROM fin
-            )
-            SELECT n_a, n_b,
-              CASE WHEN n_a > 1 AND n_b > 1 AND vv > 0 THEN
-                floor(theta * 1e6) / 1e6 END AS diff_q6,
-              CASE WHEN n_a > 1 AND n_b > 1 AND vv > 0 THEN
-                floor(log_l * 1e6) / 1e6 END AS log_lambda_q6,
-              CASE WHEN n_a > 1 AND n_b > 1 AND vv > 0 THEN
-                floor(least(1.0, exp(-log_l)) * 1e6) / 1e6
-              END AS p_always_q6,
-              CAST(CASE WHEN n_a > 1 AND n_b > 1 AND vv > 0
-                         AND least(1.0, exp(-log_l)) < 0.05
-                    THEN 1 ELSE 0 END AS INT) AS reject
-            FROM ll
-        """)
-def _q_msprt(spark, sf_dir):
-    """Anytime-valid mixture-SPRT mean gate on even- vs odd-user event
-    values (functions/stats.py msprt_gate) — the always-valid peeking
-    companion to q_welch on the SAME arms: exact quantized moments,
-    one closed-form mixture likelihood ratio, p valid at every n."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "value", (F.col("user_id") % 2).cast("int").alias("arm")
-    )
-    return msprt_gate(ev, "value", "arm", tau=5.0, quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT event_type AS g,
-                CAST(round(value * 100, 0) AS BIGINT) AS v,
-                ts, event_id
-              FROM events WHERE value IS NOT NULL
-            ),
-            cnt AS (
-              SELECT g, v, count(*)::BIGINT AS c
-              FROM base GROUP BY g, v
-            ),
-            dmap AS (
-              SELECT g, v,
-                2 * coalesce(sum(c) OVER (PARTITION BY g ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0) + c + 1 AS d
-              FROM cnt
-            ),
-            j AS (
-              SELECT base.g AS g, d,
-                row_number() OVER (PARTITION BY base.g
-                                   ORDER BY ts, event_id) AS t,
-                count(*) OVER (PARTITION BY base.g) AS n
-              FROM base JOIN dmap
-                ON base.g = dmap.g AND base.v = dmap.v
-            ),
-            per_t AS (
-              SELECT g, n, t,
-                sum(d) OVER (PARTITION BY g ORDER BY t
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                  - t * (n + 1) AS u2
-              FROM j
-            ),
-            flt AS (SELECT * FROM per_t WHERE t < n),
-            pick AS (
-              SELECT g, n, t, abs(u2) AS k,
-                row_number() OVER (PARTITION BY g
-                    ORDER BY abs(u2) DESC, t ASC) AS rn
-              FROM flt
-            )
-            SELECT g AS event_type, n::BIGINT AS n, t AS t_star,
-              k::BIGINT AS k_stat,
-              floor(least(1.0,
-                2.0 * exp(-6.0 * k::DOUBLE * k::DOUBLE
-                          / (n::DOUBLE * n::DOUBLE * n::DOUBLE
-                             + n::DOUBLE * n::DOUBLE))) * 1e6) / 1e6
-                AS p_approx_q6
-            FROM pick WHERE rn = 1
-        """)
-def _q_pettitt(spark, sf_dir):
-    """Pettitt rank change-point per event type (functions/stats.py
-    pettitt_test): outlier-immune single-break detector next to
-    q_changepoint's mean CUSUM and q_slope_break's trend break.
-    Fully integer U_t via cumsum(doubled midranks) - t(n+1); the
-    approximate p is the only float."""
-
-    ev = read(spark, sf_dir, "events")
-    return pettitt_test(
-        ev, ("event_type",), ("ts", "event_id"), "value", quantize=2
     )
 
 
@@ -5630,174 +3061,6 @@ def _q_competing_risks(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT event_type AS s, CAST(user_id % 2 AS INT) AS arm,
-                     CASE WHEN value > 150 THEN 1 ELSE 0 END AS o
-              FROM events
-              WHERE event_type IS NOT NULL AND user_id IS NOT NULL
-                AND value IS NOT NULL
-            ),
-            cells AS (
-              SELECT s, count(*)::BIGINT AS n,
-                sum(CASE WHEN arm = 1 AND o = 1 THEN 1 ELSE 0
-                    END)::BIGINT AS a,
-                sum(CASE WHEN arm = 1 AND o = 0 THEN 1 ELSE 0
-                    END)::BIGINT AS b,
-                sum(CASE WHEN arm = 0 AND o = 1 THEN 1 ELSE 0
-                    END)::BIGINT AS c,
-                sum(CASE WHEN arm = 0 AND o = 0 THEN 1 ELSE 0
-                    END)::BIGINT AS d
-              FROM base GROUP BY s
-            ),
-            f AS (
-              SELECT s, n,
-                ln((a::DOUBLE + 0.5) * (d::DOUBLE + 0.5)
-                   / ((b::DOUBLE + 0.5) * (c::DOUBLE + 0.5))) AS lnor,
-                1.0 / (1.0 / (a::DOUBLE + 0.5)
-                       + 1.0 / (b::DOUBLE + 0.5)
-                       + 1.0 / (c::DOUBLE + 0.5)
-                       + 1.0 / (d::DOUBLE + 0.5)) AS w
-              FROM cells
-            ),
-            step1 AS (
-              SELECT s, lnor, w,
-                sum(w) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
-                             PRECEDING AND CURRENT ROW) AS sw,
-                sum(w * lnor) OVER (ORDER BY s ROWS BETWEEN UNBOUNDED
-                             PRECEDING AND CURRENT ROW) AS swl,
-                sum(n) OVER () AS ntot,
-                row_number() OVER (ORDER BY s) AS rn,
-                count(*) OVER () AS k
-              FROM f
-            ),
-            pooled AS (
-              SELECT swl / sw AS pool, ntot AS ntot2, k AS kk
-              FROM step1 WHERE rn = k
-            ),
-            step2 AS (
-              SELECT kk, ntot2, pool,
-                sum(w * (lnor - pool) * (lnor - pool))
-                  OVER (ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS chi2,
-                row_number() OVER (ORDER BY s) AS rn2,
-                count(*) OVER () AS k2
-              FROM step1, pooled
-            )
-            SELECT kk::BIGINT AS k_strata, ntot2::BIGINT AS n,
-              floor(exp(pool) * 1e6) / 1e6 AS pooled_or_q6,
-              floor(chi2 * 1e6) / 1e6 AS chi2_q6
-            FROM step2 WHERE rn2 = k2
-        """)
-def _q_woolf(spark, sf_dir):
-    """Woolf homogeneity of odds ratios across q_mantel_haenszel's
-    strata (functions/stats.py woolf_homogeneity): is there ONE
-    effect, or does the pooled MH number paper over stratum
-    heterogeneity? Haldane +0.5 on every cell; two fixed-order
-    stepped reductions with the pooled lnOR broadcast between."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "event_type",
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-        (F.col("value") > 150).cast("int").alias("hi"),
-    )
-    return woolf_homogeneity(ev, "event_type", "arm", "hi")
-
-
-@query(oracle=f"""
-            WITH pairs AS (
-              SELECT lang AS a, {LANG_CASE} AS b
-              FROM documents WHERE lang IS NOT NULL
-            ),
-            tot AS (SELECT count(*)::BIGINT AS n FROM pairs),
-            cells AS (
-              SELECT a, b, count(*)::BIGINT AS c
-              FROM pairs WHERE a <> b GROUP BY a, b
-            ),
-            canon AS (
-              SELECT least(a, b) AS i, greatest(a, b) AS j,
-                sum(CASE WHEN a < b THEN c ELSE 0 END)::BIGINT AS nij,
-                sum(CASE WHEN a > b THEN c ELSE 0 END)::BIGINT AS nji
-              FROM cells GROUP BY least(a, b), greatest(a, b)
-            ),
-            stepped AS (
-              SELECT n,
-                sum((nij - nji)::DOUBLE * (nij - nji)::DOUBLE
-                    / (nij + nji)::DOUBLE)
-                  OVER (ORDER BY i, j ROWS BETWEEN UNBOUNDED
-                        PRECEDING AND CURRENT ROW) AS chi2,
-                row_number() OVER (ORDER BY i, j) AS rn,
-                count(*) OVER () AS k
-              FROM canon, tot
-            )
-            SELECT n, k::BIGINT AS n_offdiag_pairs,
-              floor(chi2 * 1e6) / 1e6 AS chi2_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_bowker(spark, sf_dir):
-    """Bowker symmetry test on the lang-vs-detector confusion
-    (functions/stats.py bowker_symmetry): are the disagreements
-    DIRECTIONAL — does 'fr' get read as 'es' more than the reverse?
-    The drift question q_gwet's symmetric agreement can't answer,
-    on the same rater pair. Integer cells; per-pair rationals folded
-    in fixed pair order."""
-
-    d = read(spark, sf_dir, "documents").select(
-        F.col("lang").alias("r1"),
-        lang_id(F.col("text")).alias("r2"),
-    )
-    return bowker_symmetry(d, "r1", "r2")
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(value * 10, 0) AS BIGINT) AS v,
-                     CASE WHEN event_type = 'purchase' THEN 1
-                          ELSE 0 END AS s
-              FROM events
-              WHERE event_type IN ('purchase', 'click')
-                AND value IS NOT NULL
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT v, ca, cb,
-                sum(ca) OVER ()::BIGINT AS n_a,
-                sum(cb) OVER ()::BIGINT AS n_b
-              FROM cnt
-            ),
-            stepped AS (
-              SELECT n_a, n_b,
-                sum(sqrt((ca::DOUBLE / n_a::DOUBLE)
-                         * (cb::DOUBLE / n_b::DOUBLE)))
-                  OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS bc,
-                row_number() OVER (ORDER BY v) AS rn,
-                count(*) OVER () AS k
-              FROM cum
-            )
-            SELECT n_a, n_b,
-              floor(bc * 1e6) / 1e6 AS bc_q6,
-              floor(sqrt(greatest(0.0, 1.0 - bc)) * 1e6) / 1e6
-                AS hellinger_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_hellinger(spark, sf_dir):
-    """Hellinger distance between purchase and click value
-    distributions (functions/stats.py hellinger_distance) — the
-    bounded overlap-everywhere distance next to q_wasserstein's
-    magnitude and q_jsd_split's information reads. Exact rational
-    bin masses; the BC sum folds over the distinct-value table."""
-
-    ev = read(spark, sf_dir, "events")
-    return hellinger_distance(
-        ev, "value", "event_type", "purchase", "click", quantize=1
-    )
-
-
-@query(oracle="""
             WITH pooled AS (
               SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
                      CASE WHEN c_mktsegment = 'BUILDING' THEN 1
@@ -5859,66 +3122,10 @@ def _q_cucconi(spark, sf_dir):
     """Cucconi joint location-scale test, BUILDING vs MACHINERY
     account balances (functions/stats.py cucconi_test): one statistic
     that rejects when either the center or the spread moved — the
-    screen before choosing q_mann_whitney vs q_ansari. Doubled
+    screen before choosing q_mann_whitney or a scale test. Doubled
     midranks keep both squared-rank sums integer."""
 
     c = read(spark, sf_dir, "customer")
     return cucconi_test(
         c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
     )
-
-
-@query(oracle=f"""
-            WITH pairs AS (
-              SELECT lang AS a, {LANG_CASE} AS b
-              FROM documents WHERE lang IS NOT NULL
-            ),
-            tot AS (
-              SELECT count(*)::BIGINT AS n,
-                sum(CASE WHEN a = b THEN 1 ELSE 0 END)::BIGINT
-                  AS agree
-              FROM pairs
-            ),
-            m1 AS (SELECT a AS q, count(*)::BIGINT AS c1
-                   FROM pairs GROUP BY a),
-            m2 AS (SELECT b AS q, count(*)::BIGINT AS c2
-                   FROM pairs GROUP BY b),
-            marg AS (
-              SELECT coalesce(m1.q, m2.q) AS q,
-                coalesce(c1, 0) + coalesce(c2, 0) AS m
-              FROM m1 FULL OUTER JOIN m2 ON m1.q = m2.q
-            ),
-            stepped AS (
-              SELECT n, agree,
-                sum((m::DOUBLE / (2.0 * n::DOUBLE))
-                    * (1.0 - m::DOUBLE / (2.0 * n::DOUBLE)))
-                  OVER (ORDER BY q ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND CURRENT ROW) AS pt,
-                row_number() OVER (ORDER BY q) AS rn,
-                count(*) OVER () AS k
-              FROM marg, tot
-            )
-            SELECT n, k::BIGINT AS q_labels,
-              floor(agree::DOUBLE / n::DOUBLE * 1e6) / 1e6 AS po_q6,
-              CASE WHEN k > 1 THEN
-                floor(pt / (k::DOUBLE - 1.0) * 1e6) / 1e6
-              END AS pe_q6,
-              CASE WHEN k > 1 AND pt / (k::DOUBLE - 1.0) < 1.0 THEN
-                floor((agree::DOUBLE / n::DOUBLE
-                       - pt / (k::DOUBLE - 1.0))
-                      / (1.0 - pt / (k::DOUBLE - 1.0)) * 1e6) / 1e6
-              END AS ac1_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_gwet(spark, sf_dir):
-    """Gwet's AC1 agreement between the recorded lang label and the
-    n-gram detector (functions/stats.py gwet_ac1) — the
-    prevalence-robust companion to q_kappa_langid on the SAME rater
-    pair; a kappa-vs-AC1 gap is the dominant-label warning. Exact
-    rational po/marginals; pe folds over the label table."""
-
-    d = read(spark, sf_dir, "documents").select(
-        F.col("lang").alias("r1"),
-        lang_id(F.col("text")).alias("r2"),
-    )
-    return gwet_ac1(d, "r1", "r2")

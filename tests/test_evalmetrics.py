@@ -1292,31 +1292,3 @@ def test_hosmer_lemeshow_calibrated_vs_not(spark):
     df3 = spark.createDataFrame(rows3, "prob double, y int")
     r3 = hosmer_lemeshow(df3, "prob", "y", n_bins=4).collect()[0]
     assert r3["n_bins_used"] == 2 and r3["chi2_q6"] is None
-
-
-# ---- McNemar ----
-
-from png_from_pdf_extracter_spark.functions.evalmetrics import (  # noqa: E402
-    mcnemar_test,
-)
-
-
-def test_mcnemar_closed_form(spark):
-    # b=3 (A right, B wrong), c=1 -> (|3-1|-1)^2/4 = 0.25
-    rows = (
-        [(True, True, False)] * 3
-        + [(True, False, True)] * 1
-        + [(True, True, True)] * 6
-    )
-    df = spark.createDataFrame(rows, "label boolean, pa boolean, pb boolean")
-    r = mcnemar_test(df, "label", "pa", "pb").collect()[0]
-    assert (r["b"], r["c"]) == (3, 1)
-    assert abs(r["mcnemar_q6"] - 0.25) < 1e-9
-    assert r["acc_a_ppm"] == 900000 and r["acc_b_ppm"] == 700000
-
-
-def test_mcnemar_no_discordant_null(spark):
-    rows = [(True, True, True)] * 4
-    df = spark.createDataFrame(rows, "label boolean, pa boolean, pb boolean")
-    r = mcnemar_test(df, "label", "pa", "pb").collect()[0]
-    assert r["mcnemar_q6"] is None and r["b"] == 0 and r["c"] == 0

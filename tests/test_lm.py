@@ -344,65 +344,3 @@ def test_term_burstiness_bursty_vs_flat(spark):
     b = out["bursty"]
     assert (b["cf"], b["df"], b["df2"]) == (20, 5, 5)
     assert b["burstiness_q6"] == 4.0 and b["adaptation_q6"] == 1.0
-
-
-# ---- keyness_g2 ----
-
-
-def test_keyness_g2_closed_form_and_direction(spark):
-    # focus "x x y" vs reference "x y y y": for x, a=2 b=1 Na=3 Nb=4,
-    # G2 = 2*(2*ln(2/(3*3/7)) + 1*ln(1/(4*3/7)))
-    import math
-
-    from png_from_pdf_extracter_spark.functions.lm import keyness_g2
-
-    df = spark.createDataFrame(
-        [("A", "x x y"), ("B", "x y y y")], "cls string, text string"
-    )
-    out = {
-        r["word"]: r
-        for r in keyness_g2(
-            df, "cls", "A", min_count=1, top_k=10
-        ).collect()
-    }
-    rx = out["x"]
-    assert (rx["a"], rx["b"]) == (2, 1)
-    g2 = 2.0 * (
-        2.0 * math.log(2.0 / (3.0 * 3.0 / 7.0))
-        + 1.0 * math.log(1.0 / (4.0 * 3.0 / 7.0))
-    )
-    assert rx["g2_q"] == math.floor(g2 * 10000) / 10000
-    assert rx["direction"] == 1  # over-represented in focus
-    assert out["y"]["direction"] == -1
-
-
-def test_keyness_g2_zero_cell_contributes_zero(spark):
-    # 'z' appears only in the focus corpus: the b*ln(b/Eb) term is the
-    # x*ln(x) limit 0, never a NaN/-inf
-    import math
-
-    from png_from_pdf_extracter_spark.functions.lm import keyness_g2
-
-    df = spark.createDataFrame(
-        [("A", "z z z"), ("B", "w w w")], "cls string, text string"
-    )
-    out = {
-        r["word"]: r
-        for r in keyness_g2(df, "cls", "A", min_count=1).collect()
-    }
-    rz = out["z"]
-    assert rz["b"] == 0 and rz["direction"] == 1
-    g2 = 2.0 * (3.0 * math.log(3.0 / (3.0 * 3.0 / 6.0)))
-    assert rz["g2_q"] == math.floor(g2 * 10000) / 10000
-    assert math.isfinite(rz["g2_q"])
-
-
-def test_keyness_g2_equal_share_scores_zero(spark):
-    # identical distribution in both corpora: G2 = 0, direction 0
-    from png_from_pdf_extracter_spark.functions.lm import keyness_g2
-
-    df = spark.createDataFrame(
-        [("A", "x y"), ("B", "x y")], "cls string, text string"
-    )
-    for r in keyness_g2(df, "cls", "A", min_count=1).collect():
-        assert r["g2_q"] == 0.0 and r["direction"] == 0

@@ -382,6 +382,37 @@ def test_scalar_quantize_map_only(spark):
     assert "Exchange" not in plan and "Join" not in plan, plan
 
 
+def test_autocorr_window_and_agg_share_one_exchange(spark):
+    """autocorr_lag1's lead() window and its Pearson-sums groupBy both
+    key on the group column — one hashpartitioning Exchange total, so
+    the operator costs a single shuffle at any scale."""
+    from png_from_pdf_extracter_spark.functions.stats import autocorr_lag1
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(
+        autocorr_lag1(ev, ("user_id",), ("ts", "event_id"), "value")
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_mann_whitney_no_raw_row_sort(spark):
+    """mann_whitney_u must rank DISTINCT quantized values, never sort
+    the raw rows: the only single-partition stage is the running sum
+    over the distinct-value table (bounded by value cardinality)."""
+    from png_from_pdf_extracter_spark.functions.stats import mann_whitney_u
+
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    plan = _plan(
+        mann_whitney_u(c, "c_acctbal", "c_mktsegment", "BUILDING",
+                       "MACHINERY")
+    )
+    # one pre-aggregation before any SinglePartition exchange: the
+    # distinct-value count table is what gets globally ordered
+    assert plan.count("Exchange SinglePartition") <= 2, plan
+    first_single = plan.index("Exchange SinglePartition")
+    assert "HashAggregate" in plan[:first_single], plan
+
+
 def test_ewma_single_shuffle_no_python(spark):
     """ewma is one groupBy exchange and stays JVM-side (no Python/Arrow
     eval nodes): the fold is F.aggregate over a collected array."""
@@ -408,6 +439,52 @@ def test_kmv_distinct_before_window_bounds_state(spark):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
+def test_changepoint_single_group_exchange(spark):
+    """changepoint_single's prefix sums, totals, score and argmax rank
+    are all windows keyed by the group — exactly one hashpartitioning
+    Exchange in the whole plan."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        changepoint_single,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(
+        changepoint_single(ev, ("user_id",), ("ts", "event_id"), "value")
+    )
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_correlogram_single_shuffle_any_max_lag(spark):
+    """All lags come from sibling lead() columns on ONE window exchange;
+    the (group, lag) aggregate reuses it — one hashpartitioning total."""
+    from png_from_pdf_extracter_spark.functions.stats import correlogram
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(
+        correlogram(ev, ("user_id",), ("ts", "event_id"), "value", 8)
+    )
+    assert plan.count("Exchange hashpartitioning") <= 2, plan
+
+
+def test_gini_window_runs_on_distinct_group_table(spark):
+    """gini_concentration's ordered rank window must run AFTER the
+    group collapse: the aggregate keyed on the group column sits below
+    the single-partition window in the plan, so the global sort is
+    bounded by GROUP cardinality, never corpus rows."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        gini_concentration,
+    )
+
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(gini_concentration(d, "source", "n_chars"))
+    # the corpus-collapsing aggregate keys on the group column and is
+    # map-side combinable (partial_... aggregate present)
+    assert "partial" in plan.lower(), plan
+    i_window = plan.index("Window")
+    i_agg = plan.rindex("HashAggregate")
+    assert i_window < i_agg, plan  # window above (consumes) the agg
+
+
 def test_cooccur_no_cartesian_and_broadcast_totals(spark):
     """cooccur_lift's pair generation must be an equi-join on the
     basket key (never a cartesian/theta join) and the scalar totals a
@@ -428,6 +505,40 @@ def test_cooccur_no_cartesian_and_broadcast_totals(spark):
         or "HashJoin [__bk" in plan
         or "SortMergeJoin [__bk" in plan
     ), plan
+
+
+def test_bootstrap_single_corpus_shuffle(spark):
+    """poisson_bootstrap_ci: the replica fan-out is map-side (Generate
+    below the first Exchange), the (group, replica) aggregation is
+    map-combinable, and the only other shuffle handles R-bounded rows."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        poisson_bootstrap_ci,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(
+        poisson_bootstrap_ci(
+            ev, "event_id", "value", group_cols=("event_type",), replicas=8
+        )
+    )
+    assert "Generate explode" in plan, plan
+    # explode sits BELOW (after in dump order) the first exchange: the
+    # fan-out never crosses the wire un-aggregated
+    assert plan.index("Exchange") < plan.index("Generate explode"), plan
+
+
+def test_chi2_margins_from_cell_table_one_corpus_pass(spark):
+    """chi2_independence reads the corpus ONCE: row/column totals are
+    re-aggregations of the cell table, visible as exactly one scan of
+    the parquet source feeding a shared aggregate."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        chi2_independence,
+    )
+
+    d = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(chi2_independence(d, "lang", "source"))
+    # margins joined back broadcast (cells are |A|x|B|-bounded)
+    assert plan.count("BroadcastExchange") >= 2, plan
 
 
 def test_quantile_normalize_anchor_join_is_broadcast(spark):
@@ -463,6 +574,25 @@ def test_negative_sample_antijoin_and_rank_share_anchor_key(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_theil_sen_pairs_join_on_group_key_only(spark):
+    """theil_sen_slope's pair join must be an equi-join on the group
+    key (per-group O(k^2)), never a cartesian."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        theil_sen_slope,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "user_id", F.col("event_id").alias("x"), "value"
+    )
+    plan = _plan(theil_sen_slope(ev, ("user_id",), "x", "value"))
+    assert "CartesianProduct" not in plan, plan
+    assert (
+        "Join [user_id" in plan
+        or "HashJoin [user_id" in plan
+        or "SortMergeJoin [user_id" in plan
+    ), plan
+
+
 def test_tfidf_cosine_pairs_join_on_term_key(spark):
     """tfidf_cosine_pairs: the pair generation must be an equi-join on
     the TERM posting key — never a cartesian; norms/dots are
@@ -492,6 +622,51 @@ def test_apply_dedup_best_antijoin_and_no_corpus_shuffle_for_scores(spark):
     plan = _plan(out)
     release(out)
     assert "LeftAnti" in plan, plan
+
+
+def test_kruskal_wallis_no_raw_row_join_back(spark):
+    """kruskal_wallis: every join/window input is an AGGREGATED table
+    (distinct-value or per-class) — the raw rows are consumed by exactly
+    one combinable count; no sort of the input anywhere."""
+    from png_from_pdf_extracter_spark.functions.stats import kruskal_wallis
+
+    o = spark.read.parquet(f"{SF}/orders.parquet")
+    plan = _plan(kruskal_wallis(o, "o_totalprice", "o_orderpriority"))
+    # partial aggregation before the first shuffle = map-side combine
+    # of the (value, class) count
+    assert "partial_count" in plan or "partial count" in plan.lower(), plan
+    # no cartesian anywhere; the final assembly is a 1x1 cross of two
+    # single-row frames (BroadcastNestedLoop on single rows is fine)
+    assert "CartesianProduct" not in plan
+
+
+def test_bh_fdr_two_windows_no_join(spark):
+    """bh_fdr: the whole operator is windows over ONE group exchange —
+    no join back, no extra shuffle beyond the group partition."""
+    from png_from_pdf_extracter_spark.functions.stats import bh_fdr
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "event_type", (F.col("value") / 500).alias("p")
+    )
+    plan = _plan(bh_fdr(ev, "p", group_cols=("event_type",)))
+    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+    # exactly one exchange: hashpartitioning on the group key feeds
+    # every window
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+
+
+def test_winsorize_thresholds_join_on_group_key_only(spark):
+    """winsorize: the clamp thresholds come back to the rows via a
+    GROUP-keyed equi-join (tiny per-group threshold tables), never a
+    re-sort of the raw rows."""
+    from png_from_pdf_extracter_spark.functions.stats import winsorize
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(winsorize(ev, "value", ("event_type",)))
+    assert "CartesianProduct" not in plan
+    # threshold tables are aggregates of the distinct-value table:
+    # map-side combine present for the (group, value) count
+    assert "partial_count" in plan or "partial count" in plan.lower(), plan
 
 
 def test_keyness_g2_broadcasts_totals_only(spark):
@@ -535,6 +710,41 @@ def test_link_prediction_no_cartesian_and_cap_below_wedge_join(spark):
     assert "CartesianProduct" not in plan, plan
     # the cap predicate appears in the tree below (after) the last join
     assert plan.rindex("Join") < plan.rindex("100"), plan
+
+
+def test_hodges_lehmann_pairs_on_count_table_not_rows(spark):
+    """hodges_lehmann: the Walsh self-join must consume the aggregated
+    (group, value) COUNT table — a HashAggregate must sit below each
+    join input — and join on the group key, never a cartesian."""
+    from png_from_pdf_extracter_spark.functions.stats import hodges_lehmann
+
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    plan = _plan(hodges_lehmann(c, "c_acctbal", ("c_nationkey",)))
+    assert "CartesianProduct" not in plan, plan
+    # count aggregation happens before pairing: the plan's last Join has
+    # HashAggregate descendants (children print below parents)
+    assert plan.rindex("Join") < plan.rindex("HashAggregate"), plan
+
+
+def test_kendall_tau_pairs_join_on_group_key_only(spark):
+    """kendall_tau_b shares theil_sen's bounded-group contract: pair
+    enumeration is an equi-join on the GROUP key."""
+    from png_from_pdf_extracter_spark.functions.stats import kendall_tau_b
+
+    c = spark.read.parquet(f"{SF}/customer.parquet").select(
+        "c_custkey", "c_nationkey", "c_acctbal",
+        F.length("c_name").cast("double").alias("nl"),
+    )
+    plan = _plan(
+        kendall_tau_b(c, ("c_nationkey",), "c_acctbal", "nl", "c_custkey")
+    )
+    assert "CartesianProduct" not in plan, plan
+    assert (
+        "Join [c_nationkey" in plan
+        or "HashJoin [c_nationkey" in plan
+        or "SortMergeJoin [c_nationkey" in plan
+        or "Join c_nationkey" in plan
+    ), plan
 
 
 def test_conformal_window_over_value_table(spark):
@@ -635,6 +845,53 @@ def test_prf_rerank_second_pass_terms_broadcast(spark):
     assert "CartesianProduct" not in plan, plan
 
 
+def test_hill_tail_windows_over_distinct_count_table(spark):
+    """hill_tail_index: every window runs over the aggregated
+    distinct-value table (HashAggregate below the windows), never raw
+    rows."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        hill_tail_index,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(hill_tail_index(ev, "value", k=50, quantize=2))
+    assert plan.rindex("Window") < plan.rindex("HashAggregate"), plan
+
+
+def test_cuped_single_one_row_aggregate(spark):
+    """cuped_adjust: ONE conditional aggregate regardless of input
+    size — exactly one exchange pair (partial/final over a 1-row
+    group) beyond the broadcast min, no joins on the data path except
+    the two scalar broadcasts."""
+    from png_from_pdf_extracter_spark.functions.stats import cuped_adjust
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        F.col("value").alias("pre"),
+        (F.col("value") * 2).alias("post"),
+        (F.col("user_id") % 2).cast("int").alias("arm"),
+    )
+    plan = _plan(cuped_adjust(ev, "pre", "post", "arm"))
+    assert "SortMergeJoin" not in plan, plan
+    assert "CartesianProduct" not in plan, plan
+
+
+def test_yuen_windows_over_count_table_single_shuffle(spark):
+    """yuen_trimmed_t: the per-arm windows run over the (arm, value)
+    count table (HashAggregate below the windows), never raw rows;
+    the winsorization join-back builds broadcast from the 2-row arm
+    table."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        yuen_trimmed_t,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "value", (F.col("user_id") % 2).cast("int").alias("arm")
+    )
+    plan = _plan(yuen_trimmed_t(ev, "value", "arm"))
+    assert plan.rindex("Window") < plan.rindex("HashAggregate"), plan
+    assert "BroadcastHashJoin" in plan, plan
+
+
 def test_token_wer_vocab_broadcast_no_cartesian(spark):
     """token_edit_distance_pairs: the token->char vocabulary reaches
     the encode join as a broadcast; no cartesian anywhere."""
@@ -656,6 +913,20 @@ def test_token_wer_vocab_broadcast_no_cartesian(spark):
     plan = _plan(token_edit_distance_pairs(d, pairs, "doc_id", "toks"))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
+
+
+def test_holm_two_range_windows_no_join(spark):
+    """holm_bonferroni: pure window plan — no join back to the input,
+    no sort beyond the in-group p order."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        holm_bonferroni,
+    )
+
+    ev = spark.read.parquet(f"{SF}/events.parquet").select(
+        "event_type", (F.col("value") / 1000).alias("p")
+    )
+    plan = _plan(holm_bonferroni(ev, "p", group_cols=("event_type",)))
+    assert "Join" not in plan, plan
 
 
 def test_partition_agreement_margins_broadcast(spark):
@@ -702,6 +973,39 @@ def test_rake_top_k_is_take_ordered_not_global_window(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(rake_keyphrases(d, top_k=15))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_concordance_single_exchange_one_aggregate(spark):
+    """concordance_agreement: ONE combinable moment aggregate per
+    group — exactly one Exchange (the group-key partial/final
+    aggregate pair), no window, no join."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        concordance_agreement,
+    )
+
+    d = spark.read.parquet(f"{SF}/documents.parquet").select(
+        "source",
+        F.col("n_chars").cast("double").alias("x"),
+        (F.col("n_chars") * 2).cast("double").alias("y"),
+    )
+    plan = _plan(concordance_agreement(d, "x", "y", ("source",)))
+    assert plan.count("Exchange") == 1, plan
+    assert "SortMergeJoin" not in plan and "Window" not in plan, plan
+
+
+def test_reliability_broadcast_combine_no_smj(spark):
+    """interrater_reliability: the subject/item/grand stats combine
+    through single-row broadcasts — no sort-merge join anywhere."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        interrater_reliability,
+    )
+
+    e = spark.read.parquet(f"{SF}/events.parquet")
+    plan = _plan(
+        interrater_reliability(e, "user_id", "event_type", "value")
+    )
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_ql_topk_term_set_broadcast_and_take_ordered(spark):
@@ -753,6 +1057,23 @@ def test_linear_cka_dim2_shuffle_not_rows(spark):
         c.unpersist()
 
 
+def test_brunner_munzel_single_value_count_shuffle(spark):
+    """brunner_munzel: mann_whitney's plan shape — one value-count
+    aggregate, one distinct-value window, no join back to raw rows."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        brunner_munzel,
+    )
+
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    plan = _plan(
+        brunner_munzel(
+            c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
+        )
+    )
+    assert "SortMergeJoin" not in plan, plan
+    assert "BroadcastHashJoin" not in plan, plan
+
+
 def test_juilland_take_ordered_top_k(spark):
     """juilland_dispersion: the top-k cut is TakeOrderedAndProject,
     never a global single-partition sort of the vocabulary."""
@@ -763,6 +1084,22 @@ def test_juilland_take_ordered_top_k(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(juilland_dispersion(d, "source", "text", top_k=20))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_wilcoxon_single_count_shuffle_no_join(spark):
+    """wilcoxon_signed_rank: one |diff|-count aggregate + one
+    distinct-value window — no join at all."""
+    from png_from_pdf_extracter_spark.functions.stats import (
+        wilcoxon_signed_rank,
+    )
+
+    c = spark.read.parquet(f"{SF}/customer.parquet")
+    plan = _plan(
+        wilcoxon_signed_rank(
+            c, "c_acctbal", m0_q=450000, group_cols=("c_mktsegment",)
+        )
+    )
+    assert "Join" not in plan, plan
 
 
 def test_lift_table_single_global_window(spark):

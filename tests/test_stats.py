@@ -503,110 +503,6 @@ def test_theil_sen_equal_x_pairs_excluded(spark):
     assert r["n_pairs"] == 2  # (1,0)-(2,1) and (1,100)-(2,1)
 
 
-# ---- changepoint_binary_seg ----
-
-from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
-    changepoint_binary_seg,
-)
-
-
-def _binseg_reference(vals, K, min_seg=2, quantize=1):
-    """Greedy binary segmentation in plain python (exact integers)."""
-    q = [round(v * 10 ** quantize) for v in vals]
-    segs = [(0, len(q))]  # [start, end) 0-based
-    splits = []
-    for _ in range(K):
-        best = None  # (bss, abs_idx, seg_i)
-        for si, (a, b) in enumerate(segs):
-            seg = q[a:b]
-            n = len(seg)
-            st = sum(seg)
-            sl = 0
-            for k in range(1, n + 1):
-                sl += seg[k - 1]
-                if k < min_seg or k > n - min_seg:
-                    continue
-                nl, nr = k, n - k
-                c = sl * nr - (st - sl) * nl
-                bss = (float(c) * float(c)) / float(nl * nr)
-                abs_idx = a + k  # 1-based absolute split row
-                cand = (bss, -abs_idx, si, abs_idx)
-                if best is None or (cand[0], cand[1]) > (
-                    best[0], best[1]
-                ):
-                    best = cand
-        if best is None:
-            break
-        _, _, si, abs_idx = best
-        a, b = segs[si]
-        segs[si : si + 1] = [(a, abs_idx), (abs_idx, b)]
-        splits.append(abs_idx)
-    segs.sort()
-    return segs
-
-
-def test_binseg_recovers_two_planted_shifts(spark):
-    vals = [0.0] * 10 + [50.0] * 10 + [100.0] * 10
-    df = spark.createDataFrame(
-        [("g", i, v) for i, v in enumerate(vals)],
-        "g string, i long, v double",
-    )
-    rows = sorted(
-        changepoint_binary_seg(
-            df, ("g",), ("i",), "v", max_changepoints=2
-        ).collect(),
-        key=lambda r: r["start_idx"],
-    )
-    assert [(r["start_idx"], r["end_idx"]) for r in rows] == [
-        (1, 10), (11, 20), (21, 30)
-    ]
-    assert [r["mean_q"] for r in rows] == [0.0, 50.0, 100.0]
-    assert [r["segment"] for r in rows] == [0, 1, 2]
-
-
-def test_binseg_matches_bruteforce(spark):
-    import random
-
-    rng = random.Random(21)
-    vals = [rng.uniform(0, 10) for _ in range(15)] + [
-        rng.uniform(40, 50) for _ in range(12)
-    ] + [rng.uniform(20, 25) for _ in range(9)]
-    df = spark.createDataFrame(
-        [("g", i, v) for i, v in enumerate(vals)],
-        "g string, i long, v double",
-    )
-    rows = sorted(
-        changepoint_binary_seg(
-            df, ("g",), ("i",), "v", max_changepoints=3
-        ).collect(),
-        key=lambda r: r["start_idx"],
-    )
-    expect = _binseg_reference(vals, 3)
-    assert [(r["start_idx"] - 1, r["end_idx"]) for r in rows] == expect
-
-
-def test_binseg_zero_changepoints_and_multigroup(spark):
-    df = spark.createDataFrame(
-        [("a", i, float(i > 4) * 10) for i in range(10)]
-        + [("b", i, 1.0) for i in range(6)],
-        "g string, i long, v double",
-    )
-    none_rows = changepoint_binary_seg(
-        df, ("g",), ("i",), "v", max_changepoints=0
-    ).collect()
-    assert len(none_rows) == 2  # one segment per group
-    rows = changepoint_binary_seg(
-        df, ("g",), ("i",), "v", max_changepoints=2, min_bss=1.0
-    ).collect()
-    by_g = {}
-    for r in rows:
-        by_g.setdefault(r["g"], []).append(r)
-    # 'a' splits at the planted step; constant 'b' has bss 0 < min_bss
-    assert len(by_g["a"]) >= 2 and len(by_g["b"]) == 1
-    a_rows = sorted(by_g["a"], key=lambda r: r["start_idx"])
-    assert a_rows[0]["end_idx"] == 5
-
-
 def test_gini_scoped_matches_per_scope_unscoped(spark):
     # each scope's scoped row equals running unscoped on that slice
     df = spark.createDataFrame(
@@ -1019,88 +915,14 @@ def test_cusum_batch_state_single_segment_is_whole_answer(spark):
     assert folded["alarm"] == (want > 5)
 
 
-# ---- one-way ANOVA / Brown-Forsythe / Cramér's V / McNemar ----
+# ---- Cramér's V / McNemar ----
 
 from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
-    anova_oneway,
     cramers_v,
-    levene_bf,
 )
 from png_from_pdf_extracter_spark.functions.evalmetrics import (  # noqa: E402
     mcnemar_test,
 )
-
-
-def test_anova_matches_numpy(spark):
-    import numpy as np
-
-    groups = {
-        "a": [1.0, 2.0, 3.0, 4.0, 5.0],
-        "b": [2.5, 3.5, 4.5, 5.5],
-        "c": [10.0, 11.0, 12.0],
-    }
-    rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = anova_oneway(df, "v", "g", quantize=2).collect()[0]
-    # numpy reference on the quantized values
-    xs = {g: np.array([round(v * 100) for v in vs]) for g, vs in groups.items()}
-    allv = np.concatenate(list(xs.values()))
-    gm = allv.mean()
-    ssb = sum(len(v) * (v.mean() - gm) ** 2 for v in xs.values())
-    ssw = sum(((v - v.mean()) ** 2).sum() for v in xs.values())
-    k, n = len(xs), len(allv)
-    f_ref = (ssb / (k - 1)) / (ssw / (n - k))
-    assert r["n"] == n and r["k"] == k
-    assert abs(r["f_q6"] - f_ref) < 1e-5
-    assert r["ssb_m6"] == int(np.floor(ssb / 1e6))
-    assert r["ssw_m6"] == int(np.floor(ssw / 1e6))
-
-
-def test_anova_equal_means_f_near_zero(spark):
-    rows = [("a", v) for v in (1.0, 2.0, 3.0)] + [
-        ("b", v) for v in (1.0, 2.0, 3.0)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = anova_oneway(df, "v", "g").collect()[0]
-    assert r["f_q6"] == 0.0  # identical group sums: SSB exactly 0
-
-
-def test_levene_matches_numpy(spark):
-    import numpy as np
-
-    groups = {
-        "a": [1.0, 2.0, 3.0, 4.0, 100.0],  # fat spread
-        "b": [5.0, 5.1, 5.2, 5.3],
-        "c": [7.0, 7.5, 8.0],
-    }
-    rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = levene_bf(df, "v", "g", quantize=2).collect()[0]
-    # Brown-Forsythe with LOWER+UPPER median (doubled-median convention)
-    zs = []
-    for vs in groups.values():
-        x = np.sort(np.array([round(v * 100) for v in vs]))
-        n = len(x)
-        med2 = x[(n + 1) // 2 - 1] + x[n // 2]
-        zs.append(np.abs(2 * x - med2))
-    allz = np.concatenate(zs)
-    n, k = len(allz), len(zs)
-    zbar = allz.mean()
-    num = sum(len(z) * (z.mean() - zbar) ** 2 for z in zs)
-    den = sum(((z - z.mean()) ** 2).sum() for z in zs)
-    w_ref = (n - k) / (k - 1) * num / den
-    assert r["n"] == n and r["k"] == k
-    assert abs(r["w_q6"] - w_ref) < 1e-5
-
-
-def test_levene_identical_spreads_w_zero(spark):
-    # same shape shifted: identical |deviation| multisets per group
-    rows = [("a", v) for v in (1.0, 2.0, 3.0)] + [
-        ("b", v + 50) for v in (1.0, 2.0, 3.0)
-    ]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = levene_bf(df, "v", "g").collect()[0]
-    assert r["w_q6"] == 0.0
 
 
 def test_cramers_v_perfect_association(spark):
@@ -1221,12 +1043,11 @@ def test_did_empty_cell_null(spark):
     assert r["did_q6"] is None  # no treated-pre cell
 
 
-# ---- Cliff's delta / Cochran's Q / Friedman ----
+# ---- Cliff's delta / Cochran's Q ----
 
 from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
     cliffs_delta,
     cochran_q,
-    friedman_test,
 )
 
 
@@ -1291,58 +1112,6 @@ def test_cochran_q_unanimous_null(spark):
     assert cochran_q(df, "item", "rater", "s").collect()[0]["q_q6"] is None
 
 
-def _friedman_ref(blocks):
-    # blocks: list of per-subject value lists (complete design)
-    import math
-
-    k = len(blocks[0])
-    n = len(blocks)
-    a4 = 0
-    r2_sums = [0] * k
-    for vals in blocks:
-        order = sorted(vals)
-        for j, v in enumerate(vals):
-            rank_min = 1 + sum(1 for w in vals if w < v)
-            ties = sum(1 for w in vals if w == v)
-            r2 = 2 * rank_min + ties - 1
-            r2_sums[j] += r2
-            a4 += r2 * r2
-    c4 = n * k * (k + 1) ** 2
-    s4 = sum((r2s - n * (k + 1)) ** 2 for r2s in r2_sums)
-    if a4 == c4:
-        return None
-    return math.floor((k - 1) * s4 / (a4 - c4) * 1e6) / 1e6
-
-
-def test_friedman_brute_force_with_ties(spark):
-    blocks = [
-        [3.0, 1.0, 2.0],
-        [2.0, 2.0, 1.0],
-        [3.0, 1.0, 1.0],
-        [2.0, 1.0, 3.0],
-        [3.0, 2.0, 1.0],
-    ]
-    rows = [
-        (i, f"t{j}", v)
-        for i, vals in enumerate(blocks)
-        for j, v in enumerate(vals)
-    ]
-    df = spark.createDataFrame(rows, "subj long, trt string, v double")
-    r = friedman_test(df, "subj", "trt", "v", quantize=0).collect()[0]
-    assert r["q_q6"] == _friedman_ref(blocks)
-    assert r["n_subjects"] == 5 and r["k"] == 3
-
-
-def test_friedman_all_tied_null(spark):
-    rows = [(i, f"t{j}", 1.0) for i in range(3) for j in range(3)]
-    df = spark.createDataFrame(rows, "subj long, trt string, v double")
-    assert (
-        friedman_test(df, "subj", "trt", "v").collect()[0]["q_q6"] is None
-    )
-
-
-# ---- Hodges-Lehmann ----
-
 from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
     hodges_lehmann,
 )
@@ -1388,49 +1157,11 @@ def test_hodges_lehmann_outlier_robust(spark):
     assert 10.0 <= r["hl_q6"] <= 15.0  # one wild point cannot drag it
 
 
-# ---- Jonckheere-Terpstra / Page's L ----
+# ---- Page's L ----
 
 from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
-    jonckheere_terpstra,
     page_trend_test,
 )
-
-
-def _jt_ref(groups):
-    # groups: dict ordered-key -> values; doubled J with half-credit ties
-    keys = sorted(groups)
-    j2 = 0
-    for a in range(len(keys)):
-        for b in range(a + 1, len(keys)):
-            for x in groups[keys[a]]:
-                for y in groups[keys[b]]:
-                    j2 += 2 if y > x else (1 if y == x else 0)
-    return j2
-
-
-def test_jonckheere_brute_force_with_ties(spark):
-    groups = {
-        "a": [1.0, 2.0, 2.0],
-        "b": [2.0, 3.0],
-        "c": [3.0, 4.0, 5.0],
-    }
-    rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = jonckheere_terpstra(df, "v", "g", quantize=0).collect()[0]
-    assert r["j2"] == _jt_ref(groups)
-    n = 8
-    sn2 = 9 + 4 + 9
-    assert r["mean4"] == n * n - sn2
-    assert r["n"] == n and r["k"] == 3
-
-
-def test_jonckheere_perfect_trend_z_positive(spark):
-    groups = {"a": [1.0, 2.0], "b": [3.0, 4.0], "c": [5.0, 6.0]}
-    rows = [(g, v) for g, vs in groups.items() for v in vs]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = jonckheere_terpstra(df, "v", "g").collect()[0]
-    assert r["j2"] == 2 * 12  # every later-group value beats every earlier
-    assert r["z_q6"] > 2.0
 
 
 def test_page_trend_perfect_order(spark):
@@ -1898,62 +1629,6 @@ def test_cvm_degenerate_one_arm(spark):
     assert r["n_b"] == 0 and r["t_q6"] is None
 
 
-def test_tukey_textbook(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import tukey_hsd
-
-    # three groups of 4; group c is shifted far from a and b
-    data = {
-        "a": [1.0, 2.0, 3.0, 4.0],
-        "b": [1.5, 2.5, 3.5, 4.5],
-        "c": [10.0, 11.0, 12.0, 13.0],
-    }
-    rows = [(v, g) for g, vs in data.items() for v in vs]
-    df = spark.createDataFrame(rows, "v double, grp string")
-    out = {
-        (r["g_a"], r["g_b"]): r
-        for r in tukey_hsd(df, "v", "grp", quantize=2).collect()
-    }
-    assert set(out) == {("a", "b"), ("a", "c"), ("b", "c")}
-    # python twin in quantized cents
-    q = {g: [int(round(v * 100)) for v in vs] for g, vs in data.items()}
-    means = {g: sum(vs) / len(vs) for g, vs in q.items()}
-    ssw = sum(
-        sum(x * x for x in vs) - (sum(vs) ** 2) / len(vs)
-        for vs in q.values()
-    )
-    n_tot = sum(len(vs) for vs in q.values())
-    msw = ssw / (n_tot - 3)
-    for (ga, gb), r in out.items():
-        diff = means[ga] - means[gb]
-        se = math.sqrt(msw / 2.0 * (1.0 / 4 + 1.0 / 4))
-        assert r["diff_q6"] == math.floor(diff / 100.0 * 1e6) / 1e6
-        assert abs(r["q_q6"] - abs(diff) / se) < 1e-5
-    # the shifted group dominates: q(a,c) >> q(a,b)
-    assert out[("a", "c")]["q_q6"] > out[("a", "b")]["q_q6"] * 5
-
-
-def test_tukey_unbalanced_kramer_and_degenerate(spark):
-    from png_from_pdf_extracter_spark.functions.stats import tukey_hsd
-
-    # unbalanced arms exercise the Tukey-Kramer 1/n_a + 1/n_b term
-    rows = [(float(v), "x") for v in (1, 2, 3, 4, 5, 6)] + [
-        (float(v), "y") for v in (4, 5)
-    ]
-    df = spark.createDataFrame(rows, "v double, grp string")
-    r = tukey_hsd(df, "v", "grp", quantize=2).collect()
-    assert len(r) == 1 and r[0]["n_a"] == 6 and r[0]["n_b"] == 2
-    assert r[0]["q_q6"] is not None and r[0]["q_q6"] > 0
-    # constant values -> MSW == 0 -> q null, means still emitted
-    df2 = spark.createDataFrame(
-        [(2.0, "x"), (2.0, "x"), (2.0, "y"), (2.0, "y")],
-        "v double, grp string",
-    )
-    r2 = tukey_hsd(df2, "v", "grp", quantize=2).collect()[0]
-    assert r2["q_q6"] is None and r2["diff_q6"] == 0.0
-
-
 def test_energy_distance_identical_zero_and_shift(spark):
     from png_from_pdf_extracter_spark.functions.stats import (
         energy_distance_2s,
@@ -2116,36 +1791,6 @@ def test_cuped_zero_pre_variance_null(spark):
     assert r["mean_a_q6"] is not None
 
 
-def test_wilson_textbook_and_edges(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        wilson_interval,
-    )
-
-    rows = [("a", 1)] * 8 + [("a", 0)] * 2 + [("b", 0)] * 5
-    df = spark.createDataFrame(rows, "g string, s int")
-    out = {
-        r["g"]: r
-        for r in wilson_interval(df, "s", group_cols=("g",)).collect()
-    }
-    # python twin for group a: n=10, s=8
-    n, s, z = 10, 8, 1.96
-    p = s / n
-    denom = 1.0 + z * z / n
-    center = (p + z * z / (2.0 * n)) / denom
-    half = z / denom * math.sqrt(p * (1 - p) / n + z * z / (4.0 * n * n))
-    assert out["a"]["p_q6"] == 0.8
-    assert out["a"]["lo_q6"] == math.floor(max(center - half, 0.0) * 1e6) / 1e6
-    assert out["a"]["hi_q6"] == math.floor(min(center + half, 1.0) * 1e6) / 1e6
-    # p_hat = 0 edge: Wald collapses to [0,0]; Wilson stays open
-    assert out["b"]["p_q6"] == 0.0
-    assert out["b"]["lo_q6"] == 0.0 and out["b"]["hi_q6"] > 0.3
-    # interval brackets the point estimate
-    for r in out.values():
-        assert r["lo_q6"] <= r["p_q6"] <= r["hi_q6"]
-
-
 def test_jackknife_python_twin(spark):
     import math
     import random
@@ -2192,92 +1837,6 @@ def test_jackknife_degenerate_single_group(spark):
     )
     r = jackknife_group_se(df, "v", "grp", quantize=2).collect()[0]
     assert r["se_q6"] is None and r["mean_q6"] == 1.5
-
-
-def test_capture_recapture_python_twin(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        capture_recapture,
-    )
-
-    # true population 0..99; sample A = multiples of 2, B = multiples
-    # of 3 -> m = multiples of 6
-    a = spark.createDataFrame([(i,) for i in range(0, 100, 2)], "id long")
-    b = spark.createDataFrame([(i,) for i in range(0, 100, 3)], "id long")
-    r = capture_recapture(a, b).collect()[0]
-    n1, n2, m = 50, 34, 17
-    est = (n1 + 1) * (n2 + 1) / (m + 1) - 1
-    se2 = ((n1 + 1) * (n2 + 1) * (n1 - m) * (n2 - m)
-           / ((m + 1) ** 2 * (m + 2)))
-    assert (r["n1"], r["n2"], r["m"]) == (n1, n2, m)
-    assert r["est_q6"] == math.floor(est * 1e6) / 1e6
-    assert abs(r["se_q6"] - math.sqrt(se2)) < 1e-5
-    # estimate in the plausible neighborhood of the true 100
-    assert 60 < r["est_q6"] < 140
-    # disjoint samples -> null estimate
-    c = spark.createDataFrame([(1000,)], "id long")
-    r2 = capture_recapture(a, c).collect()[0]
-    assert r2["est_q6"] is None
-
-
-def test_conditional_entropy_extremes(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        conditional_entropy,
-    )
-
-    # Y fully determined by X -> H(Y|X) = 0, U = 1
-    det = spark.createDataFrame(
-        [("a", "p")] * 5 + [("b", "q")] * 5, "x string, y string"
-    )
-    r = conditional_entropy(det, "x", "y").collect()[0]
-    assert r["h_cond_q6"] == 0.0 and r["theil_u_q6"] == 1.0
-    assert abs(r["h_y_q6"] - math.log(2)) < 1e-5
-    # X independent of Y -> H(Y|X) = H(Y), U = 0
-    ind = spark.createDataFrame(
-        [(x, y) for x in "ab" for y in "pq" for _ in range(3)],
-        "x string, y string",
-    )
-    r2 = conditional_entropy(ind, "x", "y").collect()[0]
-    assert r2["theil_u_q6"] == 0.0
-    assert r2["h_cond_q6"] == r2["h_y_q6"]
-    # constant Y -> H(Y) = 0, U undefined
-    const = spark.createDataFrame(
-        [("a", "z"), ("b", "z")], "x string, y string"
-    )
-    r3 = conditional_entropy(const, "x", "y").collect()[0]
-    assert r3["theil_u_q6"] is None and r3["h_y_q6"] == 0.0
-
-
-def test_conditional_entropy_python_twin(spark):
-    import math
-    import random
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        conditional_entropy,
-    )
-
-    rng = random.Random(13)
-    rows = [
-        (rng.choice("abc"), rng.choice("pqrs")) for _ in range(400)
-    ]
-    df = spark.createDataFrame(rows, "x string, y string")
-    r = conditional_entropy(df, "x", "y").collect()[0]
-    from collections import Counter
-
-    cxy = Counter(rows)
-    cx = Counter(x for x, _ in rows)
-    cy = Counter(y for _, y in rows)
-    n = len(rows)
-    hc = sum(
-        c / n * math.log(cx[x] / c) for (x, y), c in sorted(cxy.items())
-    )
-    hy = sum(c / n * math.log(n / c) for _, c in sorted(cy.items()))
-    assert abs(r["h_cond_q6"] - hc) < 2e-6
-    assert abs(r["h_y_q6"] - hy) < 2e-6
-    assert 0.0 <= r["theil_u_q6"] < 0.1  # independent by construction
 
 
 def test_group_influence_signs_and_twin(spark):
@@ -2348,67 +1907,6 @@ def test_holm_tie_convention_shares_fate(spark):
     assert len(tied) == 2
     assert tied[0]["reject"] == tied[1]["reject"] == True  # noqa: E712
     assert all(r["r_min"] == 1 for r in tied)
-
-
-def test_mantel_haenszel_python_twin(spark):
-    import math
-    import random
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        mantel_haenszel,
-    )
-
-    rng = random.Random(31)
-    rows = []
-    for s, base_rate in (("s1", 0.2), ("s2", 0.5), ("s3", 0.7)):
-        for _ in range(200):
-            arm = rng.randrange(2)
-            # planted uplift on the treated arm in every stratum
-            p = min(0.95, base_rate + (0.15 if arm else 0.0))
-            rows.append((s, arm, 1 if rng.random() < p else 0))
-    df = spark.createDataFrame(rows, "s string, arm int, y int")
-    r = mantel_haenszel(df, "s", "arm", "y").collect()[0]
-    # python twin
-    from collections import defaultdict
-
-    cells = defaultdict(lambda: [0, 0, 0, 0])
-    for s, a, y in rows:
-        idx = 0 if (a, y) == (1, 1) else 1 if (a, y) == (1, 0) else \
-            2 if (a, y) == (0, 1) else 3
-        cells[s][idx] += 1
-    rs = ss = dev = var = 0.0
-    for s in sorted(cells):
-        ta, tb, tc, td = cells[s]
-        n = ta + tb + tc + td
-        rs += ta * td / n
-        ss += tb * tc / n
-        dev += ta - (ta + tb) * (ta + tc) / n
-        var += ((ta + tb) * (tc + td) * (ta + tc) * (tb + td)
-                / (n * n * (n - 1)))
-    assert r["k_strata"] == 3
-    assert abs(r["or_mh_q6"] - rs / ss) < 1e-5
-    assert abs(r["chi2_q6"] - dev * dev / var) < 1e-4
-    # planted uplift -> OR > 1 and clearly significant
-    assert r["or_mh_q6"] > 1.2 and r["chi2_q6"] > 3.84
-
-
-def test_mantel_haenszel_simpson_guard(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        mantel_haenszel,
-    )
-
-    # classic Simpson setup: within each stratum treatment is NEUTRAL
-    # (same odds), but arm assignment is confounded with the stratum;
-    # MH must report OR ~= 1 where the collapsed 2x2 would not
-    rows = (
-        [("easy", 1, 1)] * 80 + [("easy", 1, 0)] * 20
-        + [("easy", 0, 1)] * 8 + [("easy", 0, 0)] * 2
-        + [("hard", 1, 1)] * 2 + [("hard", 1, 0)] * 8
-        + [("hard", 0, 1)] * 20 + [("hard", 0, 0)] * 80
-    )
-    df = spark.createDataFrame(rows, "s string, arm int, y int")
-    r = mantel_haenszel(df, "s", "arm", "y").collect()[0]
-    assert 0.9 < r["or_mh_q6"] < 1.1
 
 
 def test_yuen_python_twin(spark):
@@ -2487,51 +1985,6 @@ def test_yuen_degenerate_null(spark):
     assert r["t_q6"] is None
 
 
-def test_huber_python_twin_and_outlier_bound(spark):
-    import math
-    import random
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        huber_location,
-    )
-
-    rng = random.Random(53)
-    clean = [round(rng.gauss(50, 5), 2) for _ in range(99)]
-    rows = [(v, "g") for v in clean] + [(100000.0, "g")]
-    df = spark.createDataFrame(rows, "v double, grp string")
-    r = huber_location(df, "v", ("grp",), quantize=2).collect()[0]
-
-    q = sorted(int(round(v * 100)) for v, _ in rows)
-    n = len(q)
-    med2 = q[(n + 1) // 2 - 1] + q[n // 2]
-    d2 = [2 * x - med2 for x in q]
-    a2 = sorted(abs(d) for d in d2)
-    mad4 = a2[(n + 1) // 2 - 1] + a2[n // 2]
-    cs = sum(
-        max(-(mad4 * 3), min(mad4 * 3, 2 * d * 2)) for d in d2
-    )
-    med = med2 / 2.0
-    hub = med + cs / (4.0 * n * 2.0)
-    assert r["median_q6"] == math.floor(med / 100.0 * 1e6) / 1e6
-    assert r["huber_q6"] == math.floor(hub / 100.0 * 1e6) / 1e6
-    # the absurd outlier moves the plain mean by ~1000 but the Huber
-    # estimate stays within one clipped-MAD contribution of the median
-    assert abs(r["huber_q6"] - r["median_q6"]) < 1.0
-    assert r["n_g"] == 100
-
-
-def test_huber_symmetric_equals_median_and_mean(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        huber_location,
-    )
-
-    # perfectly symmetric data: median == huber == mean
-    vals = [10.0, 20.0, 30.0, 40.0, 50.0]
-    df = spark.createDataFrame([(v, "s") for v in vals], "v double, grp string")
-    r = huber_location(df, "v", ("grp",), quantize=2).collect()[0]
-    assert r["median_q6"] == 30.0 and r["huber_q6"] == 30.0
-
-
 def test_rmst_hand_computed_and_horizon(spark):
     import math
 
@@ -2555,46 +2008,6 @@ def test_rmst_hand_computed_and_horizon(spark):
     # no censoring, far horizon: RMST below tau
     r3 = rmst(df, "t", "e", tau=100).collect()[0]
     assert r3["rmst_q6"] < 100.0
-
-
-def test_slope_break_planted_kink(spark):
-    from png_from_pdf_extracter_spark.functions.stats import slope_break
-
-    # slope 2 for 20 points, then slope -1: the kink is at index 20
-    rows = []
-    for i in range(1, 41):
-        y = 2.0 * i if i <= 20 else 40.0 - 1.0 * (i - 20)
-        rows.append(("g", i, y))
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    r = slope_break(df, ("g",), ("o",), "v", quantize=2).collect()[0]
-    assert abs(r["break_idx"] - 20) <= 1
-    assert 1.8 < r["slope_l_q6"] < 2.2
-    assert -1.2 < r["slope_r_q6"] < -0.8
-    # two-line fit dramatically beats one line on a kinked series
-    assert r["gain_q6"] > 0.9
-    assert r["sse_break_q2"] < r["sse_single_q2"]
-
-
-def test_slope_break_pure_line_no_gain(spark):
-    from png_from_pdf_extracter_spark.functions.stats import slope_break
-
-    rows = [("g", i, 3.0 * i + 7.0) for i in range(1, 31)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    r = slope_break(df, ("g",), ("o",), "v", quantize=2).collect()[0]
-    # a perfect line: both segment slopes equal the global slope and
-    # the SSE gain is ~0 (single-line SSE is already ~0)
-    assert abs(r["slope_l_q6"] - 3.0) < 0.01
-    assert abs(r["slope_r_q6"] - 3.0) < 0.01
-    assert r["sse_break_q2"] <= r["sse_single_q2"]
-
-
-def test_slope_break_short_group_absent(spark):
-    from png_from_pdf_extracter_spark.functions.stats import slope_break
-
-    rows = [("tiny", i, float(i)) for i in range(1, 5)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    # n=4 < 2*min_seg=6: no candidate rows -> no output row
-    assert slope_break(df, ("g",), ("o",), "v").count() == 0
 
 
 def test_interrater_reliability_numpy_twin(spark):
@@ -2709,108 +2122,6 @@ def test_concordance_numpy_twin(spark):
     assert abs(r["loa_hi_q6"] - (bias + half)) < 2e-6
 
 
-def _lcg_seq(n, seed=12345):
-    """Deterministic pseudo-noise in [0, 99]."""
-    out, s = [], seed
-    for _ in range(n):
-        s = (1103515245 * s + 12345) % (2**31)
-        out.append((s >> 16) % 100)
-    return out
-
-
-def test_ljung_box_numpy_twin_and_whiteness(spark):
-    from png_from_pdf_extracter_spark.functions.stats import ljung_box
-    import numpy as np
-
-    vals = _lcg_seq(200)
-    rows = [("g", i, float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = {
-        r["lag"]: r
-        for r in ljung_box(
-            df, ("g",), ("o",), "v", max_lag=5, quantize=0
-        ).collect()
-    }
-    x = np.array(vals, dtype=float)
-    n = len(x)
-    xc = x - x.mean()
-    den = (xc**2).sum()
-    q = 0.0
-    for k in range(1, 6):
-        r = (xc[k:] * xc[:-k]).sum() / den
-        q += r * r / (n - k)
-        assert abs(out[k]["r_q6"] - r) < 2e-6, k
-        assert abs(out[k]["q_stat_q6"] - n * (n + 2) * q) < 1e-4, k
-    # pseudo-noise: Q(5) far below the chi2 tail for strong structure
-    assert out[5]["q_stat_q6"] < 30.0
-
-
-def test_ljung_box_autocorrelated_series_big_q(spark):
-    from png_from_pdf_extracter_spark.functions.stats import ljung_box
-
-    # slow sine-ish alternation: strong lag-1 correlation
-    rows = [("g", i, float(10 + (i % 10))) for i in range(200)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = {
-        r["lag"]: r
-        for r in ljung_box(
-            df, ("g",), ("o",), "v", max_lag=5, quantize=0
-        ).collect()
-    }
-    assert out[1]["r_q6"] > 0.4
-    assert out[5]["q_stat_q6"] > 100.0
-
-
-def test_kpss_walk_vs_noise(spark):
-    from png_from_pdf_extracter_spark.functions.stats import kpss_level
-    import numpy as np
-
-    noise = _lcg_seq(300, seed=7)
-    walk = np.cumsum(np.array(noise) - 49.5).tolist()
-    rows = [("noise", i, float(v)) for i, v in enumerate(noise)]
-    rows += [("walk", i, float(v)) for i, v in enumerate(walk)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = {
-        r["g"]: r["kpss_q6"]
-        for r in kpss_level(df, ("g",), ("o",), "v", quantize=1).collect()
-    }
-    # stationarity: noise well under the 1% critical value (0.739),
-    # a random walk far above it
-    assert out["noise"] < 0.739
-    assert out["walk"] > 0.739
-    # numpy twin for the noise series
-    x = np.round(np.array(noise, dtype=float) * 10)
-    s = np.cumsum(x - x.mean())
-    eta = (s**2).sum() / (len(x) ** 2 * x.var())
-    assert abs(out["noise"] - eta) < 1e-5
-
-
-def test_variance_ratio_direction(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        variance_ratio,
-    )
-
-    noise = _lcg_seq(300, seed=99)
-    trend = [v + 5 * i for i, v in enumerate(noise)]  # trending
-    alt = [100 if i % 2 else 0 for i in range(300)]  # mean-reverting
-    rows = (
-        [("noise", i, float(v)) for i, v in enumerate(noise)]
-        + [("trend", i, float(v)) for i, v in enumerate(trend)]
-        + [("alt", i, float(v)) for i, v in enumerate(alt)]
-    )
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = {
-        r["g"]: r
-        for r in variance_ratio(
-            df, ("g",), ("o",), "v", q=5, quantize=0
-        ).collect()
-    }
-    assert out["noise"]["n_windows"] == 300 - 5 + 1
-    assert 0.5 < out["noise"]["vr_q6"] < 1.5
-    assert out["trend"]["vr_q6"] > 2.0
-    assert out["alt"]["vr_q6"] < 0.3
-
-
 def test_inequality_indices_equal_and_concentrated(spark):
     from png_from_pdf_extracter_spark.functions.stats import (
         inequality_indices,
@@ -2847,93 +2158,6 @@ def test_inequality_drops_nonpositive(spark):
     )
     r = inequality_indices(df, "v", ("g",), quantize=0).collect()[0]
     assert r["n"] == 2 and abs(r["theil_q6"]) < 2e-6
-
-
-def test_srm_balanced_and_planted(spark):
-    from png_from_pdf_extracter_spark.functions.stats import srm_check
-
-    bal = spark.createDataFrame(
-        [("a",)] * 50 + [("b",)] * 50, "arm string"
-    )
-    r = srm_check(bal, "arm", {"a": 1, "b": 1}).collect()[0]
-    assert r["chi2_q6"] == 0.0 and r["n"] == 100 and r["k_arms"] == 2
-    # planted 70/30 against 50/50: chi2 = (20^2/50)*2 = 16
-    skew = spark.createDataFrame(
-        [("a",)] * 70 + [("b",)] * 30, "arm string"
-    )
-    r2 = srm_check(skew, "arm", {"a": 1, "b": 1}).collect()[0]
-    assert abs(r2["chi2_q6"] - 16.0) < 2e-6
-    # rogue arm is counted, not folded into chi2
-    rogue = spark.createDataFrame(
-        [("a",)] * 50 + [("b",)] * 50 + [("zz",)] * 5, "arm string"
-    )
-    r3 = srm_check(rogue, "arm", {"a": 1, "b": 1}).collect()[0]
-    assert r3["n_unexpected"] == 5 and r3["n"] == 100
-    assert r3["chi2_q6"] == 0.0
-
-
-def test_forecast_accuracy_perfect_seasonal(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        forecast_accuracy,
-    )
-
-    # exactly periodic series: seasonal-naive is perfect
-    rows = [("g", t, float(10 + (t % 7))) for t in range(28)]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    r = forecast_accuracy(
-        df, ("g",), ("t",), "v", season=7, quantize=0
-    ).collect()[0]
-    assert r["n"] == 28 and r["n_eval"] == 21
-    for c in ("mae_q6", "rmse_q6", "smape_q6", "mape_q6", "pinball90_q6"):
-        assert r[c] == 0.0, c
-    assert r["mase_q6"] == 0.0
-
-
-def test_forecast_accuracy_hand_computed(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        forecast_accuracy,
-    )
-    import math
-
-    vals = [10.0, 12.0, 9.0, 11.0, 15.0, 8.0]
-    rows = [("g", t, v) for t, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    r = forecast_accuracy(
-        df, ("g",), ("t",), "v", season=2, quantize=0
-    ).collect()[0]
-    # f_t = x_{t-2}: errors for t=2..5: (9-10), (11-12), (15-9), (8-11)
-    errs = [-1.0, -1.0, 6.0, -3.0]
-    mae = sum(abs(e) for e in errs) / 4
-    rmse = math.sqrt(sum(e * e for e in errs) / 4)
-    assert abs(r["mae_q6"] - mae) < 2e-6
-    assert abs(r["rmse_q6"] - rmse) < 2e-6
-    # naive-1 MAE: diffs 2,3,2,4,7 -> 18/5
-    assert abs(r["mase_q6"] - mae / (18.0 / 5.0)) < 2e-6
-    # pinball 0.9: d>=0 -> .9d, d<0 -> .1|d|: (.1+.1+5.4+.3)/4
-    assert abs(r["pinball90_q6"] - (0.1 + 0.1 + 5.4 + 0.3) / 4) < 2e-6
-    smape = sum(
-        2 * abs(e) / (abs(x) + abs(f))
-        for e, x, f in zip(errs, vals[2:], vals[:4])
-    ) / 4
-    assert abs(r["smape_q6"] - smape) < 2e-6
-    mape = sum(
-        abs(e) / abs(x) for e, x in zip(errs, vals[2:])
-    ) / 4
-    assert abs(r["mape_q6"] - mape) < 2e-6
-
-
-def test_forecast_accuracy_constant_series_mase_null(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        forecast_accuracy,
-    )
-
-    rows = [("g", t, 5.0) for t in range(10)]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    r = forecast_accuracy(
-        df, ("g",), ("t",), "v", season=3, quantize=0
-    ).collect()[0]
-    assert r["mase_q6"] is None  # naive-1 MAE is 0: undefined
-    assert r["mae_q6"] == 0.0
 
 
 def _midranks(vals, pool):
@@ -3015,316 +2239,6 @@ def test_brunner_munzel_disjoint_degenerate(spark):
     assert r["p_hat_q6"] == 1.0
 
 
-def test_hurst_regimes(spark):
-    from png_from_pdf_extracter_spark.functions.stats import hurst_rs
-    import numpy as np
-
-    noise = _lcg_seq(512, seed=3)
-    rng_walk = np.cumsum(np.array(_lcg_seq(512, seed=5)) - 49.5)
-    alt = [100.0 if i % 2 else 0.0 for i in range(512)]
-    rows = (
-        [("noise", i, float(v)) for i, v in enumerate(noise)]
-        + [("walk", i, float(v)) for i, v in enumerate(rng_walk)]
-        + [("alt", i, float(v)) for i, v in enumerate(alt)]
-    )
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = hurst_rs(
-        df, ("g",), ("o",), "v", block_sizes=(8, 16, 32, 64), quantize=1
-    ).collect()
-    h = {r["g"]: r["hurst_q6"] for r in out}
-    per = {(r["g"], r["block_m"]): r for r in out}
-    # each group has all 4 size rows with full block counts
-    assert per[("noise", 8)]["n_blocks"] == 64
-    assert per[("noise", 64)]["n_blocks"] == 8
-    # iid noise ~ 0.5 (R/S bias pulls slightly high at small m)
-    assert 0.35 < h["noise"] < 0.72
-    # integrated walk: persistent, near 1
-    assert h["walk"] > 0.8
-    # strict alternation: strongly anti-persistent
-    assert h["alt"] < 0.2
-    # rs_mean grows with block size for the walk
-    assert (
-        per[("walk", 64)]["rs_mean_q6"] > per[("walk", 8)]["rs_mean_q6"]
-    )
-
-
-def test_hurst_short_group_null_fit(spark):
-    from png_from_pdf_extracter_spark.functions.stats import hurst_rs
-
-    # only 10 points: just the m=8 size yields a complete block ->
-    # single ln point, slope undefined
-    rows = [("g", i, float(i % 3)) for i in range(10)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    out = hurst_rs(
-        df, ("g",), ("o",), "v", block_sizes=(8, 16, 32, 64), quantize=0
-    ).collect()
-    assert len(out) == 1 and out[0]["block_m"] == 8
-    assert out[0]["hurst_q6"] is None
-
-
-def test_kendalls_w_unanimous_and_random(spark):
-    from png_from_pdf_extracter_spark.functions.stats import kendalls_w
-
-    # 6 subjects all rank treatments identically -> W = 1
-    rows = [
-        (s, t, float(t)) for s in range(6) for t in range(1, 5)
-    ]
-    df = spark.createDataFrame(rows, "subj long, trt int, v double")
-    r = kendalls_w(df, "subj", "trt", "v", quantize=0).collect()[0]
-    assert r["n_subjects"] == 6 and r["k"] == 4
-    assert r["w_q6"] >= 1.0 - 1e-5
-    # derivation contract: W = Q/(n(k-1)) off the emitted Q
-    assert abs(r["w_q6"] - r["q_q6"] / (6 * 3)) < 2e-6
-    # scrambled preferences -> near 0
-    prefs = [
-        [1, 2, 3, 4], [4, 3, 2, 1], [2, 4, 1, 3],
-        [3, 1, 4, 2], [1, 4, 2, 3], [4, 1, 3, 2],
-    ]
-    rows2 = [
-        (s, t + 1, float(p[t]))
-        for s, p in enumerate(prefs)
-        for t in range(4)
-    ]
-    df2 = spark.createDataFrame(rows2, "subj long, trt int, v double")
-    r2 = kendalls_w(df2, "subj", "trt", "v", quantize=0).collect()[0]
-    assert r2["w_q6"] < 0.2
-
-
-def test_grubbs_planted_outlier(spark):
-    from png_from_pdf_extracter_spark.functions.stats import grubbs_test
-    import math
-
-    vals = [10.0] * 9 + [11.0] * 10 + [50.0]
-    df = spark.createDataFrame(
-        [("g", v) for v in vals], "g string, v double"
-    )
-    r = grubbs_test(df, "v", ("g",), quantize=0).collect()[0]
-    assert r["outlier_value_q"] == 50.0
-    n = len(vals)
-    mean = sum(vals) / n
-    sd = math.sqrt(sum((v - mean) ** 2 for v in vals) / (n - 1))
-    assert abs(r["g_q6"] - abs(50.0 - mean) / sd) < 2e-6
-    assert r["g_q6"] > 3.0  # clearly beyond any 5% critical value
-    # constant group: G undefined
-    dfc = spark.createDataFrame(
-        [("c", 5.0)] * 8, "g string, v double"
-    )
-    rc = grubbs_test(dfc, "v", ("g",), quantize=0).collect()[0]
-    assert rc["g_q6"] is None
-
-
-def test_effect_sizes_numpy_twin(spark):
-    from png_from_pdf_extracter_spark.functions.stats import effect_sizes
-    import math
-
-    xs = [12.0, 14.0, 11.0, 15.0, 13.0, 16.0, 12.0, 14.0]
-    ys = [10.0, 11.0, 9.0, 10.0, 12.0, 11.0]
-    rows = [("a", v) for v in xs] + [("b", v) for v in ys]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = effect_sizes(df, "v", "g", "a", "b", quantize=1).collect()[0]
-    na, nb = len(xs), len(ys)
-    ma, mb = sum(xs) / na, sum(ys) / nb
-    va = sum((v - ma) ** 2 for v in xs) / (na - 1)
-    vb = sum((v - mb) ** 2 for v in ys) / (nb - 1)
-    sp = math.sqrt(((na - 1) * va + (nb - 1) * vb) / (na + nb - 2))
-    d = (ma - mb) / sp
-    g = d * (1 - 3.0 / (4 * (na + nb) - 9))
-    assert abs(r["mean_diff_q"] - (ma - mb)) < 1e-5
-    assert abs(r["d_q6"] - d) < 1e-5
-    assert abs(r["g_q6"] - g) < 1e-5
-    assert abs(r["glass_q6"] - (ma - mb) / math.sqrt(vb)) < 1e-5
-    assert abs(r["g_q6"]) < abs(r["d_q6"])  # correction shrinks
-
-
-def test_partial_corr_confounder_removed(spark):
-    from png_from_pdf_extracter_spark.functions.stats import partial_corr
-
-    # x and y both driven by z; no direct link -> partial ~ 0
-    rows = []
-    for i in range(200):
-        z = float(i % 50)
-        noise_x = float((i * 7) % 11) - 5.0
-        noise_y = float((i * 13) % 11) - 5.0
-        rows.append((2.0 * z + noise_x, 3.0 * z + noise_y, z))
-    df = spark.createDataFrame(rows, "x double, y double, z double")
-    r = partial_corr(df, "x", "y", "z", quantize=1).collect()[0]
-    assert r["r_xy_q6"] > 0.9  # raw correlation looks strong
-    assert abs(r["partial_q6"]) < 0.2  # vanishes given z
-
-
-def test_gini_gain_perfect_and_useless_feature(spark):
-    from png_from_pdf_extracter_spark.functions.stats import gini_gain
-
-    # feature == label: split is pure -> gain = parent impurity
-    rows = [(f"f{i % 3}", f"y{i % 3}") for i in range(90)]
-    df = spark.createDataFrame(rows, "f string, y string")
-    r = gini_gain(df, "f", "y").collect()[0]
-    assert abs(r["gini_parent_q6"] - (1 - 3 * (1 / 3) ** 2)) < 2e-6
-    assert r["gini_split_q6"] == 0.0
-    assert abs(r["gain_q6"] - r["gini_parent_q6"]) < 2e-6
-    # independent feature: no gain
-    rows2 = [(f"f{i % 2}", f"y{i % 3}") for i in range(120)]
-    df2 = spark.createDataFrame(rows2, "f string, y string")
-    r2 = gini_gain(df2, "f", "y").collect()[0]
-    assert abs(r2["gain_q6"]) < 2e-6
-
-
-def test_risk_ratios_hand_table(spark):
-    from png_from_pdf_extracter_spark.functions.stats import risk_ratios
-    import math
-
-    # a=30 b=70 c=10 d=90: RR = .3/.1 = 3, OR = 30*90/(70*10)
-    rows = (
-        [(True, True)] * 30 + [(True, False)] * 70
-        + [(False, True)] * 10 + [(False, False)] * 90
-    )
-    df = spark.createDataFrame(rows, "e boolean, o boolean")
-    r = risk_ratios(df, "e", "o").collect()[0]
-    assert (r["a"], r["b"], r["c"], r["d"]) == (30, 70, 10, 90)
-    assert abs(r["rr_q6"] - 3.0) < 2e-6
-    orr = 30 * 90 / (70 * 10.0)
-    assert abs(r["or_q6"] - orr) < 2e-6
-    se = math.sqrt(1 / 30 - 1 / 100 + 1 / 10 - 1 / 100)
-    assert abs(r["rr_lo_q6"] - math.exp(math.log(3) - 1.96 * se)) < 1e-5
-    assert abs(r["rr_hi_q6"] - math.exp(math.log(3) + 1.96 * se)) < 1e-5
-    assert r["rr_lo_q6"] > 1.0  # significantly protective exposure? no: risky
-    # empty cell -> nulls
-    df2 = spark.createDataFrame(
-        [(True, True)] * 5 + [(False, False)] * 5, "e boolean, o boolean"
-    )
-    r2 = risk_ratios(df2, "e", "o").collect()[0]
-    assert r2["rr_q6"] is None and r2["or_q6"] is None
-
-
-def test_quade_planted_effect_vs_flat(spark):
-    from png_from_pdf_extracter_spark.functions.stats import quade_test
-
-    # treatment 3 always best, margins scale with block index
-    rows = []
-    for b in range(12):
-        for t in range(1, 4):
-            rows.append((b, t, float(t * (b + 1) * 10)))
-    df = spark.createDataFrame(rows, "subj long, trt int, v double")
-    r = quade_test(df, "subj", "trt", "v", quantize=0).collect()[0]
-    assert r["n_blocks"] == 12 and r["k"] == 3
-    assert r["f_q6"] > 10.0  # strong consistent ordering
-    # flat blocks: all values tied -> ranks tie -> degenerate null
-    flat = [(b, t, 5.0) for b in range(6) for t in range(1, 4)]
-    df2 = spark.createDataFrame(flat, "subj long, trt int, v double")
-    assert quade_test(df2, "subj", "trt", "v").collect()[0]["f_q6"] is None
-
-
-def test_seasonal_decompose_planted_weekcycle(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        seasonal_decompose,
-    )
-
-    # pure period-7 cycle + slow trend: high seasonal AND trend strength
-    amp = [0, 30, 10, -20, 5, -15, -10]
-    rows = [
-        ("g", t, float(100 + t + amp[t % 7])) for t in range(70)
-    ]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    out = {
-        r["phase"]: r
-        for r in seasonal_decompose(
-            df, ("g",), ("t",), "v", period=7, quantize=0
-        ).collect()
-    }
-    assert len(out) == 7
-    r0 = out[0]
-    assert r0["f_seasonal_q6"] > 0.95
-    assert r0["f_trend_q6"] > 0.95
-    # seasonal indices recover the planted amplitudes (centered; the
-    # planted amps already sum to 0)
-    for ph in range(7):
-        # phase p corresponds to t with t%7 == (p+?): t starts at 0,
-        # rn starts at 1 -> phase = (rn-1)%7 = t%7
-        assert abs(out[ph]["seasonal_q6"] - amp[ph]) < 1.5, ph
-    # seasonal indices sum to ~0 by construction
-    assert abs(sum(r["seasonal_q6"] for r in out.values())) < 1e-3
-
-
-def test_seasonal_decompose_white_noise_low_strength(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        seasonal_decompose,
-    )
-
-    vals = _lcg_seq(140, seed=11)
-    rows = [("g", t, float(v)) for t, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "g string, t int, v double")
-    out = seasonal_decompose(
-        df, ("g",), ("t",), "v", period=7, quantize=0
-    ).collect()
-    # iid noise: neither component explains much
-    assert all(r["f_seasonal_q6"] < 0.5 for r in out)
-    assert all(r["f_trend_q6"] < 0.5 for r in out)
-
-
-def test_seasonal_decompose_even_period_rejected(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        seasonal_decompose,
-    )
-    import pytest
-
-    df = spark.createDataFrame([("g", 1, 1.0)], "g string, t int, v double")
-    with pytest.raises(ValueError):
-        seasonal_decompose(df, ("g",), ("t",), "v", period=6)
-
-
-def _ab_ref(xs, ys):
-    """Direct Ansari-Bradley with R-style tie-averaged scores."""
-    pool = sorted(xs + ys)
-    n = len(pool)
-    score = [min(i + 1, n - i) for i in range(n)]  # positions 1..N
-    # average scores over tied values
-    from collections import defaultdict
-
-    by_val = defaultdict(list)
-    for i, v in enumerate(pool):
-        by_val[v].append(score[i])
-    avg = {v: sum(s) / len(s) for v, s in by_val.items()}
-    ab = sum(avg[v] for v in xs)
-    s1 = sum(score)
-    s2 = sum(len(s) * (sum(s) / len(s)) ** 2 for s in by_val.values())
-    na, nb = len(xs), len(ys)
-    e = na * s1 / n
-    var = na * nb * (n * s2 - s1 * s1) / (n * n * (n - 1))
-    return ab, e, var
-
-
-def test_ansari_bradley_python_twin(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        ansari_bradley,
-    )
-    import math
-
-    xs = [1.0, 3.0, 3.0, 5.0, 9.0, 12.0, 12.0]
-    ys = [4.0, 5.0, 6.0, 6.0, 7.0, 8.0]
-    rows = [("a", v) for v in xs] + [("b", v) for v in ys]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = ansari_bradley(df, "v", "g", "a", "b", quantize=0).collect()[0]
-    ab, e, var = _ab_ref(xs, ys)
-    assert r["n_a"] == 7 and r["n_b"] == 6
-    assert abs(r["ab_q6"] - ab) < 2e-6
-    assert abs(r["z_q6"] - (ab - e) / math.sqrt(var)) < 2e-6
-    # a is wide, b is narrow: b's scores high, a's low -> z negative
-    assert r["z_q6"] < 0
-
-
-def test_ansari_bradley_equal_spread_near_zero(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        ansari_bradley,
-    )
-
-    xs = [float(i) for i in range(40)]
-    ys = [float(i) + 0.5 for i in range(40)]
-    rows = [("a", v) for v in xs] + [("b", v) for v in ys]
-    df = spark.createDataFrame(rows, "g string, v double")
-    r = ansari_bradley(df, "v", "g", "a", "b", quantize=1).collect()[0]
-    assert abs(r["z_q6"]) < 1.0
-
-
 def test_cucconi_python_twin(spark):
     from png_from_pdf_extracter_spark.functions.stats import cucconi_test
     import math
@@ -3368,126 +2282,6 @@ def test_cucconi_detects_scale_shift_mw_misses(spark):
     cu = cucconi_test(df, "v", "g", "a", "b", quantize=0).collect()[0]
     assert abs(mw["auc_a"] - 0.5) < 0.05
     assert cu["c_q6"] > 3.0
-
-
-def test_gwet_ac1_prevalence_vs_kappa_shape(spark):
-    from png_from_pdf_extracter_spark.functions.stats import gwet_ac1
-
-    # 95% of items are label 'x' and raters agree on them; they split
-    # on the rare label -> po is high, AC1 stays high (kappa would not)
-    rows = [("x", "x")] * 95 + [("y", "z")] * 5
-    df = spark.createDataFrame(rows, "a string, b string")
-    r = gwet_ac1(df, "a", "b").collect()[0]
-    assert r["n"] == 100 and r["q_labels"] == 3
-    assert abs(r["po_q6"] - 0.95) < 2e-6
-    assert r["ac1_q6"] > 0.9
-    # perfect agreement -> AC1 = 1
-    df2 = spark.createDataFrame(
-        [("p", "p")] * 10 + [("q", "q")] * 10, "a string, b string"
-    )
-    r2 = gwet_ac1(df2, "a", "b").collect()[0]
-    assert r2["ac1_q6"] >= 1.0 - 2e-6
-    # hand pe for the first table: margins x: (95+95), y: (5+0), z: (0+5)
-    pi = [190 / 200, 5 / 200, 5 / 200]
-    pe = sum(p * (1 - p) for p in pi) / 2
-    assert abs(r["pe_q6"] - pe) < 2e-6
-
-
-def test_bowker_directional_vs_symmetric(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        bowker_symmetry,
-    )
-
-    # symmetric disagreements: x->y 10, y->x 10 -> chi2 = 0
-    rows = [("x", "y")] * 10 + [("y", "x")] * 10 + [("x", "x")] * 30
-    df = spark.createDataFrame(rows, "a string, b string")
-    r = bowker_symmetry(df, "a", "b").collect()[0]
-    assert r["chi2_q6"] == 0.0 and r["n_offdiag_pairs"] == 1
-    assert r["n"] == 50
-    # one-way drift: x->y 20, y->x 2 -> (18)^2/22
-    rows2 = [("x", "y")] * 20 + [("y", "x")] * 2 + [("z", "z")] * 5
-    df2 = spark.createDataFrame(rows2, "a string, b string")
-    r2 = bowker_symmetry(df2, "a", "b").collect()[0]
-    assert abs(r2["chi2_q6"] - 18 * 18 / 22.0) < 2e-6
-
-
-def test_hellinger_identical_and_disjoint(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        hellinger_distance,
-    )
-    import math
-
-    same = [("a", float(v % 5)) for v in range(50)] + [
-        ("b", float(v % 5)) for v in range(50)
-    ]
-    df = spark.createDataFrame(same, "g string, v double")
-    r = hellinger_distance(df, "v", "g", "a", "b", quantize=0).collect()[
-        0
-    ]
-    assert r["bc_q6"] >= 1.0 - 2e-6
-    assert r["hellinger_q6"] <= 1e-3
-    # disjoint support: BC = 0, H = 1
-    dis = [("a", float(v)) for v in range(10)] + [
-        ("b", float(v) + 100.0) for v in range(10)
-    ]
-    df2 = spark.createDataFrame(dis, "g string, v double")
-    r2 = hellinger_distance(df2, "v", "g", "a", "b", quantize=0).collect()[
-        0
-    ]
-    assert r2["bc_q6"] == 0.0 and r2["hellinger_q6"] == 1.0
-    # hand case: p = (.5, .5), q = (1, 0)
-    h3rows = [("a", 0.0)] * 5 + [("a", 1.0)] * 5 + [("b", 0.0)] * 8
-    df3 = spark.createDataFrame(h3rows, "g string, v double")
-    r3 = hellinger_distance(df3, "v", "g", "a", "b", quantize=0).collect()[
-        0
-    ]
-    bc = math.sqrt(0.5 * 1.0)
-    assert abs(r3["bc_q6"] - bc) < 2e-6
-    assert abs(r3["hellinger_q6"] - math.sqrt(1 - bc)) < 2e-6
-
-
-def test_woolf_homogeneous_vs_heterogeneous(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        woolf_homogeneity,
-    )
-    import math
-
-    # two strata with the SAME OR ~ 4 -> tiny chi2
-    def stratum(name, a, b, c, d):
-        rows = (
-            [(name, 1, 1)] * a + [(name, 1, 0)] * b
-            + [(name, 0, 1)] * c + [(name, 0, 0)] * d
-        )
-        return rows
-
-    homo = stratum("s1", 40, 10, 10, 10) + stratum("s2", 80, 20, 20, 20)
-    df = spark.createDataFrame(homo, "s string, arm int, o int")
-    r = woolf_homogeneity(df, "s", "arm", "o").collect()[0]
-    assert r["k_strata"] == 2
-    assert r["chi2_q6"] < 0.1
-    # pooled OR near 4 (Haldane pulls slightly)
-    assert 3.0 < r["pooled_or_q6"] < 5.0
-
-    # opposite effects (OR 4 vs OR 1/4): chi2 blows past the df=1
-    # critical value
-    het = stratum("s1", 40, 10, 10, 10) + stratum("s2", 10, 40, 40, 10)
-    df2 = spark.createDataFrame(het, "s string, arm int, o int")
-    r2 = woolf_homogeneity(df2, "s", "arm", "o").collect()[0]
-    assert r2["chi2_q6"] > 10.0
-
-    # python twin for the homogeneous case
-    def cellstats(a, b, c, d):
-        a, b, c, d = a + 0.5, b + 0.5, c + 0.5, d + 0.5
-        lnor = math.log(a * d / (b * c))
-        w = 1.0 / (1 / a + 1 / b + 1 / c + 1 / d)
-        return lnor, w
-
-    l1, w1 = cellstats(40, 10, 10, 10)
-    l2, w2 = cellstats(80, 20, 20, 20)
-    pool = (w1 * l1 + w2 * l2) / (w1 + w2)
-    chi2 = w1 * (l1 - pool) ** 2 + w2 * (l2 - pool) ** 2
-    assert abs(r["pooled_or_q6"] - math.exp(pool)) < 1e-5
-    assert abs(r["chi2_q6"] - chi2) < 1e-5
 
 
 def test_competing_risks_python_twin_and_bounds(spark):
@@ -3557,50 +2351,6 @@ def test_competing_risks_single_cause_matches_1_minus_km(spark):
         assert abs(c - (1.0 - km[t])) < 5e-6, t
 
 
-def test_pettitt_python_twin_and_planted_break(spark):
-    from png_from_pdf_extracter_spark.functions.stats import pettitt_test
-    import math
-
-    vals = [5.0, 6.0, 5.0, 7.0, 6.0, 6.0, 15.0, 16.0, 14.0, 15.0,
-            16.0, 15.0]
-    rows = [("g", i, v) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    r = pettitt_test(df, ("g",), ("o",), "v", quantize=0).collect()[0]
-
-    # direct O(n^2) U_t with sign (ties -> 0)
-    n = len(vals)
-
-    def sgn(x):
-        return (x > 0) - (x < 0)
-
-    best_k, best_t = -1, None
-    for t in range(1, n):
-        u = sum(
-            sgn(vals[j] - vals[i])
-            for i in range(t)
-            for j in range(t, n)
-        )
-        if abs(u) > best_k:
-            best_k, best_t = abs(u), t
-    assert r["n"] == n
-    assert r["k_stat"] == best_k
-    assert r["t_star"] == best_t
-    assert r["t_star"] == 6  # the planted break
-    p = 2 * math.exp(-6 * best_k**2 / (n**3 + n**2))
-    assert abs(r["p_approx_q6"] - min(1.0, p)) < 2e-6
-    assert r["p_approx_q6"] < 0.05
-
-
-def test_pettitt_no_break_weak_k(spark):
-    from png_from_pdf_extracter_spark.functions.stats import pettitt_test
-
-    vals = _lcg_seq(60, seed=21)
-    rows = [("g", i, float(v)) for i, v in enumerate(vals)]
-    df = spark.createDataFrame(rows, "g string, o int, v double")
-    r = pettitt_test(df, ("g",), ("o",), "v", quantize=0).collect()[0]
-    assert r["p_approx_q6"] > 0.05  # nothing to find
-
-
 def test_wilcoxon_signed_rank_python_twin(spark):
     from png_from_pdf_extracter_spark.functions.stats import (
         wilcoxon_signed_rank,
@@ -3655,315 +2405,3 @@ def test_wilcoxon_symmetric_about_m0_near_zero(spark):
         df, "v", m0_q=50, group_cols=("g",), quantize=0
     ).collect()[0]
     assert abs(r["z_q6"]) < 1e-6  # perfectly symmetric
-
-
-def test_ordinal_association_python_twin(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        ordinal_association,
-    )
-    import math
-
-    rows = [
-        (1, 1), (1, 1), (1, 2), (2, 1), (2, 2), (2, 2), (2, 3),
-        (3, 2), (3, 3), (3, 3), (3, 1), (4, 3), (4, 4), (4, 4),
-    ]
-    df = spark.createDataFrame(rows, "x int, y int")
-    r = ordinal_association(df, "x", "y").collect()[0]
-
-    c = d = tx = ty = 0
-    n = len(rows)
-    for i in range(n):
-        for j in range(i + 1, n):
-            dx = rows[j][0] - rows[i][0]
-            dy = rows[j][1] - rows[i][1]
-            if dx == 0 and dy != 0:
-                tx += 1
-            elif dy == 0 and dx != 0:
-                ty += 1
-            elif dx * dy > 0:
-                c += 1
-            elif dx * dy < 0:
-                d += 1
-    assert (r["c_pairs"], r["d_pairs"]) == (c, d)
-    assert abs(r["gamma_q6"] - (c - d) / (c + d)) < 2e-6
-    assert abs(r["somers_yx_q6"] - (c - d) / (c + d + ty)) < 2e-6
-    assert abs(r["somers_xy_q6"] - (c - d) / (c + d + tx)) < 2e-6
-    taub = (c - d) / math.sqrt((c + d + tx) * (c + d + ty))
-    assert abs(r["tau_b_q6"] - taub) < 2e-6
-    assert r["gamma_q6"] > 0.7  # strongly concordant plant
-
-
-def test_ordinal_association_reversed_negative(spark):
-    from png_from_pdf_extracter_spark.functions.stats import (
-        ordinal_association,
-    )
-
-    rows = [(i % 4 + 1, 4 - i % 4) for i in range(40)]
-    df = spark.createDataFrame(rows, "x int, y int")
-    r = ordinal_association(df, "x", "y").collect()[0]
-    assert r["gamma_q6"] <= -1.0 + 2e-6  # perfect reversal
-    assert r["tau_b_q6"] < -0.9
-
-
-def test_msprt_gate_null_and_effect(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import msprt_gate
-
-    # identical arms -> theta ~ 0, log Lambda < 0, p_always = 1
-    rows = [(float(i % 7), i % 2) for i in range(200)]
-    df = spark.createDataFrame(rows, "v double, arm int")
-    r = msprt_gate(df, "v", "arm", tau=1.0, quantize=0).collect()[0]
-    assert r["p_always_q6"] == 1.0
-    assert r["reject"] == 0
-
-    # strong planted effect -> tiny p, reject
-    rows2 = [(float(i % 3), 0) for i in range(150)] + [
-        (10.0 + float(i % 3), 1) for i in range(150)
-    ]
-    df2 = spark.createDataFrame(rows2, "v double, arm int")
-    r2 = msprt_gate(df2, "v", "arm", tau=5.0, quantize=0).collect()[0]
-    assert r2["reject"] == 1
-    assert r2["p_always_q6"] < 0.001
-    assert abs(r2["diff_q6"] - 10.0) < 1e-6
-
-    # python twin of the closed form on the planted case
-    import statistics
-
-    a = [v for v, g in rows2 if g == 0]
-    b = [v for v, g in rows2 if g == 1]
-    theta = statistics.mean(b) - statistics.mean(a)
-    vv = statistics.variance(a) / len(a) + statistics.variance(b) / len(b)
-    t2 = 25.0
-    log_l = 0.5 * math.log(vv / (vv + t2)) + (theta * theta * t2) / (
-        (2.0 * vv) * (vv + t2)
-    )
-    assert abs(r2["log_lambda_q6"] - math.floor(log_l * 1e6) / 1e6) < 1e-5
-
-
-def _ad2_twin(a_vals, b_vals):
-    """Independent midrank A2akN (Scholz-Stephens, k=2)."""
-    from collections import Counter
-
-    fa, fb = Counter(a_vals), Counter(b_vals)
-    na, nb = len(a_vals), len(b_vals)
-    nn = na + nb
-    cua = cub = 0
-    tot = 0.0
-    for z in sorted(set(a_vals) | set(b_vals)):
-        la, lb = fa.get(z, 0), fb.get(z, 0)
-        lj = la + lb
-        ma = cua + la / 2.0
-        mb = cub + lb / 2.0
-        bj = cua + cub + lj / 2.0
-        den = bj * (nn - bj) - nn * lj / 4.0
-        if den != 0:
-            tot += (lj / nn) * (
-                (nn * ma - na * bj) ** 2 / (na * den)
-                + (nn * mb - nb * bj) ** 2 / (nb * den)
-            )
-        cua += la
-        cub += lb
-    return (nn - 1.0) / nn * tot
-
-
-def test_anderson_darling_2s_twin_and_separation(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        anderson_darling_2s,
-    )
-
-    # same distribution (ties included) -> small A2; python twin exact
-    a = [float(i % 10) for i in range(60)]
-    b = [float(i % 10) for i in range(40)]
-    rows = [(v, "a") for v in a] + [(v, "b") for v in b]
-    df = spark.createDataFrame(rows, "v double, g string")
-    r = anderson_darling_2s(df, "v", "g", "a", "b", quantize=0).collect()[0]
-    exp = _ad2_twin(a, b)
-    assert abs(r["a2_q6"] - math.floor(exp * 1e6) / 1e6) < 1e-5
-    assert r["a2_q6"] < 1.0  # H0 holds: statistic near its ~1 null mean
-
-    # disjoint supports -> A2 far above any critical value
-    a2 = [float(i % 5) for i in range(50)]
-    b2 = [100.0 + i % 5 for i in range(50)]
-    rows2 = [(v, "a") for v in a2] + [(v, "b") for v in b2]
-    df2 = spark.createDataFrame(rows2, "v double, g string")
-    r2 = anderson_darling_2s(df2, "v", "g", "a", "b", quantize=0).collect()[
-        0
-    ]
-    exp2 = _ad2_twin(a2, b2)
-    assert abs(r2["a2_q6"] - math.floor(exp2 * 1e6) / 1e6) < 1e-4
-    assert r2["a2_q6"] > 10.0
-
-    # constant pooled sample -> null (degenerate)
-    dfc = spark.createDataFrame(
-        [(1.0, "a")] * 5 + [(1.0, "b")] * 5, "v double, g string"
-    )
-    rc = anderson_darling_2s(dfc, "v", "g", "a", "b", quantize=0).collect()[
-        0
-    ]
-    assert rc["a2_q6"] is None
-
-
-def _st_scores(n):
-    """Zigzag Siegel-Tukey scores by sorted position (1-indexed)."""
-    out = []
-    for p in range(1, n + 1):
-        q = n - p + 1
-        if p < q:
-            out.append(2 * p - 1 if p % 2 == 1 else 2 * p)
-        elif q < p:
-            out.append(2 * q if q % 2 == 1 else 2 * q - 1)
-        else:
-            out.append(n)
-    return out
-
-
-def test_siegel_tukey_scores_are_permutation():
-    for n in (1, 2, 3, 4, 5, 6, 7, 10, 11, 16, 25):
-        s = _st_scores(n)
-        assert sorted(s) == list(range(1, n + 1)), n
-
-
-def test_siegel_tukey_twin_and_direction(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import siegel_tukey
-
-    # group a hugs the center, group b spreads wide -> a collects the
-    # HIGH zigzag scores -> ST > E -> z > 0
-    a = [50.0 + (i % 3) for i in range(30)]
-    b = [float(10 * (i % 11)) for i in range(30)]
-    rows = [(v, "a") for v in a] + [(v, "b") for v in b]
-    df = spark.createDataFrame(rows, "v double, g string")
-    r = siegel_tukey(df, "v", "g", "a", "b", quantize=0).collect()[0]
-    assert r["z_q6"] is not None and r["z_q6"] > 2.0
-
-    # python twin with tie-averaged scores
-    pooled = sorted([(v, "a") for v in a] + [(v, "b") for v in b])
-    n = len(pooled)
-    scores = _st_scores(n)
-    from collections import defaultdict
-
-    by_val = defaultdict(list)
-    for (v, g), s in zip(pooled, scores):
-        by_val[v].append((g, s))
-    st = 0.0
-    s1 = 0
-    s2 = 0.0
-    for v, items in sorted(by_val.items()):
-        bsum = sum(s for _, s in items)
-        c = len(items)
-        ca = sum(1 for g, _ in items if g == "a")
-        st += ca * bsum / c
-        s1 += bsum
-        s2 += bsum * bsum / c
-    na = nb = 30
-    e = na * s1 / n
-    var = na * nb * (n * s2 - s1 * s1) / (n * n * (n - 1.0))
-    z = (st - e) / math.sqrt(var)
-    assert abs(r["st_q6"] - math.floor(st * 1e6) / 1e6) < 1e-5
-    assert abs(r["z_q6"] - math.floor(z * 1e6) / 1e6) < 1e-5
-
-
-def test_overdispersion_index_poisson_vs_clumped(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        overdispersion_index,
-    )
-
-    # near-constant counts -> VMR << 1, z negative; clumped -> VMR >> 1
-    rows = [("flat", 5)] * 50 + [("flat", 6)] * 50
-    rows += [("clump", 0)] * 90 + [("clump", 50)] * 10
-    df = spark.createDataFrame(rows, "g string, c long")
-    out = {
-        r["g"]: r
-        for r in overdispersion_index(df, "c", ("g",)).collect()
-    }
-    f = out["flat"]
-    assert abs(f["mean_q6"] - 5.5) < 1e-6
-    assert f["vmr_q6"] < 0.1 and f["z_q6"] < -5.0
-    c = out["clump"]
-    assert c["vmr_q6"] > 20.0 and c["z_q6"] > 10.0
-    # python twin on the clumped group
-    vals = [0] * 90 + [50] * 10
-    n = len(vals)
-    mean = sum(vals) / n
-    var = sum((v - mean) ** 2 for v in vals) / (n - 1)
-    vmr = var / mean
-    z = ((n - 1) * vmr - (n - 1)) / math.sqrt(2 * (n - 1))
-    assert abs(c["vmr_q6"] - math.floor(vmr * 1e6) / 1e6) < 1e-4
-    assert abs(c["z_q6"] - math.floor(z * 1e6) / 1e6) < 1e-4
-
-    # n = 1 group: stats null
-    one = spark.createDataFrame([("solo", 3)], "g string, c long")
-    r1 = overdispersion_index(one, "c", ("g",)).collect()[0]
-    assert r1["vmr_q6"] is None and r1["z_q6"] is None
-
-
-def test_poisson_rate_ratio_null_and_planted(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        poisson_rate_ratio,
-    )
-
-    # equal rates (5 events / 10 days per user in both arms)
-    rows = [(5, 10, i % 2) for i in range(100)]
-    df = spark.createDataFrame(rows, "x long, t long, g int")
-    r = poisson_rate_ratio(df, "x", "t", "g").collect()[0]
-    assert abs(r["rr_q6"] - 1.0) < 1e-6
-    assert abs(r["z_q6"]) < 1e-6
-
-    # arm 1 fires at double the rate
-    rows2 = [(5, 10, 0)] * 60 + [(10, 10, 1)] * 60
-    df2 = spark.createDataFrame(rows2, "x long, t long, g int")
-    r2 = poisson_rate_ratio(df2, "x", "t", "g").collect()[0]
-    # arm A = min group = 0 -> RR = rate_a / rate_b = 0.5
-    assert abs(r2["rr_q6"] - 0.5) < 1e-6
-    xa, xb = 300, 600
-    z = math.log(0.5) / math.sqrt(1 / xa + 1 / xb)
-    assert abs(r2["z_q6"] - math.floor(z * 1e6) / 1e6) < 2e-6
-
-    # zero-event arm -> null stats
-    rows3 = [(0, 10, 0)] * 5 + [(3, 10, 1)] * 5
-    df3 = spark.createDataFrame(rows3, "x long, t long, g int")
-    r3 = poisson_rate_ratio(df3, "x", "t", "g").collect()[0]
-    assert r3["rr_q6"] is None and r3["z_q6"] is None
-
-
-def test_two_proportion_diff_null_planted_and_extreme(spark):
-    import math
-
-    from png_from_pdf_extracter_spark.functions.stats import (
-        two_proportion_diff,
-    )
-
-    # equal proportions -> diff 0, CI straddles 0
-    rows = [(i % 5 == 0, i % 2) for i in range(200)]
-    df = spark.createDataFrame(
-        [(int(h), g) for h, g in rows], "hi int, g int"
-    )
-    r = two_proportion_diff(df, "hi", "g").collect()[0]
-    assert abs(r["diff_q6"]) < 1e-6
-    assert r["ci_lo_q6"] < 0 < r["ci_hi_q6"]
-
-    # planted gap 0.6 vs 0.2 -> z big, CI excludes 0; python twin
-    rows2 = [(1, 0)] * 60 + [(0, 0)] * 40 + [(1, 1)] * 20 + [(0, 1)] * 80
-    df2 = spark.createDataFrame(rows2, "hi int, g int")
-    r2 = two_proportion_diff(df2, "hi", "g").collect()[0]
-    assert abs(r2["diff_q6"] - 0.4) < 2e-6
-    pp = 80 / 200
-    se = math.sqrt(pp * (1 - pp) * (1 / 100 + 1 / 100))
-    z = 0.4 / se
-    assert abs(r2["z_q6"] - math.floor(z * 1e6) / 1e6) < 2e-6
-    assert r2["ci_lo_q6"] > 0
-
-    # extreme arm at 0%: Newcombe bounds stay finite and ordered
-    rows3 = [(0, 0)] * 50 + [(1, 1)] * 30 + [(0, 1)] * 20
-    df3 = spark.createDataFrame(rows3, "hi int, g int")
-    r3 = two_proportion_diff(df3, "hi", "g").collect()[0]
-    assert r3["ci_lo_q6"] < r3["diff_q6"] < r3["ci_hi_q6"]
-    assert r3["ci_hi_q6"] < 0  # arm A (0%) minus arm B (60%) is negative
