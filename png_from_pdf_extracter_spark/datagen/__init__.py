@@ -13,7 +13,6 @@ from .transcripts import (
     conv_rows,
     expected_for_rows,
     gen_pandas,
-    n_convs_for_turns,
 )
 
 __all__ = [
@@ -23,5 +22,4 @@ __all__ = [
     "conv_rows",
     "expected_for_rows",
     "gen_pandas",
-    "n_convs_for_turns",
 ]

@@ -78,10 +78,6 @@ class GenConfig:
     extractor: ExtractorConfig = field(default_factory=lambda: SYNTH_EXTRACTOR_CFG)
 
 
-def n_convs_for_turns(total_turns: int, avg_turns: int = 10) -> int:
-    return max(1, total_turns // avg_turns)
-
-
 def _sentence(rng: random.Random) -> str:
     n = rng.randint(5, 14)
     words = [rng.choice(_VOCAB) for _ in range(n)]

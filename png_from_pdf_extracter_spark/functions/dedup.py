@@ -1224,7 +1224,7 @@ def tfidf_cosine_pairs(
 
     Exactness: weights are integer-quantized up front — ``wq =
     floor(tf * ln((N+1)/(df+1)) * 1e6)`` (one libm call per TERM from
-    exact integers, the [[kaplan_meier]] pattern) — so every pair's
+    exact integers, quantized before any sum) — so every pair's
     dot product and every document's squared norm are EXACT
     DECIMAL(38,0) sums; the only float is the final
     ``dot / sqrt(n1 * n2)`` emit per pair. No cross-row float

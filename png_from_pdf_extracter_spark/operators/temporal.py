@@ -702,7 +702,7 @@ def seasonal_profile_dow(
     component of the classical decomposition at weekly period: per
     (group, dow) the mean value, and ``seasonal`` = dow mean minus the
     group's overall mean. Subtracting it from raw values deseasonalizes
-    a metric before [[mann_kendall]]/[[holt_linear]] read the trend —
+    a metric before [[holt_linear]] reads the trend —
     otherwise a weekly cycle masquerades as seven alternating trends.
 
     EXACT cross-engine: values integer-quantized; per-cell (n, sum)

@@ -5,96 +5,34 @@ import math as _math
 
 from pyspark.sql import functions as F
 
-from png_from_pdf_extracter_spark.functions import text
 from png_from_pdf_extracter_spark.functions.stats import (
     autocorr_lag1,
     benford_digits,
     bh_fdr,
-    brunner_munzel,
     changepoint_single,
     chi2_independence,
-    cliffs_delta,
-    cochran_armitage,
     cochran_q,
-    competing_risks_cif,
     concordance_agreement,
     correlogram,
-    cramer_von_mises_2s,
     cramers_v,
-    cucconi_test,
     cuped_adjust,
-    cusum_drift,
     did_estimate,
     durbin_watson,
-    energy_distance_2s,
     gini_concentration,
     group_influence,
     hill_tail_index,
-    hodges_lehmann,
     holm_bonferroni,
     inequality_indices,
     interrater_reliability,
     jackknife_group_se,
-    kaplan_meier,
-    kendall_tau_b,
-    kruskal_wallis,
-    log_rank_test,
-    mann_kendall,
-    mann_whitney_u,
-    mood_median_test,
-    nelson_aalen,
-    page_trend_test,
     poisson_bootstrap_ci,
-    rmst,
     rolling_median,
     running_distinct,
-    runs_test,
-    spearman_corr,
-    theil_sen_slope,
-    weighted_quantile,
-    welch_t_test,
-    wilcoxon_signed_rank,
     winsorize,
-    yuen_trimmed_t,
 )
 from png_from_pdf_extracter_spark.functions.text import tokens
 from png_from_pdf_extracter_spark.registry import query
-from png_from_pdf_extracter_spark.registry.common import (
-    NTOK_SQL,
-    read,
-)
-
-
-def _surv_obs(spark, sf_dir):
-    """Shared time-to-convert observation builder for the survival
-    family (q_kaplan_meier inlines the same construction): per signup
-    user, minutes from first signup to first subsequent purchase,
-    right-censored at the user's last event; arm = user_id parity for
-    the two-sample tests."""
-    ev = read(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    base = ev.select("user_id", "event_type", us.alias("us"))
-    anchors = base.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("us"))
-        ).alias("s0"),
-        F.max("us").alias("last_us"),
-    ).filter(F.col("s0").isNotNull())
-    conv = (
-        base.join(anchors, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase") & (F.col("us") >= F.col("s0"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("us").alias("p0"))
-    )
-    return anchors.join(conv, "user_id", "left").select(
-        F.floor(
-            (F.coalesce("p0", "last_us") - F.col("s0")) / F.lit(60000000)
-        ).alias("dur_min"),
-        F.col("p0").isNotNull().cast("int").alias("event"),
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-    )
+from png_from_pdf_extracter_spark.registry.common import read
 
 
 # exact doubles embedded in BOTH engines' expressions so no libm
@@ -105,342 +43,6 @@ _BENFORD_CASE = "CASE digit " + " ".join(
     f"WHEN {d} THEN {_math.log10(1 + 1 / d)!r}::DOUBLE"
     for d in range(1, 10)
 ) + " ELSE 0.0::DOUBLE END"
-
-_KM_SQL = """
-            WITH base AS (
-              SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-            ),
-            anchors AS (
-              SELECT user_id,
-                     min(CASE WHEN event_type = 'signup' THEN us END)
-                       AS s0,
-                     max(us) AS last_us
-              FROM base GROUP BY user_id
-              HAVING min(CASE WHEN event_type = 'signup' THEN us END)
-                     IS NOT NULL
-            ),
-            conv AS (
-              SELECT b.user_id, min(b.us) AS p0
-              FROM base b JOIN anchors a ON b.user_id = a.user_id
-              WHERE b.event_type = 'purchase' AND b.us >= a.s0
-              GROUP BY b.user_id
-            ),
-            obs AS (
-              SELECT CAST(floor(
-                       (coalesce(c.p0, a.last_us) - a.s0) / 60000000.0
-                     ) AS BIGINT) AS t,
-                     CASE WHEN c.p0 IS NOT NULL THEN 1 ELSE 0 END AS e
-              FROM anchors a LEFT JOIN conv c ON a.user_id = c.user_id
-            ),
-            cnt AS (
-              SELECT t, sum(e)::BIGINT AS d,
-                     sum(1 - e)::BIGINT AS c
-              FROM obs GROUP BY t
-            ),
-            tot AS (SELECT sum(d + c) AS n_total FROM cnt),
-            risk AS (
-              SELECT t, d, c,
-                     (n_total - coalesce(sum(d + c) OVER (
-                        ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)) AS n
-              FROM cnt, tot
-            ),
-            stepped AS (
-              SELECT t, n, d, c,
-                     sum(CASE WHEN d = 0 THEN 0
-                              WHEN d < n THEN CAST(floor(
-                                ln(1.0 - d / n) * 1e9) AS BIGINT)
-                         END) OVER (
-                       ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS cum,
-                     max(CASE WHEN d >= n THEN 1 ELSE 0 END) OVER (
-                       ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS dead
-              FROM risk
-            )
-            SELECT t AS duration, n::BIGINT AS n_at_risk,
-                   d AS d_events, c AS c_censored,
-                   CASE WHEN dead = 1 THEN 0.0
-                        ELSE floor(exp(cum / 1e9) * 1e6) / 1e6
-                   END AS survival_q
-            FROM stepped
-        """
-
-_SURV_OBS_SQL = """
-            base AS (
-              SELECT user_id, event_type, epoch_us(ts) AS us FROM events
-            ),
-            anchors AS (
-              SELECT user_id,
-                     min(CASE WHEN event_type = 'signup' THEN us END)
-                       AS s0,
-                     max(us) AS last_us
-              FROM base GROUP BY user_id
-              HAVING min(CASE WHEN event_type = 'signup' THEN us END)
-                     IS NOT NULL
-            ),
-            conv AS (
-              SELECT b.user_id, min(b.us) AS p0
-              FROM base b JOIN anchors a ON b.user_id = a.user_id
-              WHERE b.event_type = 'purchase' AND b.us >= a.s0
-              GROUP BY b.user_id
-            ),
-            obs AS (
-              SELECT CAST(floor(
-                       (coalesce(c.p0, a.last_us) - a.s0) / 60000000.0
-                     ) AS BIGINT) AS t,
-                     CASE WHEN c.p0 IS NOT NULL THEN 1 ELSE 0 END AS e,
-                     CAST(a.user_id % 2 AS INT) AS arm
-              FROM anchors a LEFT JOIN conv c ON a.user_id = c.user_id
-            )
-"""
-
-_NA_SQL = (
-    "WITH "
-    + _SURV_OBS_SQL
-    + """,
-            cnt AS (
-              SELECT t, sum(e)::BIGINT AS d, sum(1 - e)::BIGINT AS c
-              FROM obs GROUP BY t
-            ),
-            tot AS (SELECT sum(d + c) AS n_total FROM cnt),
-            risk AS (
-              SELECT t, d, c,
-                     (n_total - coalesce(sum(d + c) OVER (
-                        ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)) AS n
-              FROM cnt, tot
-            ),
-            stepped AS (
-              SELECT t, n, d, c,
-                     sum(CAST(floor(
-                       CAST(d AS DOUBLE) * 1e9 / CAST(n AS DOUBLE)
-                     ) AS BIGINT)) OVER (
-                       ORDER BY t
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS cum
-              FROM risk
-            )
-            SELECT t AS duration, n::BIGINT AS n_at_risk,
-                   d AS d_events, c AS c_censored,
-                   floor(CAST(cum AS DOUBLE) / 1e3) / 1e6 AS hazard_q
-            FROM stepped
-        """
-)
-
-_LOGRANK_SQL = (
-    "WITH "
-    + _SURV_OBS_SQL
-    + """,
-            tagged AS (
-              SELECT t, e,
-                     CASE WHEN arm = (SELECT min(arm) FROM obs)
-                          THEN 1 ELSE 0 END AS a
-              FROM obs
-            ),
-            cnt AS (
-              SELECT t,
-                     sum(e * a)::BIGINT AS d_a,
-                     sum(e * (1 - a))::BIGINT AS d_b,
-                     sum((1 - e) * a)::BIGINT AS c_a,
-                     sum((1 - e) * (1 - a))::BIGINT AS c_b
-              FROM tagged GROUP BY t
-            ),
-            tot AS (
-              SELECT sum(d_a + c_a) AS tot_a, sum(d_b + c_b) AS tot_b
-              FROM cnt
-            ),
-            risk AS (
-              SELECT t, d_a, d_b, tot_a, tot_b,
-                     (tot_a - coalesce(sum(d_a + c_a) OVER (
-                        ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)) AS r_a,
-                     (tot_b - coalesce(sum(d_b + c_b) OVER (
-                        ORDER BY t
-                        ROWS BETWEEN UNBOUNDED PRECEDING
-                                 AND 1 PRECEDING), 0)) AS r_b
-              FROM cnt, tot
-            ),
-            ag AS (
-              SELECT max(tot_a) AS tot_a, max(tot_b) AS tot_b,
-                     sum(d_a)::BIGINT AS o_a,
-                     sum(CAST(floor(
-                       CAST((d_a + d_b) * r_a AS DOUBLE)
-                       / CAST(r_a + r_b AS DOUBLE) * 1e9
-                     ) AS BIGINT))::BIGINT AS e9,
-                     sum(CAST(floor(
-                       CAST((d_a + d_b) * r_a AS DOUBLE)
-                       * CAST(r_b AS DOUBLE)
-                       * CAST(r_a + r_b - d_a - d_b AS DOUBLE)
-                       / (CAST(r_a + r_b AS DOUBLE)
-                          * CAST(r_a + r_b AS DOUBLE)
-                          * CAST(r_a + r_b - 1 AS DOUBLE))
-                       * 1e9
-                     ) AS BIGINT))::BIGINT AS v9
-              FROM risk
-              WHERE (d_a + d_b) > 0 AND (r_a + r_b) > 1
-            )
-            SELECT tot_a::BIGINT AS n_a, tot_b::BIGINT AS n_b, o_a,
-                   floor(CAST(e9 AS DOUBLE) / 1e3) / 1e6 AS e_a_q6,
-                   floor(CAST(v9 AS DOUBLE) / 1e3) / 1e6 AS v_q6,
-                   CASE WHEN v9 > 0 THEN floor(
-                     (CAST(o_a AS DOUBLE) - CAST(e9 AS DOUBLE) / 1e9)
-                     * (CAST(o_a AS DOUBLE) - CAST(e9 AS DOUBLE) / 1e9)
-                     / (CAST(v9 AS DOUBLE) / 1e9) * 1e6) / 1e6
-                   END AS chi2_q6
-            FROM ag
-        """
-)
-
-
-@query(oracle=f"""
-            WITH base AS (
-              SELECT lang, n_chars AS len_chars,
-                     {NTOK_SQL} AS w
-              FROM documents
-            ),
-            m AS (
-              SELECT lang, len_chars,
-                     sum(w) OVER (PARTITION BY lang
-                                  ORDER BY len_chars ASC, w ASC
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                           AND CURRENT ROW) AS cumw,
-                     sum(w) OVER (PARTITION BY lang) AS total
-              FROM base
-            )
-            SELECT lang, max(total)::BIGINT AS total_w,
-                   min(len_chars) AS wq_value
-            FROM m WHERE cumw * 2 >= total * 1
-            GROUP BY lang
-        """)
-def _q_weighted_median(spark, sf_dir):
-    """Exact token-weighted median of document length per language
-    (functions/stats.py weighted_quantile): the n_chars value below
-    which half the corpus TOKENS sit — integer cumulative weights, the
-    quantile given as a rational, zero float comparisons."""
-
-    d = read(spark, sf_dir, "documents")
-    base = d.select(
-        "lang",
-        F.col("n_chars").alias("len_chars"),
-        text.token_count("text").alias("w"),
-    )
-    return weighted_quantile(
-        base, "len_chars", "w", group_cols=("lang",)
-    )
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0
-                     END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT ca, cb,
-                     coalesce(sum(cb) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cb_below,
-                     coalesce(sum(ca) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS ca_below
-              FROM cnt
-            )
-            SELECT sum(ca)::BIGINT AS n_a,
-                   sum(cb)::BIGINT AS n_b,
-                   sum(ca * (2 * cb_below + cb))::BIGINT AS u2_a,
-                   sum(cb * (2 * ca_below + ca))::BIGINT AS u2_b,
-                   CASE WHEN sum(ca) > 0 AND sum(cb) > 0 THEN
-                     floor(sum(ca * (2 * cb_below + cb))::DOUBLE
-                           / (2.0 * sum(ca) * sum(cb)) * 1e6) / 1e6
-                   END AS auc_a
-            FROM cum
-        """)
-def _q_mann_whitney(spark, sf_dir):
-    """Two-sample Mann-Whitney U between the BUILDING and MACHINERY
-    customer segments on account balance (functions/stats.py
-    mann_whitney_u): integer 2U statistics from per-distinct-value
-    counts (window bounded by value cardinality, not rows), AUC
-    effect size floor-6dp. u2_a + u2_b == 2*n_a*n_b pinned in tests."""
-
-    c = read(spark, sf_dir, "customer")
-    return mann_whitney_u(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS qx,
-                     CAST(round(c_acctbal * 100) AS BIGINT) AS qy
-              FROM orders JOIN customer ON o_custkey = c_custkey
-              WHERE o_totalprice IS NOT NULL AND c_acctbal IS NOT NULL
-            ),
-            rx AS (
-              SELECT qx,
-                     2 * coalesce(sum(c) OVER (
-                       ORDER BY qx
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) + c + 1 AS r2x
-              FROM (SELECT qx, count(*) AS c FROM base GROUP BY qx)
-            ),
-            ry AS (
-              SELECT qy,
-                     2 * coalesce(sum(c) OVER (
-                       ORDER BY qy
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) + c + 1 AS r2y
-              FROM (SELECT qy, count(*) AS c FROM base GROUP BY qy)
-            ),
-            s AS (
-              SELECT count(*)::HUGEINT AS n,
-                     sum(r2x::HUGEINT) AS sx,
-                     sum(r2y::HUGEINT) AS sy,
-                     sum(r2x::HUGEINT * r2x) AS sxx,
-                     sum(r2y::HUGEINT * r2y) AS syy,
-                     sum(r2x::HUGEINT * r2y) AS sxy
-              FROM base JOIN rx USING (qx) JOIN ry USING (qy)
-            )
-            SELECT n::BIGINT AS n_pairs,
-                   sx::BIGINT AS sx2,
-                   sy::BIGINT AS sy2,
-                   CASE WHEN (n * sxx - sx * sx) > 0
-                         AND (n * syy - sy * sy) > 0 THEN
-                     floor((n * sxy - sx * sy)::DOUBLE
-                           / (sqrt((n * sxx - sx * sx)::DOUBLE)
-                              * sqrt((n * syy - sy * sy)::DOUBLE))
-                           * 1e6) / 1e6
-                   END AS rho
-            FROM s
-        """)
-def _q_spearman(spark, sf_dir):
-    """Spearman rank correlation (tie-corrected, exact doubled-rank
-    integers accumulated in DECIMAL(38,0)) between order totalprice and
-    the ordering customer's account balance (functions/stats.py
-    spearman_corr) — rank maps per distinct quantized value, one float
-    expression at the end."""
-
-    o = read(spark, sf_dir, "orders")
-    c = read(spark, sf_dir, "customer")
-    j = o.join(c, o.o_custkey == c.c_custkey).select(
-        "o_totalprice", "c_acctbal"
-    )
-    return spearman_corr(j, "o_totalprice", "c_acctbal")
-
 
 @query(oracle="""
             WITH seq AS (
@@ -664,257 +266,6 @@ def _q_gini_scoped(spark, sf_dir):
     d = read(spark, sf_dir, "documents")
     return gini_concentration(
         d, "source", "n_chars", scope_cols=("lang",)
-    )
-
-
-@query(oracle="WITH km AS (" + _KM_SQL + "), "
-    "half AS (SELECT min(duration) AS median_duration FROM km "
-    "         WHERE survival_q <= 0.5), "
-    "tot AS (SELECT count(*)::BIGINT AS n_times, "
-    "        sum(d_events + c_censored)::BIGINT AS n_obs FROM km) "
-    "SELECT n_times, n_obs, median_duration FROM tot, half")
-def _q_median_survival(spark, sf_dir):
-    """Median time-to-convert from the Kaplan-Meier curve
-    (functions/stats.py kaplan_meier downstream): the smallest
-    duration where survival drops to <= 0.5 — the single number a
-    conversion report quotes; NULL-free because the q_kaplan_meier
-    cohort always converts past half."""
-    km = _q_kaplan_meier(spark, sf_dir)
-    half = km.filter(F.col("survival_q") <= 0.5).agg(
-        F.min("duration").alias("median_duration")
-    )
-    tot = km.agg(
-        F.count("*").cast("long").alias("n_times"),
-        F.sum(F.col("d_events") + F.col("c_censored"))
-        .cast("long")
-        .alias("n_obs"),
-    )
-    return tot.crossJoin(F.broadcast(half))
-
-
-@query(oracle="""
-            WITH v AS (
-              SELECT user_id,
-                     CAST(floor(epoch_us(ts) / 60000000.0) AS BIGINT)
-                       AS x,
-                     CAST(round(value * 1000000, 0) AS BIGINT) AS yq
-              FROM events
-            ),
-            p AS (
-              SELECT a.user_id,
-                     CAST(floor(
-                       (b.yq - a.yq)::DOUBLE / (b.x - a.x)::DOUBLE
-                     ) AS BIGINT) AS s
-              FROM v a JOIN v b
-                ON a.user_id = b.user_id AND a.x < b.x
-            ),
-            c AS (
-              SELECT user_id, s, count(*)::BIGINT AS w
-              FROM p GROUP BY user_id, s
-            ),
-            r AS (
-              SELECT user_id, s,
-                     sum(w) OVER (
-                       PARTITION BY user_id ORDER BY s
-                     )::BIGINT AS cum,
-                     sum(w) OVER (PARTITION BY user_id)::BIGINT AS tot
-              FROM c
-            )
-            SELECT user_id, tot AS n_pairs, min(s) AS slope_ppm
-            FROM r
-            WHERE cum * 2 >= tot
-            GROUP BY user_id, tot
-        """)
-def _q_theil_sen(spark, sf_dir):
-    """Theil-Sen robust per-user value trend (functions/stats.py
-    theil_sen_slope): median pairwise slope of event value over a
-    minute clock — pair join on the user key only, lower median by the
-    exact integer reach test."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "user_id",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(6e7)
-        ).cast("long").alias("xmin"),
-        "value",
-    )
-    return theil_sen_slope(ev, ("user_id",), "xmin", "value")
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT) AS v,
-                     o_orderpriority AS g
-              FROM orders
-            ),
-            vg AS (
-              SELECT v, g, count(*)::BIGINT AS c FROM base GROUP BY v, g
-            ),
-            vt0 AS (SELECT v, sum(c)::BIGINT AS t FROM vg GROUP BY v),
-            vt AS (
-              SELECT v, t,
-                     coalesce(sum(t) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                     ), 0)::BIGINT AS cb
-              FROM vt0
-            ),
-            pc AS (
-              SELECT g, sum(c)::BIGINT AS n_g,
-                     sum(c * (2 * vt.cb + vt.t + 1))::BIGINT AS r2
-              FROM vg JOIN vt USING (v) GROUP BY g
-            ),
-            stepped AS (
-              SELECT sum(
-                       (r2::DOUBLE / 2.0) * (r2::DOUBLE / 2.0)
-                       / n_g::DOUBLE
-                     ) OVER (
-                       ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     ) AS s,
-                     row_number() OVER (ORDER BY g) AS rn,
-                     count(*) OVER () AS kk
-              FROM pc
-            ),
-            sf AS (SELECT s, kk::BIGINT AS k FROM stepped WHERE rn = kk),
-            tt AS (
-              SELECT sum(t)::BIGINT AS n,
-                     sum(t * t * t - t)::BIGINT AS tie3
-              FROM vt
-            )
-            SELECT n, k, tie3,
-                   floor((12.0 * s / (n::DOUBLE * (n::DOUBLE + 1.0))
-                          - 3.0 * (n::DOUBLE + 1.0)) * 1e6) / 1e6
-                     AS h_q6,
-                   CASE WHEN (1.0 - tie3::DOUBLE
-                              / (n::DOUBLE * n::DOUBLE * n::DOUBLE
-                                 - n::DOUBLE)) > 0
-                        THEN floor(
-                          (12.0 * s / (n::DOUBLE * (n::DOUBLE + 1.0))
-                           - 3.0 * (n::DOUBLE + 1.0))
-                          / (1.0 - tie3::DOUBLE
-                             / (n::DOUBLE * n::DOUBLE * n::DOUBLE
-                                - n::DOUBLE)) * 1e6) / 1e6
-                   END AS h_tie_q6
-            FROM tt, sf
-        """)
-def _q_kruskal_wallis(spark, sf_dir):
-    """Kruskal-Wallis H across the five order priorities on totalprice
-    (functions/stats.py kruskal_wallis) — the k-group rank test. All
-    rank sums exact BIGINTs off the distinct-value table; the float H
-    is assembled with a FIXED per-class accumulation order (ordered
-    window over the class key) so both engines add identical doubles."""
-
-    o = read(spark, sf_dir, "orders")
-    return kruskal_wallis(o, "o_totalprice", "o_orderpriority", quantize=2)
-
-
-@query(oracle="""
-            WITH v AS (
-              SELECT user_id,
-                     CAST(floor(epoch_us(ts) / 60000000.0) AS BIGINT)
-                       AS x,
-                     CAST(round(value * 100, 0) AS BIGINT) AS vq
-              FROM events
-            ),
-            s AS (
-              SELECT a.user_id,
-                     sum(CASE WHEN b.vq > a.vq THEN 1
-                              WHEN b.vq < a.vq THEN -1
-                              ELSE 0 END)::BIGINT AS s_stat
-              FROM v a JOIN v b
-                ON a.user_id = b.user_id AND a.x < b.x
-              GROUP BY a.user_id
-            ),
-            n AS (
-              SELECT user_id, count(*)::BIGINT AS n
-              FROM v GROUP BY user_id
-            ),
-            t AS (
-              SELECT user_id,
-                     sum(t * (t - 1) * (2 * t + 5))::BIGINT AS tt
-              FROM (
-                SELECT user_id, vq, count(*)::BIGINT AS t
-                FROM v GROUP BY user_id, vq
-              ) GROUP BY user_id
-            )
-            SELECT n.user_id, n.n, s.s_stat,
-                   (n.n * (n.n - 1) * (2 * n.n + 5) - t.tt)::BIGINT
-                     AS var18,
-                   CASE WHEN (n.n * (n.n - 1) * (2 * n.n + 5) - t.tt) > 0
-                        THEN floor(
-                          (s.s_stat::DOUBLE
-                           - (CASE WHEN s.s_stat > 0 THEN 1.0
-                                   WHEN s.s_stat < 0 THEN -1.0
-                                   ELSE 0.0 END))
-                          / sqrt((n.n * (n.n - 1) * (2 * n.n + 5)
-                                  - t.tt)::DOUBLE / 18.0) * 1e6) / 1e6
-                   END AS z_q6
-            FROM n JOIN s USING (user_id) JOIN t USING (user_id)
-        """)
-def _q_mann_kendall(spark, sf_dir):
-    """Mann-Kendall monotone-trend test per user on the event value
-    over the minute clock (functions/stats.py mann_kendall) — the
-    is-there-a-trend companion to q_theil_sen, same bounded-group pair
-    join; S and the tie-corrected variance are exact BIGINTs, the only
-    float is the continuity-corrected Z emit."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "user_id",
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(6e7)
-        ).cast("long").alias("xmin"),
-        "value",
-    )
-    return mann_kendall(ev, ("user_id",), "xmin", "value", quantize=2)
-
-
-@query(oracle="""
-            WITH b AS (
-              SELECT user_id,
-                     row_number() OVER (
-                       PARTITION BY user_id ORDER BY ts, event_id
-                     )::INTEGER AS idx,
-                     CAST(round(value * 100, 0) AS BIGINT) AS v_q
-              FROM events
-            ),
-            p AS (
-              SELECT user_id, idx, v_q,
-                     sum(v_q - 25500) OVER (
-                       PARTITION BY user_id ORDER BY idx
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                     )::BIGINT AS pp
-              FROM b
-            ),
-            c AS (
-              SELECT user_id, idx, v_q,
-                     (pp - min(least(pp, 0)) OVER (
-                        PARTITION BY user_id ORDER BY idx
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-                      ))::BIGINT AS cusum_q
-              FROM p
-            )
-            SELECT user_id, idx, v_q, cusum_q,
-                   cusum_q > 200000 AS alarm
-            FROM c
-        """)
-def _q_cusum(spark, sf_dir):
-    """One-sided upper CUSUM drift monitor per user on event value
-    (functions/stats.py cusum_drift): the classic max(0, S+x-k)
-    recursion re-expressed as prefix-sum minus running minimum — two
-    ordered windows over exact BIGINTs, one user_id exchange, alarm
-    when the statistic clears the threshold."""
-
-    ev = read(spark, sf_dir, "events")
-    return cusum_drift(
-        ev,
-        ("user_id",),
-        ("ts", "event_id"),
-        "value",
-        target_q=25_000,
-        slack_q=500,
-        threshold_q=200_000,
-        quantize=2,
     )
 
 
@@ -1170,324 +521,6 @@ def _q_bootstrap_ci(spark, sf_dir):
     return poisson_bootstrap_ci(
         ev, "event_id", "value", group_cols=("event_type",), replicas=40
     )
-
-
-@query(oracle=_KM_SQL)
-def _q_kaplan_meier(spark, sf_dir):
-    """Kaplan-Meier time-to-convert (functions/stats.py kaplan_meier):
-    per user, minutes from first signup to first subsequent purchase
-    (right-censored at the user's last event when no purchase follows);
-    survival via integer-quantized log steps — the order-independent
-    running-sum construction, cross-engine exact."""
-
-    ev = read(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    base = ev.select("user_id", "event_type", us.alias("us"))
-    anchors = base.groupBy("user_id").agg(
-        F.min(
-            F.when(F.col("event_type") == "signup", F.col("us"))
-        ).alias("s0"),
-        F.max("us").alias("last_us"),
-    ).filter(F.col("s0").isNotNull())
-    conv = (
-        base.join(anchors, "user_id")
-        .filter(
-            (F.col("event_type") == "purchase") & (F.col("us") >= F.col("s0"))
-        )
-        .groupBy("user_id")
-        .agg(F.min("us").alias("p0"))
-    )
-    obs = anchors.join(conv, "user_id", "left").select(
-        F.floor(
-            (F.coalesce("p0", "last_us") - F.col("s0")) / F.lit(60000000)
-        ).alias("dur_min"),
-        F.col("p0").isNotNull().cast("int").alias("event"),
-    )
-    return kaplan_meier(obs, "dur_min", "event")
-
-
-@query(oracle=_NA_SQL)
-def _q_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative hazard (functions/stats.py nelson_aalen)
-    over the same time-to-convert observations as q_kaplan_meier —
-    per-step floor(d*1e9/n) BIGINT increments, libm-free and
-    order-independent by construction."""
-
-    return nelson_aalen(_surv_obs(spark, sf_dir), "dur_min", "event")
-
-
-@query(oracle=_LOGRANK_SQL)
-def _q_log_rank(spark, sf_dir):
-    """Two-group log-rank test (functions/stats.py log_rank_test): do
-    even- and odd-user survival curves differ? Hypergeometric E/V per
-    event time quantized to BIGINT steps; chi2 from the two exact
-    sums."""
-
-    return log_rank_test(
-        _surv_obs(spark, sf_dir), "dur_min", "event", "arm"
-    )
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CAST(user_id % 2 AS INT) AS g
-              FROM events WHERE value IS NOT NULL
-            ),
-            gm AS (SELECT min(g) AS ga FROM base),
-            agg AS (
-              SELECT
-                sum(CASE WHEN g = ga THEN 1 ELSE 0 END)::BIGINT AS n_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE 1 END)::BIGINT AS n_b,
-                sum(CASE WHEN g = ga THEN v ELSE 0 END)::BIGINT AS s_a,
-                sum(CASE WHEN g = ga THEN 0 ELSE v END)::BIGINT AS s_b,
-                sum(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))
-                    * CASE WHEN g = ga THEN 1 ELSE 0 END) AS q_a,
-                sum(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))
-                    * CASE WHEN g = ga THEN 0 ELSE 1 END) AS q_b
-              FROM base, gm
-            ),
-            terms AS (
-              SELECT n_a, n_b,
-                s_a::DOUBLE / n_a::DOUBLE AS ma,
-                s_b::DOUBLE / n_b::DOUBLE AS mb,
-                (q_a::DOUBLE - (s_a::DOUBLE / n_a::DOUBLE) * s_a::DOUBLE)
-                  / (n_a::DOUBLE - 1.0) AS va,
-                (q_b::DOUBLE - (s_b::DOUBLE / n_b::DOUBLE) * s_b::DOUBLE)
-                  / (n_b::DOUBLE - 1.0) AS vb
-              FROM agg
-            ),
-            fin AS (
-              SELECT n_a, n_b, ma, mb, va, vb,
-                va / n_a::DOUBLE + vb / n_b::DOUBLE AS se2,
-                va / n_a::DOUBLE AS sea, vb / n_b::DOUBLE AS seb,
-                sqrt(((n_a::DOUBLE - 1.0) * va + (n_b::DOUBLE - 1.0) * vb)
-                     / (n_a::DOUBLE + n_b::DOUBLE - 2.0)) AS sp
-              FROM terms
-            )
-            SELECT n_a, n_b,
-              floor(ma / 100.0 * 1e6) / 1e6 AS mean_a_q6,
-              floor(mb / 100.0 * 1e6) / 1e6 AS mean_b_q6,
-              CASE WHEN n_a > 1 AND n_b > 1 AND se2 > 0 THEN
-                floor((ma - mb) / sqrt(se2) * 1e6) / 1e6 END AS t_q6,
-              CASE WHEN n_a > 1 AND n_b > 1 AND se2 > 0 THEN
-                floor((se2 * se2)
-                      / (sea * sea / (n_a::DOUBLE - 1.0)
-                         + seb * seb / (n_b::DOUBLE - 1.0))
-                      * 1e6) / 1e6 END AS df_q6,
-              CASE WHEN n_a > 1 AND n_b > 1 AND se2 > 0 AND sp > 0 THEN
-                floor((ma - mb) / sp * 1e6) / 1e6 END AS d_q6
-            FROM fin
-        """)
-def _q_welch(spark, sf_dir):
-    """Welch's unequal-variance t test (functions/stats.py
-    welch_t_test): do even- and odd-user event values differ in MEAN?
-    The two-sample parametric mean gate:
-    per-arm exact BIGINT/DECIMAL sums off one conditional aggregate,
-    t / Welch-Satterthwaite df / Cohen's d as fixed-order float
-    expressions over the six exact scalars."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "value", (F.col("user_id") % 2).cast("int").alias("arm")
-    )
-    return welch_t_test(ev, "value", "arm", quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(floor(n_chars / 100) AS BIGINT) AS x,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS e
-              FROM documents
-              WHERE n_chars IS NOT NULL
-            ),
-            per AS (
-              SELECT x, count(*)::BIGINT AS n_j, sum(e)::BIGINT AS r_j
-              FROM base GROUP BY x
-            ),
-            agg AS (
-              SELECT sum(n_j)::BIGINT AS n, count(*)::BIGINT AS k_doses,
-                     sum(r_j)::BIGINT AS r,
-                     sum(CAST(x AS DECIMAL(38,0))
-                         * CAST(n_j AS DECIMAL(38,0))) AS sxn,
-                     sum(CAST(x AS DECIMAL(38,0))
-                         * CAST(r_j AS DECIMAL(38,0))) AS sxr,
-                     sum(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))
-                         * CAST(n_j AS DECIMAL(38,0))) AS sxx
-              FROM per
-            ),
-            fin AS (
-              SELECT n, k_doses, r,
-                n::DOUBLE * sxr::DOUBLE - r::DOUBLE * sxn::DOUBLE AS num,
-                r::DOUBLE * (n::DOUBLE - r::DOUBLE)
-                  * (n::DOUBLE * sxx::DOUBLE - sxn::DOUBLE * sxn::DOUBLE)
-                  AS den
-              FROM agg
-            )
-            SELECT n, k_doses,
-              CASE WHEN r > 0 AND r < n AND k_doses > 1 THEN
-                floor(n::DOUBLE * num * num / den * 1e6) / 1e6
-              END AS chi2_q6,
-              CASE WHEN r > 0 AND r < n AND k_doses > 1 THEN
-                floor(sign(num) * sqrt(n::DOUBLE * num * num / den)
-                      * 1e6) / 1e6
-              END AS z_q6
-            FROM fin
-        """)
-def _q_cochran_armitage(spark, sf_dir):
-    """Cochran-Armitage trend test (functions/stats.py
-    cochran_armitage): does the English rate RISE with document length
-    (100-char buckets as the ordered dose)? The ordered 2 x k screen
-    q_chi2_indep throws the ordering away; five exact DECIMAL moment
-    sums off a dose-bounded groupBy, chi2/z in one fixed-order
-    expression."""
-
-    d = read(spark, sf_dir, "documents").select(
-        F.floor(F.col("n_chars") / 100).cast("long").alias("dose"),
-        (F.col("lang") == "en").cast("int").alias("is_en"),
-    )
-    return cochran_armitage(d, "dose", "is_en")
-
-
-@query(oracle="WITH km AS (" + _KM_SQL + """),
-            seg AS (
-              SELECT duration AS start, survival_q AS sq,
-                     lead(duration) OVER (ORDER BY duration) AS nxt
-              FROM km
-            ),
-            body AS (
-              SELECT start, sq,
-                     (least(coalesce(nxt, 5000), 5000)
-                      - start)::DOUBLE AS len
-              FROM seg WHERE start < 5000
-            ),
-            fst AS (SELECT min(duration) AS t1 FROM km),
-            ini AS (
-              SELECT CAST(-1 AS BIGINT) AS start, 1.0 AS sq,
-                     least(t1, 5000)::DOUBLE AS len
-              FROM fst WHERE least(t1, 5000) > 0
-            ),
-            segs AS (
-              SELECT * FROM ini UNION ALL SELECT * FROM body
-            ),
-            stepped AS (
-              SELECT sum(sq * len) OVER (ORDER BY start ROWS BETWEEN
-                       UNBOUNDED PRECEDING AND CURRENT ROW) AS area,
-                     row_number() OVER (ORDER BY start) AS rn,
-                     count(*) OVER () AS k
-              FROM segs
-            )
-            SELECT 5000::BIGINT AS tau, t1 AS t_first,
-              floor(area * 1e6) / 1e6 AS rmst_q6
-            FROM stepped, fst WHERE rn = k
-        """)
-def _q_rmst(spark, sf_dir):
-    """Restricted mean survival time at tau=5000 minutes
-    (functions/stats.py rmst) over the q_kaplan_meier time-to-convert
-    observations — the area under the KM head, the censoring-aware
-    effect size when the median misleads. Step-rule integral in fixed
-    time order over the quantized KM values."""
-
-    obs = _surv_obs(spark, sf_dir)
-    return rmst(obs, "dur_min", "event", tau=5000)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CAST(user_id % 2 AS INT) AS gg
-              FROM events
-              WHERE value IS NOT NULL AND user_id IS NOT NULL
-            ),
-            gm AS (SELECT min(gg) AS ga FROM base),
-            tagged AS (
-              SELECT v, CASE WHEN gg = ga THEN 1 ELSE 0 END AS arm
-              FROM base, gm
-            ),
-            cnt AS (
-              SELECT arm, v, count(*)::BIGINT AS c
-              FROM tagged GROUP BY arm, v
-            ),
-            cum AS (
-              SELECT arm, v, c,
-                sum(c) OVER (PARTITION BY arm ORDER BY v ROWS BETWEEN
-                  UNBOUNDED PRECEDING AND CURRENT ROW) AS cm,
-                sum(c) OVER (PARTITION BY arm) AS n
-              FROM cnt
-            ),
-            ext AS (
-              SELECT arm, v, c, cm, n,
-                     CAST(floor(n * 1 / 5) AS BIGINT) AS g
-              FROM cum
-            ),
-            per AS (
-              SELECT arm, max(n) AS n, max(g) AS g2,
-                sum(greatest(0, least(n - g, cm) - greatest(g, cm - c))
-                    * v)::BIGINT AS tsum,
-                sum(greatest(0, least(n - g, cm)
-                    - greatest(g, cm - c)))::BIGINT AS h,
-                max(CASE WHEN cm - c < g + 1 AND cm >= g + 1
-                         THEN v END) AS L,
-                max(CASE WHEN cm - c < n - g AND cm >= n - g
-                         THEN v END) AS U
-              FROM ext GROUP BY arm
-            ),
-            wj AS (
-              SELECT e.arm, e.v, e.c, p.L, p.U
-              FROM ext e JOIN per p ON e.arm = p.arm
-            ),
-            wins AS (
-              SELECT arm,
-                sum(greatest(least(v, U), L) * c)::BIGINT AS ws,
-                sum(CAST(greatest(least(v, U), L) AS DECIMAL(38,0))
-                    * CAST(greatest(least(v, U), L) AS DECIMAL(38,0))
-                    * CAST(c AS DECIMAL(38,0))) AS wq
-              FROM wj GROUP BY arm
-            ),
-            calc AS (
-              SELECT p.arm, p.n, p.h,
-                p.tsum::DOUBLE / p.h::DOUBLE AS tmean,
-                (w.wq::DOUBLE
-                 - w.ws::DOUBLE * w.ws::DOUBLE / p.n::DOUBLE)
-                  / (p.n::DOUBLE - 1.0) AS swin
-              FROM per p JOIN wins w ON p.arm = w.arm
-            ),
-            dd AS (
-              SELECT arm, n, h, tmean,
-                (n::DOUBLE - 1.0) * swin
-                  / (h::DOUBLE * (h::DOUBLE - 1.0)) AS dterm
-              FROM calc
-            ),
-            wide AS (
-              SELECT a.n AS n_a, a.h AS h_a, a.tmean AS ma,
-                     a.dterm AS da,
-                     b.n AS n_b, b.h AS h_b, b.tmean AS mb,
-                     b.dterm AS db
-              FROM dd a, dd b WHERE a.arm = 1 AND b.arm = 0
-            )
-            SELECT n_a, n_b, h_a, h_b,
-              floor(ma / 100.0 * 1e6) / 1e6 AS tmean_a_q6,
-              floor(mb / 100.0 * 1e6) / 1e6 AS tmean_b_q6,
-              CASE WHEN h_a > 1 AND h_b > 1 AND (da + db) > 0 THEN
-                floor((ma - mb) / sqrt(da + db) * 1e6) / 1e6
-              END AS t_q6,
-              CASE WHEN h_a > 1 AND h_b > 1 AND (da + db) > 0 THEN
-                floor((da + db) * (da + db)
-                      / (da * da / (h_a::DOUBLE - 1.0)
-                         + db * db / (h_b::DOUBLE - 1.0)) * 1e6) / 1e6
-              END AS df_q6
-            FROM wide
-        """)
-def _q_yuen(spark, sf_dir):
-    """Yuen's 20%-trimmed-means t test between user-parity arms
-    (functions/stats.py yuen_trimmed_t) — the robust twin of q_welch:
-    rank-interval-overlap trimmed sums and winsorized moments off one
-    (arm, value) count shuffle, all integer until the final t/df
-    assembly."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "value", (F.col("user_id") % 2).cast("int").alias("arm")
-    )
-    return yuen_trimmed_t(ev, "value", "arm", quantize=2)
 
 
 @query(oracle="""
@@ -1794,126 +827,6 @@ def _q_hill_tail(spark, sf_dir):
 
 
 @query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END AS g
-              FROM events WHERE value IS NOT NULL
-            ),
-            gm AS (SELECT min(g) AS ga FROM base),
-            cnt AS (
-              SELECT v,
-                     sum(CASE WHEN g = ga THEN 1 ELSE 0 END)::BIGINT AS ca,
-                     sum(CASE WHEN g = ga THEN 0 ELSE 1 END)::BIGINT AS cb
-              FROM base, gm GROUP BY v
-            ),
-            tot AS (
-              SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b
-              FROM cnt
-            ),
-            cum AS (
-              SELECT v - lag(v) OVER (ORDER BY v) AS gap,
-                     sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) - ca AS ka,
-                     sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) - cb AS kb
-              FROM cnt
-            ),
-            agg AS (
-              SELECT
-                sum(CAST(gap AS DECIMAL(38,0))
-                    * (CAST(ka * (n_b - kb) AS DECIMAL(38,0))
-                       + CAST(kb * (n_a - ka) AS DECIMAL(38,0)))) AS sxy,
-                sum(CAST(gap AS DECIMAL(38,0))
-                    * CAST(ka * (n_a - ka) AS DECIMAL(38,0))
-                    * CAST(2 AS DECIMAL(38,0))) AS sxx,
-                sum(CAST(gap AS DECIMAL(38,0))
-                    * CAST(kb * (n_b - kb) AS DECIMAL(38,0))
-                    * CAST(2 AS DECIMAL(38,0))) AS syy,
-                max(n_a) AS n_a, max(n_b) AS n_b
-              FROM cum, tot WHERE gap IS NOT NULL
-            )
-            SELECT n_a, n_b,
-              CASE WHEN n_a > 0 AND n_b > 0 THEN
-                floor((2.0 * sxy::DOUBLE
-                         / (n_a::DOUBLE * n_b::DOUBLE)
-                       - sxx::DOUBLE / (n_a::DOUBLE * n_a::DOUBLE)
-                       - syy::DOUBLE / (n_b::DOUBLE * n_b::DOUBLE))
-                      / 100.0 * 1e6) / 1e6
-              END AS d2_q6
-            FROM agg
-        """)
-def _q_energy_distance(spark, sf_dir):
-    """Two-sample energy distance (functions/stats.py
-    energy_distance_2s): full-distribution gap between users divisible
-    by 3 and the rest, as the metric E-statistic 2E|X-Y| - E|X-X'| -
-    E|Y-Y'|. The pairwise L1 expectations collapse to ONE linear sweep
-    over the sorted distinct-value table (gap-crossing identity), all
-    integer until the final assembly."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "value", (F.col("user_id") % 3 == 0).cast("int").alias("arm")
-    )
-    return energy_distance_2s(ev, "value", "arm", quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN user_id % 3 = 0 THEN 1 ELSE 0 END AS g
-              FROM events WHERE value IS NOT NULL
-            ),
-            gm AS (SELECT min(g) AS ga FROM base),
-            cnt AS (
-              SELECT v,
-                     sum(CASE WHEN g = ga THEN 1 ELSE 0 END)::BIGINT AS ca,
-                     sum(CASE WHEN g = ga THEN 0 ELSE 1 END)::BIGINT AS cb
-              FROM base, gm GROUP BY v
-            ),
-            tot AS (
-              SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b
-              FROM cnt
-            ),
-            cum AS (
-              SELECT ca + cb AS c,
-                     sum(ca) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) AS ka,
-                     sum(cb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED
-                       PRECEDING AND CURRENT ROW) AS kb
-              FROM cnt
-            ),
-            agg AS (
-              SELECT sum(CAST(c AS DECIMAL(38,0))
-                         * CAST(n_b * ka - n_a * kb AS DECIMAL(38,0))
-                         * CAST(n_b * ka - n_a * kb AS DECIMAL(38,0)))
-                       AS u,
-                     max(n_a) AS n_a, max(n_b) AS n_b
-              FROM cum, tot
-            )
-            SELECT n_a, n_b,
-              CASE WHEN n_a > 0 AND n_b > 0 THEN
-                floor(u::DOUBLE
-                      / (n_a::DOUBLE * n_b::DOUBLE
-                         * (n_a::DOUBLE + n_b::DOUBLE)
-                         * (n_a::DOUBLE + n_b::DOUBLE))
-                      * 1e6) / 1e6
-              END AS t_q6
-            FROM agg
-        """)
-def _q_cvm(spark, sf_dir):
-    """Cramér-von Mises two-sample criterion (functions/stats.py
-    cramer_von_mises_2s): does the event-value DISTRIBUTION differ
-    between users divisible by 3 and the rest? The integrated-square
-    companion to q_ks_drift's max-gap; exact DECIMAL numerator
-    sum_v c_v * (m*cumA - n*cumB)^2 over the distinct-value table,
-    one float division at emit."""
-
-    ev = read(spark, sf_dir, "events").select(
-        "value", (F.col("user_id") % 3 == 0).cast("int").alias("arm")
-    )
-    return cramer_von_mises_2s(ev, "value", "arm", quantize=2)
-
-
-@query(oracle="""
             WITH q AS (
               SELECT user_id, ts, event_id,
                      CAST(round(value * 100) AS BIGINT) AS x
@@ -2036,68 +949,6 @@ def _q_cramers_v(spark, sf_dir):
 
 @query(oracle="""
             WITH base AS (
-              SELECT c_nationkey AS g, c_custkey AS id,
-                     CAST(round(c_acctbal * 100, 0) AS BIGINT) AS x,
-                     CAST(round(length(c_name) * 100.0, 0) AS BIGINT)
-                       AS y
-              FROM customer
-              WHERE c_acctbal IS NOT NULL AND c_name IS NOT NULL
-            ),
-            s AS (
-              SELECT a.g,
-                     sum(
-                       (CASE WHEN b.x > a.x THEN 1
-                             WHEN b.x < a.x THEN -1 ELSE 0 END)
-                       * (CASE WHEN b.y > a.y THEN 1
-                               WHEN b.y < a.y THEN -1 ELSE 0 END)
-                     )::BIGINT AS s_stat
-              FROM base a JOIN base b ON a.g = b.g AND a.id < b.id
-              GROUP BY a.g
-            ),
-            cnt AS (SELECT g, count(*)::BIGINT AS n FROM base GROUP BY g),
-            tx AS (
-              SELECT g, sum(t * (t - 1))::BIGINT AS m1 FROM (
-                SELECT g, x, count(*)::BIGINT AS t
-                FROM base GROUP BY g, x
-              ) GROUP BY g
-            ),
-            ty AS (
-              SELECT g, sum(t * (t - 1))::BIGINT AS m2 FROM (
-                SELECT g, y, count(*)::BIGINT AS t
-                FROM base GROUP BY g, y
-              ) GROUP BY g
-            )
-            SELECT cnt.g AS c_nationkey, n, s_stat,
-                   (n * (n - 1))::BIGINT AS m0, m1, m2,
-                   CASE WHEN n * (n - 1) > m1 AND n * (n - 1) > m2 THEN
-                     floor(2.0 * s_stat::DOUBLE
-                           / sqrt((n * (n - 1) - m1)::DOUBLE
-                                  * (n * (n - 1) - m2)::DOUBLE)
-                           * 1e6) / 1e6
-                   END AS tau_q6
-            FROM cnt JOIN s USING (g) JOIN tx USING (g) JOIN ty USING (g)
-        """)
-def _q_kendall_tau(spark, sf_dir):
-    """Kendall tau-b per nation between account balance and name length
-    on customers (functions/stats.py kendall_tau_b) — concordance
-    between two metrics where q_mann_kendall is value-vs-clock. Pairs
-    enumerated once via strict custkey ordering (bounded-group
-    contract); S and the doubled tie terms are exact BIGINTs."""
-
-    c = read(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_nationkey",
-        "c_acctbal",
-        F.length("c_name").cast("double").alias("name_len"),
-    )
-    return kendall_tau_b(
-        c, ("c_nationkey",), "c_acctbal", "name_len", "c_custkey",
-        quantize=2,
-    )
-
-
-@query(oracle="""
-            WITH base AS (
               SELECT CAST(round(value * 100, 0) AS BIGINT) AS y,
                      (user_id % 2 = 0) AS t,
                      (ts >= TIMESTAMP '2024-01-16 00:00:00') AS p
@@ -2150,66 +1001,6 @@ def _q_did(spark, sf_dir):
         ).alias("post"),
     )
     return did_estimate(ev, "value", "treated", "post", quantize=2)
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1 ELSE 0
-                     END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT ca, cb,
-                     coalesce(sum(cb) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cb_below,
-                     coalesce(sum(cb) OVER (
-                       ORDER BY v
-                       ROWS BETWEEN 1 FOLLOWING
-                                AND UNBOUNDED FOLLOWING), 0) AS cb_above
-              FROM cnt
-            ),
-            agg AS (
-              SELECT sum(ca)::BIGINT AS n_a,
-                     sum(cb)::BIGINT AS n_b,
-                     sum(ca * (cb_below - cb_above))::BIGINT AS delta_num
-              FROM cum
-            )
-            SELECT n_a, n_b, delta_num,
-                   CASE WHEN n_a * n_b > 0 THEN
-                     floor(delta_num::DOUBLE / (n_a * n_b)::DOUBLE * 1e6)
-                       / 1e6
-                   END AS delta_q6,
-                   CASE WHEN n_a * n_b > 0 THEN
-                     CASE WHEN abs(delta_num) * 1000 < 147 * n_a * n_b
-                            THEN 'negligible'
-                          WHEN abs(delta_num) * 1000 < 330 * n_a * n_b
-                            THEN 'small'
-                          WHEN abs(delta_num) * 1000 < 474 * n_a * n_b
-                            THEN 'medium'
-                          ELSE 'large' END
-                   END AS magnitude
-            FROM agg
-        """)
-def _q_cliffs_delta(spark, sf_dir):
-    """Cliff's delta effect size between the BUILDING and MACHINERY
-    segments on account balance (functions/stats.py cliffs_delta) —
-    the magnitude reading q_mann_whitney's p-value needs; BIGINT
-    delta_num off the distinct-value count table, Romano band decided
-    by integer cross-multiplication."""
-
-    c = read(spark, sf_dir, "customer")
-    return cliffs_delta(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
 
 
 @query(oracle="""
@@ -2281,192 +1072,6 @@ def _q_cochran_q(spark, sf_dir):
 
 @query(oracle="""
             WITH base AS (
-              SELECT c_nationkey AS g,
-                     CAST(round(c_acctbal * 100) AS BIGINT) AS v
-              FROM customer WHERE c_acctbal IS NOT NULL
-            ),
-            cnt AS (
-              SELECT g, v, count(*)::BIGINT AS c FROM base GROUP BY g, v
-            ),
-            walsh AS (
-              SELECT g, w2, sum(pc)::BIGINT AS pc FROM (
-                SELECT a.g, a.v + b.v AS w2,
-                       CASE WHEN a.v = b.v
-                            THEN (a.c * (a.c + 1) / 2)::BIGINT
-                            ELSE a.c * b.c END AS pc
-                FROM cnt a JOIN cnt b
-                  ON a.g = b.g AND a.v <= b.v
-              ) GROUP BY g, w2
-            ),
-            ranked AS (
-              SELECT g, w2, pc,
-                     coalesce(sum(pc) OVER (
-                       PARTITION BY g ORDER BY w2
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cb,
-                     sum(pc) OVER (PARTITION BY g) AS nw
-              FROM walsh
-            ),
-            med AS (
-              SELECT g, max(nw)::BIGINT AS n_walsh,
-                     sum(w2 * (
-                       (CASE WHEN cb < floor((nw + 1) / 2)
-                              AND cb + pc >= floor((nw + 1) / 2)
-                        THEN 1 ELSE 0 END)
-                       + (CASE WHEN cb < floor(nw / 2) + 1
-                                AND cb + pc >= floor(nw / 2) + 1
-                          THEN 1 ELSE 0 END)
-                     ))::BIGINT AS med4
-              FROM ranked GROUP BY g
-            ),
-            n_tab AS (SELECT g, count(*)::BIGINT AS n FROM base GROUP BY g)
-            SELECT n_tab.g AS c_nationkey, n, n_walsh, med4,
-                   floor(med4::DOUBLE / 400.0 * 1e6) / 1e6 AS hl_q6
-            FROM n_tab JOIN med USING (g)
-        """)
-def _q_hodges_lehmann(spark, sf_dir):
-    """Hodges-Lehmann pseudo-median of account balance per nation
-    (functions/stats.py hodges_lehmann): Walsh-average multiset built
-    from the per-(nation, value) COUNT table (V x V on distinct
-    quantized values, never row x row), median via the integer
-    rank-reach test; med4 stays BIGINT."""
-
-    c = read(spark, sf_dir, "customer")
-    return hodges_lehmann(c, "c_acctbal", ("c_nationkey",), quantize=2)
-
-
-@query(oracle="""
-            WITH cells AS (
-              SELECT o_custkey % 50 AS subj, o_orderpriority AS trt,
-                     sum(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS v
-              FROM orders GROUP BY 1, 2
-            ),
-            ranked AS (
-              SELECT subj, trt,
-                     (2 * rank() OVER (PARTITION BY subj ORDER BY v)
-                      + count(*) OVER (PARTITION BY subj, v)
-                      - 1)::BIGINT AS r2
-              FROM cells
-            ),
-            ords AS (
-              SELECT trt,
-                     dense_rank() OVER (ORDER BY trt)::BIGINT AS ord
-              FROM (SELECT DISTINCT trt FROM cells)
-            ),
-            agg AS (
-              SELECT sum(ord * r2)::BIGINT AS l2,
-                     count(DISTINCT subj)::BIGINT AS n_subjects,
-                     count(DISTINCT ranked.trt)::BIGINT AS k
-              FROM ranked JOIN ords ON ranked.trt = ords.trt
-            )
-            SELECT n_subjects, k, l2,
-                   CASE WHEN n_subjects * k * k * (k + 1)
-                             * (k * k - 1) > 0 THEN
-                     floor(3.0 * (2 * l2
-                                  - n_subjects * k * (k + 1)
-                                    * (k + 1))::DOUBLE
-                           / sqrt((n_subjects * k * k * (k + 1)
-                                   * (k * k - 1))::DOUBLE)
-                           * 1e6) / 1e6
-                   END AS z_q6
-            FROM agg
-        """)
-def _q_page_trend(spark, sf_dir):
-    """Page's L ordered-trend test over (customer % 50) x order-priority
-    spend blocks (functions/stats.py page_trend_test): within-subject
-    doubled ranks weighted by the treatment ordinal; L2 BIGINT, z one
-    float expression off integral moments e4/v144."""
-
-    o = read(spark, sf_dir, "orders")
-    blocks = o.groupBy(
-        (F.col("o_custkey") % 50).alias("subj"),
-        F.col("o_orderpriority").alias("trt"),
-    ).agg(
-        F.sum(
-            F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        ).alias("spend")
-    )
-    return page_trend_test(blocks, "subj", "trt", "spend", quantize=0)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT user_id AS g, event_id AS o,
-                     CAST(round(value * 100) AS BIGINT) AS v
-              FROM events
-              WHERE user_id < 40 AND value IS NOT NULL
-            ),
-            vg AS (
-              SELECT g, v, count(*)::BIGINT AS c FROM base GROUP BY g, v
-            ),
-            ranked AS (
-              SELECT g, v, c,
-                     coalesce(sum(c) OVER (
-                       PARTITION BY g ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cb,
-                     sum(c) OVER (PARTITION BY g) AS n_g
-              FROM vg
-            ),
-            med AS (
-              SELECT g,
-                     sum(v * (
-                       (CASE WHEN cb < floor((n_g + 1) / 2)
-                              AND cb + c >= floor((n_g + 1) / 2)
-                        THEN 1 ELSE 0 END)
-                       + (CASE WHEN cb < floor(n_g / 2) + 1
-                                AND cb + c >= floor(n_g / 2) + 1
-                          THEN 1 ELSE 0 END)
-                     ))::BIGINT AS med2
-              FROM ranked GROUP BY g
-            ),
-            sided AS (
-              SELECT base.g, o,
-                     CASE WHEN 2 * v > med2 THEN 1
-                          WHEN 2 * v < med2 THEN 0 END AS side
-              FROM base JOIN med ON base.g = med.g
-            ),
-            seq AS (
-              SELECT g, side,
-                     lag(side) OVER (PARTITION BY g ORDER BY o) AS prev
-              FROM sided WHERE side IS NOT NULL
-            ),
-            agg AS (
-              SELECT g, sum(side)::BIGINT AS n1,
-                     sum(1 - side)::BIGINT AS n2,
-                     (1 + sum(CASE WHEN prev IS NOT NULL
-                                    AND side <> prev
-                              THEN 1 ELSE 0 END))::BIGINT AS runs
-              FROM seq GROUP BY g
-            )
-            SELECT g AS user_id, n1, n2, runs,
-                   CASE WHEN n1 > 0 AND n2 > 0 AND n1 + n2 > 2
-                         AND 2 * n1 * n2 > n1 + n2 THEN
-                     floor((runs::DOUBLE
-                            - (1.0 + (2 * n1 * n2)::DOUBLE
-                                     / (n1 + n2)::DOUBLE))
-                           / sqrt((2 * n1 * n2)::DOUBLE
-                                  * (2 * n1 * n2 - n1 - n2)::DOUBLE
-                                  / ((n1 + n2) * (n1 + n2)
-                                     * (n1 + n2 - 1))::DOUBLE)
-                           * 1e6) / 1e6
-                   END AS z_q6
-            FROM agg
-        """)
-def _q_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test of event values per user (ordered by
-    the unique event_id; functions/stats.py runs_test): sides come
-    from the DOUBLED exact median (2v vs med2 — no float compare),
-    runs from one lag window; null moments integral. The streakiness
-    screen on agent telemetry."""
-
-    ev = read(spark, sf_dir, "events").filter(F.col("user_id") < 40)
-    return runs_test(ev, "value", "event_id", ("user_id",), quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
               SELECT user_id AS g, event_id AS o,
                      CAST(round(value * 100) AS BIGINT) AS v
               FROM events
@@ -2501,85 +1106,6 @@ def _q_durbin_watson(spark, sf_dir):
 
     ev = read(spark, sf_dir, "events").filter(F.col("user_id") < 40)
     return durbin_watson(ev, "value", "event_id", ("user_id",), quantize=2)
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT o_orderpriority AS g,
-                     CAST(round(o_totalprice * 100) AS BIGINT) AS v
-              FROM orders
-              WHERE o_orderpriority IS NOT NULL
-                AND o_totalprice IS NOT NULL
-            ),
-            vc AS (SELECT v, count(*)::BIGINT AS c FROM base GROUP BY v),
-            ranked AS (
-              SELECT v, c,
-                     coalesce(sum(c) OVER (ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), 0) AS cb,
-                     sum(c) OVER () AS n
-              FROM vc
-            ),
-            med AS (
-              SELECT sum(v * (
-                (CASE WHEN cb < floor((n + 1) / 2)
-                       AND cb + c >= floor((n + 1) / 2)
-                 THEN 1 ELSE 0 END)
-                + (CASE WHEN cb < floor(n / 2) + 1
-                         AND cb + c >= floor(n / 2) + 1
-                   THEN 1 ELSE 0 END)))::BIGINT AS med2
-              FROM ranked
-            ),
-            sided AS (
-              SELECT g, CASE WHEN 2 * v > med2 THEN 1
-                             WHEN 2 * v < med2 THEN 0 END AS side
-              FROM base, med
-            ),
-            per_g AS (
-              SELECT g, sum(side)::BIGINT AS a,
-                     sum(1 - side)::BIGINT AS b
-              FROM sided WHERE side IS NOT NULL GROUP BY g
-            ),
-            tot AS (
-              SELECT sum(a)::BIGINT AS ta, sum(b)::BIGINT AS tb,
-                     count(*)::BIGINT AS k,
-                     sum(a + b)::BIGINT AS nn
-              FROM per_g
-            ),
-            stepped AS (
-              SELECT k, ta, tb, nn,
-                     sum(
-                       ((a::DOUBLE - (a + b)::DOUBLE * ta::DOUBLE
-                                     / nn::DOUBLE)
-                        * (a::DOUBLE - (a + b)::DOUBLE * ta::DOUBLE
-                                      / nn::DOUBLE)
-                        / ((a + b)::DOUBLE * ta::DOUBLE / nn::DOUBLE))
-                       + ((b::DOUBLE - (a + b)::DOUBLE * tb::DOUBLE
-                                      / nn::DOUBLE)
-                          * (b::DOUBLE - (a + b)::DOUBLE * tb::DOUBLE
-                                        / nn::DOUBLE)
-                          / ((a + b)::DOUBLE * tb::DOUBLE / nn::DOUBLE))
-                     ) OVER (ORDER BY g
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS acc,
-                     row_number() OVER (ORDER BY g) AS rn
-              FROM per_g, tot
-            )
-            SELECT nn AS n, k, ta AS above_total,
-                   CASE WHEN ta > 0 AND tb > 0 AND k > 1 THEN
-                     floor(acc * 1e6) / 1e6
-                   END AS chi2_q6
-            FROM stepped WHERE rn = k
-        """)
-def _q_mood_median(spark, sf_dir):
-    """Mood's median test of totalprice across the five order
-    priorities (functions/stats.py mood_median_test) — the
-    outlier-immune k-group median check: grand median via the DOUBLED
-    integer rank-reach selection, per-group above/below BIGINTs,
-    chi-square accumulated in fixed group order."""
-
-    o = read(spark, sf_dir, "orders")
-    return mood_median_test(o, "o_totalprice", "o_orderpriority", quantize=2)
 
 
 @query(oracle="""
@@ -2783,349 +1309,3 @@ def _q_inequality(spark, sf_dir):
 
     d = read(spark, sf_dir, "documents")
     return inequality_indices(d, "n_chars", ("source",), quantize=0)
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1
-                          ELSE 0 END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT ca, cb,
-                coalesce(sum(ca) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS cab,
-                coalesce(sum(cb) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS cbb
-              FROM cnt
-            ),
-            agg AS (
-              SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b,
-                sum(ca * (2 * (cab + cbb) + ca + cb + 1))::BIGINT
-                  AS sda,
-                sum(cb * (2 * (cab + cbb) + ca + cb + 1))::BIGINT
-                  AS sdb,
-                sum(ca * (2 * cbb + cb))::BIGINT AS sua,
-                sum(ca * (2 * cbb + cb) * (2 * cbb + cb))::BIGINT
-                  AS suua,
-                sum(cb * (2 * cab + ca))::BIGINT AS sub,
-                sum(cb * (2 * cab + ca) * (2 * cab + ca))::BIGINT
-                  AS suub
-              FROM cum
-            ),
-            m AS (
-              SELECT n_a, n_b, n_a::DOUBLE AS na, n_b::DOUBLE AS nb,
-                sda::DOUBLE / (2.0 * n_a::DOUBLE) AS rba,
-                sdb::DOUBLE / (2.0 * n_b::DOUBLE) AS rbb,
-                sda::DOUBLE / n_a::DOUBLE - (n_a::DOUBLE + 1.0)
-                  AS cca,
-                sdb::DOUBLE / n_b::DOUBLE - (n_b::DOUBLE + 1.0)
-                  AS ccb,
-                sua::DOUBLE AS suad, suua::DOUBLE AS suuad,
-                sub::DOUBLE AS subd, suub::DOUBLE AS suubd
-              FROM agg
-            ),
-            m2 AS (
-              SELECT n_a, n_b, na, nb, rba, rbb,
-                (suuad - 2.0 * cca * suad + na * cca * cca) / 4.0
-                  / (na - 1.0) AS s2a,
-                (suubd - 2.0 * ccb * subd + nb * ccb * ccb) / 4.0
-                  / (nb - 1.0) AS s2b
-              FROM m
-            ),
-            m3 AS (
-              SELECT n_a, n_b, na, nb, rba, rbb, s2a, s2b,
-                na * s2a + nb * s2b AS t
-              FROM m2
-            )
-            SELECT n_a, n_b,
-              floor((rbb - (nb + 1.0) / 2.0) / na * 1e6) / 1e6
-                AS p_hat_q6,
-              CASE WHEN t > 0 THEN
-                floor(na * nb * (rbb - rba) / (na + nb) / sqrt(t)
-                      * 1e6) / 1e6
-              END AS w_q6,
-              CASE WHEN t > 0 THEN
-                floor(t * t
-                      / ((na * s2a) * (na * s2a) / (na - 1.0)
-                         + (nb * s2b) * (nb * s2b) / (nb - 1.0))
-                      * 1e6) / 1e6
-              END AS df_q6
-            FROM m3
-        """)
-def _q_brunner_munzel(spark, sf_dir):
-    """Brunner-Munzel test between the BUILDING and MACHINERY
-    segments on account balance (functions/stats.py brunner_munzel) —
-    q_mann_whitney's Behrens-Fisher-robust sibling: valid when the
-    two segments have different spread. Every ingredient reduces to
-    the distinct-value count table (doubled midranks/placements are
-    BIGINT moment sums); studentized W + Satterthwaite df."""
-
-    c = read(spark, sf_dir, "customer")
-    return brunner_munzel(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )
-
-
-@query(oracle="""
-            WITH base AS (
-              SELECT c_mktsegment AS g,
-                CAST(round(c_acctbal * 100, 0) AS BIGINT) - 450000
-                  AS d
-              FROM customer WHERE c_acctbal IS NOT NULL
-            ),
-            nz AS (SELECT g, d FROM base WHERE d <> 0),
-            cnt AS (
-              SELECT g, abs(d) AS a,
-                sum(CASE WHEN d > 0 THEN 1 ELSE 0 END)::BIGINT AS cp,
-                count(*)::BIGINT AS c
-              FROM nz GROUP BY g, abs(d)
-            ),
-            rk AS (
-              SELECT g, cp, c,
-                2 * coalesce(sum(c) OVER (PARTITION BY g ORDER BY a
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                    0) + c + 1 AS d2
-              FROM cnt
-            ),
-            agg AS (
-              SELECT g, sum(c)::BIGINT AS n_nonzero,
-                sum(cp * d2)::BIGINT AS w2,
-                sum(c * c * c - c)::BIGINT AS tie3
-              FROM rk GROUP BY g
-            ),
-            m AS (
-              SELECT g, n_nonzero,
-                n_nonzero::DOUBLE AS nd,
-                w2::DOUBLE / 2.0 AS w,
-                tie3::DOUBLE AS tie3d
-              FROM agg
-            )
-            SELECT g AS c_mktsegment, n_nonzero,
-              w AS w_plus_q1,
-              CASE WHEN nd * (nd + 1.0) * (2.0 * nd + 1.0) / 24.0
-                        - tie3d / 48.0 > 0 THEN
-                floor((w - nd * (nd + 1.0) / 4.0)
-                      / sqrt(nd * (nd + 1.0) * (2.0 * nd + 1.0)
-                             / 24.0 - tie3d / 48.0) * 1e6) / 1e6
-              END AS z_q6
-            FROM m
-        """)
-def _q_wilcoxon(spark, sf_dir):
-    """One-sample Wilcoxon signed-rank per market segment against a
-    hypothesized 4500.00 balance (functions/stats.py
-    wilcoxon_signed_rank): the distribution-free 'is the median
-    really at the SLA point' gate; doubled midranks over \\|diff\\|
-    keep 2W+ BIGINT, tie-corrected z."""
-
-    c = read(spark, sf_dir, "customer")
-    return wilcoxon_signed_rank(
-        c, "c_acctbal", m0_q=450000, group_cols=("c_mktsegment",),
-        quantize=2,
-    )
-
-
-@query(oracle="""
-            WITH per_user AS (
-              SELECT user_id, min(ts) AS startt, max(ts) AS lastt,
-                min(CASE WHEN event_type = 'purchase' THEN ts END)
-                  AS p,
-                min(CASE WHEN event_type = 'error' THEN ts END) AS e
-              FROM events GROUP BY user_id
-            ),
-            obs AS (
-              SELECT
-                CASE WHEN p IS NOT NULL AND (e IS NULL OR p <= e)
-                     THEN 1
-                     WHEN e IS NOT NULL THEN 2 ELSE 0 END AS cause,
-                CAST(floor(
-                  (epoch_us(CASE WHEN p IS NOT NULL
-                                      AND (e IS NULL OR p <= e)
-                                 THEN p
-                                 WHEN e IS NOT NULL THEN e
-                                 ELSE lastt END)
-                   - epoch_us(startt))::DOUBLE / 3600000000.0)
-                  AS BIGINT) AS t
-              FROM per_user
-            ),
-            tc AS (
-              SELECT t, cause AS k, count(*)::BIGINT AS dk
-              FROM obs GROUP BY t, cause
-            ),
-            per_t AS (
-              SELECT t,
-                sum(CASE WHEN k > 0 THEN dk ELSE 0 END)::BIGINT AS d,
-                sum(dk)::BIGINT AS all_exits
-              FROM tc GROUP BY t
-            ),
-            total AS (
-              SELECT sum(all_exits)::BIGINT AS n_total FROM per_t
-            ),
-            risk AS (
-              SELECT t, d,
-                (n_total - coalesce(sum(all_exits) OVER (ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0))::BIGINT AS n
-              FROM per_t, total
-            ),
-            steps AS (
-              SELECT t, n,
-                CASE WHEN d = 0 THEN 0
-                     WHEN d < n THEN
-                       CAST(floor(ln(1.0 - d::DOUBLE / n::DOUBLE)
-                                  * 1e9) AS BIGINT)
-                END AS step
-              FROM risk
-            ),
-            cumb AS (
-              SELECT t, n,
-                coalesce(sum(step) OVER (ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS cb,
-                coalesce(max(CASE WHEN step IS NULL THEN 1 ELSE 0
-                             END) OVER (ORDER BY t
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS absorbed
-              FROM steps
-            ),
-            terms AS (
-              SELECT k, tc.t AS t, n AS n_at_risk, dk AS d_cause,
-                (CASE WHEN absorbed = 1 THEN 0.0
-                      ELSE exp(cb::DOUBLE / 1e9) END)
-                  * (dk::DOUBLE / n::DOUBLE) AS inc
-              FROM tc JOIN cumb ON tc.t = cumb.t
-              WHERE k > 0
-            )
-            SELECT k AS cause, t, n_at_risk, d_cause,
-              floor(sum(inc) OVER (PARTITION BY k ORDER BY t
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                 * 1e6) / 1e6 AS cif_q6
-            FROM terms
-        """)
-def _q_competing_risks(spark, sf_dir):
-    """Aalen-Johansen cumulative incidence of first-purchase vs
-    first-error per user (functions/stats.py competing_risks_cif):
-    cause = whichever comes first (purchase wins exact ties),
-    censored at last activity; integer-hour durations from exact
-    epoch-microsecond arithmetic. The competing-risks completion of
-    the q_kaplan_meier family — 1-KM per cause would overstate
-    both."""
-
-    ev = read(spark, sf_dir, "events")
-    per_user = ev.groupBy("user_id").agg(
-        F.min("ts").alias("start"),
-        F.max("ts").alias("last"),
-        F.min(
-            F.when(F.col("event_type") == "purchase", F.col("ts"))
-        ).alias("p"),
-        F.min(
-            F.when(F.col("event_type") == "error", F.col("ts"))
-        ).alias("e"),
-    )
-    cause = (
-        F.when(
-            F.col("p").isNotNull()
-            & (F.col("e").isNull() | (F.col("p") <= F.col("e"))),
-            F.lit(1),
-        )
-        .when(F.col("e").isNotNull(), F.lit(2))
-        .otherwise(F.lit(0))
-    )
-    endt = (
-        F.when(cause == 1, F.col("p"))
-        .when(cause == 2, F.col("e"))
-        .otherwise(F.col("last"))
-    )
-    # parquet timestamps load as NTZ; the NTZ->LTZ cast shifts BOTH
-    # endpoints by the same session offset, so the difference is exact
-    um = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
-    obs = per_user.select(
-        F.floor(
-            (um(endt) - um(F.col("start"))).cast("double")
-            / F.lit(3600000000.0)
-        )
-        .cast("long")
-        .alias("dur_h"),
-        cause.alias("cause"),
-    )
-    return competing_risks_cif(obs, "dur_h", "cause")
-
-
-@query(oracle="""
-            WITH pooled AS (
-              SELECT CAST(round(c_acctbal * 100, 0) AS BIGINT) AS v,
-                     CASE WHEN c_mktsegment = 'BUILDING' THEN 1
-                          ELSE 0 END AS s
-              FROM customer
-              WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')
-            ),
-            cnt AS (
-              SELECT v, sum(s)::BIGINT AS ca,
-                     sum(1 - s)::BIGINT AS cb
-              FROM pooled GROUP BY v
-            ),
-            cum AS (
-              SELECT ca, cb,
-                coalesce(sum(ca + cb) OVER (ORDER BY v
-                    ROWS BETWEEN UNBOUNDED PRECEDING
-                    AND 1 PRECEDING), 0) AS lo
-              FROM cnt
-            ),
-            agg AS (
-              SELECT sum(ca)::BIGINT AS n_a, sum(cb)::BIGINT AS n_b,
-                sum(cb * (2 * lo + ca + cb + 1))::BIGINT AS sd1,
-                sum(cb * (2 * lo + ca + cb + 1)
-                       * (2 * lo + ca + cb + 1))::BIGINT AS sd2
-              FROM cum
-            ),
-            f AS (
-              SELECT n_a, n_b, n_a::DOUBLE AS na, n_b::DOUBLE AS nb,
-                n_a::DOUBLE + n_b::DOUBLE AS nn,
-                sd2::DOUBLE / 4.0 AS ss2, sd1::DOUBLE AS sd1d
-              FROM agg
-            ),
-            m AS (
-              SELECT n_a, n_b, na, nb, nn, ss2,
-                nb * (nn + 1.0) * (nn + 1.0) - (nn + 1.0) * sd1d
-                  + ss2 AS sc2,
-                nb * (nn + 1.0) * (2.0 * nn + 1.0) AS mean0,
-                sqrt(na * nb * (nn + 1.0) * (2.0 * nn + 1.0)
-                     * (8.0 * nn + 11.0) / 5.0) AS den,
-                2.0 * (nn * nn - 4.0)
-                  / ((2.0 * nn + 1.0) * (8.0 * nn + 11.0)) - 1.0
-                  AS rho
-              FROM f
-            ),
-            uv AS (
-              SELECT n_a, n_b, rho,
-                (6.0 * ss2 - mean0) / den AS u,
-                (6.0 * sc2 - mean0) / den AS v
-              FROM m
-            )
-            SELECT n_a, n_b,
-              floor(u * 1e6) / 1e6 AS u_q6,
-              floor(v * 1e6) / 1e6 AS v_q6,
-              floor((u * u + v * v - 2.0 * rho * u * v)
-                    / (2.0 * (1.0 - rho * rho)) * 1e6) / 1e6 AS c_q6
-            FROM uv
-        """)
-def _q_cucconi(spark, sf_dir):
-    """Cucconi joint location-scale test, BUILDING vs MACHINERY
-    account balances (functions/stats.py cucconi_test): one statistic
-    that rejects when either the center or the spread moved — the
-    screen before choosing q_mann_whitney or a scale test. Doubled
-    midranks keep both squared-rank sums integer."""
-
-    c = read(spark, sf_dir, "customer")
-    return cucconi_test(
-        c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-    )

@@ -6,7 +6,6 @@ from .catalog import Catalog
 from .transcripts import (
     TRANSCRIPTS_SCHEMA,
     generate_transcripts,
-    generate_expected,
     read_transcripts,
     with_partition_id,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "Catalog",
     "TRANSCRIPTS_SCHEMA",
     "generate_transcripts",
-    "generate_expected",
     "read_transcripts",
     "with_partition_id",
 ]

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..datagen.transcripts import GenConfig, conv_rows, expected_for_rows
+from ..datagen.transcripts import GenConfig, conv_rows
 
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
@@ -41,18 +41,6 @@ SPAN_SCHEMA = T.ArrayType(
         ]
     )
 )
-
-EXPECTED_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("extracted_text", T.StringType()),
-        T.StructField("spans", SPAN_SCHEMA),
-        T.StructField("status", T.StringType()),
-        T.StructField("error_class", T.StringType()),
-    ]
-)
-
 
 def read_transcripts(
     spark: SparkSession, path: str, fmt: str = "parquet"
@@ -145,33 +133,4 @@ def generate_transcripts(spark: SparkSession, gcfg: GenConfig) -> DataFrame:
         spark.range(gcfg.n_convs)
         .repartition(max(spark.sparkContext.defaultParallelism, 2))
         .mapInPandas(gen, TRANSCRIPTS_SCHEMA)
-    )
-
-
-def generate_expected(spark: SparkSession, gcfg: GenConfig) -> DataFrame:
-    """Distributed golden-oracle generation (FIXTURES.md §3)."""
-
-    def gen(iterator: Iterator) -> Iterator:
-        import pandas as pd
-
-        for pdf in iterator:
-            rows = []
-            for conv_idx in pdf["id"]:
-                rows.extend(
-                    expected_for_rows(conv_rows(int(conv_idx), gcfg), gcfg.extractor)
-                )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "conv_id", "turn_idx", "extracted_text", "spans",
-                    "status", "error_class",
-                ],
-            )
-            out["turn_idx"] = out["turn_idx"].astype("int32")
-            yield out
-
-    return (
-        spark.range(gcfg.n_convs)
-        .repartition(max(spark.sparkContext.defaultParallelism, 2))
-        .mapInPandas(gen, EXPECTED_SCHEMA)
     )

@@ -5,7 +5,6 @@ from .extract_stream import (
     stream_interval_join,
     stream_static_enrich,
     stream_turn_rates,
-    stream_conv_progress,
     stream_dedup,
     stream_sessionize,
     stream_upsert_to_snapshots,
@@ -18,7 +17,6 @@ __all__ = [
     "stream_interval_join",
     "stream_static_enrich",
     "stream_turn_rates",
-    "stream_conv_progress",
     "stream_dedup",
     "stream_sessionize",
     "stream_upsert_to_snapshots",

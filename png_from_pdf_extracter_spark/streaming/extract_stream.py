@@ -290,28 +290,6 @@ def stream_static_enrich(
     return stream.join(F.broadcast(dim), on=key_col, how=how)
 
 
-def stream_conv_progress(
-    extracted: DataFrame,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Per-conversation progress rollup (streaming 'ProcessingJob' rows):
-    last turn seen, turns done, error count — an aggregation keyed by
-    conv_id with watermarked event time, emitted in update mode. This is
-    the streaming twin of the batch lineage metrics."""
-    return (
-        extracted.withWatermark("ts", watermark)
-        .groupBy("conv_id")
-        .agg(
-            F.max("turn_idx").alias("last_turn_idx"),
-            F.count("*").alias("n_turns_done"),
-            F.sum(F.when(F.col("status") == "error", 1).otherwise(0)).alias(
-                "n_errors"
-            ),
-            F.max("ts").alias("last_ts"),
-        )
-    )
-
-
 def stream_extract_to_snapshots(
     spark: SparkSession,
     input_path: str,

@@ -305,11 +305,7 @@ def main() -> int:
 
         # ---- round-5 probe targets (r4 verdict #5): pair producers
         # round 4 added or left unprobed.
-        from png_from_pdf_extracter_spark.functions import (
-            graph,
-            linkage,
-            stats,
-        )
+        from png_from_pdf_extracter_spark.functions import graph, linkage
 
         # jw_blocked_linkage over a GROWING name domain (first 4 words
         # of each doc — part names' constant 64-vocab would probe
@@ -415,41 +411,6 @@ def main() -> int:
                 ).count(),
             )
             results[label]["max_hub_degree"] = cap
-
-        # hodges_lehmann: Walsh pairs are V x V on DISTINCT QUANTIZED
-        # values — V is bounded by the value range / grid, not by row
-        # count, so the work metric (V*(V+1)/2) must grow FAR slower
-        # than rows (saturating toward the grid size).
-        hl = {}
-        for scale in ("x1", "x10"):
-            docs = spark.read.parquet(
-                f"{dirs[scale]}/documents.parquet"
-            )
-            t0 = time.time()
-            stats.hodges_lehmann(docs, "n_chars", quantize=0).collect()
-            wall = round(time.time() - t0, 2)
-            v = docs.select("n_chars").distinct().count()
-            hl[scale] = {
-                "distinct_values": int(v),
-                "walsh_work": int(v * (v + 1) // 2),
-                "wall_sec": wall,
-            }
-        hl["value_exponent"] = round(
-            math.log10(
-                max(hl["x10"]["distinct_values"], 1)
-                / max(hl["x1"]["distinct_values"], 1)
-            ),
-            3,
-        )
-        hl["work_exponent"] = round(
-            math.log10(
-                max(hl["x10"]["walsh_work"], 1)
-                / max(hl["x1"]["walsh_work"], 1)
-            ),
-            3,
-        )
-        print(f"# hodges_lehmann: {hl}", file=sys.stderr)
-        results["hodges_lehmann"] = hl
 
         block = {
             "scale_probe": {

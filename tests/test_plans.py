@@ -395,24 +395,6 @@ def test_autocorr_window_and_agg_share_one_exchange(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_mann_whitney_no_raw_row_sort(spark):
-    """mann_whitney_u must rank DISTINCT quantized values, never sort
-    the raw rows: the only single-partition stage is the running sum
-    over the distinct-value table (bounded by value cardinality)."""
-    from png_from_pdf_extracter_spark.functions.stats import mann_whitney_u
-
-    c = spark.read.parquet(f"{SF}/customer.parquet")
-    plan = _plan(
-        mann_whitney_u(c, "c_acctbal", "c_mktsegment", "BUILDING",
-                       "MACHINERY")
-    )
-    # one pre-aggregation before any SinglePartition exchange: the
-    # distinct-value count table is what gets globally ordered
-    assert plan.count("Exchange SinglePartition") <= 2, plan
-    first_single = plan.index("Exchange SinglePartition")
-    assert "HashAggregate" in plan[:first_single], plan
-
-
 def test_ewma_single_shuffle_no_python(spark):
     """ewma is one groupBy exchange and stays JVM-side (no Python/Arrow
     eval nodes): the fold is F.aggregate over a collected array."""
@@ -574,25 +556,6 @@ def test_negative_sample_antijoin_and_rank_share_anchor_key(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_theil_sen_pairs_join_on_group_key_only(spark):
-    """theil_sen_slope's pair join must be an equi-join on the group
-    key (per-group O(k^2)), never a cartesian."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        theil_sen_slope,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "user_id", F.col("event_id").alias("x"), "value"
-    )
-    plan = _plan(theil_sen_slope(ev, ("user_id",), "x", "value"))
-    assert "CartesianProduct" not in plan, plan
-    assert (
-        "Join [user_id" in plan
-        or "HashJoin [user_id" in plan
-        or "SortMergeJoin [user_id" in plan
-    ), plan
-
-
 def test_tfidf_cosine_pairs_join_on_term_key(spark):
     """tfidf_cosine_pairs: the pair generation must be an equi-join on
     the TERM posting key — never a cartesian; norms/dots are
@@ -622,22 +585,6 @@ def test_apply_dedup_best_antijoin_and_no_corpus_shuffle_for_scores(spark):
     plan = _plan(out)
     release(out)
     assert "LeftAnti" in plan, plan
-
-
-def test_kruskal_wallis_no_raw_row_join_back(spark):
-    """kruskal_wallis: every join/window input is an AGGREGATED table
-    (distinct-value or per-class) — the raw rows are consumed by exactly
-    one combinable count; no sort of the input anywhere."""
-    from png_from_pdf_extracter_spark.functions.stats import kruskal_wallis
-
-    o = spark.read.parquet(f"{SF}/orders.parquet")
-    plan = _plan(kruskal_wallis(o, "o_totalprice", "o_orderpriority"))
-    # partial aggregation before the first shuffle = map-side combine
-    # of the (value, class) count
-    assert "partial_count" in plan or "partial count" in plan.lower(), plan
-    # no cartesian anywhere; the final assembly is a 1x1 cross of two
-    # single-row frames (BroadcastNestedLoop on single rows is fine)
-    assert "CartesianProduct" not in plan
 
 
 def test_bh_fdr_two_windows_no_join(spark):
@@ -710,41 +657,6 @@ def test_link_prediction_no_cartesian_and_cap_below_wedge_join(spark):
     assert "CartesianProduct" not in plan, plan
     # the cap predicate appears in the tree below (after) the last join
     assert plan.rindex("Join") < plan.rindex("100"), plan
-
-
-def test_hodges_lehmann_pairs_on_count_table_not_rows(spark):
-    """hodges_lehmann: the Walsh self-join must consume the aggregated
-    (group, value) COUNT table — a HashAggregate must sit below each
-    join input — and join on the group key, never a cartesian."""
-    from png_from_pdf_extracter_spark.functions.stats import hodges_lehmann
-
-    c = spark.read.parquet(f"{SF}/customer.parquet")
-    plan = _plan(hodges_lehmann(c, "c_acctbal", ("c_nationkey",)))
-    assert "CartesianProduct" not in plan, plan
-    # count aggregation happens before pairing: the plan's last Join has
-    # HashAggregate descendants (children print below parents)
-    assert plan.rindex("Join") < plan.rindex("HashAggregate"), plan
-
-
-def test_kendall_tau_pairs_join_on_group_key_only(spark):
-    """kendall_tau_b shares theil_sen's bounded-group contract: pair
-    enumeration is an equi-join on the GROUP key."""
-    from png_from_pdf_extracter_spark.functions.stats import kendall_tau_b
-
-    c = spark.read.parquet(f"{SF}/customer.parquet").select(
-        "c_custkey", "c_nationkey", "c_acctbal",
-        F.length("c_name").cast("double").alias("nl"),
-    )
-    plan = _plan(
-        kendall_tau_b(c, ("c_nationkey",), "c_acctbal", "nl", "c_custkey")
-    )
-    assert "CartesianProduct" not in plan, plan
-    assert (
-        "Join [c_nationkey" in plan
-        or "HashJoin [c_nationkey" in plan
-        or "SortMergeJoin [c_nationkey" in plan
-        or "Join c_nationkey" in plan
-    ), plan
 
 
 def test_conformal_window_over_value_table(spark):
@@ -873,23 +785,6 @@ def test_cuped_single_one_row_aggregate(spark):
     plan = _plan(cuped_adjust(ev, "pre", "post", "arm"))
     assert "SortMergeJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_yuen_windows_over_count_table_single_shuffle(spark):
-    """yuen_trimmed_t: the per-arm windows run over the (arm, value)
-    count table (HashAggregate below the windows), never raw rows;
-    the winsorization join-back builds broadcast from the 2-row arm
-    table."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        yuen_trimmed_t,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "value", (F.col("user_id") % 2).cast("int").alias("arm")
-    )
-    plan = _plan(yuen_trimmed_t(ev, "value", "arm"))
-    assert plan.rindex("Window") < plan.rindex("HashAggregate"), plan
-    assert "BroadcastHashJoin" in plan, plan
 
 
 def test_token_wer_vocab_broadcast_no_cartesian(spark):
@@ -1057,23 +952,6 @@ def test_linear_cka_dim2_shuffle_not_rows(spark):
         c.unpersist()
 
 
-def test_brunner_munzel_single_value_count_shuffle(spark):
-    """brunner_munzel: mann_whitney's plan shape — one value-count
-    aggregate, one distinct-value window, no join back to raw rows."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        brunner_munzel,
-    )
-
-    c = spark.read.parquet(f"{SF}/customer.parquet")
-    plan = _plan(
-        brunner_munzel(
-            c, "c_acctbal", "c_mktsegment", "BUILDING", "MACHINERY"
-        )
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastHashJoin" not in plan, plan
-
-
 def test_juilland_take_ordered_top_k(spark):
     """juilland_dispersion: the top-k cut is TakeOrderedAndProject,
     never a global single-partition sort of the vocabulary."""
@@ -1084,22 +962,6 @@ def test_juilland_take_ordered_top_k(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(juilland_dispersion(d, "source", "text", top_k=20))
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_wilcoxon_single_count_shuffle_no_join(spark):
-    """wilcoxon_signed_rank: one |diff|-count aggregate + one
-    distinct-value window — no join at all."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        wilcoxon_signed_rank,
-    )
-
-    c = spark.read.parquet(f"{SF}/customer.parquet")
-    plan = _plan(
-        wilcoxon_signed_rank(
-            c, "c_acctbal", m0_q=450000, group_cols=("c_mktsegment",)
-        )
-    )
-    assert "Join" not in plan, plan
 
 
 def test_lift_table_single_global_window(spark):
