@@ -1,7 +1,8 @@
 """Exact statistics that percentile()/approx_percentile and the
-builtin aggregates don't cover: lag-k autocorrelation, changepoints,
-concentration and inequality indices, contingency tests, multiple-
-testing corrections, resampling errors. Every estimator here is built
+builtin aggregates don't cover: weighted quantiles, Spearman rank
+correlation, lag-k autocorrelation, changepoints, concentration and
+inequality indices, contingency tests, multiple-testing corrections,
+resampling errors. Every estimator here is built
 from INTEGER plans (value ordering + BIGINT/DECIMAL cumulative counts
 and rank sums); floats appear only in one final deterministic emit
 expression — the strongest possible cross-engine determinism class.
@@ -12,6 +13,130 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .curate import _quant
+
+
+def weighted_quantile(
+    df: DataFrame,
+    value_col: str,
+    weight_col: str,
+    group_cols: tuple[str, ...] = (),
+    q_num: int = 1,
+    q_den: int = 2,
+) -> DataFrame:
+    """Exact lower weighted q-quantile per group (default q=1/2, the
+    weighted median): the smallest value whose cumulative weight reaches
+    ``q`` of the group's total — "the doc length below which half the
+    TOKENS sit" rather than half the docs, the question a token-budgeted
+    corpus actually asks. The quantile is given as a RATIONAL
+    ``q_num/q_den`` and the reach test is ``cumw * q_den >= total *
+    q_num`` — integer weights in, zero float comparisons anywhere.
+
+    Plan: one group-keyed window (ordered cumulative sum + full-frame
+    total over the SAME exchange), one min-aggregate. Returns
+    ``(group..., total_w, wq_value)``.
+    """
+    v = F.col(value_col)
+    wt = F.col(weight_col).cast("long")
+    win = Window.partitionBy(*group_cols).orderBy(
+        v.asc(), wt.asc()
+    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    full = Window.partitionBy(*group_cols)
+    marked = df.select(
+        *group_cols,
+        v.alias("__v"),
+        F.sum(wt).over(win).alias("__cumw"),
+        F.sum(wt).over(full).alias("__total"),
+    )
+    reached = marked.filter(
+        F.col("__cumw") * q_den >= F.col("__total") * q_num
+    )
+    return reached.groupBy(*group_cols).agg(
+        F.max("__total").cast("long").alias("total_w"),
+        F.min("__v").alias("wq_value"),
+    )
+
+
+def spearman_corr(
+    df: DataFrame,
+    x_col: str,
+    y_col: str,
+    quantize: int = 2,
+) -> DataFrame:
+    """Spearman rank correlation between two numeric columns, exact
+    under ties (Pearson over AVERAGE ranks, the textbook tie-corrected
+    estimator) — the monotone-association gate a curation pipeline runs
+    between, say, a quality score and a downstream metric before
+    trusting either.
+
+    Integer construction: average rank of value v is (cum_below(v) +
+    (cnt_v + 1)/2), so DOUBLED ranks ``r2 = 2*cum_below + cnt + 1`` are
+    integers. Rank maps are built per DISTINCT quantized value (one
+    running sum over the distinct-value table each for x and y — window
+    bounded by value cardinality, not rows) and joined back on the
+    quantized value (a shuffle join; the rank map is same-order-of-
+    magnitude as the distinct-value count, broadcastable only when the
+    domain is small — document, don't assume). Rank sums/products are
+    accumulated as DECIMAL(38,0): Σ r2x*r2y ≤ 4n³ overflows BIGINT past
+    ~1e9 rows, and the final Pearson numerator n*Sxy - Sx*Sy reaches
+    ~4n⁴. The only floats are ONE final expression over exact decimal
+    aggregates (deterministic: identical inputs, identical expression
+    tree, no float summation anywhere).
+
+    Returns one row: (n_pairs, sx2, sy2, rho) — sx2/sy2 are the exact
+    doubled-rank sums (each must equal n*(n+1), pinned in tests), rho
+    floor-quantized 6dp, NULL when either margin is constant.
+    """
+    qx = _quant(F.col(x_col), quantize)
+    qy = _quant(F.col(y_col), quantize)
+    base = df.select(qx.alias("qx"), qy.alias("qy")).filter(
+        F.col("qx").isNotNull() & F.col("qy").isNotNull()
+    )
+
+    def rank_map(col_name: str) -> DataFrame:
+        cnt = base.groupBy(col_name).agg(F.count("*").alias("c"))
+        below = Window.orderBy(col_name).rowsBetween(
+            Window.unboundedPreceding, -1
+        )
+        return cnt.select(
+            col_name,
+            (
+                2 * F.coalesce(F.sum("c").over(below), F.lit(0))
+                + F.col("c")
+                + 1
+            ).alias(f"r2{col_name[1:]}"),
+        )
+
+    ranked = base.join(rank_map("qx"), "qx").join(rank_map("qy"), "qy")
+    dec = "decimal(38,0)"
+    s = ranked.agg(
+        F.count("*").cast(dec).alias("n"),
+        F.sum(F.col("r2x").cast(dec)).alias("sx"),
+        F.sum(F.col("r2y").cast(dec)).alias("sy"),
+        F.sum((F.col("r2x") * F.col("r2x")).cast(dec)).alias("sxx"),
+        F.sum((F.col("r2y") * F.col("r2y")).cast(dec)).alias("syy"),
+        F.sum((F.col("r2x") * F.col("r2y")).cast(dec)).alias("sxy"),
+    )
+    num = (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
+        "double"
+    )
+    denx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
+        "double"
+    )
+    deny = (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")).cast(
+        "double"
+    )
+    return s.select(
+        F.col("n").cast("long").alias("n_pairs"),
+        F.col("sx").cast("long").alias("sx2"),
+        F.col("sy").cast("long").alias("sy2"),
+        F.when(
+            (denx > 0) & (deny > 0),
+            F.floor(
+                num / (F.sqrt(denx) * F.sqrt(deny)) * F.lit(1e6)
+            )
+            / F.lit(1e6),
+        ).alias("rho"),
+    )
 
 
 def autocorr_lag1(
@@ -35,7 +160,7 @@ def autocorr_lag1(
     n_g * Σx² ≤ n_g² * max(q)², safe in BIGINT for per-key sequence
     lengths up to ~10^5 at 2dp quantization of O(10^3) values; larger
     per-key sequences should cast the sums to DECIMAL(38,0) (same
-    shape, [[cuped_adjust]] shows the pattern).
+    shape, [[spearman_corr]] shows the pattern).
 
     Returns (group..., n_pairs, sx, sy, sxy, r1) with r1 floor-6dp,
     NULL when either margin of the pair sequence is constant.
@@ -141,7 +266,7 @@ def changepoint_single(
     a rank window. Default 1dp quantization keeps the cross term
     Sx²·n < 2^63 for per-key sequences up to ~10^4 points of O(10^3)
     values; longer keys need coarser grids or DECIMAL sums (the
-    [[cuped_adjust]] pattern).
+    [[spearman_corr]] pattern).
 
     Plan: prefix sums + totals + score + rank are ALL windows/filters
     on the same group-key exchange — one shuffle, then a projection.
@@ -680,7 +805,7 @@ def bh_fdr(
     and alpha given as the rational ``alpha_num/alpha_den``, so the BH
     condition becomes ``pq * m * alpha_den <= k * alpha_num *
     10^quantize`` — BIGINT on both sides, zero float comparisons (the
-    [[winsorize]] reach-test discipline). Ties in p share a
+    [[weighted_quantile]] reach-test discipline). Ties in p share a
     fate automatically: k is each row's count of values <= its own
     (a RANGE-frame window), which for tied rows is the LARGEST tied
     rank — the standard BH convention.
@@ -732,9 +857,9 @@ def winsorize(
     outlier treatment a metrics pipeline applies before means/trends
     (medians shrug outliers off; means need the tails tamed).
 
-    Quantile thresholds are the EXACT lower quantiles by an integer
-    reach test over the per-group distinct-value table
-    (``cum * den >= n * num`` — no float
+    Quantile thresholds are the EXACT lower quantiles by the
+    [[weighted_quantile]] integer reach test over the per-group
+    distinct-value table (``cum * den >= n * num`` — no float
     percentile, no interpolation): cross-engine reproducible and
     scale-safe (windows bounded by per-group VALUE CARDINALITY, and
     the threshold join back to rows is group-keyed). Returns the

@@ -5,6 +5,7 @@ import math as _math
 
 from pyspark.sql import functions as F
 
+from png_from_pdf_extracter_spark.functions import text
 from png_from_pdf_extracter_spark.functions.stats import (
     autocorr_lag1,
     benford_digits,
@@ -28,11 +29,16 @@ from png_from_pdf_extracter_spark.functions.stats import (
     poisson_bootstrap_ci,
     rolling_median,
     running_distinct,
+    spearman_corr,
+    weighted_quantile,
     winsorize,
 )
 from png_from_pdf_extracter_spark.functions.text import tokens
 from png_from_pdf_extracter_spark.registry import query
-from png_from_pdf_extracter_spark.registry.common import read
+from png_from_pdf_extracter_spark.registry.common import (
+    NTOK_SQL,
+    read,
+)
 
 
 # exact doubles embedded in BOTH engines' expressions so no libm
@@ -43,6 +49,102 @@ _BENFORD_CASE = "CASE digit " + " ".join(
     f"WHEN {d} THEN {_math.log10(1 + 1 / d)!r}::DOUBLE"
     for d in range(1, 10)
 ) + " ELSE 0.0::DOUBLE END"
+
+@query(oracle=f"""
+            WITH base AS (
+              SELECT lang, n_chars AS len_chars,
+                     {NTOK_SQL} AS w
+              FROM documents
+            ),
+            m AS (
+              SELECT lang, len_chars,
+                     sum(w) OVER (PARTITION BY lang
+                                  ORDER BY len_chars ASC, w ASC
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                           AND CURRENT ROW) AS cumw,
+                     sum(w) OVER (PARTITION BY lang) AS total
+              FROM base
+            )
+            SELECT lang, max(total)::BIGINT AS total_w,
+                   min(len_chars) AS wq_value
+            FROM m WHERE cumw * 2 >= total * 1
+            GROUP BY lang
+        """)
+def _q_weighted_median(spark, sf_dir):
+    """Exact token-weighted median of document length per language
+    (functions/stats.py weighted_quantile): the n_chars value below
+    which half the corpus TOKENS sit — integer cumulative weights, the
+    quantile given as a rational, zero float comparisons."""
+
+    d = read(spark, sf_dir, "documents")
+    base = d.select(
+        "lang",
+        F.col("n_chars").alias("len_chars"),
+        text.token_count("text").alias("w"),
+    )
+    return weighted_quantile(
+        base, "len_chars", "w", group_cols=("lang",)
+    )
+
+
+@query(oracle="""
+            WITH base AS (
+              SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS qx,
+                     CAST(round(c_acctbal * 100) AS BIGINT) AS qy
+              FROM orders JOIN customer ON o_custkey = c_custkey
+              WHERE o_totalprice IS NOT NULL AND c_acctbal IS NOT NULL
+            ),
+            rx AS (
+              SELECT qx,
+                     2 * coalesce(sum(c) OVER (
+                       ORDER BY qx
+                       ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND 1 PRECEDING), 0) + c + 1 AS r2x
+              FROM (SELECT qx, count(*) AS c FROM base GROUP BY qx)
+            ),
+            ry AS (
+              SELECT qy,
+                     2 * coalesce(sum(c) OVER (
+                       ORDER BY qy
+                       ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND 1 PRECEDING), 0) + c + 1 AS r2y
+              FROM (SELECT qy, count(*) AS c FROM base GROUP BY qy)
+            ),
+            s AS (
+              SELECT count(*)::HUGEINT AS n,
+                     sum(r2x::HUGEINT) AS sx,
+                     sum(r2y::HUGEINT) AS sy,
+                     sum(r2x::HUGEINT * r2x) AS sxx,
+                     sum(r2y::HUGEINT * r2y) AS syy,
+                     sum(r2x::HUGEINT * r2y) AS sxy
+              FROM base JOIN rx USING (qx) JOIN ry USING (qy)
+            )
+            SELECT n::BIGINT AS n_pairs,
+                   sx::BIGINT AS sx2,
+                   sy::BIGINT AS sy2,
+                   CASE WHEN (n * sxx - sx * sx) > 0
+                         AND (n * syy - sy * sy) > 0 THEN
+                     floor((n * sxy - sx * sy)::DOUBLE
+                           / (sqrt((n * sxx - sx * sx)::DOUBLE)
+                              * sqrt((n * syy - sy * sy)::DOUBLE))
+                           * 1e6) / 1e6
+                   END AS rho
+            FROM s
+        """)
+def _q_spearman(spark, sf_dir):
+    """Spearman rank correlation (tie-corrected, exact doubled-rank
+    integers accumulated in DECIMAL(38,0)) between order totalprice and
+    the ordering customer's account balance (functions/stats.py
+    spearman_corr) — rank maps per distinct quantized value, one float
+    expression at the end."""
+
+    o = read(spark, sf_dir, "orders")
+    c = read(spark, sf_dir, "customer")
+    j = o.join(c, o.o_custkey == c.c_custkey).select(
+        "o_totalprice", "c_acctbal"
+    )
+    return spearman_corr(j, "o_totalprice", "c_acctbal")
+
 
 @query(oracle="""
             WITH seq AS (

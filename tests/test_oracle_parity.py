@@ -66,6 +66,7 @@ WIDE_SAMPLE = (
     "q_ntile_deciles", "q_top_words", "q_join_topn", "q_tpch_q3", "q_rbo",
     "q_cms_freq",
     "q_bh_fdr", "q_ks_drift", "q_rrf_fusion", "q_lift_table", "q_zipf_fit",
+    "q_spearman",
     "q_explode_reassembly", "q_conv_rollup", "q_group_metrics",
     "q_error_classify",
     "q_tpch_q1", "q_tpch_q5", "q_tpch_q18", "q_minhash_lsh",

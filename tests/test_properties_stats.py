@@ -121,7 +121,7 @@ def test_interval_union_matches_bruteforce(spark, ivs):
     assert r["n_intervals"] == len(ivs)
 
 
-# ---- batch 2: ewma / autocorr / kmv / kneser-ney ----
+# ---- batch 2: spearman / ewma / autocorr / kmv / kneser-ney ----
 
 import hashlib
 
@@ -130,8 +130,56 @@ from png_from_pdf_extracter_spark.functions.sketch import (
     kmv_build,
     kmv_estimate,
 )
-from png_from_pdf_extracter_spark.functions.stats import autocorr_lag1
+from png_from_pdf_extracter_spark.functions.stats import (
+    autocorr_lag1,
+    spearman_corr,
+)
 from png_from_pdf_extracter_spark.operators.temporal import ewma
+
+
+def _avg_ranks(vals):
+    """Textbook average ranks (1-based) with ties sharing the mean of
+    their rank range; returned doubled so everything stays integer."""
+    order = sorted(range(len(vals)), key=lambda i: vals[i])
+    r2 = [0] * len(vals)
+    i = 0
+    while i < len(order):
+        j = i
+        while j < len(order) and vals[order[j]] == vals[order[i]]:
+            j += 1
+        # ranks i+1..j share mean (i+1+j)/2 -> doubled = i+1+j
+        for t in range(i, j):
+            r2[order[t]] = i + 1 + j
+        i = j
+    return r2
+
+
+@_settings
+@given(
+    pairs=st.lists(
+        st.tuples(st.integers(0, 6), st.integers(0, 6)),
+        min_size=3,
+        max_size=25,
+    )
+)
+def test_spearman_matches_bruteforce_ranks(spark, pairs):
+    df = spark.createDataFrame(
+        [(float(x), float(y)) for x, y in pairs], "x double, y double"
+    )
+    r = spearman_corr(df, "x", "y").collect()[0]
+    xs = [x for x, _ in pairs]
+    ys = [y for _, y in pairs]
+    r2x, r2y = _avg_ranks(xs), _avg_ranks(ys)
+    assert r["sx2"] == sum(r2x) and r["sy2"] == sum(r2y)
+    n = len(pairs)
+    num = n * sum(a * b for a, b in zip(r2x, r2y)) - sum(r2x) * sum(r2y)
+    dx = n * sum(a * a for a in r2x) - sum(r2x) ** 2
+    dy = n * sum(b * b for b in r2y) - sum(r2y) ** 2
+    if dx > 0 and dy > 0:
+        rho = num / (math.sqrt(dx) * math.sqrt(dy))
+        assert r["rho"] == math.floor(rho * 1e6) / 1e6
+    else:
+        assert r["rho"] is None
 
 
 @_settings

@@ -1,11 +1,85 @@
 """Statistical estimators (functions/stats.py) — closed-form pins,
 Python twins and degenerate-input cases."""
 
-# ---- autocorr_lag1 ----
+# ---- weighted_quantile ----
+
+from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
+    weighted_quantile,
+)
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(rows, "g string, v long, w long")
+
+
+def test_weighted_median_weight_concentration(spark):
+    # value 100 holds 8/10 of the weight: the weighted median is 100
+    # even though it is the largest of four values
+    rows = [("a", 1, 1), ("a", 2, 1), ("a", 3, 0), ("a", 100, 8)]
+    r = weighted_quantile(
+        _df(spark, rows), "v", "w", group_cols=("g",)
+    ).collect()[0]
+    assert r["wq_value"] == 100 and r["total_w"] == 10
+
+
+def test_weighted_median_unit_weights_is_lower_median(spark):
+    rows = [("a", v, 1) for v in (10, 20, 30, 40)]
+    r = weighted_quantile(
+        _df(spark, rows), "v", "w", group_cols=("g",)
+    ).collect()[0]
+    assert r["wq_value"] == 20  # lower median: cumw 2 reaches 4/2
+
+
+def test_weighted_quantile_rational_q(spark):
+    rows = [("a", v, 1) for v in range(1, 11)]  # 1..10, unit weights
+    r = weighted_quantile(
+        _df(spark, rows), "v", "w", group_cols=("g",), q_num=9, q_den=10
+    ).collect()[0]
+    assert r["wq_value"] == 9  # cumw 9 reaches 10*9/10
+
+
+def test_weighted_median_exact_boundary(spark):
+    # cumw*2 == total*1 exactly at value 1 (weight 1 of total 2): the
+    # LOWER weighted median takes it — integer compare, no float fuzz
+    rows = [("a", 1, 1), ("a", 5, 1)]
+    r = weighted_quantile(
+        _df(spark, rows), "v", "w", group_cols=("g",)
+    ).collect()[0]
+    assert r["wq_value"] == 1
+
+
+# ---- rank statistics (spearman_corr / autocorr_lag1) ----
 
 from png_from_pdf_extracter_spark.functions.stats import (  # noqa: E402
     autocorr_lag1,
+    spearman_corr,
 )
+
+
+def _xy_df(spark, pairs):
+    return spark.createDataFrame(
+        [(float(x), float(y)) for x, y in pairs], "x double, y double"
+    )
+
+
+def test_spearman_perfect_monotone_nonlinear(spark):
+    pairs = [(x, x * x) for x in range(1, 11)]
+    r = spearman_corr(_xy_df(spark, pairs), "x", "y").collect()[0]
+    assert r["rho"] == 1.0  # rank-equal despite nonlinearity
+    # doubled-rank sums are each exactly n*(n+1)
+    assert r["sx2"] == r["sy2"] == 10 * 11
+
+
+def test_spearman_perfect_inverse(spark):
+    pairs = [(x, -x) for x in range(1, 8)]
+    r = spearman_corr(_xy_df(spark, pairs), "x", "y").collect()[0]
+    assert r["rho"] == -1.0
+
+
+def test_spearman_constant_margin_is_null(spark):
+    pairs = [(x, 5) for x in range(1, 6)]
+    r = spearman_corr(_xy_df(spark, pairs), "x", "y").collect()[0]
+    assert r["rho"] is None and r["n_pairs"] == 5
 
 
 def _seq_df(spark, vals):
