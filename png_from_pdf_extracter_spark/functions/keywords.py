@@ -314,7 +314,7 @@ def juilland_dispersion(
 
     Absent (term, part) cells are zero by contract, so per-term
     moments over ALL k parts come from sums over PRESENT cells only
-    (the [[interrater_reliability]] trick) — population CV from
+    (a zero cell adds nothing to either sum) — population CV from
     integer counts, one fixed float expression per term, no stepped
     window anywhere. Plan: one (part, term) count shuffle, one term
     rollup, TakeOrdered top-k. Returns (term, total_freq, n_parts_hit,

@@ -19,8 +19,9 @@ Env:
         spark_hash}; ``spark_hash`` is the Spark side's canonical digest,
         recorded for rows-only queries too, so two sweeps of the same
         data show whether a change altered any query's output;
-        when the file already exists, the new sf's block is merged in,
-        so one artifact carries both scales.
+        when the file already exists, the sweep is merged in (see
+        ``merge_sweep``), so one artifact carries both scales and a
+        re-sweep of a few queries keeps every other record.
 """
 
 from __future__ import annotations
@@ -30,6 +31,7 @@ import os
 import sys
 import time
 import traceback
+from collections import Counter
 
 import duckdb
 import pandas as pd
@@ -62,6 +64,39 @@ def _canon(df: pd.DataFrame) -> tuple[int, list[str], str]:
         parts.append(s.astype(str).str.cat(sep="\x1f"))
     digest = hashlib.md5("\x1e".join(parts).encode()).hexdigest()
     return len(df), cols, digest
+
+
+def merge_sweep(
+    blob: dict, sf_label: str, record: dict, registry, oracled
+) -> None:
+    """Fold one sweep's per-query ``record`` into the artifact ``blob``,
+    in place.
+
+    The new records replace same-named ones in the ``sf_label`` block and
+    every other record of that block is kept, so a sweep of a query
+    subset updates only those queries. Every block then drops the
+    records of queries no longer in ``registry``, and its ``n_pass`` /
+    ``n_rows_only`` / ``n_fail`` are recounted from the records it
+    holds. ``registry_total`` / ``oracled_total`` count ``registry`` /
+    ``oracled``.
+    """
+    registry = set(registry)
+    sweeps = blob.setdefault("sweeps", {})
+    old = sweeps.get(sf_label, {}).get("queries", {})
+    sweeps[sf_label] = {"queries": {**old, **record}}
+    for block in sweeps.values():
+        queries = {
+            k: v for k, v in block["queries"].items() if k in registry
+        }
+        status = Counter(v["status"] for v in queries.values())
+        block.update(
+            n_pass=status["pass"],
+            n_rows_only=status["rows_only"],
+            n_fail=len(queries) - status["pass"] - status["rows_only"],
+            queries=queries,
+        )
+    blob["registry_total"] = len(registry)
+    blob["oracled_total"] = len(oracled)
 
 
 def main() -> int:
@@ -175,14 +210,7 @@ def main() -> int:
         if os.path.exists(out_json):
             with open(out_json) as f:
                 blob = json.load(f)
-        blob.setdefault("sweeps", {})[sf_label] = {
-            "n_pass": n_pass,
-            "n_rows_only": n_rowsonly,
-            "n_fail": n_fail,
-            "queries": record,
-        }
-        blob["registry_total"] = len(queries)
-        blob["oracled_total"] = len(oracles)
+        merge_sweep(blob, sf_label, record, queries, oracles)
         with open(out_json, "w") as f:
             json.dump(blob, f, indent=1, sort_keys=True)
         print(f"== wrote {out_json} [{sf_label}]")

@@ -1,7 +1,7 @@
-"""isotonic_calibrate (binned PAVA), quantile_normalize, and
-chi2_independence: brute-force pins against pure-Python references,
+"""isotonic_calibrate (binned PAVA), quantile_normalize and the 1-D
+Wasserstein distance: brute-force pins against pure-Python references,
 plus the defining invariants (monotone fit, pooled-distribution match,
-margin identities)."""
+zero distance between identical samples)."""
 
 import math
 
@@ -11,7 +11,6 @@ from png_from_pdf_extracter_spark.functions.evalmetrics import (
     isotonic_calibrate,
 )
 from png_from_pdf_extracter_spark.functions.drift import quantile_normalize
-from png_from_pdf_extracter_spark.functions.stats import chi2_independence
 
 
 # ---- isotonic_calibrate ----
@@ -168,45 +167,6 @@ def test_quantile_normalize_monotone_within_group(spark):
     # both groups map onto the SAME pooled scale: b's low end >= a's low end
     with pytest.raises(ValueError):
         quantile_normalize(df, "g", "id", "v", anchors=0)
-
-
-# ---- chi2_independence ----
-
-
-def test_chi2_independent_columns_zero_contrib(spark):
-    # perfectly independent 2x2: contribution exactly 0
-    data = [(a, b) for a in "xy" for b in "uv" for _ in range(25)]
-    df = spark.createDataFrame(data, "a string, b string")
-    rows = chi2_independence(df, "a", "b").collect()
-    assert len(rows) == 4
-    for r in rows:
-        assert r["observed"] == 25
-        assert r["expected_ppm"] == 25_000_000
-        assert r["chi2_ppm"] == 0
-
-
-def test_chi2_bruteforce(spark):
-    import random
-
-    rng = random.Random(2)
-    data = [
-        (rng.choice("pqr"), rng.choice("mn")) for _ in range(500)
-    ]
-    df = spark.createDataFrame(data, "a string, b string")
-    rows = chi2_independence(df, "a", "b").collect()
-    from collections import Counter
-
-    o = Counter(data)
-    ra = Counter(a for a, _ in data)
-    cb = Counter(b for _, b in data)
-    N = len(data)
-    for r in rows:
-        k = (r["a"], r["b"])
-        e = (ra[r["a"]] * cb[r["b"]]) / N
-        assert r["observed"] == o[k]
-        assert r["expected_ppm"] == math.floor(e * 1e6)
-        assert r["chi2_ppm"] == math.floor((o[k] - e) ** 2 / e * 1e6)
-    assert sum(r["observed"] for r in rows) == N
 
 
 # ---- wasserstein_1d ----

@@ -382,19 +382,6 @@ def test_scalar_quantize_map_only(spark):
     assert "Exchange" not in plan and "Join" not in plan, plan
 
 
-def test_autocorr_window_and_agg_share_one_exchange(spark):
-    """autocorr_lag1's lead() window and its Pearson-sums groupBy both
-    key on the group column — one hashpartitioning Exchange total, so
-    the operator costs a single shuffle at any scale."""
-    from png_from_pdf_extracter_spark.functions.stats import autocorr_lag1
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(
-        autocorr_lag1(ev, ("user_id",), ("ts", "event_id"), "value")
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
 def test_ewma_single_shuffle_no_python(spark):
     """ewma is one groupBy exchange and stays JVM-side (no Python/Arrow
     eval nodes): the fold is F.aggregate over a collected array."""
@@ -421,52 +408,6 @@ def test_kmv_distinct_before_window_bounds_state(spark):
     assert plan.count("Exchange hashpartitioning") <= 2, plan
 
 
-def test_changepoint_single_group_exchange(spark):
-    """changepoint_single's prefix sums, totals, score and argmax rank
-    are all windows keyed by the group — exactly one hashpartitioning
-    Exchange in the whole plan."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        changepoint_single,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(
-        changepoint_single(ev, ("user_id",), ("ts", "event_id"), "value")
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_correlogram_single_shuffle_any_max_lag(spark):
-    """All lags come from sibling lead() columns on ONE window exchange;
-    the (group, lag) aggregate reuses it — one hashpartitioning total."""
-    from png_from_pdf_extracter_spark.functions.stats import correlogram
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(
-        correlogram(ev, ("user_id",), ("ts", "event_id"), "value", 8)
-    )
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
-
-
-def test_gini_window_runs_on_distinct_group_table(spark):
-    """gini_concentration's ordered rank window must run AFTER the
-    group collapse: the aggregate keyed on the group column sits below
-    the single-partition window in the plan, so the global sort is
-    bounded by GROUP cardinality, never corpus rows."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        gini_concentration,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(gini_concentration(d, "source", "n_chars"))
-    # the corpus-collapsing aggregate keys on the group column and is
-    # map-side combinable (partial_... aggregate present)
-    assert "partial" in plan.lower(), plan
-    i_window = plan.index("Window")
-    i_agg = plan.rindex("HashAggregate")
-    assert i_window < i_agg, plan  # window above (consumes) the agg
-
-
 def test_cooccur_no_cartesian_and_broadcast_totals(spark):
     """cooccur_lift's pair generation must be an equi-join on the
     basket key (never a cartesian/theta join) and the scalar totals a
@@ -487,40 +428,6 @@ def test_cooccur_no_cartesian_and_broadcast_totals(spark):
         or "HashJoin [__bk" in plan
         or "SortMergeJoin [__bk" in plan
     ), plan
-
-
-def test_bootstrap_single_corpus_shuffle(spark):
-    """poisson_bootstrap_ci: the replica fan-out is map-side (Generate
-    below the first Exchange), the (group, replica) aggregation is
-    map-combinable, and the only other shuffle handles R-bounded rows."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        poisson_bootstrap_ci,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(
-        poisson_bootstrap_ci(
-            ev, "event_id", "value", group_cols=("event_type",), replicas=8
-        )
-    )
-    assert "Generate explode" in plan, plan
-    # explode sits BELOW (after in dump order) the first exchange: the
-    # fan-out never crosses the wire un-aggregated
-    assert plan.index("Exchange") < plan.index("Generate explode"), plan
-
-
-def test_chi2_margins_from_cell_table_one_corpus_pass(spark):
-    """chi2_independence reads the corpus ONCE: row/column totals are
-    re-aggregations of the cell table, visible as exactly one scan of
-    the parquet source feeding a shared aggregate."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        chi2_independence,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(chi2_independence(d, "lang", "source"))
-    # margins joined back broadcast (cells are |A|x|B|-bounded)
-    assert plan.count("BroadcastExchange") >= 2, plan
 
 
 def test_quantile_normalize_anchor_join_is_broadcast(spark):
@@ -585,35 +492,6 @@ def test_apply_dedup_best_antijoin_and_no_corpus_shuffle_for_scores(spark):
     plan = _plan(out)
     release(out)
     assert "LeftAnti" in plan, plan
-
-
-def test_bh_fdr_two_windows_no_join(spark):
-    """bh_fdr: the whole operator is windows over ONE group exchange —
-    no join back, no extra shuffle beyond the group partition."""
-    from png_from_pdf_extracter_spark.functions.stats import bh_fdr
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_type", (F.col("value") / 500).alias("p")
-    )
-    plan = _plan(bh_fdr(ev, "p", group_cols=("event_type",)))
-    assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
-    # exactly one exchange: hashpartitioning on the group key feeds
-    # every window
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_winsorize_thresholds_join_on_group_key_only(spark):
-    """winsorize: the clamp thresholds come back to the rows via a
-    GROUP-keyed equi-join (tiny per-group threshold tables), never a
-    re-sort of the raw rows."""
-    from png_from_pdf_extracter_spark.functions.stats import winsorize
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(winsorize(ev, "value", ("event_type",)))
-    assert "CartesianProduct" not in plan
-    # threshold tables are aggregates of the distinct-value table:
-    # map-side combine present for the (group, value) count
-    assert "partial_count" in plan or "partial count" in plan.lower(), plan
 
 
 def test_keyness_g2_broadcasts_totals_only(spark):
@@ -757,36 +635,6 @@ def test_prf_rerank_second_pass_terms_broadcast(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_hill_tail_windows_over_distinct_count_table(spark):
-    """hill_tail_index: every window runs over the aggregated
-    distinct-value table (HashAggregate below the windows), never raw
-    rows."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        hill_tail_index,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(hill_tail_index(ev, "value", k=50, quantize=2))
-    assert plan.rindex("Window") < plan.rindex("HashAggregate"), plan
-
-
-def test_cuped_single_one_row_aggregate(spark):
-    """cuped_adjust: ONE conditional aggregate regardless of input
-    size — exactly one exchange pair (partial/final over a 1-row
-    group) beyond the broadcast min, no joins on the data path except
-    the two scalar broadcasts."""
-    from png_from_pdf_extracter_spark.functions.stats import cuped_adjust
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        F.col("value").alias("pre"),
-        (F.col("value") * 2).alias("post"),
-        (F.col("user_id") % 2).cast("int").alias("arm"),
-    )
-    plan = _plan(cuped_adjust(ev, "pre", "post", "arm"))
-    assert "SortMergeJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_token_wer_vocab_broadcast_no_cartesian(spark):
     """token_edit_distance_pairs: the token->char vocabulary reaches
     the encode join as a broadcast; no cartesian anywhere."""
@@ -808,20 +656,6 @@ def test_token_wer_vocab_broadcast_no_cartesian(spark):
     plan = _plan(token_edit_distance_pairs(d, pairs, "doc_id", "toks"))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_holm_two_range_windows_no_join(spark):
-    """holm_bonferroni: pure window plan — no join back to the input,
-    no sort beyond the in-group p order."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        holm_bonferroni,
-    )
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select(
-        "event_type", (F.col("value") / 1000).alias("p")
-    )
-    plan = _plan(holm_bonferroni(ev, "p", group_cols=("event_type",)))
-    assert "Join" not in plan, plan
 
 
 def test_partition_agreement_margins_broadcast(spark):
@@ -868,39 +702,6 @@ def test_rake_top_k_is_take_ordered_not_global_window(spark):
     d = spark.read.parquet(f"{SF}/documents.parquet")
     plan = _plan(rake_keyphrases(d, top_k=15))
     assert "TakeOrderedAndProject" in plan, plan
-
-
-def test_concordance_single_exchange_one_aggregate(spark):
-    """concordance_agreement: ONE combinable moment aggregate per
-    group — exactly one Exchange (the group-key partial/final
-    aggregate pair), no window, no join."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        concordance_agreement,
-    )
-
-    d = spark.read.parquet(f"{SF}/documents.parquet").select(
-        "source",
-        F.col("n_chars").cast("double").alias("x"),
-        (F.col("n_chars") * 2).cast("double").alias("y"),
-    )
-    plan = _plan(concordance_agreement(d, "x", "y", ("source",)))
-    assert plan.count("Exchange") == 1, plan
-    assert "SortMergeJoin" not in plan and "Window" not in plan, plan
-
-
-def test_reliability_broadcast_combine_no_smj(spark):
-    """interrater_reliability: the subject/item/grand stats combine
-    through single-row broadcasts — no sort-merge join anywhere."""
-    from png_from_pdf_extracter_spark.functions.stats import (
-        interrater_reliability,
-    )
-
-    e = spark.read.parquet(f"{SF}/events.parquet")
-    plan = _plan(
-        interrater_reliability(e, "user_id", "event_type", "value")
-    )
-    assert "SortMergeJoin" not in plan, plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_ql_topk_term_set_broadcast_and_take_ordered(spark):

@@ -154,6 +154,45 @@ def test_correctness_full_artifact_matches_registry():
         assert not n_err, f"{sf_label}: errors {n_err}"
 
 
+def test_partial_sweep_merges_into_artifact():
+    """A sweep of a query subset replaces only those queries' records in
+    its scale's block; records of queries no longer in the registry
+    leave every block, and each block's totals are recounted."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "check_oracle",
+        pathlib.Path(__file__).parent.parent / "scripts" / "check_oracle.py",
+    )
+    check_oracle = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_oracle)
+    ok = {"status": "pass", "rows": 3, "spark_hash": "h"}
+    blob = {
+        "sweeps": {
+            sf: {
+                "n_pass": 3, "n_rows_only": 0, "n_fail": 0,
+                "queries": {"q_a": ok, "q_b": ok, "q_gone": ok},
+            }
+            for sf in ("sf0.01", "sf0.1")
+        },
+        "registry_total": 3,
+        "oracled_total": 3,
+    }
+    fresh = {"status": "rows_only", "rows": 5, "spark_hash": "g"}
+    check_oracle.merge_sweep(
+        blob, "sf0.1", {"q_b": fresh}, ["q_a", "q_b"], ["q_a"]
+    )
+    assert blob["sweeps"]["sf0.1"] == {
+        "n_pass": 1, "n_rows_only": 1, "n_fail": 0,
+        "queries": {"q_a": ok, "q_b": fresh},
+    }
+    assert blob["sweeps"]["sf0.01"] == {
+        "n_pass": 2, "n_rows_only": 0, "n_fail": 0,
+        "queries": {"q_a": ok, "q_b": ok},
+    }
+    assert (blob["registry_total"], blob["oracled_total"]) == (2, 1)
+
+
 def test_coverage_doc_test_function_count():
     """COVERAGE.md's test tally drifted every round it was hand-counted
     (r4 verdict #7). The doc now cites the AST-countable number — 'NNN
